@@ -20,57 +20,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // bench-host deployment setting, not engine design: /tmp sits on a
-      // virtio disk with bursty write latency (vmstat shows 250 MB/s
-      // flushes stalling shuffle writes); tmpfs takes the disk out of the
-      // measurement. A real cluster points spark.local.dir at NVMe.
-      .config("spark.local.dir",
-        sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/spark-local"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // r19 §2/§5 finding: Spark 4.1's ChecksumCheckpointFileManager gates
-      // every streaming state-store delta/commit finalize on a checksum-
-      // sidecar write awaited through a shared pool — jstack sampling of
-      // x29 showed 78% of task samples parked in its awaitResult (a fixed
-      // ~3 s per task per micro-batch, data-independent). The gates use
-      // ephemeral per-query temp checkpoints deleted at gate end, where
-      // corruption detection protects nothing; with it off x29 runs 18→10.5 s,
-      // x28 8.2→6.6 s (medians of 3). A deployment with durable checkpoints
-      // can re-enable via the env override.
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_CKPT_CRC", "false"))
-      // r19 §1/§7 finding: with the codegen stage id in the generated
-      // CLASS NAME (the default), every iteration of an iterative
-      // DataFrame algorithm produces byte-distinct sources for the same
-      // logical stage, so the Janino cache can never hit — the 10 heaviest
-      // gates compiled 1276 generated classes (20+ s of pure Janino) where
-      // 819 sufficed with the id off, and the iterative family's paired
-      // minima drop 10-40% (g47 35.1→20.2, g30 16.0→10.8, cy50 20.2→14.1).
-      // The id exists only to make stack traces name their stage; plans,
-      // results, and stage boundaries are untouched.
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      // r20 §1/§7 finding: the Janino class cache holds 100 entries
-      // (spark.sql.codegen.cache.maxEntries default), but one
-      // g47_louvain_levels run alone generates ~180 distinct whole-stage
-      // bodies and a six-gate iterative session 395 — the LRU cycles and
-      // 42% of all compiles (680 vs 395 measured at INFO on the
-      // CodeGenerator logger) are eviction-driven RE-compiles of
-      // already-seen bodies, 12-21 s of cumulative Janino time per
-      // session. The cache is keyed on the comment-stripped source, so a
-      // bigger cache changes no plan, no result, only how often identical
-      // code is recompiled. At cluster scale every EXECUTOR JVM carries
-      // the same 100-entry cache and pays the same recompiles per task
-      // wave. 4096 bounds the retained classes to a few hundred MB of
-      // metaspace at worst; env-overridable for memory-tight deployments.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session()
     // profiling hook: SPARK_GRAFT_LOG=INFO exposes per-job timings without
     // touching the measured queries (default stays WARN)
     spark.sparkContext.setLogLevel(sys.env.getOrElse("SPARK_GRAFT_LOG", "WARN"))
@@ -96,25 +46,14 @@ object Bench {
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
 
-    // queries are independent: drop cached/checkpointed blocks so one
-    // query's state never pressures the next (measured outside the timer).
-    // Blocking so the next query starts from a clean BlockManager instead
-    // of racing an async removal. Spark's ContextCleaner reclaims shuffle
-    // files / broadcasts only via weak references — with a 32g heap GC may
-    // not run for dozens of queries and the accumulated state slows later
-    // (GraphX-heavy) queries several-fold; one explicit GC per query keeps
-    // the session flat (outside the timer too).
-    def sweep(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      System.gc()
-    }
     def run1(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : (Double, Option[String]) = {
       val t0 = System.nanoTime()
       val err = try { fn(spark, sfDir).count(); None }
         catch { case t: Throwable => Some(t.toString.replaceAll("[\"\\\\\n]", " ").take(160)) }
       val elapsed = (System.nanoTime() - t0) / 1e9
-      sweep()
+      // queries are independent: sweep outside the timer
+      Session.sweep(spark)
       (elapsed, err)
     }
 
@@ -129,8 +68,8 @@ object Bench {
     // they measure the warm-JIT steady state a resident service would see.
     // 5 samples, not 3: the host's stall distribution is bimodal (a run
     // either executes cleanly or eats multi-second scheduler stalls — no
-    // steal, no GC, no THP, no safepoint signal; KcProfile showed 10x
-    // swings on identical jobs in one session), so a 3-sample median still
+    // steal, no GC, no THP, no safepoint signal; r5 per-job profiling showed
+    // 10x swings on identical jobs in one session), so a 3-sample median still
     // lands on an outlier too often. Median-of-5 needs 3 bad draws to lie.
     val nRep = sys.env.get("SPARK_GRAFT_REPEATS").map(_.trim.toInt).getOrElse(5)
     val qmap = selected.toMap

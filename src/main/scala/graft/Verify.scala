@@ -1,32 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import org.json4s.{JObject, JString}
+import org.json4s.jackson.JsonMethods.compact
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // ephemeral per-gate temp checkpoints don't need corruption-detection
-      // sidecars; see the Bench.scala note (r19 optimization, measured)
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_CKPT_CRC", "false"))
-      // codegen-cache reuse across iterative plans; see the Bench.scala
-      // note (r19 optimization, measured — results/plans untouched)
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      // Janino cache sized to the engine's distinct-body working set; see
-      // the Bench.scala note (r20 optimization, measured — the cache is
-      // keyed on generated source, so results/plans are untouched)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // optional comma-separated filter for profiling single queries locally;
@@ -40,29 +21,11 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // queries are independent: drop any cached/checkpointed blocks so one
-      // query's state never pressures the next
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      // ContextCleaner is weak-ref (GC) driven: with a large heap, shuffle
-      // files/broadcasts from dozens of queries accumulate and slow later
-      // queries several-fold — force a collection per query
-      System.gc()
+      // queries are independent
+      Session.sweep(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    val json = JObject(SparkEntry.oracleSql.toList.map { case (k, v) => k -> JString(v) })
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), compact(json))
     spark.stop()
   }
 }

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.Graphid
@@ -37,14 +36,10 @@ object ConcurrentProbe {
     else sorted(math.min(sorted.length - 1, (p * sorted.length).toInt))
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val seconds = sys.env.getOrElse("SPARK_GRAFT_PROBE_SECONDS", "5").toInt
     val nVerts = 10000
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val spark = graft.Session.builder()
       .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dump the FINAL (post-AQE) physical plan of named declared queries to
@@ -19,15 +18,7 @@ object PlanDump {
       sys.exit(2)
     }
     val Array(sfDir, outDir, tag, qcsv) = args.take(4)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session()
     spark.sparkContext.setLogLevel("WARN")
     Files.createDirectories(Paths.get(outDir))
     qcsv.split(",").map(_.trim).filter(_.nonEmpty).foreach { name =>
@@ -59,7 +50,7 @@ object PlanDump {
       }
       Files.writeString(Paths.get(s"$outDir/${name}_$tag.txt"), sb.toString)
       println(s"dumped $name -> $outDir/${name}_$tag.txt")
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      graft.Session.sweep(spark)
     }
     spark.stop()
   }

@@ -23,29 +23,27 @@ import graft.pipeline.Dedup
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      // same bench-host deployment setting as Bench.scala: /tmp is a
-      // virtio disk with bursty write latency, and the probe's top rungs
-      // shuffle GBs — without tmpfs the disk's stall distribution, not
-      // the operator, dominates the measured growth curve
-      .config("spark.local.dir",
-        sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/spark-local"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    // SPARK_GRAFT_LOCAL_DIR matters here: the probe's top rungs shuffle
+    // GBs, and without tmpfs the disk's stall distribution, not the
+    // operator, dominates the measured growth curve
+    val spark = graft.Session()
     spark.sparkContext.setLogLevel("WARN")
     // SPARK_GRAFT_PROBE_JOBS=1: per-job wall times, for attributing a
     // superlinear rung to a specific stage of the operator under probe
     if (sys.env.get("SPARK_GRAFT_PROBE_JOBS").contains("1")) {
       import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerJobEnd}
-      val starts = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+      // boxed value type: with [Int, Long] args, get/remove auto-unbox a
+      // missing entry's null to 0L before any null check can see it
+      val starts = new java.util.concurrent.ConcurrentHashMap[Integer, java.lang.Long]()
       spark.sparkContext.addSparkListener(new SparkListener {
         override def onJobStart(js: SparkListenerJobStart): Unit =
           starts.put(js.jobId, System.nanoTime())
         override def onJobEnd(je: SparkListenerJobEnd): Unit = {
-          val t0 = Option(starts.get(je.jobId)).getOrElse(0L)
-          println(f"  job ${je.jobId}%4d ${(System.nanoTime() - t0) / 1e9}%6.2f s")
+          // null = start event missed; skip instead of printing a bogus
+          // nanoTime-sized duration
+          val t0 = starts.remove(Integer.valueOf(je.jobId))
+          if (t0 != null)
+            println(f"  job ${je.jobId}%4d ${(System.nanoTime() - t0) / 1e9}%6.2f s")
         }
       })
     }
@@ -340,9 +338,9 @@ object ScaleProbe {
     val keep = spark.sparkContext.getPersistentRDDs.keySet
     val ks = sys.env.get("SPARK_GRAFT_PROBE_KS")
       .map(_.split(",").map(_.trim.toInt).toSeq).getOrElse(Seq(1, 4, 16))
-    // the host's stall distribution is bimodal (KcProfile r5: 10x swings
-    // on identical jobs) and the top rung's jobs are long enough to eat
-    // multi-second stalls repeatedly — a single sample per rung can read
+    // the host's stall distribution is bimodal (r5 per-job profiling:
+    // 10x swings on identical jobs) and the top rung's jobs are long
+    // enough to eat multi-second stalls repeatedly — a single sample per rung can read
     // 5x over quiet. MIN over a few repeats is the right statistic for a
     // growth curve: stalls are strictly additive, so the min is the
     // closest observable to the operator's own cost.

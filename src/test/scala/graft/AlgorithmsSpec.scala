@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.algorithms.GraphAlgorithms
@@ -8,13 +7,7 @@ import graft.store.GraphStore
 import graft.tools.DataGenerator
 
 /** Whole-graph analytics + store persistence tests. */
-class AlgorithmsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class AlgorithmsSpec extends AnyFunSuite with SparkSuite {
 
   import spark.implicits._
 

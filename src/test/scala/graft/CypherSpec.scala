@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.cypher.CypherSession
@@ -12,14 +12,7 @@ import graft.store.GraphStore
   * Alice(30,Beijing), Bob(25,Shanghai), Charlie(35,Beijing),
   * David(28,Shenzhen); KNOWS: Alice→Bob(2020), Bob→Charlie(2021).
   */
-class CypherSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class CypherSpec extends AnyFunSuite with SparkSuite {
 
   def peopleStore: GraphStore = {
     import spark.implicits._

@@ -1,29 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** SparkSessionExtensions registration: the custom DotProduct expression is
-  * callable from SQL text, not just the Column API. The suite may get a
-  * SHARED session another suite created first (getOrCreate), where
-  * withExtensions silently no-ops — GraftExtensions.register covers that
-  * path, and exercising it here is the point: it is what any shared-session
-  * consumer must call.
+  * callable from SQL text, not just the Column API. The suite gets the
+  * SHARED spec session, created without extensions, where withExtensions
+  * would silently no-op — GraftExtensions.register covers that path, and
+  * exercising it here is the point: it is what any shared-session consumer
+  * must call.
   */
-class ExtensionsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    GraftExtensions.register(s)
-    s
-  }
+class ExtensionsSpec extends AnyFunSuite with SparkSuite {
 
   test("dot_product callable from SQL and codegen'd") {
+    GraftExtensions.register(spark)
     val r = spark.sql(
       "SELECT dot_product(array(1.0D, 2.0D, 3.0D), array(4.0D, 5.0D, 6.0D)) AS d")
       .collect()(0).getDouble(0)

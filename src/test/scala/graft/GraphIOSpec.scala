@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.store.GraphIO
@@ -10,13 +9,7 @@ import graft.store.GraphIO
 /** Import/export roundtrip tests on the reference's interchange formats
   * (FIXTURES.md §1-2, mirrors tests/integration_test.rs:110-122).
   */
-class GraphIOSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GraphIOSpec extends AnyFunSuite with SparkSuite {
 
   val jsonDoc: String =
     """{
@@ -340,35 +333,24 @@ class GraphIOSpec extends AnyFunSuite {
     // set at the live generation
     val sess = new graft.cypher.CypherSession(spark,
       new graft.store.GraphStore(Map.empty, Map.empty))
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    try {
-      // keys wrap at 50: the second half re-merges existing nodes (match
-      // path), the first half creates — both paths under the one ceiling
-      val script = (1 to 100)
-        .map(i => s"MERGE (n:P {k: ${i % 50}}) ON CREATE SET n.fresh = 1;")
-        .mkString("\n")
-      assert(sess.runScript(script) == 100)
-      // let the queued listener events drain before reading the counter
-      Thread.sleep(1000)
-      val total = jobs.get()
-      assert(total <= 100 * 6,
-        s"MERGE replay ran $total jobs for 100 statements (> 6/stmt ceiling)")
-      val delta = spark.sparkContext.getPersistentRDDs.keySet -- before
-      assert(delta.size <= 1, s"expected <= 1 live checkpoint, leaked: $delta")
-      val n = sess.run("MATCH (n:P) RETURN count(n) AS c").collect()(0).getLong(0)
-      assert(n == 50L)
-      // every node was created by the first pass over its key
-      val fresh = sess.run(
-        "MATCH (n:P) WHERE n.fresh = 1 RETURN count(n) AS c").collect()(0).getLong(0)
-      assert(fresh == 50L)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    // keys wrap at 50: the second half re-merges existing nodes (match
+    // path), the first half creates — both paths under the one ceiling
+    val script = (1 to 100)
+      .map(i => s"MERGE (n:P {k: ${i % 50}}) ON CREATE SET n.fresh = 1;")
+      .mkString("\n")
+    val (statements, total) = jobsDuring(sess.runScript(script))
+    assert(statements == 100)
+    assert(total <= 100 * 6,
+      s"MERGE replay ran $total jobs for 100 statements (> 6/stmt ceiling)")
+    val delta = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(delta.size <= 1, s"expected <= 1 live checkpoint, leaked: $delta")
+    val n = sess.run("MATCH (n:P) RETURN count(n) AS c").collect()(0).getLong(0)
+    assert(n == 50L)
+    // every node was created by the first pass over its key
+    val fresh = sess.run(
+      "MATCH (n:P) WHERE n.fresh = 1 RETURN count(n) AS c").collect()(0).getLong(0)
+    assert(fresh == 50L)
   }
 
   test("runScript of 100 statements leaves only the live compact generation persisted") {

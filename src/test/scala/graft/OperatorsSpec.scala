@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.AsofJoin
@@ -8,13 +7,7 @@ import graft.operators.AsofJoin
 /** Composed-operator semantics: as-of join (latest right row at-or-before
   * each left row per key, left-outer).
   */
-class OperatorsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class OperatorsSpec extends AnyFunSuite with SparkSuite {
 
   import spark.implicits._
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.pipeline.{Dedup, Similarity, TextAnalysis}
@@ -10,13 +9,7 @@ import graft.pipeline.{Dedup, Similarity, TextAnalysis}
   * hashed), ANN must agree with brute force on easy queries, and text
   * heuristics must behave sensibly on clear-cut inputs.
   */
-class PipelineSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PipelineSpec extends AnyFunSuite with SparkSuite {
 
   import spark.implicits._
 

@@ -10,15 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * whole-stage codegen. A regression here is a silent 100×-scale problem
   * long before it is a wrong answer.
   */
-class PlanAuditSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PlanAuditSpec extends AnyFunSuite with SparkSuite {
 
   val sfDir = "/root/testdata/sf0.001"
 
@@ -29,6 +21,22 @@ class PlanAuditSpec extends AnyFunSuite {
     val df = SparkEntry.queries(name)(spark, sfDir)
     df.collect()
     df.queryExecution.executedPlan.toString
+  }
+
+  test("the shared spec session carries the engine profile, whichever suite made it") {
+    // the codegen cache is a static setting: a suite that created the
+    // session with Spark's defaults would leave every later suite on a
+    // 100-entry cache, unlike the engine Bench and Verify run
+    assert(spark.sparkContext.master == "local[4]")
+    val conf = spark.conf
+    assert(conf.get("spark.sql.codegen.cache.maxEntries") == "4096")
+    assert(conf.get("spark.sql.codegen.useIdInClassName") == "false")
+    assert(conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(conf.get("spark.sql.adaptive.enabled") == "true")
+    assert(conf.get("spark.sql.streaming.checkpoint.fileChecksum.enabled") == "false")
+    assert(spark.sparkContext.getConf.get("spark.ui.enabled") == "false")
   }
 
   test("q2: predicate pushdown and column pruning reach the part scan") {

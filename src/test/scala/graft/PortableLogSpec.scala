@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,13 +13,7 @@ import graft.util.PortableLog
   * by the driver's oracle hash gate on g34/t17 (and was swept over 6k
   * values incl. random 62-bit ints at build time).
   */
-class PortableLogSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PortableLogSpec extends AnyFunSuite with SparkSuite {
 
   import spark.implicits._
 

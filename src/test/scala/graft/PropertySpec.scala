@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,7 +14,7 @@ import graft.pipeline.{Dedup, Similarity, TextAnalysis}
   * offline cache, so samples are drawn directly — deterministic and
   * replayable).
   */
-class PropertySpec extends AnyFunSuite {
+class PropertySpec extends AnyFunSuite with SparkSuite {
 
   /** Draw n deterministic samples from a generator. */
   private def samples[A](g: Gen[A], n: Int = 50): Seq[A] =
@@ -23,12 +22,6 @@ class PropertySpec extends AnyFunSuite {
 
   private def forAll[A, B](ga: Gen[A], gb: Gen[B])(f: (A, B) => Unit): Unit =
     samples(Gen.zip(ga, gb)).foreach { case (a, b) => f(a, b) }
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   import spark.implicits._
 

@@ -4,7 +4,6 @@ import java.net.{HttpURLConnection, URI}
 import java.nio.charset.StandardCharsets
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.social.{SocialGraph, SocialGraphService}
@@ -14,13 +13,7 @@ import graft.store.GraphStore
   * port, driven over the wire — the reference's social-network-api
   * route table exercised verb by verb.
   */
-class SocialGraphServiceSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SocialGraphServiceSpec extends AnyFunSuite with SparkSuite {
 
   private val mapper = new ObjectMapper()
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions.col
 
@@ -12,13 +11,7 @@ import graft.store.GraphStore
 /** C1-C6 social workload tests (mirrors the reference's
   * social-network-api behavior) + the salting helper.
   */
-class SocialGraphSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SocialGraphSpec extends AnyFunSuite with SparkSuite {
 
   import spark.implicits._
 

@@ -2,7 +2,6 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.store.Tables
@@ -12,15 +11,7 @@ import graft.streaming.EventStreams
   * the events table must equal its batch equivalent once the (single) file
   * batch is processed; sessionization exercises flatMapGroupsWithState.
   */
-class StreamingSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StreamingSpec extends AnyFunSuite with SparkSuite {
 
   val sfDir = "/root/testdata/sf0.001"
 

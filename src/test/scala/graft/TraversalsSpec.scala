@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.algorithms.{Direction, PregelSssp, Traversals}
@@ -12,13 +11,7 @@ import graft.tools.DataGenerator
   * the 5-node DAG (A→B, A→C, B→D, B→E, C→E) and R×C grids with known
   * shortest-path costs.
   */
-class TraversalsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TraversalsSpec extends AnyFunSuite with SparkSuite {
 
   import spark.implicits._
 
@@ -192,18 +185,7 @@ class TraversalsSpec extends AnyFunSuite {
     val src = Graphid.pack(1, 1)
     val dst = Graphid.pack(1, 65)
     val parents = Traversals.bfsParents(e, Seq(src).toDF("id"), 64).localCheckpoint()
-    var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val chain =
-      try Traversals.doublingChain(parents, dst, 64)
-      finally {
-        Thread.sleep(500) // listener events post asynchronously
-        spark.sparkContext.removeSparkListener(listener)
-      }
+    val (chain, jobs) = jobsDuring(Traversals.doublingChain(parents, dst, 64))
     parents.unpersist()
     assert(chain == (1 to 65).map(i => Graphid.pack(1, i)))
     // ~13 round queries (2 log2 L: jump doubling + chain extension), each a
