@@ -3,6 +3,8 @@ package graft.algorithms
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.functions.ParamLiteral
+
 /** Edge direction for expansion, mirroring the reference's
   * Out/In/Both dispatch (/root/reference/src/executor/match_executor.rs:149-177).
   */
@@ -167,9 +169,11 @@ object Traversals {
         .select(col("id"), lit(hop).as("dist"), col("parent"))
         .localCheckpoint(false)
       // ONE job per level: materializes the lazy checkpoint and yields both
-      // the loop condition and the early-exit signal
+      // the loop condition and the early-exit signal (the target id is a
+      // code parameter, so another endpoint reuses the compiled level)
       val stats = next.agg(count(lit(1)),
-        count(when(col("id") === until.getOrElse(Long.MinValue), 1))).collect()(0)
+        count(when(col("id") === ParamLiteral(until.getOrElse(Long.MinValue)), 1)))
+        .collect()(0)
       frontierRows = stats.getLong(0)
       found = until.isDefined && stats.getLong(1) > 0
       visited = visited.unionByName(next)
@@ -201,7 +205,7 @@ object Traversals {
       // early-exit BFS: stops expanding once dstId is reached
       val parents = bfsParents(edges, Seq(srcId).toDF("id"), maxHops, dir, Some(dstId))
         .localCheckpoint()
-      val endRow = parents.where(col("id") === dstId)
+      val endRow = parents.where(col("id") === ParamLiteral(dstId))
         .select("dist", "parent").collect()
       if (endRow.isEmpty) Seq.empty[(Long, Long, Int, Seq[Long])]
       else {
@@ -439,9 +443,10 @@ object Traversals {
     val spark = parents.sparkSession
     import spark.implicits._
     if (pathLen <= 0) return Seq(dstId)
-    val endDist = parents.where(col("id") === dstId).select(col("dist")).head.get(0)
+    val endDist = parents.where(col("id") === ParamLiteral(dstId))
+      .select(col("dist")).head.get(0)
     var jump = parents
-      .where(col("parent").isNotNull && col("dist") <= lit(endDist))
+      .where(col("parent").isNotNull && col("dist") <= ParamLiteral(endDist))
       .select(col("id"), col("parent").as("anc"))
       .localCheckpoint(false) // lazy: flat plan, materialized by the final action
     // chain rows: (id, pos) with pos = #hops walked back from dst
@@ -454,7 +459,7 @@ object Traversals {
         .select(col("anc").as("id"), (col("pos") + span).as("pos"))
       // lazy checkpoint: flat plan per round, materialized by the final
       // action (each round's blocks then serve both the union and the join)
-      chain = chain.unionByName(jumped.where(col("pos") <= pathLen))
+      chain = chain.unionByName(jumped.where(col("pos") <= ParamLiteral(pathLen.toLong)))
         .localCheckpoint(false)
       span *= 2
       if (span <= pathLen)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import Ast._
+import graft.functions.ParamLiteral
 
 /** Variable binding kinds in a compiled scope. */
 sealed trait VarKind
@@ -14,7 +15,11 @@ object VarKind {
   case object Value extends VarKind
 }
 
-final case class VarInfo(kind: VarKind, label: Option[String], props: Seq[String])
+/** `path` marks a path variable (`p = (a)-[*]->(b)`, `shortestPath`): a
+  * value holding the vertex-id list, whose `length` counts relationships.
+  */
+final case class VarInfo(kind: VarKind, label: Option[String], props: Seq[String],
+    path: Boolean = false)
 
 /** A compiled clause pipeline state: the binding DataFrame plus the
   * variable table. Entity variables own prefixed columns
@@ -97,6 +102,11 @@ final class ExprCompiler(scope: Scope, params: Map[String, Any] = Map.empty,
     case _ => false
   }
 
+  private def isPathVar(e: Expr): Boolean = e match {
+    case Variable(v) => !locals.contains(v) && scope.vars.get(v).exists(_.path)
+    case _ => false
+  }
+
   private def entityVar(name: String): Option[VarInfo] =
     scope.vars.get(name).filter(_.kind != VarKind.Value)
 
@@ -113,8 +123,10 @@ final class ExprCompiler(scope: Scope, params: Map[String, Any] = Map.empty,
   def compile(e: Expr): Column = e match {
     case NullLit => lit(null)
     case BoolLit(v) => lit(v)
-    case IntLit(v) => lit(v)
-    case FloatLit(v) => lit(v)
+    // numeric literals are parameters of the generated code, so statements
+    // that differ only in a key reuse one compiled class
+    case IntLit(v) => ParamLiteral(v)
+    case FloatLit(v) => ParamLiteral(v)
     case StrLit(v) => lit(v)
     case ListLit(items) => array(items.map(compile).toIndexedSeq: _*)
     case MapLit(entries) =>
@@ -325,6 +337,10 @@ final class ExprCompiler(scope: Scope, params: Map[String, Any] = Map.empty,
             .map(pr => col(Scope.colName(v, pr)).as(pr)).toIndexedSeq: _*))
         case _ => to_json(a0)
       }
+      // openCypher: length(p) counts a path's relationships, one fewer than
+      // its vertex list; on strings and lists it is the size
+      case "length" if isPathVar(args.head) =>
+        when(a0.isNotNull, size(a0) - 1).cast("long")
       case "size" | "length" =>
         if (isStringT(a0)) length(a0) else size(a0).cast("long")
       case "coalesce" => coalesce(args.map(compile).toIndexedSeq: _*)

@@ -22,9 +22,23 @@ final case class PlanResult(df: Option[DataFrame], store: GraphStore)
   * unbounded (the reference caps at 5 elements, match_executor.rs:115-123).
   */
 final class Planner(spark: SparkSession, store0: GraphStore,
-    params: Map[String, Any] = Map.empty) {
+    params: Map[String, Any] = Map.empty,
+    reading: Planner.ReadHook = Planner.DirectReads) {
 
   private var store = store0
+
+  /** The store to read `labels`' tables of `kind` from: each read passes
+    * the session's hook, which may swap a table for its resident copy
+    * (CypherSession); later reads and writes of this statement see the
+    * swap.
+    */
+  private def readStore(kind: VarKind, labels: Iterable[String]): GraphStore = {
+    labels.foreach(l => store = reading(store, kind, l))
+    store
+  }
+
+  private def allEdges: DataFrame = readStore(VarKind.Edge, store.edgeLabels).allEdges
+
   private var anon = 0
   private def fresh(p: String): String = { anon += 1; s"__$p$anon" }
   private def ec(s: Scope) = new ExprCompiler(s, params)
@@ -144,7 +158,7 @@ final class Planner(spark: SparkSession, store0: GraphStore,
     // numeric time — a temporal sweep cannot default an event time
     // (one bounded pass over the edge relation)
     def temporalEdges(prop: String, procName: String): DataFrame = {
-      val te = store.allEdges.select(col("src"), col("dst"),
+      val te = allEdges.select(col("src"), col("dst"),
         get_json_object(col("properties"), "$." + prop)
           .cast("long").as("t"))
       val nMissing = te.where(col("t").isNull).count()
@@ -154,7 +168,7 @@ final class Planner(spark: SparkSession, store0: GraphStore,
           "an event time")
       te
     }
-    val edges = store.allEdges.select(col("src"), col("dst"))
+    val edges = allEdges.select(col("src"), col("dst"))
     val out: DataFrame = c.proc.toLowerCase match {
       case "graft.pagerank" => nargs(1)
         GraphAlgorithms.pageRankStable(edges, intArg(0, Some(10)))
@@ -226,7 +240,7 @@ final class Planner(spark: SparkSession, store0: GraphStore,
         // the long conversion stays exact across the full LONG range
         // (r15 ADVICE, tightened in the r16 review)
         val lvWeighted = strArg(2).map { wp =>
-          store.allEdges.select(col("src"), col("dst"),
+          allEdges.select(col("src"), col("dst"),
             get_json_object(col("properties"), "$." + wp)
               .cast("decimal(38,9)").as("w"))
         }
@@ -308,13 +322,13 @@ final class Planner(spark: SparkSession, store0: GraphStore,
         // temporalEdges pattern, one bounded pass over the edge relation).
         nargs(1)
         val mstEdges = strArg(0) match {
-          case None => store.allEdges.select(col("src"), col("dst"),
+          case None => allEdges.select(col("src"), col("dst"),
             lit(1L).as("w"))
           case Some(wk) =>
             // try_cast, not cast: ANSI cast THROWS on a malformed string
             // with a generic CAST_INVALID_INPUT — the guard below is the
             // loud path, with the property name and the default rule
-            val we = store.allEdges.select(col("src"), col("dst"),
+            val we = allEdges.select(col("src"), col("dst"),
                 get_json_object(col("properties"), "$." + wk).as("raw"))
               .withColumn("cast", expr("try_cast(raw AS long)"))
             val nBad =
@@ -344,7 +358,7 @@ final class Planner(spark: SparkSession, store0: GraphStore,
             // resolves from there; edges missing the property cost 1.0 —
             // the shortestPath {weight: ...} convention. arg 3 caps
             // RELAXATION ROUNDS here (hops per side), not path cost.
-            val we = store.allEdges.select(col("src"), col("dst"),
+            val we = allEdges.select(col("src"), col("dst"),
               coalesce(get_json_object(col("properties"), "$." + wk)
                 .cast("double"), lit(1.0)).as("weight"))
             graft.algorithms.Traversals
@@ -404,7 +418,7 @@ final class Planner(spark: SparkSession, store0: GraphStore,
             graft.algorithms.TemporalGraph.fastestDurations(fte,
               Seq(source).toDF("sid")).drop("sid")
           case Some(wk) =>
-            val fte = store.allEdges.select(col("src"), col("dst"), fdT,
+            val fte = allEdges.select(col("src"), col("dst"), fdT,
               get_json_object(col("properties"), "$." + wk)
                 .cast("long").as("w"))
             val fdMissing =
@@ -666,18 +680,18 @@ final class Planner(spark: SparkSession, store0: GraphStore,
 
   private def nodeScan(np: NodePat, v: String): (DataFrame, VarInfo) = np.labels.distinct match {
     case Seq(l) =>
-      val base = store.vertices(l)
+      val base = readStore(VarKind.Node, Seq(l)).vertices(l)
       (prefixAll(base, v),
         VarInfo(VarKind.Node, Some(l), base.columns.filterNot(_ == "id").toSeq))
     case Nil =>
-      val base = store.allVertices
+      val base = readStore(VarKind.Node, store.vertexLabels).allVertices
       (prefixAll(base, v), VarInfo(VarKind.Node, None, Seq("label", "properties")))
     case many =>
       // openCypher conjunction semantics: (n:A:B) matches nodes carrying
       // ALL listed labels. This store (like the reference) is
       // single-label-per-vertex, so distinct labels can never co-occur —
       // the scan is statically empty (SURVEY §8 divergence note).
-      val base = store.vertices(many.head).limit(0)
+      val base = readStore(VarKind.Node, Seq(many.head)).vertices(many.head).limit(0)
       (prefixAll(base, v),
         VarInfo(VarKind.Node, Some(many.head), base.columns.filterNot(_ == "id").toSeq))
   }
@@ -685,7 +699,8 @@ final class Planner(spark: SparkSession, store0: GraphStore,
   /** Typed union of edge tables (schema union, absent props null-filled). */
   private def edgeUnion(types: Seq[String]): DataFrame = {
     val names = if (types.nonEmpty) types else store.edgeLabels
-    names.map(store.edges).reduce(_.unionByName(_, allowMissingColumns = true))
+    val st = readStore(VarKind.Edge, names)
+    names.map(st.edges).reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
   /** Edge scan, traversal-oriented: after this, `src` is always the side we
@@ -796,7 +811,7 @@ final class Planner(spark: SparkSession, store0: GraphStore,
         df = s0.df.withColumn(pv, nodesArr)
           .withColumn(Scope.colName(pv, "rels"), relsArr)
           .drop(tempCols.result(): _*),
-        vars = s0.vars + (pv -> VarInfo(VarKind.Value, None, Seq("rels"))),
+        vars = s0.vars + (pv -> VarInfo(VarKind.Value, None, Seq("rels"), path = true)),
         order = s0.order :+ pv)
     }
   }
@@ -1397,7 +1412,7 @@ final class Planner(spark: SparkSession, store0: GraphStore,
       */
     def passthrough(it: NamedItem): Option[(String, String)] = it.expr match {
       case Variable(v) if scope.vars.get(v).exists(vi =>
-          vi.kind != VarKind.Value || vi.props.nonEmpty) =>
+          vi.kind != VarKind.Value || vi.props.nonEmpty || vi.path) =>
         Some((v, it.name))
       case _ => None
     }
@@ -1795,7 +1810,7 @@ final class Planner(spark: SparkSession, store0: GraphStore,
     var sc = base.copy(df = base.df.crossJoin(res))
     spc.pathVar.foreach { pv =>
       require(!base.vars.contains(pv), s"path variable reused: $pv")
-      sc = sc.copy(vars = sc.vars + (pv -> VarInfo(VarKind.Value, None, Nil)),
+      sc = sc.copy(vars = sc.vars + (pv -> VarInfo(VarKind.Value, None, Nil, path = true)),
         order = sc.order :+ pv)
     }
     val aV = pat.start.variable.getOrElse(fresh("n"))
@@ -2256,6 +2271,16 @@ final class Planner(spark: SparkSession, store0: GraphStore,
   }
 }
 
+object Planner {
+
+  /** Called before a statement reads a label table of `kind`, with the
+    * store it would read from; returns the store to read instead.
+    */
+  type ReadHook = (GraphStore, VarKind, String) => GraphStore
+
+  val DirectReads: ReadHook = (store, _, _) => store
+}
+
 /** User-facing session: parse → plan → run; mutations swap the store
   * atomically per statement (the Spark analogue of the reference's
   * per-statement transaction, SURVEY.md §2.7 M6). `begin()/commit()/
@@ -2322,8 +2347,10 @@ final class CypherSession(val spark: SparkSession, initial: GraphStore,
 
   def run(cypher: String): DataFrame = {
     val inTxn = synchronized { txnSnapshot.nonEmpty }
-    val planner = new Planner(spark, store, params)
+    val readNow = scala.collection.mutable.Set[(VarKind, String)]()
+    val planner = new Planner(spark, store, params, residency(readNow))
     val res = planner.plan(Parser.parse(cypher))
+    synchronized { readBefore ++= readNow }
     store = res.store
     val compacted = maybeCompact()
     if (inTxn) synchronized {
@@ -2334,6 +2361,57 @@ final class CypherSession(val spark: SparkSession, initial: GraphStore,
       txnCreated = txnCreated ++ planner.createdCheckpointIds ++ compacted
     }
     res.df.getOrElse(spark.emptyDataFrame)
+  }
+
+  // ---------------- session-resident label tables ----------------
+
+  /** The file-backed tables of the opening store (the only ones worth a
+    * resident copy), keyed (kind, label).
+    */
+  private lazy val openingTables: Map[(VarKind, String), DataFrame] = {
+    def fileBacked(df: DataFrame) = df.queryExecution.analyzed.collectFirst {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l
+    }.isDefined
+    (initial.vertexTables.map { case (l, df) => (VarKind.Node: VarKind, l) -> df } ++
+      initial.edgeTables.map { case (l, df) => (VarKind.Edge: VarKind, l) -> df })
+      .filter { case (_, df) => fileBacked(df) }
+  }
+
+  /** Opening tables that an earlier statement read. */
+  private val readBefore = scala.collection.mutable.Set[(VarKind, String)]()
+
+  /** Session-resident label tables. When a second statement reads a
+    * file-backed table of the opening store, the store swaps that table
+    * for a resident copy: the same rows in a persisted RDD
+    * (MEMORY_AND_DISK) that keeps its lineage to the files, planned with
+    * the table's statistics. Later statements read blocks instead of
+    * re-opening the files, and a lost block costs a re-read, never a
+    * failed statement. A single-statement session persists nothing, and a
+    * table a write has replaced stays under the compaction rule. The
+    * session owns the copies and releases them at its next compaction;
+    * releasing is always safe because the lineage survives.
+    *
+    * The hook is per statement: `readNow` collects the opening tables
+    * this statement reads, which count as read before from the next
+    * statement on.
+    */
+  private def residency(readNow: scala.collection.mutable.Set[(VarKind, String)])
+      : Planner.ReadHook = (st, kind, label) => synchronized {
+    val key = (kind, label)
+    val table = if (kind == VarKind.Node) st.vertexTables.get(label) else st.edgeTables.get(label)
+    openingTables.get(key) match {
+      case Some(opening) if table.exists(_ eq opening) =>
+        if (!readBefore(key)) { readNow += key; st }
+        else {
+          val rows = opening.queryExecution.executedPlan.execute().map(_.copy())
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          ownedGen = ownedGen + rows.id
+          val copy = org.apache.spark.sql.GraftColumnBridge.ofRows(rows, opening)
+          if (kind == VarKind.Node) st.withVertexTable(label, copy)
+          else st.withEdgeTable(label, copy)
+        }
+      case _ => st
+    }
   }
 
   /** Auto-compaction on lineage growth. A SET-style rewrite references the

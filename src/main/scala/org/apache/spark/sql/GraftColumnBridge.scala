@@ -4,11 +4,24 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Bridge into Spark's private[sql] Column<->Expression converters so the
   * engine can expose custom Catalyst expressions (graft.functions.*) as
-  * user-facing Columns on Spark 4 (where `new Column(expr)` is gone).
+  * user-facing Columns on Spark 4 (where `new Column(expr)` is gone), and
+  * into the Dataset-from-plan factories.
   */
 object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** A DataFrame over `rows`, which must be `origin`'s rows, planned like
+    * `origin`: the same output attributes, statistics and partitioning.
+    * This is the leaf `Dataset.checkpoint` builds, for an RDD the caller
+    * persists itself, so the RDD keeps its lineage.
+    */
+  def ofRows(rows: org.apache.spark.rdd.RDD[catalyst.InternalRow],
+      origin: DataFrame): DataFrame = {
+    val ds = origin.asInstanceOf[classic.Dataset[Row]]
+    classic.Dataset.ofRows(ds.sparkSession,
+      execution.LogicalRDD.fromDataset(rows, ds, ds.isStreaming))
+  }
 
   import org.apache.spark.sql.{internal => in}
   import org.apache.spark.sql.types.{ArrayType, DataType}

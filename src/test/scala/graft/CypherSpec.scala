@@ -1922,4 +1922,150 @@ class CypherSpec extends AnyFunSuite with SparkSuite {
     val extra = sc.getPersistentRDDs.keySet -- preTxn
     assert(extra.size <= 6, s"deferred generations leaked: ${extra.size} blocks")
   }
+
+  test("length(p) counts relationships on MATCH-assigned and shortestPath paths") {
+    val s = session
+    // Alice -KNOWS-> Bob -KNOWS-> Charlie
+    assert(rows(s.run(
+      "MATCH p = (a:Person {name: 'Alice'})-[:KNOWS]->(b) RETURN length(p) AS l, size(p) AS n"))
+      == Seq(Seq(1L, 2L)))
+    assert(rows(s.run(
+      "MATCH p = (a:Person {name: 'Alice'})-[:KNOWS*1..2]->(b:Person) " +
+        "RETURN b.name AS b, length(p) AS l ORDER BY l")) == Seq(Seq("Bob", 1L), Seq("Charlie", 2L)))
+    assert(rows(s.run(
+      "MATCH p = shortestPath((a:Person {name: 'Alice'})-[:KNOWS*..3]->(b:Person {name: 'Charlie'})) " +
+        "RETURN length(p) AS l, size(p) AS n")) == Seq(Seq(2L, 3L)))
+    // a path passed through WITH is still a path
+    assert(rows(s.run(
+      "MATCH p = shortestPath((a:Person {name: 'Alice'})-[:KNOWS*..3]->(b:Person {name: 'Charlie'})) " +
+        "WITH p AS q RETURN length(q) AS l")) == Seq(Seq(2L)))
+    assert(rows(s.run(
+      "MATCH p = (a:Person {name: 'Alice'})-[:KNOWS*2]->(b) WITH p RETURN length(p) AS l"))
+      == Seq(Seq(2L)))
+    // strings and lists keep their size
+    assert(rows(s.run(
+      "MATCH (n:Person {name: 'Alice'}) RETURN length(n.name) AS s, length([1, 2, 3]) AS l"))
+      == Seq(Seq(5, 3L)))
+  }
+
+  /** The People graph saved as parquet and loaded back: a file-backed
+    * store, whose tables a long-lived session keeps resident.
+    */
+  def parquetPeople(): GraphStore = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_people").toString
+    peopleStore.save(dir)
+    GraphStore.load(spark, dir)
+  }
+
+  /** `body`'s result and the number of classes Janino compiled meanwhile. */
+  def compilesDuring[A](body: => A): (A, Long) = {
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    val result = body
+    (result, compiles.getCount - before)
+  }
+
+  object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+    def fileScans(df: DataFrame): Int = collect(df.queryExecution.executedPlan) {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+    }.size
+  }
+
+  def pointRead(age: Long): String = s"MATCH (u:Person {age: $age}) RETURN u.name AS name"
+  def hopRead(age: Long): String =
+    s"MATCH (u:Person {age: $age})-[k:KNOWS]->(v:Person) RETURN v.name AS name, k.since AS y"
+
+  test("a re-run point or one-hop read with another numeric key compiles no class") {
+    val s = new CypherSession(spark, parquetPeople())
+    // two statements read Person and KNOWS, so both are resident from the
+    // second on; the first point read on the resident table compiles
+    rows(s.run(hopRead(30)))
+    assert(rows(s.run(hopRead(25))) == Seq(Seq("Charlie", 2021L)))
+    assert(rows(s.run(pointRead(30))) == Seq(Seq("Alice")))
+    val (point, pointCompiles) = compilesDuring(rows(s.run(pointRead(25))))
+    assert(point == Seq(Seq("Bob")))
+    assert(pointCompiles == 0)
+    val (hop, hopCompiles) = compilesDuring(rows(s.run(hopRead(30))))
+    assert(hop == Seq(Seq("Bob", 2020L)))
+    assert(hopCompiles == 0)
+  }
+
+  test("a session keeps a table resident once a second statement reads it") {
+    val s = new CypherSession(spark, parquetPeople())
+    val q = "MATCH (u:Person) WHERE u.age > 26 RETURN u.name AS name"
+    val first = s.run(q)
+    assert(rows(first).map(_.head.toString).sorted == Seq("Alice", "Charlie", "David"))
+    assert(Plans.fileScans(first) == 1)
+    val second = s.run(q)
+    assert(rows(second).map(_.head.toString).sorted == Seq("Alice", "Charlie", "David"))
+    assert(Plans.fileScans(second) == 0)
+    assert(graft.util.Checkpoints.idsOf(s.store.vertexTables("Person")).nonEmpty)
+  }
+
+  test("a single-statement session scans parquet and persists nothing") {
+    val store = parquetPeople()
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val df = new CypherSession(spark, store).run(hopRead(30))
+    assert(rows(df) == Seq(Seq("Bob", 2020L)))
+    assert(Plans.fileScans(df) > 0)
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
+  }
+
+  test("a frame returned before a compaction collects after its resident blocks go") {
+    val sc = spark.sparkContext
+    val s = new CypherSession(spark, parquetPeople())
+    val q = "MATCH (u:Person) RETURN u.name AS name, u.age AS age ORDER BY name"
+    rows(s.run(q))
+    val early = s.run(q) // reads the resident copy
+    val expected = rows(early)
+    val resident = graft.util.Checkpoints.idsOf(s.store.vertexTables("Person"))
+    assert(resident.nonEmpty && resident.subsetOf(sc.getPersistentRDDs.keySet))
+    // each SET doubles the Person plan until auto-compaction cuts it and
+    // releases the resident blocks
+    var sets = 0
+    while (resident.exists(sc.getPersistentRDDs.contains)) {
+      sets += 1
+      assert(sets <= 20, "no compaction released the resident copy")
+      s.run(s"MATCH (n:Person) WHERE n.name = 'Bob' SET n.age = ${40 + sets}")
+    }
+    assert(rows(early) == expected)
+    assert(rows(s.run("MATCH (n:Person {name: 'Bob'}) RETURN n.age AS a")) == Seq(Seq(40L + sets)))
+  }
+
+  test("read cases return the same rows with codegen off") {
+    val reads = Seq(
+      "MATCH (n:Person) WHERE n.age >= 28 RETURN n.name AS name, n.age AS age",
+      "MATCH (a:Person {age: 30})-[r:KNOWS]->(b:Person) RETURN b.name AS b, r.since AS y",
+      "MATCH (a:Person)-[:KNOWS]->(b:Person)-[:KNOWS]->(c:Person) RETURN a.name AS a, c.name AS c",
+      "MATCH (a:Person) OPTIONAL MATCH (a)-[:KNOWS]->(b) RETURN a.name AS a, b.name AS b",
+      "MATCH (n:Person) RETURN n.city AS city, count(*) AS n, avg(n.age) AS avg_age",
+      "MATCH (n:Person) WHERE n.age * 1.5 > 40.0 " +
+        "RETURN n.name AS name, n.age / 2 AS h, n.age % 7 AS m, n.age + 0.25 AS f",
+      "MATCH (n:Person) WHERE n.age IN [25, 35] RETURN n.name AS name",
+      "MATCH (n:Person) RETURN n.name AS name, CASE WHEN n.age > 29 THEN 1 ELSE 0 END AS old",
+      "MATCH (a:Person {age: 30})-[:KNOWS*1..2]->(b:Person) WHERE b.age <> 30 RETURN b.name AS b",
+      "MATCH p = (a:Person {age: 30})-[:KNOWS*1..2]->(b) RETURN b.name AS b, length(p) AS l",
+      "MATCH p = shortestPath((a:Person {age: 30})-[:KNOWS*..3]->(b:Person {age: 35})) " +
+        "RETURN length(p) AS l, p AS p",
+      "CALL graft.degrees() YIELD id, in_degree, out_degree " +
+        "WITH id, in_degree, out_degree WHERE out_degree >= 1 RETURN count(*) AS n")
+    // one session per configuration over the parquet store: its later
+    // statements read the resident tables
+    def run(): Seq[Seq[String]] = {
+      val s = new CypherSession(spark, parquetPeople())
+      reads.map(q => rows(s.run(q)).map(_.mkString("|")).sorted)
+    }
+    val default = run()
+    assert(default == reads.map(q => rows(session.run(q)).map(_.mkString("|")).sorted))
+    // NO_CODEGEN covers expression-level code only, so whole-stage codegen
+    // is off there too: everything is interpreted
+    for (conf <- Seq(Map("spark.sql.codegen.wholeStage" -> "false"),
+        Map("spark.sql.codegen.wholeStage" -> "false",
+          "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))) {
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      try assert(run() == default, conf)
+      finally conf.keys.foreach(spark.conf.unset)
+    }
+  }
 }

@@ -80,6 +80,21 @@ class PlanAuditSpec extends AnyFunSuite with SparkSuite {
     assert(p.contains("EqualTo(o_orderstatus,F)"), p)
   }
 
+  test("a numeric Cypher key still reaches the parquet scan as a pushed filter") {
+    import spark.implicits._
+    // Cypher integer literals are code parameters (ParamLiteral), yet still
+    // literals to the optimizer's data-source filter translation
+    val dir = java.nio.file.Files.createTempDirectory("graft_users").toString
+    new graft.store.GraphStore(
+      Map("User" -> Seq((1L, 7L, "a"), (2L, 8L, "b")).toDF("id", "uid", "name")), Map.empty)
+      .save(dir)
+    val df = new graft.cypher.Planner(spark, graft.store.GraphStore.load(spark, dir))
+      .plan(graft.cypher.Parser.parse("MATCH (u:User {uid: 7}) RETURN u.name AS name")).df.get
+    assert(df.collect().map(_.getString(0)).toSeq == Seq("a"))
+    val p = df.queryExecution.executedPlan.toString
+    assert(p.contains("EqualTo(uid,7)"), p)
+  }
+
   test("bucketed edge tables self-join on the bucket key without an exchange") {
     implicit val s: SparkSession = spark
     val g = graft.store.GraphStore.tpch(spark, sfDir)
