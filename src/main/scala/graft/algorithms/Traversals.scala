@@ -1,7 +1,8 @@
 package graft.algorithms
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructField, StructType}
 
 import graft.functions.ParamLiteral
 
@@ -179,7 +180,9 @@ object Traversals {
       visited = visited.unionByName(next)
       frontier = next.select("id")
     }
-    e.unpersist()
+    // the levels are materialized: the oriented edge checkpoint backs
+    // nothing in the result (Dataset.unpersist would not free it)
+    graft.util.Checkpoints.release(edges.sparkSession, graft.util.Checkpoints.idsOf(e))
     visited
   }
 
@@ -197,14 +200,15 @@ object Traversals {
       dir: Direction = Direction.Out): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    // the result is a driver-side Seq — every checkpoint created along the
-    // way (bfsParents levels, the parents snapshot, doublingChain's
-    // jump/chain rounds) is dead once it exists, so the whole delta is
-    // released rather than only the parents snapshot (r6 audit)
-    val out = graft.util.Checkpoints.sweepingDelta(spark) {
-      // early-exit BFS: stops expanding once dstId is reached
-      val parents = bfsParents(edges, Seq(srcId).toDF("id"), maxHops, dir, Some(dstId))
-        .localCheckpoint()
+    // the result is a driver-side Seq, so every checkpoint made along the
+    // way is dead once it exists: bfsParents' levels and the parents
+    // snapshot are released here by the ids read off those frames
+    // (doublingChain releases its own rounds). Never a diff of the
+    // context's persisted set: that would also free what another session
+    // persists meanwhile.
+    val levels = bfsParents(edges, Seq(srcId).toDF("id"), maxHops, dir, Some(dstId))
+    val parents = levels.localCheckpoint()
+    val out = try {
       val endRow = parents.where(col("id") === ParamLiteral(dstId))
         .select("dist", "parent").collect()
       if (endRow.isEmpty) Seq.empty[(Long, Long, Int, Seq[Long])]
@@ -212,8 +216,55 @@ object Traversals {
         val dist = endRow(0).getInt(0)
         Seq((srcId, dstId, dist, doublingChain(parents, dstId, dist)))
       }
-    }
+    } finally graft.util.Checkpoints.release(spark,
+      graft.util.Checkpoints.idsOf(levels) ++ graft.util.Checkpoints.idsOf(parents))
     out.toDF("start_id", "end_id", "dist", "path")
+  }
+
+  /** [[shortestPath]] over an adjacency index walked in the search's
+    * direction: the same row, with the BFS frontier and the min-id parents
+    * held on the driver and each level one lookup job. None when the
+    * vertices reached, or the edges one level fetches, pass `maxRows`
+    * before the search ends; the caller then runs [[shortestPath]].
+    */
+  private[graft] def shortestPathLocal(spark: org.apache.spark.sql.SparkSession,
+      adj: Adjacency, srcId: Long, dstId: Long, maxHops: Int,
+      maxRows: Long = BroadcastFrontierRows): Option[DataFrame] = {
+    import spark.implicits._
+    val parent = scala.collection.mutable.LongMap(srcId -> srcId)
+    var frontier = Array(srcId)
+    var found = srcId == dstId
+    var over = false
+    var hop = 0
+    while (!found && !over && hop < maxHops && frontier.nonEmpty) {
+      hop += 1
+      val next = scala.collection.mutable.LongMap.empty[Long]
+      adj.neighbors(frontier, maxRows) match {
+        case None => over = true
+        case Some(nb) =>
+          val it = frontier.iterator
+          while (!over && it.hasNext) {
+            val u = it.next()
+            nb.foreach(u) { (v, _) =>
+              if (!parent.contains(v) && next.getOrElse(v, Long.MaxValue) > u) next(v) = u
+            }
+            over = parent.size + next.size > maxRows
+          }
+      }
+      parent ++= next
+      frontier = next.keys.toArray
+      found = next.contains(dstId)
+    }
+    if (over) None
+    else {
+      val rows =
+        if (!found) Seq.empty[(Long, Long, Int, Seq[Long])]
+        else {
+          val path = Iterator.iterate(dstId)(parent).takeWhile(_ != srcId).toVector.reverse
+          Seq((srcId, dstId, hop, srcId +: path))
+        }
+      Some(rows.toDF("start_id", "end_id", "dist", "path"))
+    }
   }
 
   /** Point-to-point shortest-path DISTANCE via bidirectional BFS — the
@@ -445,30 +496,35 @@ object Traversals {
     if (pathLen <= 0) return Seq(dstId)
     val endDist = parents.where(col("id") === ParamLiteral(dstId))
       .select(col("dist")).head.get(0)
-    var jump = parents
-      .where(col("parent").isNotNull && col("dist") <= ParamLiteral(endDist))
-      .select(col("id"), col("parent").as("anc"))
-      .localCheckpoint(false) // lazy: flat plan, materialized by the final action
-    // chain rows: (id, pos) with pos = #hops walked back from dst
-    var chain = Seq((dstId, 0L)).toDF("id", "pos")
-    var span = 1L
-    while (span <= pathLen) {
-      // jumping `span` back from every known chain node extends the covered
-      // prefix from [0, span) to [0, 2*span): doubling, not walking
-      val jumped = chain.join(jump, "id")
-        .select(col("anc").as("id"), (col("pos") + span).as("pos"))
-      // lazy checkpoint: flat plan per round, materialized by the final
-      // action (each round's blocks then serve both the union and the join)
-      chain = chain.unionByName(jumped.where(col("pos") <= ParamLiteral(pathLen.toLong)))
-        .localCheckpoint(false)
-      span *= 2
-      if (span <= pathLen)
-        jump = jump.as("a").join(jump.as("b"), col("a.anc") === col("b.id"))
-          .select(col("a.id"), col("b.anc").as("anc"))
-          .localCheckpoint(false)
-    }
-    // ONE final action collects the (pathLen+1)-row chain, src-first
-    chain.orderBy(col("pos").desc).select(col("id")).as[Long].collect().toSeq
+    // every round's checkpoint is dead once the chain is collected
+    val rounds = Seq.newBuilder[DataFrame]
+    def round(df: DataFrame): DataFrame = { val c = df.localCheckpoint(false); rounds += c; c }
+    try {
+      // lazy checkpoints: flat plan, materialized by the final action
+      var jump = round(parents
+        .where(col("parent").isNotNull && col("dist") <= ParamLiteral(endDist))
+        .select(col("id"), col("parent").as("anc")))
+      // chain rows: (id, pos) with pos = #hops walked back from dst
+      var chain = Seq((dstId, 0L)).toDF("id", "pos")
+      var span = 1L
+      while (span <= pathLen) {
+        // jumping `span` back from every known chain node extends the
+        // covered prefix from [0, span) to [0, 2*span): doubling, not
+        // walking
+        val jumped = chain.join(jump, "id")
+          .select(col("anc").as("id"), (col("pos") + span).as("pos"))
+        // each round's blocks serve both the union and the join
+        chain = round(chain.unionByName(
+          jumped.where(col("pos") <= ParamLiteral(pathLen.toLong))))
+        span *= 2
+        if (span <= pathLen)
+          jump = round(jump.as("a").join(jump.as("b"), col("a.anc") === col("b.id"))
+            .select(col("a.id"), col("b.anc").as("anc")))
+      }
+      // ONE final action collects the (pathLen+1)-row chain, src-first
+      chain.orderBy(col("pos").desc).select(col("id")).as[Long].collect().toSeq
+    } finally graft.util.Checkpoints.release(spark,
+      rounds.result().flatMap(graft.util.Checkpoints.idsOf).toSet)
   }
 
   /** All simple paths between two vertices with length in [minLen, maxLen]
@@ -637,6 +693,88 @@ object Traversals {
       case Some(k) => all.orderBy(col("len"), col("path")).limit(k)
       case None    => all
     }
+  }
+
+  /** [[vle]] over an adjacency index walked in its direction: the same
+    * rows and schema, walked on the driver (see [[vlePaths]]) from the
+    * distinct non-null `id`s of `starts`, read by one job. None when the
+    * start ids or the paths held pass `maxRows`; the caller then runs
+    * [[vle]].
+    */
+  private[graft] def vleLocal(adj: Adjacency, starts: DataFrame, minLength: Int,
+      maxLength: Int, carryEdges: Boolean,
+      maxRows: Long = BroadcastPathRows): Option[DataFrame] = {
+    val ids = distinctIds(Seq(starts), (maxRows + 1).min(Int.MaxValue).toInt).head
+    if (ids.length > maxRows) None
+    else vlePaths(adj, ids, minLength, maxLength, carryEdges, maxRows).map { rows =>
+      val longs = ArrayType(LongType)
+      val schema = StructType(Seq(StructField("start_id", LongType),
+        StructField("end_id", LongType), StructField("len", IntegerType),
+        StructField("path", longs)) ++
+        (if (carryEdges) Seq(StructField("epath", longs)) else Nil))
+      starts.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    }
+  }
+
+  /** The rows of [[vle]] from `starts` — (start_id, end_id, len, path
+    * [, epath]) — walked on the driver over an adjacency index, one lookup
+    * job per level. None as soon as the paths held (the results, the
+    * frontier and the next level as it grows, checked after each path's
+    * expansion) or the edges one level fetches pass `maxRows`; the caller
+    * then runs [[vle]].
+    */
+  private[graft] def vlePaths(adj: Adjacency, starts: Array[Long], minLength: Int,
+      maxLength: Int, carryEdges: Boolean, maxRows: Long): Option[Seq[Row]] = {
+    require(minLength >= 1 && maxLength >= minLength, "need 1 <= min <= max")
+    // (vertex path, edge path) per frontier row
+    var frontier = starts.distinct.map(s => (Array(s), Array.emptyLongArray))
+    val out = scala.collection.mutable.ArrayBuffer[Row]()
+    var over = frontier.length > maxRows
+    var len = 0
+    while (!over && len < maxLength && frontier.nonEmpty) {
+      len += 1
+      val held = out.size + frontier.length
+      val next = scala.collection.mutable.ArrayBuffer[(Array[Long], Array[Long])]()
+      adj.neighbors(frontier.map(_._1.last), maxRows) match {
+        case None => over = true
+        case Some(nb) =>
+          val it = frontier.iterator
+          while (!over && it.hasNext) {
+            val (path, epath) = it.next()
+            nb.foreach(path.last) { (v, e) =>
+              if (!path.contains(v)) next += ((path :+ v, if (carryEdges) epath :+ e else epath))
+            }
+            over = held + next.size > maxRows
+          }
+      }
+      frontier = next.toArray
+      if (!over && len >= minLength) frontier.foreach { case (path, epath) =>
+        out += Row.fromSeq(Seq(path.head, path.last, len, path.toSeq) ++
+          (if (carryEdges) Seq(epath.toSeq) else Nil))
+      }
+    }
+    if (over) None else Some(out.toSeq)
+  }
+
+  /** The distinct non-null values of each frame's `id` column, at most
+    * `limit` of each, read by one job over the frames' union (plus the
+    * stages the frames' own plans need).
+    */
+  private[graft] def distinctIds(frames: Seq[DataFrame], limit: Int): Seq[Array[Long]] = {
+    val tagged = frames.zipWithIndex
+      .map { case (df, t) => df.select(lit(t).as("t"), col("id").cast("long").as("id")) }
+      .reduce(_.unionByName(_))
+    val n = frames.size
+    val found = tagged.sparkSession.sparkContext.runJob(tagged.queryExecution.toRdd,
+      (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
+        val seen = Array.fill(n)(scala.collection.mutable.LinkedHashSet.empty[Long])
+        while (it.hasNext && seen.exists(_.size < limit)) {
+          val r = it.next()
+          if (!r.isNullAt(1) && seen(r.getInt(0)).size < limit) seen(r.getInt(0)) += r.getLong(1)
+        }
+        seen.map(_.toArray)
+      })
+    (0 until n).map(t => found.iterator.flatMap(_(t)).distinct.take(limit).toArray)
   }
 
   /** Vertices at exactly k hops (reference vle.rs:196-220): distinct BFS

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import Ast._
-import graft.algorithms.{Direction, PregelSssp, Traversals}
+import graft.algorithms.{Adjacency, CsrBlock, Direction, PregelSssp, Traversals}
 import graft.store.GraphStore
 
 final case class PlanResult(df: Option[DataFrame], store: GraphStore)
@@ -23,7 +23,8 @@ final case class PlanResult(df: Option[DataFrame], store: GraphStore)
   */
 final class Planner(spark: SparkSession, store0: GraphStore,
     params: Map[String, Any] = Map.empty,
-    reading: Planner.ReadHook = Planner.DirectReads) {
+    reading: Planner.ReadHook = Planner.DirectReads,
+    adjacency: Planner.AdjacencyHook = Planner.NoAdjacency) {
 
   private var store = store0
 
@@ -38,6 +39,15 @@ final class Planner(spark: SparkSession, store0: GraphStore,
   }
 
   private def allEdges: DataFrame = readStore(VarKind.Edge, store.edgeLabels).allEdges
+
+  /** The session's adjacency index for walking `rel` in `dir`: only when
+    * `rel` names exactly one edge type and has no inline props, over the
+    * table this statement reads.
+    */
+  private def adjacencyFor(rel: RelPat, dir: Direction): Option[Adjacency] = rel.types match {
+    case Seq(t) if rel.props.isEmpty => adjacency(readStore(VarKind.Edge, Seq(t)).edgeTables(t), dir)
+    case _ => None
+  }
 
   private var anon = 0
   private def fresh(p: String): String = { anon += 1; s"__$p$anon" }
@@ -867,9 +877,14 @@ final class Planner(spark: SparkSession, store0: GraphStore,
              else Nil) ++
             (if (wantPath) Seq(array(col("id")).as(s"${ev}__vp"),
               expr("CAST(array() AS ARRAY<BIGINT>)").as(s"${ev}__ep")) else Nil)): _*)
+        // with a session adjacency the walk runs on the driver; without
+        // one, or past the path bound, the DataFrame loop
         val walked =
-          if (hi >= 1) Traversals.vle(eb.select(col("id"), col("src"), col("dst")),
-            starts, lo.max(1), hi, dir, carryEdges = carryE)
+          if (hi >= 1) adjacencyFor(rel, dir)
+            .flatMap(Traversals.vleLocal(_, sc0.df.select(col(prev).as("id")),
+              lo.max(1), hi, carryE))
+            .getOrElse(Traversals.vle(eb.select(col("id"), col("src"), col("dst")),
+              starts, lo.max(1), hi, dir, carryEdges = carryE))
             .select(pairCols: _*)
           else zeroRows.where(lit(false))
         val pairs = if (lo == 0) walked.unionByName(zeroRows) else walked
@@ -1752,7 +1767,7 @@ final class Planner(spark: SparkSession, store0: GraphStore,
         else lit(null)
       eb = eb.where(target === ec(emptyScope).compile(ex))
     }
-    def resolve(np: NodePat): Long = {
+    def endpoint(np: NodePat): DataFrame = {
       val boundV = np.variable.filter(v => scope.exists(_.vars.contains(v)))
       val (df, idCol) = boundV match {
         case Some(v) =>
@@ -1763,13 +1778,16 @@ final class Planner(spark: SparkSession, store0: GraphStore,
           (compilePath(None, PathPat(np.copy(variable = Some(v)), Nil)).df,
             Scope.colName(v, "id"))
       }
-      val ids = df.select(col(idCol)).distinct().limit(2).collect()
-      require(ids.length == 1,
-        s"shortestPath endpoint must resolve to exactly one vertex, got ${ids.length}: $np")
-      ids(0).getLong(0)
+      df.select(col(idCol).as("id"))
     }
-    val srcId = resolve(pat.start)
-    val dstId = resolve(endNp)
+    // both endpoints resolve in one job
+    val Seq(srcId, dstId) =
+      Seq(pat.start, endNp).zip(Traversals.distinctIds(Seq(endpoint(pat.start), endpoint(endNp)), 2))
+        .map { case (np, ids) =>
+          require(ids.length == 1,
+            s"shortestPath endpoint must resolve to exactly one vertex, got ${ids.length}: $np")
+          ids(0)
+        }
     val raw = weightKey match {
       case None if spc.all =>
         Traversals.allShortestPaths(
@@ -1780,8 +1798,10 @@ final class Planner(spark: SparkSession, store0: GraphStore,
             "minimum-cost path multiplicity is not defined here; use " +
             "shortestPath for the weighted single path")
       case None =>
-        Traversals.shortestPath(
-          eb.select(col("src"), col("dst")), srcId, dstId, maxHops, dir)
+        adjacencyFor(rel, dir)
+          .flatMap(Traversals.shortestPathLocal(spark, _, srcId, dstId, maxHops))
+          .getOrElse(Traversals.shortestPath(
+            eb.select(col("src"), col("dst")), srcId, dstId, maxHops, dir))
       case Some(wk) =>
         val wcol: Column =
           if (eb.columns.contains(wk)) eb(wk).cast("double")
@@ -2279,6 +2299,15 @@ object Planner {
   type ReadHook = (GraphStore, VarKind, String) => GraphStore
 
   val DirectReads: ReadHook = (store, _, _) => store
+
+  /** Called when a statement walks a var-length or shortestPath pattern
+    * over one edge table, with that table as the statement reads it (after
+    * the ReadHook) and the direction of the walk; returns an adjacency
+    * index over exactly that table, or None for the DataFrame loop.
+    */
+  type AdjacencyHook = (DataFrame, Direction) => Option[Adjacency]
+
+  val NoAdjacency: AdjacencyHook = (_, _) => None
 }
 
 /** User-facing session: parse → plan → run; mutations swap the store
@@ -2318,6 +2347,7 @@ final class CypherSession(val spark: SparkSession, initial: GraphStore,
     require(txnSnapshot.isEmpty, "transaction already open (no nesting)")
     txnSnapshot = Some(store)
     txnCreated = Set.empty
+    txnIndexes = new java.util.IdentityHashMap(indexes)
   }
 
   /** Keep everything executed since begin(). The statements already
@@ -2328,13 +2358,15 @@ final class CypherSession(val spark: SparkSession, initial: GraphStore,
     require(txnSnapshot.nonEmpty, "no open transaction")
     txnSnapshot = None
     txnCreated = Set.empty
+    txnIndexes = null
   }
 
   /** Discard everything executed since begin(): restore the snapshot
     * store and free the checkpoint blocks this scope's own statements
     * persisted (accumulated per-run diffs — never a blanket "everything
     * persisted since begin", which would free concurrent sessions'
-    * blocks on the shared SparkContext).
+    * blocks on the shared SparkContext), the adjacency indexes built in
+    * the scope among them. The held tables are those of begin() again.
     */
   def rollback(): Unit = synchronized {
     require(txnSnapshot.nonEmpty, "no open transaction")
@@ -2342,13 +2374,19 @@ final class CypherSession(val spark: SparkSession, initial: GraphStore,
     txnSnapshot = None
     graft.util.Checkpoints.release(spark, txnCreated)
     ownedGen = ownedGen -- txnCreated
+    indexes.clear()
+    indexes.putAll(txnIndexes)
+    indexes.values.forEach { built =>
+      built.indices.foreach(i => if (built(i) != null && txnCreated(built(i).id)) built(i) = null)
+    }
     txnCreated = Set.empty
+    txnIndexes = null
   }
 
   def run(cypher: String): DataFrame = {
     val inTxn = synchronized { txnSnapshot.nonEmpty }
     val readNow = scala.collection.mutable.Set[(VarKind, String)]()
-    val planner = new Planner(spark, store, params, residency(readNow))
+    val planner = new Planner(spark, store, params, residency(readNow), adjacencyOf(build = true))
     val res = planner.plan(Parser.parse(cypher))
     synchronized { readBefore ++= readNow }
     store = res.store
@@ -2408,9 +2446,58 @@ final class CypherSession(val spark: SparkSession, initial: GraphStore,
           ownedGen = ownedGen + rows.id
           val copy = org.apache.spark.sql.GraftColumnBridge.ofRows(rows, opening)
           if (kind == VarKind.Node) st.withVertexTable(label, copy)
-          else st.withEdgeTable(label, copy)
+          else { holdResident(copy); st.withEdgeTable(label, copy) }
         }
       case _ => st
+    }
+  }
+
+  // ---------------- session-resident adjacency ----------------
+
+  /** Adjacency indexes over the edge tables this session holds resident
+    * (its resident copies and the tables of a compacted generation), keyed
+    * by the table's identity, so a table a write has replaced misses. Slot
+    * 0 is the src-keyed index, built when a statement first walks the
+    * table; slot 1 the dst-keyed one, built when a statement first walks it
+    * `<-` or undirected. Both have the shuffle partition count, join
+    * ownedGen and go at the next compaction. Each costs about 16 bytes per
+    * edge plus 12 per distinct key, held MEMORY_AND_DISK. One built in an
+    * open transaction is released by its rollback.
+    */
+  private val indexes =
+    new java.util.IdentityHashMap[DataFrame, Array[org.apache.spark.rdd.RDD[CsrBlock]]]()
+
+  /** The held tables at begin(), restored by rollback(). */
+  private var txnIndexes: java.util.IdentityHashMap[DataFrame, Array[org.apache.spark.rdd.RDD[CsrBlock]]] = _
+
+  private def holdResident(table: DataFrame): Unit = indexes.put(table, new Array(2))
+
+  /** The compacted store's edge tables replace every held table. */
+  private def holdGeneration(): Unit = synchronized {
+    indexes.clear()
+    store.edgeTables.values.foreach(holdResident)
+  }
+
+  /** The adjacency hook; without `build` it hands out only indexes an
+    * earlier statement built.
+    */
+  private def adjacencyOf(build: Boolean): Planner.AdjacencyHook = (table, dir) => synchronized {
+    Option(indexes.get(table)).flatMap { built =>
+      def index(slot: Int) = {
+        if (built(slot) == null && build) {
+          val partitions = Option(built(1 - slot)).map(_.partitions.length)
+            .getOrElse(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+          built(slot) = Adjacency.index(table, reverse = slot == 1, partitions)
+          ownedGen = ownedGen + built(slot).id
+          if (txnSnapshot.nonEmpty) txnCreated = txnCreated + built(slot).id
+        }
+        Option(built(slot))
+      }
+      dir match {
+        case Direction.Out => index(0).map(Adjacency(_))
+        case Direction.In => index(1).map(Adjacency(_))
+        case Direction.Both => for (o <- index(0); i <- index(1)) yield Adjacency.both(o, i)
+      }
     }
   }
 
@@ -2440,6 +2527,7 @@ final class CypherSession(val spark: SparkSession, initial: GraphStore,
       store = store.compact(eager = true)
       val added = (store.vertexTables.values ++ store.edgeTables.values)
         .flatMap(graft.util.Checkpoints.idsOf).toSet
+      holdGeneration()
       if (txnSnapshot.isEmpty) {
         graft.util.Checkpoints.release(spark, ownedGen -- added)
         ownedGen = added
@@ -2483,6 +2571,7 @@ final class CypherSession(val spark: SparkSession, initial: GraphStore,
         val before = sc.getPersistentRDDs.keySet
         store = store.compact(eager = true)
         graft.util.Checkpoints.release(spark, before -- baseline)
+        holdGeneration()
       }
     }
     executed
@@ -2491,10 +2580,13 @@ final class CypherSession(val spark: SparkSession, initial: GraphStore,
   /** Physical plan of a read query without executing it (the engine's
     * EXPLAIN surface — the reference has no optimizer to explain, §4.1).
     * Does not apply mutations: the plan is compiled against the current
-    * store and discarded.
+    * store and discarded. Traversals still run while planning, as in
+    * `run`, over the adjacency indexes earlier statements built; explain
+    * builds none.
     */
   def explain(cypher: String, extended: Boolean = false): String = {
-    val res = new Planner(spark, store, params).plan(Parser.parse(cypher))
+    val res = new Planner(spark, store, params, adjacency = adjacencyOf(build = false))
+      .plan(Parser.parse(cypher))
     res.df match {
       case Some(df) =>
         if (extended) df.queryExecution.toString

@@ -2068,4 +2068,115 @@ class CypherSpec extends AnyFunSuite with SparkSuite {
       finally conf.keys.foreach(spark.conf.unset)
     }
   }
+
+  /** A parquet store of 40 Person nodes (age = position) on a KNOWS ring
+    * with chords: i -> i+1 and i -> i+3 (mod 40).
+    */
+  def parquetRing(): GraphStore = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_ring").toString
+    val persons = (0 until 40).map(i => (Graphid.pack(100, i + 1), s"p$i", i.toLong))
+      .toDF("id", "name", "age")
+    val knows = (0 until 40).flatMap(i => Seq((i, (i + 1) % 40), (i, (i + 3) % 40)))
+      .zipWithIndex.map { case ((s, d), j) =>
+        (Graphid.pack(101, j + 1), Graphid.pack(100, s + 1), Graphid.pack(100, d + 1), 2000L + j) }
+      .toDF("id", "src", "dst", "since")
+    new GraphStore(Map("Person" -> persons), Map("KNOWS" -> knows)).save(dir)
+    GraphStore.load(spark, dir)
+  }
+
+  def ringShortest(to: Int): String =
+    s"MATCH p = shortestPath((a:Person {age: 0})-[:KNOWS*..6]->(b:Person {age: $to})) RETURN length(p) AS l"
+  def ringVle(from: Int): String =
+    s"MATCH (a:Person {age: $from})-[:KNOWS*1..3]->(b:Person) RETURN count(DISTINCT b.age) AS n"
+
+  /** A ring session whose KNOWS table is resident and walked once. */
+  def residentRing(): CypherSession = {
+    val s = new CypherSession(spark, parquetRing())
+    for (_ <- 0 until 2) { rows(s.run(ringShortest(10))); rows(s.run(ringVle(0))) }
+    s
+  }
+
+  def adjacencyIds: Set[Int] = spark.sparkContext.getPersistentRDDs
+    .collect { case (id, r) if r.name != null && r.name.startsWith("graft adjacency") => id }.toSet
+
+  test("resident shortestPath and *1..3 reads run far fewer jobs than the DataFrame loop") {
+    val s = residentRing()
+    // 13 = 3+3+3+3+1: five hops, for which the DataFrame loop ran 58 jobs
+    val (sp, spJobs) = jobsDuring(rows(s.run(ringShortest(13))))
+    assert(sp == Seq(Seq(5L)))
+    assert(spJobs <= 29, s"shortestPath ran $spJobs jobs")
+    // the DataFrame loop ran 17 jobs; here the start ids (1), one lookup
+    // per level (3) and the read with the walked paths joined in (5)
+    val (vl, vlJobs) = jobsDuring(rows(s.run(ringVle(7))))
+    assert(vl == Seq(Seq(8L)))
+    assert(vlJobs <= 9, s"*1..3 ran $vlJobs jobs")
+  }
+
+  test("a one-key adjacency lookup runs one task at 4 and at 32 partitions") {
+    val knows = parquetRing().edgeTables("KNOWS")
+    for (partitions <- Seq(4, 32)) {
+      val index = graft.algorithms.Adjacency.index(knows, reverse = false, partitions)
+      val adj = graft.algorithms.Adjacency(index)
+      val (nb, jobs, tasks) = countsDuring(adj.neighbors(Array(Graphid.pack(100, 1))).get)
+      val found = Seq.newBuilder[Long]
+      nb.foreach(Graphid.pack(100, 1))((v, _) => found += v)
+      assert(found.result().sorted == Seq(Graphid.pack(100, 2), Graphid.pack(100, 4)))
+      assert((jobs, tasks) == (1, 1), s"$partitions partitions")
+      index.unpersist()
+    }
+  }
+
+  test("a var-length read in a resident session persists nothing") {
+    val s = residentRing()
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val df = s.run(ringVle(5))
+    assert(rows(df) == Seq(Seq(8L)))
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
+  }
+
+  test("a write to the walked label sends the next traversal to the DataFrame loop") {
+    val s = residentRing()
+    val sc = spark.sparkContext
+    rows(s.run("MATCH (a:Person {age: 5}), (b:Person {age: 30}) CREATE (a)-[:KNOWS {since: 1}]->(b)"))
+    val (before, adjBefore) = (sc.getPersistentRDDs.keySet, adjacencyIds)
+    val df = s.run(ringVle(5))
+    assert(rows(df) == rows(new CypherSession(spark, s.store).run(ringVle(5))))
+    assert(rows(df) == Seq(Seq(14L)))
+    // the loop's level checkpoints, and no new index
+    assert((sc.getPersistentRDDs.keySet -- before).nonEmpty)
+    assert(adjacencyIds == adjBefore)
+  }
+
+  test("an adjacency built in a transaction goes with its rollback") {
+    val s = residentRing()
+    val back = "MATCH (a:Person {age: 7})<-[:KNOWS*1..2]-(b:Person) RETURN count(DISTINCT b.age) AS n"
+    val before = adjacencyIds
+    s.begin()
+    assert(rows(s.run(back)) == Seq(Seq(5L)))
+    val built = adjacencyIds -- before
+    assert(built.size == 1)
+    s.rollback()
+    assert(adjacencyIds == before)
+    // the next backward walk builds it again
+    assert(rows(s.run(back)) == Seq(Seq(5L)))
+    assert((adjacencyIds -- before).size == 1)
+  }
+
+  test("compaction releases the session's adjacency") {
+    val before = adjacencyIds
+    val s = residentRing()
+    val mine = adjacencyIds -- before
+    assert(mine.nonEmpty)
+    var sets = 0
+    while (mine.exists(spark.sparkContext.getPersistentRDDs.contains)) {
+      sets += 1
+      assert(sets <= 20, "no compaction released the adjacency")
+      s.run(s"MATCH (n:Person) WHERE n.age = 3 SET n.name = 'q$sets'")
+    }
+    // the compacted generation is resident: the next walk indexes it
+    assert(rows(s.run(ringVle(0))) == Seq(Seq(8L)))
+    assert((adjacencyIds -- before -- mine).nonEmpty)
+  }
 }

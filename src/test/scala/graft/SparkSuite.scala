@@ -3,7 +3,7 @@ package graft
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.GraftTestBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskStart}
 import org.apache.spark.sql.SparkSession
 
 /** The spec session: the engine's one profile ([[Session]]) at a fixed
@@ -19,10 +19,20 @@ trait SparkSuite {
     * counts, and again before it detaches, so every job of `body` does.
     */
   def jobsDuring[A](body: => A): (A, Int) = {
+    val (result, jobs, _) = countsDuring(body)
+    (result, jobs)
+  }
+
+  /** `body`'s result and the numbers of Spark jobs and tasks it started,
+    * counted like [[jobsDuring]].
+    */
+  def countsDuring[A](body: => A): (A, Int, Int) = {
     val sc = spark.sparkContext
     val jobs = new AtomicInteger(0)
+    val tasks = new AtomicInteger(0)
     val listener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onTaskStart(ts: SparkListenerTaskStart): Unit = tasks.incrementAndGet()
     }
     GraftTestBus.drain(sc)
     sc.addSparkListener(listener)
@@ -32,6 +42,6 @@ trait SparkSuite {
         GraftTestBus.drain(sc)
         sc.removeSparkListener(listener)
       }
-    (result, jobs.get)
+    (result, jobs.get, tasks.get)
   }
 }

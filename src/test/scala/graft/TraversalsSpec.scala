@@ -419,4 +419,32 @@ class TraversalsSpec extends AnyFunSuite with SparkSuite {
         (if (v == src) Some(0.0) else dists.get(v)), s"mismatch at $v")
     }
   }
+
+  test("shortestPath frees only its own checkpoints, not blocks persisted meanwhile") {
+    val sc = spark.sparkContext
+    val e = (0 until 12).map(i => (Graphid.pack(1, i), Graphid.pack(1, i + 1))).toDF("src", "dst")
+    // another thread persists (as a concurrent session's compaction would)
+    // for as long as the search runs
+    val theirs = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[Int]]()
+    @volatile var running = true
+    val started = new java.util.concurrent.CountDownLatch(1)
+    val other = new Thread(() => while (running) {
+      val r = sc.parallelize(1 to 4, 1).persist()
+      r.count()
+      theirs.add(r)
+      started.countDown()
+      Thread.sleep(10)
+    })
+    other.start()
+    started.await()
+    val res = try Traversals.shortestPath(e, Graphid.pack(1, 0), Graphid.pack(1, 12), 12).collect()
+      finally { running = false; other.join() }
+    assert(res.length == 1 && res(0).getInt(2) == 12)
+    val persisted = theirs.toArray(Array.empty[org.apache.spark.rdd.RDD[Int]]).toSeq
+    assert(persisted.size >= 2)
+    val live = sc.getPersistentRDDs.keySet
+    assert(persisted.forall(r => live.contains(r.id)),
+      s"${persisted.count(r => !live.contains(r.id))} of ${persisted.size} were freed")
+    persisted.foreach(_.unpersist())
+  }
 }
