@@ -7,27 +7,37 @@ import scala.collection.mutable
 import org.apache.spark.{HashPartitioner, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StringType}
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
 
-/** One hash partition of an adjacency index in CSR form: `keys` are sorted
-  * and distinct, and the neighbours of keys(i) are nbrs(offsets(i) until
-  * offsets(i + 1)), reached over the edges with the same positions in
-  * `eids`.
+/** One hash partition of a keyed index: `keys` are sorted and distinct, and
+  * the rows of keys(i) are rows offsets(i) until offsets(i + 1). Row r is an
+  * UnsafeRow of `fields` fields, packed at bytes(at(r) until at(r + 1)).
   */
-final case class CsrBlock(keys: Array[Long], offsets: Array[Int],
-    nbrs: Array[Long], eids: Array[Long])
+final case class CsrBlock(keys: Array[Long], offsets: Array[Int], at: Array[Int],
+    bytes: Array[Byte], fields: Int) {
+
+  /** Row `r`, read through `into` (which is returned). */
+  def row(r: Int, into: UnsafeRow): UnsafeRow = {
+    into.pointTo(bytes, Platform.BYTE_ARRAY_OFFSET + at(r), at(r + 1) - at(r))
+    into
+  }
+}
 
 object CsrBlock {
 
-  /** Counting sort of (key, (neighbour, edge id)) rows into one block;
-    * a key's neighbours keep their input order.
+  /** Counting sort of (key, UnsafeRow bytes) pairs into one block; a key's
+    * rows keep their input order.
     */
-  def of(rows: Iterator[(Long, (Long, Long))]): CsrBlock = {
+  def of(rows: Iterator[(Long, Array[Byte])], fields: Int): CsrBlock = {
     val ks = mutable.ArrayBuilder.make[Long]
-    val ns = mutable.ArrayBuilder.make[Long]
-    val es = mutable.ArrayBuilder.make[Long]
-    rows.foreach { case (k, (n, e)) => ks += k; ns += n; es += e }
+    val rs = mutable.ArrayBuffer[Array[Byte]]()
+    rows.foreach { case (k, r) => ks += k; rs += r }
     val key = ks.result()
     val sorted = key.clone()
     Arrays.sort(sorted)
@@ -44,55 +54,56 @@ object CsrBlock {
     var j = 0
     while (j < keys.length) { offsets(j + 1) += offsets(j); j += 1 }
     val next = offsets.clone()
-    val nbrs = new Array[Long](key.length)
-    val eids = new Array[Long](key.length)
-    val n = ns.result()
-    val e = es.result()
+    val order = new Array[Int](key.length)
     var i = 0
-    while (i < key.length) {
-      val p = next(slot(i))
-      nbrs(p) = n(i); eids(p) = e(i); next(slot(i)) = p + 1
-      i += 1
-    }
-    CsrBlock(keys, offsets, nbrs, eids)
+    while (i < key.length) { order(next(slot(i))) = i; next(slot(i)) += 1; i += 1 }
+    pack(keys, offsets, order.iterator.map(rs), fields)
+  }
+
+  /** A block of `keys` whose rows, in order, are `rows`. */
+  private def pack(keys: Array[Long], offsets: Array[Int], rows: Iterator[Array[Byte]],
+      fields: Int): CsrBlock = {
+    val at = mutable.ArrayBuilder.make[Int]
+    val bytes = new java.io.ByteArrayOutputStream()
+    at += 0
+    rows.foreach { r => bytes.write(r); at += bytes.size }
+    CsrBlock(keys, offsets, at.result(), bytes.toByteArray, fields)
   }
 
   /** The rows of `keys` (sorted) over the blocks of one partition, each
-    * key's neighbours concatenated block by block; absent keys are left
-    * out. Past `limit` edges the slice stops, holding `limit` + 1 of them.
+    * key's rows concatenated block by block; absent keys are left out. Past
+    * `limit` rows the slice stops, holding `limit` + 1 of them.
     */
   def slice(blocks: Array[CsrBlock], keys: Array[Long], limit: Long): CsrBlock = {
     val ks = mutable.ArrayBuilder.make[Long]
     val offs = mutable.ArrayBuilder.make[Int]
-    val ns = mutable.ArrayBuilder.make[Long]
-    val es = mutable.ArrayBuilder.make[Long]
+    val rows = mutable.ArrayBuffer[Array[Byte]]()
     offs += 0
-    var total = 0
     var j = 0
-    while (j < keys.length && total <= limit) {
+    while (j < keys.length && rows.size <= limit) {
       val k = keys(j)
       var hit = false
       blocks.foreach { b =>
         val i = Arrays.binarySearch(b.keys, k)
         if (i >= 0) {
           hit = true
-          var p = b.offsets(i)
-          while (p < b.offsets(i + 1) && total <= limit) {
-            ns += b.nbrs(p); es += b.eids(p); total += 1; p += 1
+          var r = b.offsets(i)
+          while (r < b.offsets(i + 1) && rows.size <= limit) {
+            rows += Arrays.copyOfRange(b.bytes, b.at(r), b.at(r + 1)); r += 1
           }
         }
       }
-      if (hit) { ks += k; offs += total }
+      if (hit) { ks += k; offs += rows.size }
       j += 1
     }
-    CsrBlock(ks.result(), offs.result(), ns.result(), es.result())
+    pack(ks.result(), offs.result(), rows.iterator, blocks.headOption.map(_.fields).getOrElse(0))
   }
 }
 
-/** The neighbours of a set of keys, as fetched by one [[Adjacency]]
-  * lookup; held on the driver.
+/** The rows of a set of keys, as fetched by one [[Adjacency]] lookup; held
+  * on the driver.
   */
-final class Neighbors private[algorithms] (blocks: Array[CsrBlock]) {
+final class KeyedRows private[algorithms] (blocks: Array[CsrBlock]) {
   private val at = {
     val m = mutable.LongMap.empty[Long]
     blocks.indices.foreach { b =>
@@ -101,33 +112,50 @@ final class Neighbors private[algorithms] (blocks: Array[CsrBlock]) {
     m
   }
 
-  /** Calls `f(neighbour, edge id)` for every edge leaving `key`. */
-  def foreach(key: Long)(f: (Long, Long) => Unit): Unit =
+  /** Calls `f` for every row of `key`, through one reused UnsafeRow: a value
+    * read from it stays valid, the row itself only until `f` returns.
+    */
+  def foreachRow(key: Long)(f: UnsafeRow => Unit): Unit =
     at.get(key).foreach { pos =>
       val b = blocks((pos >>> 32).toInt)
       val i = pos.toInt
-      var p = b.offsets(i)
-      while (p < b.offsets(i + 1)) { f(b.nbrs(p), b.eids(p)); p += 1 }
+      val row = new UnsafeRow(b.fields)
+      var r = b.offsets(i)
+      while (r < b.offsets(i + 1)) { f(b.row(r, row)); r += 1 }
+    }
+
+  /** Calls `f(neighbour, edge id)` for every edge at `key` of an edge index
+    * (rows laid out as [[Adjacency.edgeColumns]]): the neighbour is the
+    * endpoint that is not `key`, or `key` itself for a self-loop. Edges with
+    * a null endpoint or id are skipped: no traversal can walk them.
+    */
+  def foreach(key: Long)(f: (Long, Long) => Unit): Unit =
+    foreachRow(key) { r =>
+      if (!r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2)) {
+        val src = r.getLong(1)
+        f(if (src == key) r.getLong(2) else src, r.getLong(0))
+      }
     }
 }
 
-/** A hash-partitioned adjacency index over one edge table, walked in one
-  * direction: the store-side answer to a traversal's per-vertex probe
-  * (the reference's out-edge prefix scan, rocksdb_store.rs:652-681). A
-  * lookup of a frontier is one Spark job over only the partitions its
-  * keys hash to, instead of a join over the whole edge table; the
-  * partitions hold [[CsrBlock]]s, built once and kept persisted by
-  * whoever owns the index (see `Adjacency.index`).
+/** A hash-partitioned keyed index over one table's rows: the store-side
+  * answer to a per-key probe. Keyed on an edge endpoint it is an adjacency,
+  * the reference's out-/in-edge prefix scan (rocksdb_store.rs:652-681);
+  * keyed on a vertex id or property it is the vertex get
+  * (rocksdb_store.rs:606-627). A lookup is one Spark job over only the
+  * partitions its keys hash to, instead of a join over the whole table;
+  * the partitions hold [[CsrBlock]]s, built once and kept persisted by
+  * whoever owns the index (see `Adjacency.keyed`).
   */
 final class Adjacency private (blocks: RDD[Array[CsrBlock]]) {
   private val partitioner = new HashPartitioner(blocks.partitions.length)
 
-  /** The neighbours of `keys`, fetched by one job whose tasks touch only
-    * the partitions the keys hash to (none when `keys` is empty). None
-    * when they have more than `maxEdges` edges: then no task sends more
-    * than `maxEdges` + 1 of them to the driver.
+  /** The rows of `keys`, fetched by one job whose tasks touch only the
+    * partitions the keys hash to (none when `keys` is empty). None when
+    * they have more than `maxRows` rows: then no task sends more than
+    * `maxRows` + 1 of them to the driver.
     */
-  def neighbors(keys: Array[Long], maxEdges: Long = Long.MaxValue): Option[Neighbors] = {
+  def lookup(keys: Array[Long], maxRows: Long = Long.MaxValue): Option[KeyedRows] = {
     val byPart = Array.fill(partitioner.numPartitions)(mutable.ArrayBuilder.make[Long])
     keys.distinct.foreach(k => byPart(partitioner.getPartition(k)) += k)
     val wanted = byPart.map { b => val a = b.result(); Arrays.sort(a); a }
@@ -135,45 +163,97 @@ final class Adjacency private (blocks: RDD[Array[CsrBlock]]) {
     val found =
       if (parts.isEmpty) Array.empty[CsrBlock]
       else blocks.sparkContext.runJob(blocks,
+        // a partition holds one element; reading to its end releases the
+        // block's read lock
         (ctx: TaskContext, it: Iterator[Array[CsrBlock]]) =>
-          CsrBlock.slice(it.next(), wanted(ctx.partitionId()), maxEdges),
+          CsrBlock.slice(it.toArray.head, wanted(ctx.partitionId()), maxRows),
         parts)
-    if (found.iterator.map(_.nbrs.length.toLong).sum > maxEdges) None
-    else Some(new Neighbors(found))
+    if (found.iterator.map(_.offsets.last.toLong).sum > maxRows) None
+    else Some(new KeyedRows(found))
   }
 }
 
 object Adjacency {
 
-  /** CSR blocks of `edges` (columns src, dst, id) keyed on `src`, or on
-    * `dst` when `reverse`, hash-partitioned into `partitions` blocks,
-    * persisted MEMORY_AND_DISK and materialized (one job). The caller owns
-    * the returned RDD and unpersists it. Edges with a null endpoint or id
-    * are left out: no traversal can walk them.
+  /** The index key of a key-column value: an integral value is its own
+    * key, a string its hash (so a string lookup re-checks the rows it gets).
     */
-  def index(edges: DataFrame, reverse: Boolean, partitions: Int): RDD[CsrBlock] = {
-    val (k, n) = if (reverse) ("dst", "src") else ("src", "dst")
-    val rows = edges.where(col(k).isNotNull && col(n).isNotNull && col("id").isNotNull)
-      .select(col(k).cast("long"), col(n).cast("long"), col("id").cast("long"))
-      .queryExecution.toRdd
-      .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2))))
+  def keyOf(value: Any): Long = value match {
+    case l: Long => l
+    case i: Int => i.toLong
+    case s: Short => s.toLong
+    case b: Byte => b.toLong
+    case u: UTF8String => u.hashCode.toLong
+  }
+
+  /** Whether a column of this type can key an index. */
+  def keyable(dt: DataType): Boolean = dt match {
+    case LongType | IntegerType | ShortType | ByteType | StringType => true
+    case _ => false
+  }
+
+  /** The column order of an edge index's rows: id, src, dst, then the
+    * table's other columns in their order.
+    */
+  def edgeColumns(columns: Seq[String]): Seq[String] =
+    Seq("id", "src", "dst") ++ columns.filterNot(Set("id", "src", "dst"))
+
+  /** The rows of `table` keyed on its column `key` (one of the [[keyable]]
+    * types), hash-partitioned into `partitions` blocks, persisted
+    * MEMORY_AND_DISK under `name` and materialized (one job). Rows with a
+    * null key are left out: no equality matches them. The caller owns the
+    * returned RDD and unpersists it. A table that is one persisted RDD (a
+    * session's resident copy or compacted table) is read as that RDD, with
+    * no query planning and no generated code.
+    */
+  def keyed(table: DataFrame, key: String, partitions: Int, name: String): RDD[CsrBlock] = {
+    val schema = table.schema
+    val k = schema.fieldIndex(key)
+    val kt = schema(k).dataType
+    require(keyable(kt), s"cannot key an index on $key: $kt")
+    val fields = schema.length
+    val source: RDD[InternalRow] = table.queryExecution.optimizedPlan match {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+      case _ => table.queryExecution.toRdd
+    }
+    val rows = source.mapPartitions { it =>
+      lazy val unsafe = UnsafeProjection.create(schema)
+      it.filterNot(_.isNullAt(k)).map { r =>
+        val u = r match { case u: UnsafeRow => u; case other => unsafe(other) }
+        (keyOf(r.get(k, kt)), u.copy().getBytes)
+      }
+    }
     val blocks = rows.partitionBy(new HashPartitioner(partitions))
-      .mapPartitions(it => Iterator(CsrBlock.of(it)), preservesPartitioning = true)
-      .setName(s"graft adjacency by $k")
+      .mapPartitions(it => Iterator(CsrBlock.of(it, fields)), preservesPartitioning = true)
+      .setName(name)
       .persist(StorageLevel.MEMORY_AND_DISK)
     blocks.count()
     blocks
   }
 
-  /** Walks one index: forward over a src-keyed index, backward over a
-    * dst-keyed one.
+  /** The adjacency index of `edges` (columns src, dst, id, cast to long;
+    * any others ride along as edge properties): its rows, laid out as
+    * [[edgeColumns]], keyed on `src`, or on `dst` when `reverse`. See
+    * [[keyed]].
+    */
+  def index(edges: DataFrame, reverse: Boolean, partitions: Int): RDD[CsrBlock] = {
+    val types = edges.schema.map(f => f.name -> f.dataType).toMap
+    val cols = edgeColumns(edges.columns.toSeq).map { c =>
+      if (Set("id", "src", "dst")(c) && types(c) != LongType) col(c).cast(LongType).as(c) else col(c)
+    }
+    val k = if (reverse) "dst" else "src"
+    keyed(edges.select(cols: _*), k, partitions, s"graft adjacency by $k")
+  }
+
+  /** Looks up one index; walked as an adjacency, forward over a src-keyed
+    * index and backward over a dst-keyed one.
     */
   def apply(index: RDD[CsrBlock]): Adjacency =
     new Adjacency(index.mapPartitions(_.map(Array(_)), preservesPartitioning = true))
 
-  /** Walks edges both ways: a key's neighbours are those of `bySrc`, then
-    * those of `byDst`, read by one task per partition. Both indexes must
-    * have the same number of partitions.
+  /** Walks edges both ways: a key's rows are those of `bySrc`, then those
+    * of `byDst`, read by one task per partition. Both indexes must have the
+    * same number of partitions.
     */
   def both(bySrc: RDD[CsrBlock], byDst: RDD[CsrBlock]): Adjacency =
     new Adjacency(bySrc.zipPartitions(byDst, preservesPartitioning = true) {

@@ -95,8 +95,9 @@ object Traversals {
     }
     // the oriented edge checkpoint backs nothing in the result (levels are
     // materialized) — release its blocks instead of pinning them for the
-    // session lifetime
-    e.unpersist()
+    // session lifetime (Dataset.unpersist would only clear the cache
+    // manager, which never held them)
+    graft.util.Checkpoints.release(edges.sparkSession, graft.util.Checkpoints.idsOf(e))
     visited
   }
 
@@ -137,7 +138,7 @@ object Traversals {
       visited = visited.unionByName(next)
       frontier = next
     }
-    e.unpersist()
+    graft.util.Checkpoints.release(edges.sparkSession, graft.util.Checkpoints.idsOf(e))
     visited
   }
 
@@ -239,7 +240,7 @@ object Traversals {
     while (!found && !over && hop < maxHops && frontier.nonEmpty) {
       hop += 1
       val next = scala.collection.mutable.LongMap.empty[Long]
-      adj.neighbors(frontier, maxRows) match {
+      adj.lookup(frontier, maxRows) match {
         case None => over = true
         case Some(nb) =>
           val it = frontier.iterator
@@ -265,6 +266,20 @@ object Traversals {
         }
       Some(rows.toDF("start_id", "end_id", "dist", "path"))
     }
+  }
+
+  /** Runs `body` with `cut`, a lazy localCheckpoint, and releases every
+    * checkpoint `cut` made when `body` returns: for searches whose answer is
+    * a driver value, so that all of them are dead by then. The ids are read
+    * off each checkpoint as it is made, never diffed from the context's
+    * persisted set, which would also free what another session persists
+    * meanwhile.
+    */
+  private def releasingCuts[T](spark: org.apache.spark.sql.SparkSession)(
+      body: (DataFrame => DataFrame) => T): T = {
+    val own = scala.collection.mutable.Set.empty[Int]
+    try body { df => val c = df.localCheckpoint(false); own ++= graft.util.Checkpoints.idsOf(c); c }
+    finally graft.util.Checkpoints.release(spark, own)
   }
 
   /** Point-to-point shortest-path DISTANCE via bidirectional BFS — the
@@ -301,10 +316,10 @@ object Traversals {
     val spark = edges.sparkSession
     import spark.implicits._
     var expanded = 0L
-    graft.util.Checkpoints.sweepingDelta(spark) {
-      val e = Direction.orient(edges, dir).select("src", "dst").localCheckpoint(false)
-      var vF = Seq(srcId).toDF("id").withColumn("dist", lit(0)).localCheckpoint(false)
-      var vB = Seq(dstId).toDF("id").withColumn("dist", lit(0)).localCheckpoint(false)
+    releasingCuts(spark) { cut =>
+      val e = cut(Direction.orient(edges, dir).select("src", "dst"))
+      var vF = cut(Seq(srcId).toDF("id").withColumn("dist", lit(0)))
+      var vB = cut(Seq(dstId).toDF("id").withColumn("dist", lit(0)))
       var fF = vF; var fB = vB
       var nF = 1L; var nB = 1L
       var lF = 0; var lB = 0
@@ -318,10 +333,9 @@ object Traversals {
         val f = if (rows <= maxBroadcastRows) broadcast(frontier) else frontier
         val hop = if (forward) e.join(f, f("id") === e("src")).select(e("dst").as("id"))
           else e.join(f, f("id") === e("dst")).select(e("src").as("id"))
-        val next = hop.distinct()
+        val next = cut(hop.distinct()
           .join(visited.select("id"), Seq("id"), "left_anti")
-          .withColumn("dist", lit(lvl))
-          .localCheckpoint(false)
+          .withColumn("dist", lit(lvl)))
         // ONE action per level, not two (r19): the frontier count and the
         // meet score fuse into a single aggregate over next LEFT JOIN
         // opposite — next's ids are unique (distinct + anti-join) and so
@@ -396,26 +410,26 @@ object Traversals {
     var expanded = 0L
     val spark = edges.sparkSession
     import spark.implicits._
-    graft.util.Checkpoints.sweepingDelta(spark) {
+    releasingCuts(spark) { cut =>
       // Direction.orient drops non-id columns, so the weight rides an
       // inline orient (the Planner's weighted-shortestPath convention)
       val w0 = edges.select(col("src"), col("dst"),
         col("weight").cast("double").as("weight"))
-      val e = (dir match {
+      val e = cut(dir match {
         case Direction.Out => w0
         case Direction.In =>
           w0.select(col("dst").as("src"), col("src").as("dst"), col("weight"))
         case Direction.Both => w0.unionByName(
           w0.select(col("dst").as("src"), col("src").as("dst"), col("weight")))
-      }).localCheckpoint(false)
+      })
       val eStats = e.agg(count(lit(1)), min(col("weight"))).head()
       if (eStats.getLong(0) == 0L) (None, 0L)
       else {
         require(!eStats.isNullAt(1) && eStats.getDouble(1) >= 0.0,
           "bidirWeightedDistance requires nonnegative weights, found " +
             s"min weight ${eStats.get(1)}")
-        var vF = Seq((srcId, 0.0)).toDF("id", "dist").localCheckpoint(false)
-        var vB = Seq((dstId, 0.0)).toDF("id", "dist").localCheckpoint(false)
+        var vF = cut(Seq((srcId, 0.0)).toDF("id", "dist"))
+        var vB = cut(Seq((dstId, 0.0)).toDF("id", "dist"))
         var fF = vF; var fB = vB
         var nF = 1L; var nB = 1L
         var minF = 0.0; var minB = 0.0
@@ -433,12 +447,11 @@ object Traversals {
               .select(e("src").as("id"), (f("dist") + e("weight")).as("cand"))
           // candidates that IMPROVE the side's tentative distance are the
           // next frontier; everything else is already at least as good
-          val imp = hop.groupBy(col("id")).agg(min(col("cand")).as("dist"))
+          val imp = cut(hop.groupBy(col("id")).agg(min(col("cand")).as("dist"))
             .join(visited.select(col("id").as("vid"), col("dist").as("old")),
               col("id") === col("vid"), "left")
             .where(col("old").isNull || col("dist") < col("old"))
-            .select(col("id"), col("dist"))
-            .localCheckpoint(false)
+            .select(col("id"), col("dist")))
           // ONE action per round, not two (r19): frontier count, frontier
           // min, and the meet score fuse into a single aggregate over
           // imp LEFT JOIN opposite — imp's ids are unique (groupBy) and so
@@ -454,11 +467,10 @@ object Traversals {
           val n = st.getLong(0)
           expanded += n
           if (!st.isNullAt(2)) best = math.min(best, st.getDouble(2))
-          val merged = visited
+          val merged = cut(visited
             .join(imp.select(col("id").as("iid")), col("id") === col("iid"),
               "left_anti")
-            .unionByName(imp)
-            .localCheckpoint(false)
+            .unionByName(imp))
           val mn = if (n == 0) Double.PositiveInfinity else st.getDouble(1)
           if (forward) { nF = n; minF = mn; vF = merged; fF = imp }
           else { nB = n; minB = mn; vB = merged; fB = imp }
@@ -683,7 +695,7 @@ object Traversals {
         resultRows += frontierRows
       }
     }
-    e.unpersist()
+    graft.util.Checkpoints.release(edges.sparkSession, graft.util.Checkpoints.idsOf(e))
     val outCols = Seq(col("start_id"), col("end_id"), col("len"), col("path")) ++
       (if (carryEdges) Seq(col("epath")) else Nil)
     val all = results.getOrElse(
@@ -735,7 +747,7 @@ object Traversals {
       len += 1
       val held = out.size + frontier.length
       val next = scala.collection.mutable.ArrayBuffer[(Array[Long], Array[Long])]()
-      adj.neighbors(frontier.map(_._1.last), maxRows) match {
+      adj.lookup(frontier.map(_._1.last), maxRows) match {
         case None => over = true
         case Some(nb) =>
           val it = frontier.iterator

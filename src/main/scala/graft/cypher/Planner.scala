@@ -1,5 +1,6 @@
 package graft.cypher
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -24,7 +25,9 @@ final case class PlanResult(df: Option[DataFrame], store: GraphStore)
 final class Planner(spark: SparkSession, store0: GraphStore,
     params: Map[String, Any] = Map.empty,
     reading: Planner.ReadHook = Planner.DirectReads,
-    adjacency: Planner.AdjacencyHook = Planner.NoAdjacency) {
+    adjacency: Planner.AdjacencyHook = Planner.NoAdjacency,
+    lookup: Planner.LookupHook = Planner.NoLookups,
+    lookupRows: Long = Traversals.BroadcastPathRows) {
 
   private var store = store0
 
@@ -61,8 +64,32 @@ final class Planner(spark: SparkSession, store0: GraphStore,
   val createdCheckpointIds: scala.collection.mutable.Set[Int] =
     scala.collection.mutable.Set.empty
 
-  def plan(q: Query): PlanResult =
+  def plan(q: Query): PlanResult = {
+    val named = anon
+    keyLookups = if (!Planner.readOnly(q)) None else Some(new KeyLookups(spark, params,
+      (kind, l) => {
+        val st = readStore(kind, Seq(l))
+        if (kind == VarKind.Node) st.vertexTables.get(l) else st.edgeTables.get(l)
+      },
+      fresh, lookup, lookupRows)).filter(_.prepare(q))
+    try planQuery(q)
+    catch {
+      case KeyLookups.Restart =>
+        // a clause passed the row bound after others were answered: the
+        // whole statement runs as the DataFrame plan
+        keyLookups = None
+        anon = named
+        planQuery(q)
+    }
+  }
+
+  private def planQuery(q: Query): PlanResult =
     if (q.union.isDefined) planUnion(q) else planBody(q)
+
+  /** Key lookups answer the MATCH clauses of a read-only statement, all of
+    * them or none: a write's own reads keep the DataFrame plan.
+    */
+  private var keyLookups: Option[KeyLookups] = None
 
   /** UNION [ALL] chain (openCypher combinator, beyond the reference's
     * grammar): every part must be read-only and RETURN the same column
@@ -688,11 +715,21 @@ final class Planner(spark: SparkSession, store0: GraphStore,
   private def prefixAll(df: DataFrame, v: String): DataFrame =
     df.select(df.columns.map(c => col(c).as(Scope.colName(v, c))).toIndexedSeq: _*)
 
+  /** Label `l`'s table of `kind` as a scan reads it ([[Planner.labelled]]). */
+  private def labelScan(kind: VarKind, l: String): DataFrame = {
+    val st = readStore(kind, Seq(l))
+    val t = (if (kind == VarKind.Node) st.vertexTables else st.edgeTables)
+      .getOrElse(l, sys.error(s"unknown ${if (kind == VarKind.Node) "vertex" else "edge"} label: $l"))
+    t.select(Planner.labelled(t.columns.toSeq).map { case (c, from) =>
+      from.fold(lit(l))(col).as(c)
+    }: _*)
+  }
+
   private def nodeScan(np: NodePat, v: String): (DataFrame, VarInfo) = np.labels.distinct match {
     case Seq(l) =>
-      val base = readStore(VarKind.Node, Seq(l)).vertices(l)
+      val base = labelScan(VarKind.Node, l)
       (prefixAll(base, v),
-        VarInfo(VarKind.Node, Some(l), base.columns.filterNot(_ == "id").toSeq))
+        VarInfo(VarKind.Node, Some(l), Planner.scanProps(VarKind.Node, base.columns.toSeq)))
     case Nil =>
       val base = readStore(VarKind.Node, store.vertexLabels).allVertices
       (prefixAll(base, v), VarInfo(VarKind.Node, None, Seq("label", "properties")))
@@ -701,16 +738,15 @@ final class Planner(spark: SparkSession, store0: GraphStore,
       // ALL listed labels. This store (like the reference) is
       // single-label-per-vertex, so distinct labels can never co-occur —
       // the scan is statically empty (SURVEY §8 divergence note).
-      val base = readStore(VarKind.Node, Seq(many.head)).vertices(many.head).limit(0)
+      val base = labelScan(VarKind.Node, many.head).limit(0)
       (prefixAll(base, v),
-        VarInfo(VarKind.Node, Some(many.head), base.columns.filterNot(_ == "id").toSeq))
+        VarInfo(VarKind.Node, Some(many.head), Planner.scanProps(VarKind.Node, base.columns.toSeq)))
   }
 
   /** Typed union of edge tables (schema union, absent props null-filled). */
   private def edgeUnion(types: Seq[String]): DataFrame = {
     val names = if (types.nonEmpty) types else store.edgeLabels
-    val st = readStore(VarKind.Edge, names)
-    names.map(st.edges).reduce(_.unionByName(_, allowMissingColumns = true))
+    names.map(labelScan(VarKind.Edge, _)).reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
   /** Edge scan, traversal-oriented: after this, `src` is always the side we
@@ -721,22 +757,16 @@ final class Planner(spark: SparkSession, store0: GraphStore,
     // __start/__end pin the STORED orientation before any traversal swap —
     // startNode()/endNode() must report the edge as stored, not as walked
     val base = edgeUnion(rp.types)
-      .withColumn("__start", col("src")).withColumn("__end", col("dst"))
+    def walked(reversed: Boolean) = base.select(
+      Planner.oriented(base.columns.toSeq, reversed).map { case (c, from) => col(from).as(c) }: _*)
     val oriented = rp.dir match {
-      case Dir.Out => base
-      case Dir.In =>
-        base.withColumn("__tmp", col("src")).withColumn("src", col("dst"))
-          .withColumn("dst", col("__tmp")).drop("__tmp")
-      case Dir.Both =>
-        val fwd = base
-        val rev = base.withColumn("__tmp", col("src")).withColumn("src", col("dst"))
-          .withColumn("dst", col("__tmp")).drop("__tmp")
-        fwd.unionByName(rev)
+      case Dir.Out => walked(false)
+      case Dir.In => walked(true)
+      case Dir.Both => walked(false).unionByName(walked(true))
     }
     val label = rp.types match { case Seq(t) => Some(t); case _ => None }
     (prefixAll(oriented, v),
-      VarInfo(VarKind.Edge, label,
-        oriented.columns.filterNot(c => c == "id" || c == "__start" || c == "__end").toSeq))
+      VarInfo(VarKind.Edge, label, Planner.scanProps(VarKind.Edge, oriented.columns.toSeq)))
   }
 
   // ---------------- pattern compilation ----------------
@@ -763,13 +793,6 @@ final class Planner(spark: SparkSession, store0: GraphStore,
     applyProps(withLabels, v, np.props)
   }
 
-  /** Node that constrains nothing: no variable, labels, or props. Edges
-    * always reference existing vertices (store integrity invariant, same as
-    * the reference), so such nodes need no vertex-table join at all.
-    */
-  private def anonFree(np: NodePat): Boolean =
-    np.variable.isEmpty && np.labels.isEmpty && np.props.isEmpty
-
   private def bindStart(scope: Option[Scope], np: NodePat): (Scope, String) = {
     val sv = np.variable.getOrElse(fresh("n"))
     val sc = scope match {
@@ -792,7 +815,7 @@ final class Planner(spark: SparkSession, store0: GraphStore,
     // is the anchor, no vertex join (`MATCH ()-[r:X]->(b)` touches only the
     // edge table and b). A bound path variable needs the start id in its
     // vertex list, so the shortcut is disabled there.
-    val skipStart = !wantPath && anonFree(pat.start) && pat.hops.nonEmpty &&
+    val skipStart = !wantPath && Planner.anonFree(pat.start) && pat.hops.nonEmpty &&
       pat.hops.head._1.varLength.isEmpty
     var (sc, prevId): (Option[Scope], Option[String]) =
       if (skipStart) (scope, None)
@@ -819,9 +842,9 @@ final class Planner(spark: SparkSession, store0: GraphStore,
         if (ps.isEmpty) array().cast("array<long>") else concat(ps.map(_._2): _*)
       s0.copy(
         df = s0.df.withColumn(pv, nodesArr)
-          .withColumn(Scope.colName(pv, "rels"), relsArr)
+          .withColumn(Planner.pathRels(pv), relsArr)
           .drop(tempCols.result(): _*),
-        vars = s0.vars + (pv -> VarInfo(VarKind.Value, None, Seq("rels"), path = true)),
+        vars = s0.vars + (pv -> Planner.pathInfo),
         order = s0.order :+ pv)
     }
   }
@@ -839,9 +862,7 @@ final class Planner(spark: SparkSession, store0: GraphStore,
       case Some((lo, hi)) =>
         val sc0 = scOpt.getOrElse(sys.error("var-length hop needs a bound start"))
         val prev = prevIdCol.getOrElse(sys.error("var-length hop needs a bound start"))
-        val dir = rel.dir match {
-          case Dir.Out => Direction.Out; case Dir.In => Direction.In; case Dir.Both => Direction.Both
-        }
+        val dir = Planner.direction(rel.dir)
         // honor inline props on EVERY expansion step, like the reference's
         // per-step edge filter (match_executor.rs:128-213): filter the edge
         // relation once, before iteration — pushed to the scan
@@ -861,22 +882,21 @@ final class Planner(spark: SparkSession, store0: GraphStore,
         // entity handle here)
         val carry = rel.variable.isDefined
         val carryE = carry || wantPath
-        val pairCols = Seq(col("start_id").as(s"${ev}__s"), col("end_id").as(s"${ev}__d")) ++
-          (if (carry) Seq(col("epath").as(rel.variable.get)) else Nil) ++
-          (if (wantPath) Seq(col("path").as(s"${ev}__vp"),
-            col("epath").as(s"${ev}__ep")) else Nil)
+        val walkCols = Planner.walkColumns(ev, rel.variable, wantPath)
+        val pairCols = walkCols.map { case (c, from) => col(from).as(c) }
         // openCypher *0: the zero-length match binds the target to the start
         // vertex itself with an empty relationship list (edge-type and
         // -property constraints are vacuous on zero edges; target node
         // constraints still apply via bindTargetVar below). The reference's
         // grammar has no var-length at all (cypher.pest:89-94), so this
         // extension follows openCypher.
-        val zeroRows = starts.select(
-          (Seq(col("id").as(s"${ev}__s"), col("id").as(s"${ev}__d")) ++
-            (if (carry) Seq(expr("CAST(array() AS ARRAY<BIGINT>)").as(rel.variable.get))
-             else Nil) ++
-            (if (wantPath) Seq(array(col("id")).as(s"${ev}__vp"),
-              expr("CAST(array() AS ARRAY<BIGINT>)").as(s"${ev}__ep")) else Nil)): _*)
+        val zeroRows = starts.select(walkCols.map { case (c, from) =>
+          (from match {
+            case "path" => array(col("id"))
+            case "epath" => expr("CAST(array() AS ARRAY<BIGINT>)")
+            case _ => col("id")
+          }).as(c)
+        }: _*)
         // with a session adjacency the walk runs on the driver; without
         // one, or past the path bound, the DataFrame loop
         val walked =
@@ -926,7 +946,7 @@ final class Planner(spark: SparkSession, store0: GraphStore,
             array(col(Scope.colName(ev, "id")).cast("long"))),
             Seq.empty[String]))
         else None
-        if (anonFree(node) && !scOpt.exists(s => node.variable.exists(s.vars.contains))) {
+        if (Planner.anonFree(node) && !scOpt.exists(s => node.variable.exists(s.vars.contains))) {
           (sc, endCol, piece(endCol)) // no vertex join needed
         } else {
           val nv = node.variable.getOrElse(fresh("n"))
@@ -952,12 +972,6 @@ final class Planner(spark: SparkSession, store0: GraphStore,
       applyProps(joined, nv, node.props)
     }
   }
-
-  private def patternVars(pats: Seq[PathPat]): Seq[String] =
-    pats.flatMap { p =>
-      (p.start.variable.toSeq ++
-        p.hops.flatMap { case (r, n) => r.variable.toSeq ++ n.variable.toSeq })
-    }.distinct
 
   /** WHERE application shared by MATCH / OPTIONAL MATCH / WITH: splits the
     * expression into AND-conjuncts, compiles EXISTS pattern predicates
@@ -996,7 +1010,7 @@ final class Planner(spark: SparkSession, store0: GraphStore,
     */
   private def compilePatternPred(s: Scope, pat: PathPat, whereE: Option[Expr],
       negated: Boolean): Scope = {
-    val shared = patternVars(Seq(pat)).filter(s.vars.contains)
+    val shared = Planner.patternVars(Seq(pat)).filter(s.vars.contains)
     require(shared.nonEmpty,
       "EXISTS pattern must reference at least one variable bound by the enclosing MATCH")
     val seedCols = shared.flatMap(s.varCols)
@@ -1197,7 +1211,7 @@ final class Planner(spark: SparkSession, store0: GraphStore,
 
   private def compilePatternSubquery(s: Scope, pat: PathPat,
       whereE: Option[Expr], proj: Option[Expr], outName: String): Scope = {
-    val shared = patternVars(Seq(pat)).filter(s.vars.contains)
+    val shared = Planner.patternVars(Seq(pat)).filter(s.vars.contains)
     require(shared.nonEmpty,
       "pattern subquery must reference at least one variable bound by the enclosing MATCH")
     val seedCols = shared.flatMap(s.varCols)
@@ -1227,6 +1241,14 @@ final class Planner(spark: SparkSession, store0: GraphStore,
   }
 
   private def compileMatch(outer: Option[Scope], m: MatchClause): Scope = {
+    val named = anon
+    keyLookups.flatMap(_.answer(outer, m)) match {
+      case Some(s) => m.where.fold(s)(applyWhere(s, _))
+      case None => anon = named; matchFrames(outer, m)
+    }
+  }
+
+  private def matchFrames(outer: Option[Scope], m: MatchClause): Scope = {
     if (!m.optional || outer.isEmpty) {
       var sc = outer
       m.patterns.foreach { pat => sc = Some(compilePath(sc, pat)) }
@@ -1237,7 +1259,7 @@ final class Planner(spark: SparkSession, store0: GraphStore,
       }
     } else {
       val o = outer.get
-      val shared = patternVars(m.patterns).filter(o.vars.contains)
+      val shared = Planner.patternVars(m.patterns).filter(o.vars.contains)
       require(shared.nonEmpty,
         "OPTIONAL MATCH without a shared variable is not supported")
       val seedCols = shared.flatMap(o.varCols)
@@ -1730,10 +1752,7 @@ final class Planner(spark: SparkSession, store0: GraphStore,
     val (rel, endNp) = pat.hops.head
     require(rel.variable.isEmpty,
       "shortestPath: bind the path variable (p = ...) instead of the relationship")
-    val dir = rel.dir match {
-      case Dir.Out => Direction.Out; case Dir.In => Direction.In
-      case Dir.Both => Direction.Both
-    }
+    val dir = Planner.direction(rel.dir)
     // [*..k] caps the BFS depth; a plain relationship means one hop; open
     // ranges take the vle default cap (parser default, reference vle.rs:68).
     // A lower bound > 1 contradicts "shortest" (the shortest path may be
@@ -2308,6 +2327,88 @@ object Planner {
   type AdjacencyHook = (DataFrame, Direction) => Option[Adjacency]
 
   val NoAdjacency: AdjacencyHook = (_, _) => None
+
+  /** Called before a read-only statement is answered by key lookups, once
+    * for each index its MATCH clauses read: a label table as the statement
+    * reads it, the column to look rows up by (`src`/`dst` for an edge
+    * table, any keyable column of a vertex table) and whether a var-length
+    * hop walks it. Returns how to get a keyed index over exactly that
+    * table when one exists or may be built now (calling it builds), or
+    * None for the DataFrame plan.
+    */
+  type LookupHook = (DataFrame, String, Boolean) => Option[() => RDD[CsrBlock]]
+
+  val NoLookups: LookupHook = (_, _, _) => None
+
+  /** Whether `q` has no write clause, in any part or subquery. */
+  private[cypher] def readOnly(q: Query): Boolean =
+    q.clauses.forall {
+      case _: CreateClause | _: MergeClause | _: SetClause | _: DeleteClause |
+          _: RemoveClause | _: ForeachClause => false
+      case c: CallSubqueryClause => readOnly(c.inner)
+      case _ => true
+    } && q.union.forall { case (_, next) => readOnly(next) }
+
+  /** A label scan's columns over a table's `columns`, in order, each with
+    * the table column it reads (None: the label, a literal): the table's
+    * columns, then `label`.
+    */
+  private[cypher] def labelled(columns: Seq[String]): Seq[(String, Option[String])] =
+    columns.map(c => c -> Some(c).filter(_ != "label")) ++
+      (if (columns.contains("label")) Nil else Seq("label" -> None))
+
+  /** An edge scan's columns over a labelled edge relation's `columns`,
+    * walked from `src` or, `reversed`, from `dst`; each with the relation
+    * column it reads: `src` and `dst` swap, `__start`/`__end` keep the
+    * stored orientation.
+    */
+  private[cypher] def oriented(columns: Seq[String], reversed: Boolean): Seq[(String, String)] = {
+    def from(c: String) = c match {
+      case "src" if reversed => "dst"
+      case "dst" if reversed => "src"
+      case other => other
+    }
+    columns.map(c => c -> from(c)) ++ Seq("__start" -> "src", "__end" -> "dst")
+  }
+
+  /** The properties of an entity variable bound by a scan with `columns`. */
+  private[cypher] def scanProps(kind: VarKind, columns: Seq[String]): Seq[String] =
+    columns.filterNot(c => c == "id" || (kind == VarKind.Edge && (c == "__start" || c == "__end")))
+
+  /** The columns a var-length hop `ev` joins onto its scope, each with the
+    * column of the walked pairs (start_id, end_id, path, epath) it reads:
+    * the start and end ids, the relationship variable's edge list, and for
+    * a path variable the vertex and edge lists.
+    */
+  private[cypher] def walkColumns(ev: String, relVar: Option[String],
+      wantPath: Boolean): Seq[(String, String)] =
+    Seq(s"${ev}__s" -> "start_id", s"${ev}__d" -> "end_id") ++ relVar.map(_ -> "epath") ++
+      (if (wantPath) Seq(s"${ev}__vp" -> "path", s"${ev}__ep" -> "epath") else Nil)
+
+  /** A path variable: its value is the vertex id list, its `rels` column
+    * ([[pathRels]]) the edge id list.
+    */
+  private[cypher] val pathInfo: VarInfo = VarInfo(VarKind.Value, None, Seq("rels"), path = true)
+
+  private[cypher] def pathRels(pv: String): String = Scope.colName(pv, "rels")
+
+  /** Node that constrains nothing: no variable, labels, or props. Edges
+    * always reference existing vertices (store integrity invariant, same as
+    * the reference), so such nodes need no vertex-table join at all.
+    */
+  private[cypher] def anonFree(np: NodePat): Boolean =
+    np.variable.isEmpty && np.labels.isEmpty && np.props.isEmpty
+
+  private[cypher] def direction(d: Dir): Direction = d match {
+    case Dir.Out => Direction.Out; case Dir.In => Direction.In; case Dir.Both => Direction.Both
+  }
+
+  /** The variables a pattern list names, in order of first mention. */
+  private[cypher] def patternVars(pats: Seq[PathPat]): Seq[String] =
+    pats.flatMap { p =>
+      (p.start.variable.toSeq ++
+        p.hops.flatMap { case (r, n) => r.variable.toSeq ++ n.variable.toSeq })
+    }.distinct
 }
 
 /** User-facing session: parse → plan → run; mutations swap the store
@@ -2336,8 +2437,12 @@ object Planner {
   * rolled-back scope must not be consumed after rollback (their
   * checkpoint blocks are freed).
   */
-final class CypherSession(val spark: SparkSession, initial: GraphStore,
-    params: Map[String, Any] = Map.empty) {
+final class CypherSession private[graft] (val spark: SparkSession, initial: GraphStore,
+    params: Map[String, Any], lookupRows: Long) {
+
+  def this(spark: SparkSession, initial: GraphStore, params: Map[String, Any] = Map.empty) =
+    this(spark, initial, params, Traversals.BroadcastPathRows)
+
   @volatile var store: GraphStore = initial
 
   private var txnSnapshot: Option[GraphStore] = None
@@ -2347,7 +2452,7 @@ final class CypherSession(val spark: SparkSession, initial: GraphStore,
     require(txnSnapshot.isEmpty, "transaction already open (no nesting)")
     txnSnapshot = Some(store)
     txnCreated = Set.empty
-    txnIndexes = new java.util.IdentityHashMap(indexes)
+    txnHeld = new java.util.IdentityHashMap(held)
   }
 
   /** Keep everything executed since begin(). The statements already
@@ -2358,15 +2463,16 @@ final class CypherSession(val spark: SparkSession, initial: GraphStore,
     require(txnSnapshot.nonEmpty, "no open transaction")
     txnSnapshot = None
     txnCreated = Set.empty
-    txnIndexes = null
+    txnHeld = null
   }
 
   /** Discard everything executed since begin(): restore the snapshot
     * store and free the checkpoint blocks this scope's own statements
     * persisted (accumulated per-run diffs — never a blanket "everything
     * persisted since begin", which would free concurrent sessions'
-    * blocks on the shared SparkContext), the adjacency indexes built in
-    * the scope among them. The held tables are those of begin() again.
+    * blocks on the shared SparkContext), the indexes built in the scope
+    * among them. The held tables and their indexes are those of begin()
+    * again.
     */
   def rollback(): Unit = synchronized {
     require(txnSnapshot.nonEmpty, "no open transaction")
@@ -2374,21 +2480,24 @@ final class CypherSession(val spark: SparkSession, initial: GraphStore,
     txnSnapshot = None
     graft.util.Checkpoints.release(spark, txnCreated)
     ownedGen = ownedGen -- txnCreated
-    indexes.clear()
-    indexes.putAll(txnIndexes)
-    indexes.values.forEach { built =>
-      built.indices.foreach(i => if (built(i) != null && txnCreated(built(i).id)) built(i) = null)
-    }
+    held.clear()
+    held.putAll(txnHeld)
     txnCreated = Set.empty
-    txnIndexes = null
+    txnHeld = null
   }
 
   def run(cypher: String): DataFrame = {
     val inTxn = synchronized { txnSnapshot.nonEmpty }
     val readNow = scala.collection.mutable.Set[(VarKind, String)]()
-    val planner = new Planner(spark, store, params, residency(readNow), adjacencyOf(build = true))
-    val res = planner.plan(Parser.parse(cypher))
-    synchronized { readBefore ++= readNow }
+    synchronized { statements += 1 }
+    val planner = new Planner(spark, store, params, residency(readNow), adjacencyOf(build = true),
+      lookupOf(build = true), lookupRows)
+    val q = Parser.parse(cypher)
+    val res = planner.plan(q)
+    synchronized {
+      readBefore ++= readNow
+      if (!Planner.readOnly(q)) wanted = Map.empty
+    }
     store = res.store
     val compacted = maybeCompact()
     if (inTxn) synchronized {
@@ -2445,61 +2554,113 @@ final class CypherSession(val spark: SparkSession, initial: GraphStore,
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           ownedGen = ownedGen + rows.id
           val copy = org.apache.spark.sql.GraftColumnBridge.ofRows(rows, opening)
-          if (kind == VarKind.Node) st.withVertexTable(label, copy)
-          else { holdResident(copy); st.withEdgeTable(label, copy) }
+          held.put(copy, Held(kind, label))
+          if (kind == VarKind.Node) st.withVertexTable(label, copy) else st.withEdgeTable(label, copy)
         }
       case _ => st
     }
   }
 
-  // ---------------- session-resident adjacency ----------------
+  // ---------------- session-owned keyed indexes ----------------
 
-  /** Adjacency indexes over the edge tables this session holds resident
-    * (its resident copies and the tables of a compacted generation), keyed
-    * by the table's identity, so a table a write has replaced misses. Slot
-    * 0 is the src-keyed index, built when a statement first walks the
-    * table; slot 1 the dst-keyed one, built when a statement first walks it
-    * `<-` or undirected. Both have the shuffle partition count, join
-    * ownedGen and go at the next compaction. Each costs about 16 bytes per
-    * edge plus 12 per distinct key, held MEMORY_AND_DISK. One built in an
-    * open transaction is released by its rollback.
+  /** A table this session holds resident (a resident copy or a table of a
+    * compacted generation), its label, and its keyed indexes by key column.
     */
-  private val indexes =
-    new java.util.IdentityHashMap[DataFrame, Array[org.apache.spark.rdd.RDD[CsrBlock]]]()
+  private final case class Held(kind: VarKind, label: String,
+      built: Map[String, org.apache.spark.rdd.RDD[CsrBlock]] = Map.empty)
+
+  /** The held tables, keyed by identity, so a table a write has replaced
+    * misses. An edge table is indexed by `src` and by `dst` (the adjacency
+    * both ways, edge properties included), a vertex table by `id` and by
+    * any column a key lookup filters on. The indexes of one table have the
+    * same partition count (the shuffle partitions at the first build), join
+    * ownedGen and go at the next compaction; one built in an open
+    * transaction is released by its rollback. An index costs its rows as
+    * UnsafeRows (8 bytes per column, plus strings, plus 8 per row for the
+    * null bits) and 4 bytes more per row and 12 per distinct key, held
+    * MEMORY_AND_DISK.
+    */
+  private val held = new java.util.IdentityHashMap[DataFrame, Held]()
 
   /** The held tables at begin(), restored by rollback(). */
-  private var txnIndexes: java.util.IdentityHashMap[DataFrame, Array[org.apache.spark.rdd.RDD[CsrBlock]]] = _
+  private var txnHeld: java.util.IdentityHashMap[DataFrame, Held] = _
 
-  private def holdResident(table: DataFrame): Unit = indexes.put(table, new Array(2))
+  /** Statements run so far. */
+  private var statements = 0L
 
-  /** The compacted store's edge tables replace every held table. */
+  /** The key lookups since the last write statement (or compaction) that
+    * found no index, by (kind, label, key column): the number of the first
+    * statement that made one.
+    */
+  private var wanted = Map.empty[(VarKind, String, String), Long]
+
+  /** The compacted store's tables replace every held table. */
   private def holdGeneration(): Unit = synchronized {
-    indexes.clear()
-    store.edgeTables.values.foreach(holdResident)
+    held.clear()
+    wanted = Map.empty
+    store.vertexTables.foreach { case (l, t) => held.put(t, Held(VarKind.Node, l)) }
+    store.edgeTables.foreach { case (l, t) => held.put(t, Held(VarKind.Edge, l)) }
   }
 
-  /** The adjacency hook; without `build` it hands out only indexes an
-    * earlier statement built.
+  /** The index of held `table` by `key`: how to get it when it exists or
+    * may be built now, else None. Without `build` only an index an earlier
+    * statement built. With it, a missing index may be built when a
+    * traversal walks the table (`walk`, the adjacency's rule) or, for a key
+    * lookup, the second time a statement could use it with no write
+    * statement or compaction in between (a read of the opening table
+    * counts), as a resident copy is made on the second read: a table a
+    * write is about to replace is not indexed for nothing, and a session
+    * that writes between its reads builds an index only for a run of reads
+    * that repeats it. Asking records the want; only calling the result
+    * builds, so a statement that cannot use every index it reads builds
+    * none.
     */
-  private def adjacencyOf(build: Boolean): Planner.AdjacencyHook = (table, dir) => synchronized {
-    Option(indexes.get(table)).flatMap { built =>
-      def index(slot: Int) = {
-        if (built(slot) == null && build) {
-          val partitions = Option(built(1 - slot)).map(_.partitions.length)
-            .getOrElse(spark.conf.get("spark.sql.shuffle.partitions").toInt)
-          built(slot) = Adjacency.index(table, reverse = slot == 1, partitions)
-          ownedGen = ownedGen + built(slot).id
-          if (txnSnapshot.nonEmpty) txnCreated = txnCreated + built(slot).id
+  private def indexOf(table: DataFrame, key: String, build: Boolean, walk: Boolean)
+      : Option[() => org.apache.spark.rdd.RDD[CsrBlock]] = synchronized {
+    val h = Option(held.get(table))
+    h.flatMap(_.built.get(key)).map(index => () => index).orElse {
+      val named = h.map(x => (x.kind, x.label))
+        .orElse(openingTables.collectFirst { case (k, t) if t eq table => k })
+      named.filter { case (kind, _) => kind == VarKind.Node || key == "src" || key == "dst" }
+        .flatMap { case (kind, label) =>
+          val want = (kind, label, key)
+          val due = walk || wanted.get(want).exists(_ < statements)
+          if (build && !due && !wanted.contains(want)) wanted += want -> statements
+          if (h.isDefined && build && due) Some(() => buildIndex(table, kind, key)) else None
         }
-        Option(built(slot))
-      }
-      dir match {
-        case Direction.Out => index(0).map(Adjacency(_))
-        case Direction.In => index(1).map(Adjacency(_))
-        case Direction.Both => for (o <- index(0); i <- index(1)) yield Adjacency.both(o, i)
-      }
     }
   }
+
+  /** Builds the index of held `table` by `key`, unless it was built since it
+    * was asked for. The indexes of one table share a partition count.
+    */
+  private def buildIndex(table: DataFrame, kind: VarKind, key: String)
+      : org.apache.spark.rdd.RDD[CsrBlock] = synchronized {
+    val h = Option(held.get(table))
+    h.flatMap(_.built.get(key)).getOrElse {
+      val partitions = h.flatMap(_.built.values.headOption).map(_.partitions.length)
+        .getOrElse(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+      val index =
+        if (kind == VarKind.Edge) Adjacency.index(table, reverse = key == "dst", partitions)
+        else Adjacency.keyed(table, key, partitions, s"graft index by $key")
+      ownedGen = ownedGen + index.id
+      if (txnSnapshot.nonEmpty) txnCreated = txnCreated + index.id
+      h.foreach(x => held.put(table, x.copy(built = x.built.updated(key, index))))
+      index
+    }
+  }
+
+  private def adjacencyOf(build: Boolean): Planner.AdjacencyHook = (table, dir) => {
+    def index(key: String) = indexOf(table, key, build, walk = true).map(_())
+    dir match {
+      case Direction.Out => index("src").map(Adjacency(_))
+      case Direction.In => index("dst").map(Adjacency(_))
+      case Direction.Both => for (o <- index("src"); i <- index("dst")) yield Adjacency.both(o, i)
+    }
+  }
+
+  private def lookupOf(build: Boolean): Planner.LookupHook =
+    (table, key, walk) => indexOf(table, key, build, walk)
 
   /** Auto-compaction on lineage growth. A SET-style rewrite references the
     * previous table twice (anti-join victims + updated rows), so a chain
@@ -2542,7 +2703,7 @@ final class CypherSession(val spark: SparkSession, initial: GraphStore,
   }
 
   def withParams(p: Map[String, Any]): CypherSession =
-    new CypherSession(spark, store, params ++ p)
+    new CypherSession(spark, store, params ++ p, lookupRows)
 
   /** Replay a multi-statement Cypher script (e.g. GraphIO.exportCypher
     * output, or the reference generator's graph.cypher): `--` comment
@@ -2580,13 +2741,13 @@ final class CypherSession(val spark: SparkSession, initial: GraphStore,
   /** Physical plan of a read query without executing it (the engine's
     * EXPLAIN surface — the reference has no optimizer to explain, §4.1).
     * Does not apply mutations: the plan is compiled against the current
-    * store and discarded. Traversals still run while planning, as in
-    * `run`, over the adjacency indexes earlier statements built; explain
-    * builds none.
+    * store and discarded. Traversals and key lookups still run while
+    * planning, as in `run`, over the indexes earlier statements built;
+    * explain builds none.
     */
   def explain(cypher: String, extended: Boolean = false): String = {
-    val res = new Planner(spark, store, params, adjacency = adjacencyOf(build = false))
-      .plan(Parser.parse(cypher))
+    val res = new Planner(spark, store, params, adjacency = adjacencyOf(build = false),
+      lookup = lookupOf(build = false), lookupRows = lookupRows).plan(Parser.parse(cypher))
     res.df match {
       case Some(df) =>
         if (extended) df.queryExecution.toString

@@ -23,6 +23,15 @@ object GraftColumnBridge {
       execution.LogicalRDD.fromDataset(rows, ds, ds.isStreaming))
   }
 
+  /** A DataFrame over driver-held `rows` of `schema` (a LocalRelation):
+    * projections and filters over it are evaluated while optimizing, with no
+    * job.
+    */
+  def localRows(spark: SparkSession, schema: types.StructType,
+      rows: Seq[catalyst.InternalRow]): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+      catalyst.plans.logical.LocalRelation(catalyst.types.DataTypeUtils.toAttributes(schema), rows))
+
   import org.apache.spark.sql.{internal => in}
   import org.apache.spark.sql.types.{ArrayType, DataType}
 

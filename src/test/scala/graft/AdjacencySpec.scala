@@ -97,8 +97,8 @@ class AdjacencySpec extends AnyFunSuite with SparkSuite {
     assert(Traversals.vlePaths(adj, starts.toArray, 1, 3, carryEdges = false, 20).isEmpty)
     // more start ids, or more edges in one lookup, than the bound
     assert(Traversals.vleLocal(adj, starts.toDF("id"), 1, 3, carryEdges = false, maxRows = 1).isEmpty)
-    assert(adj.neighbors(Array(vid(0)), maxEdges = 2).isEmpty)
-    assert(adj.neighbors(Array(vid(0))).nonEmpty)
+    assert(adj.lookup(Array(vid(0)), maxRows = 2).isEmpty)
+    assert(adj.lookup(Array(vid(0))).nonEmpty)
     assert(walk(20) == walk(Traversals.BroadcastPathRows))
     assert(Traversals.shortestPathLocal(spark, adj, vid(0), vid(n), 5, maxRows = 3).isEmpty)
     owned.foreach(_.unpersist())

@@ -1969,6 +1969,9 @@ class CypherSpec extends AnyFunSuite with SparkSuite {
     def fileScans(df: DataFrame): Int = collect(df.queryExecution.executedPlan) {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f
     }.size
+    def broadcasts(df: DataFrame): Int = collect(df.queryExecution.executedPlan) {
+      case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec => b
+    }.size
   }
 
   def pointRead(age: Long): String = s"MATCH (u:Person {age: $age}) RETURN u.name AS name"
@@ -2118,7 +2121,7 @@ class CypherSpec extends AnyFunSuite with SparkSuite {
     for (partitions <- Seq(4, 32)) {
       val index = graft.algorithms.Adjacency.index(knows, reverse = false, partitions)
       val adj = graft.algorithms.Adjacency(index)
-      val (nb, jobs, tasks) = countsDuring(adj.neighbors(Array(Graphid.pack(100, 1))).get)
+      val (nb, jobs, tasks) = countsDuring(adj.lookup(Array(Graphid.pack(100, 1))).get)
       val found = Seq.newBuilder[Long]
       nb.foreach(Graphid.pack(100, 1))((v, _) => found += v)
       assert(found.result().sorted == Seq(Graphid.pack(100, 2), Graphid.pack(100, 4)))
@@ -2140,6 +2143,8 @@ class CypherSpec extends AnyFunSuite with SparkSuite {
     val s = residentRing()
     val sc = spark.sparkContext
     rows(s.run("MATCH (a:Person {age: 5}), (b:Person {age: 30}) CREATE (a)-[:KNOWS {since: 1}]->(b)"))
+    // held so that no listed RDD leaves the context's weak list at a GC
+    val pinned = sc.getPersistentRDDs.values.toList
     val (before, adjBefore) = (sc.getPersistentRDDs.keySet, adjacencyIds)
     val df = s.run(ringVle(5))
     assert(rows(df) == rows(new CypherSession(spark, s.store).run(ringVle(5))))
@@ -2147,11 +2152,15 @@ class CypherSpec extends AnyFunSuite with SparkSuite {
     // the loop's level checkpoints, and no new index
     assert((sc.getPersistentRDDs.keySet -- before).nonEmpty)
     assert(adjacencyIds == adjBefore)
+    assert(pinned.nonEmpty)
   }
 
   test("an adjacency built in a transaction goes with its rollback") {
     val s = residentRing()
     val back = "MATCH (a:Person {age: 7})<-[:KNOWS*1..2]-(b:Person) RETURN count(DISTINCT b.age) AS n"
+    // the context lists persisted RDDs weakly: holding them keeps an earlier
+    // test's unreachable index from leaving the list at a GC
+    val pinned = spark.sparkContext.getPersistentRDDs.values.toList
     val before = adjacencyIds
     s.begin()
     assert(rows(s.run(back)) == Seq(Seq(5L)))
@@ -2159,6 +2168,7 @@ class CypherSpec extends AnyFunSuite with SparkSuite {
     assert(built.size == 1)
     s.rollback()
     assert(adjacencyIds == before)
+    assert(pinned.nonEmpty)
     // the next backward walk builds it again
     assert(rows(s.run(back)) == Seq(Seq(5L)))
     assert((adjacencyIds -- before).size == 1)
@@ -2178,5 +2188,155 @@ class CypherSpec extends AnyFunSuite with SparkSuite {
     // the compacted generation is resident: the next walk indexes it
     assert(rows(s.run(ringVle(0))) == Seq(Seq(8L)))
     assert((adjacencyIds -- before -- mine).nonEmpty)
+  }
+
+  def optionalRead(age: Long): String =
+    s"MATCH (u:Person {age: $age}) OPTIONAL MATCH (u)<-[:KNOWS]-(v:Person) " +
+      "RETURN u.age AS a, count(v) AS c"
+
+  /** A ring session whose key-anchored reads are answered by lookups: three
+    * rounds of a one-hop and an OPTIONAL read hold the tables resident, want
+    * their indexes and build them.
+    */
+  def lookupRing(): CypherSession = {
+    val s = new CypherSession(spark, parquetRing())
+    for (_ <- 0 until 3) { rows(s.run(hopRead(0))); rows(s.run(optionalRead(0))) }
+    s
+  }
+
+  def indexIds: Set[Int] = spark.sparkContext.getPersistentRDDs
+    .collect { case (id, r) if r.name != null && r.name.startsWith("graft ") => id }.toSet
+
+  /** Whether the statement's plan reads no table. */
+  def lookedUp(df: DataFrame): Boolean = df.queryExecution.analyzed.collectFirst {
+    case l: org.apache.spark.sql.execution.LogicalRDD => l
+    case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l
+  }.isEmpty
+
+  test("a resident point read is one job of one task, a one-hop read three jobs and no broadcast") {
+    val s = lookupRing()
+    val (point, pointJobs, pointTasks) = countsDuring(rows(s.run(pointRead(7))))
+    assert(point == Seq(Seq("p7")))
+    assert((pointJobs, pointTasks) == (1, 1))
+    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val targets = Seq(8, 10).map(i => new org.apache.spark.HashPartitioner(parts)
+      .getPartition(Graphid.pack(100, i + 1))).distinct.size
+    val (hop, hopJobs, hopTasks) = countsDuring {
+      val df = s.run(hopRead(7))
+      val r = rows(df)
+      assert(Plans.broadcasts(df) == 0)
+      r
+    }
+    assert(hop.map(_.head.toString).sorted == Seq("p10", "p8"))
+    assert(hopJobs <= 3, s"one-hop read ran $hopJobs jobs")
+    assert(hopTasks <= 2 + targets, s"one-hop read ran $hopTasks tasks")
+    // the DataFrame plan ran 8 jobs
+    val (opt, optJobs) = jobsDuring(rows(s.run(optionalRead(7))))
+    assert(opt == Seq(Seq(7L, 2L)))
+    assert(optJobs <= 5, s"OPTIONAL read ran $optJobs jobs")
+  }
+
+  test("point and one-hop lookups run as many tasks at 32 shuffle partitions as at 4") {
+    def tasks(parts: Int): (Int, Int) = {
+      spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+      try {
+        val s = lookupRing()
+        (countsDuring(rows(s.run(pointRead(3))))._3, countsDuring(rows(s.run(hopRead(3))))._3)
+      } finally spark.conf.unset("spark.sql.shuffle.partitions")
+    }
+    assert(tasks(4) == tasks(32))
+  }
+
+  test("a lookup read persists nothing, a write keeps its job count") {
+    val s = lookupRing()
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val df = s.run(hopRead(5))
+    assert(lookedUp(df))
+    assert(rows(df).map(_.head.toString).sorted == Seq("p6", "p8"))
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
+    // the jobs the same CREATE ran before reads were answered by lookups
+    val (_, jobs) = jobsDuring(rows(s.run(
+      "MATCH (a:Person {age: 5}), (b:Person {age: 30}) CREATE (a)-[:KNOWS {since: 1}]->(b)")))
+    assert(jobs == 6, s"CREATE ran $jobs jobs")
+  }
+
+  test("a read after a write to its label keeps the DataFrame plan and builds no index") {
+    val s = lookupRing()
+    rows(s.run("MATCH (n:Person {age: 3}) SET n.name = 'q'"))
+    val before = indexIds
+    for (_ <- 0 until 3) {
+      val df = s.run(pointRead(3))
+      assert(!lookedUp(df))
+      assert(rows(df) == Seq(Seq("q")))
+    }
+    assert((indexIds -- before).isEmpty)
+  }
+
+  test("a read that cannot use every index it needs builds none and keeps the DataFrame plan") {
+    val s = new CypherSession(spark, parquetRing())
+    // wants Person by age and by id and KNOWS by dst (opening tables)
+    rows(s.run(optionalRead(1)))
+    // holds Person and KNOWS resident, then replaces KNOWS
+    rows(s.run("MATCH (a:Person {age: 1}), (b:Person {age: 30}) CREATE (a)-[:KNOWS {since: 2}]->(b)"))
+    // wants them again after the write
+    rows(s.run(optionalRead(1)))
+    val before = indexIds
+    // the Person indexes are due, KNOWS is no held table: none is built,
+    // and the first MATCH is not answered alone
+    val df = s.run(optionalRead(1))
+    assert(rows(df) == Seq(Seq(1L, 2L)))
+    assert(!lookedUp(df))
+    assert(df.queryExecution.analyzed.collectFirst {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => l
+    }.isEmpty)
+    assert((indexIds -- before).isEmpty)
+  }
+
+  test("a write statement between two reads that want an index defers it") {
+    val s = new CypherSession(spark, parquetRing())
+    // wants Person by age (the opening table)
+    rows(s.run(pointRead(1)))
+    // holds Person resident and replaces KNOWS only
+    rows(s.run("MATCH (a:Person {age: 1}), (b:Person {age: 30}) CREATE (a)-[:KNOWS {since: 2}]->(b)"))
+    val before = indexIds
+    val first = s.run(pointRead(2))
+    assert(!lookedUp(first) && rows(first) == Seq(Seq("p2")))
+    assert((indexIds -- before).isEmpty)
+    // the second read in a row builds it
+    val second = s.run(pointRead(3))
+    assert(lookedUp(second) && rows(second) == Seq(Seq("p3")))
+    assert((indexIds -- before).size == 1)
+  }
+
+  test("an index built in a transaction goes with its rollback, explain builds none") {
+    val s = new CypherSession(spark, parquetRing())
+    rows(s.run(pointRead(1)))
+    val before = indexIds
+    // explain answers over the built indexes only
+    assert(s.explain(pointRead(2)).nonEmpty)
+    assert((indexIds -- before).isEmpty)
+    s.begin()
+    val df = s.run(pointRead(2))
+    assert(lookedUp(df) && rows(df) == Seq(Seq("p2")))
+    val built = indexIds -- before
+    assert(built.size == 1)
+    s.rollback()
+    assert(!built.exists(spark.sparkContext.getPersistentRDDs.contains))
+    assert(rows(s.run(pointRead(2))) == Seq(Seq("p2")))
+  }
+
+  test("compaction releases every index of the session") {
+    val before = indexIds
+    val s = lookupRing()
+    val mine = indexIds -- before
+    assert(mine.size == 4) // Person by age and by id, KNOWS by src and by dst
+    var sets = 0
+    while (mine.exists(spark.sparkContext.getPersistentRDDs.contains)) {
+      sets += 1
+      assert(sets <= 20, "no compaction released the indexes")
+      s.run(s"MATCH (n:Person) WHERE n.age = 3 SET n.name = 'q$sets'")
+    }
+    assert(rows(s.run(hopRead(3))).map(_.head.toString).sorted == Seq("p4", "p6"))
   }
 }

@@ -1,0 +1,196 @@
+package graft
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.cypher.CypherSession
+import graft.model.Graphid
+import graft.store.GraphStore
+
+/** Key-anchored reads answered by index lookups in a resident session
+  * against a fresh single-statement session's DataFrame plan, on seeded
+  * random multigraphs (a self-loop, parallel edges, a 2-cycle, an isolated
+  * vertex, a non-unique key): the same sorted rows and column types.
+  */
+class LookupSpec extends AnyFunSuite with SparkSuite {
+
+  import spark.implicits._
+
+  val n = 24
+
+  def vid(i: Int): Long = Graphid.pack(1, i)
+  def wid(i: Int): Long = Graphid.pack(3, i)
+
+  /** V vertices 0..n (uid unique, k = uid / 2 shared by pairs, a name), two
+    * W vertices, and E edges: `m` random ones over V 0 until n, a self-loop,
+    * a parallel pair and a 2-cycle on vertex 0, and two into W. Vertex n
+    * has no edges.
+    */
+  def store(seed: Long, m: Int = 60): GraphStore = {
+    val r = new scala.util.Random(seed)
+    val vs = (0 to n).map(i => (vid(i), i.toLong, (i / 2).toLong, s"v$i")).toDF("id", "uid", "k", "name")
+    val ws = (0 until 2).map(i => (wid(i), 100L + i)).toDF("id", "uid")
+    val pairs = Seq((vid(0), vid(0)), (vid(0), vid(1)), (vid(0), vid(1)), (vid(1), vid(0)),
+      (vid(0), wid(0)), (vid(2), wid(1))) ++
+      Seq.fill(m)((vid(r.nextInt(n)), vid(r.nextInt(n))))
+    val es = pairs.zipWithIndex.map { case ((s, d), i) => (Graphid.pack(2, i), s, d, i.toLong % 5) }
+      .toDF("id", "src", "dst", "w")
+    val dir = java.nio.file.Files.createTempDirectory("graft_lookup").toString
+    new GraphStore(Map("V" -> vs, "W" -> ws), Map("E" -> es)).save(dir)
+    GraphStore.load(spark, dir)
+  }
+
+  /** Reads that use every index the checked reads use: the second run
+    * holds the tables resident and wants the indexes, the third builds them.
+    */
+  val warm = Seq(
+    "MATCH (a:V {uid: 0})-[:E]-(b:V), (c:V {k: 0}), (d:V {name: 'v0'}), (a)-[:E]->(w:W) " +
+      "RETURN count(*) AS c",
+    "MATCH (a:V {uid: 0})-[:E*1..2]-(b:V) RETURN count(*) AS c")
+
+  def resident(st: GraphStore, lookupRows: Long = graft.algorithms.Traversals.BroadcastPathRows,
+      params: Map[String, Any] = Map.empty): CypherSession = {
+    val s = new CypherSession(spark, st, params, lookupRows)
+    for (_ <- 0 until 3; q <- warm) s.run(q).collect()
+    s
+  }
+
+  /** Reads the lookups answer, with the parameters they bind. */
+  val answered = Seq(
+    "MATCH (a:V {uid: 3}) RETURN a.name AS n, a.k AS k",
+    "MATCH (a:V {k: 2}) RETURN a.uid AS u",
+    "MATCH (a:V {uid: 999}) RETURN a.uid AS u",
+    "MATCH (a:V {uid: 0})-[e:E]->(b:V) RETURN b.uid AS b, e.w AS w",
+    "MATCH (a:V {uid: 0})<-[e:E]-(b:V) RETURN b.uid AS b, e.w AS w, startNode(e) AS s",
+    "MATCH (a:V {k: 0})-[e:E]-(b:V) RETURN a.uid AS a, b.uid AS b, e.w AS w, endNode(e) AS t",
+    "MATCH (a:V {k: 1})-[:E]->(:V)-[:E]->(c:V) RETURN c.uid AS c, count(*) AS n",
+    "MATCH (a:V {uid: 1}) OPTIONAL MATCH (a)-[:E]->(b:V) RETURN a.uid AS a, b.uid AS b",
+    s"MATCH (a:V {uid: $n}) OPTIONAL MATCH (a)<-[:E]-(b:V) RETURN a.uid AS a, count(b) AS c",
+    "MATCH (a:V {k: 0}) OPTIONAL MATCH (a)-[:E]->(b:W) RETURN a.uid AS a, b.uid AS b",
+    "MATCH (a:V {uid: 0})-[e:E]->(b:V) RETURN e AS e, a AS a",
+    "MATCH p = (a:V {uid: 0})-[:E]->(b:V)-[:E]-(c:V) " +
+      "RETURN p AS p, nodes(p) AS ns, relationships(p) AS rs, length(p) AS l",
+    "MATCH (a:V {uid: $u})-[:E]->(b:V) RETURN b.uid AS b",
+    "MATCH (a:V {uid: $ul})<-[:E]-(b:V) RETURN b.uid AS b",
+    "MATCH (a:V {name: 'v3'})-[:E]-(b:V) RETURN b.name AS b",
+    "MATCH (a:V {name: $s}) RETURN a.uid AS u",
+    "MATCH (a:V {uid: 0})-[:E]->(b:W) RETURN b.uid AS b",
+    "MATCH (a:V {uid: 0}), (b:V {k: 1}) RETURN a.uid AS a, b.uid AS b",
+    "MATCH (a:V {uid: 0})-[:E]->(b:V)-[:E]->(a) RETURN b.uid AS b",
+    "MATCH (a:V {uid: 0})-[e:E]->() RETURN e.w AS w",
+    "MATCH (a:V {uid: 1}) MATCH (a)-[:E]->(b:V) RETURN b.uid AS b",
+    "MATCH (a:V {uid: 0})-[:E]->(b:V) WHERE b.k > 2 RETURN b.uid AS b ORDER BY b",
+    "MATCH (a:V {uid: 0})-[:E*1..2]->(b:V) RETURN b.uid AS b",
+    "MATCH p = (a:V {uid: 0})-[r:E*0..2]-(b:V) RETURN p AS p, r AS r, length(p) AS l")
+
+  /** Reads the DataFrame plan keeps: a key of another type family, a null
+    * key, an unlabelled target.
+    */
+  val kept = Seq(
+    "MATCH (a:V {uid: 2.0}) RETURN a.uid AS u",
+    "MATCH (a:V {uid: null}) RETURN a.uid AS u",
+    "MATCH (a:V {uid: '3'}) RETURN a.uid AS u",
+    "MATCH (a:V {uid: 0})-[:E]->(b) RETURN b.uid AS b")
+
+  val params: Map[String, Any] = Map("u" -> 2, "ul" -> 1L, "s" -> "v5")
+
+  def sorted(df: DataFrame): Seq[String] =
+    df.collect().toSeq.map(_.toSeq.map(show).mkString("|")).sorted
+
+  def show(x: Any): String = x match {
+    case s: scala.collection.Seq[_] => s.map(show).mkString("[", ",", "]")
+    case r: Row => r.toSeq.map(show).mkString("{", ",", "}")
+    case other => String.valueOf(other)
+  }
+
+  def shape(df: DataFrame): Seq[(String, String)] =
+    df.schema.fields.toSeq.map(f => (f.name, f.dataType.simpleString))
+
+  /** Whether the statement's plan reads no table: its MATCH was answered by
+    * lookups.
+    */
+  def lookedUp(df: DataFrame): Boolean = df.queryExecution.analyzed.collectFirst {
+    case l: org.apache.spark.sql.execution.LogicalRDD => l
+    case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l
+  }.isEmpty
+
+  test("key-anchored reads in a resident session return a fresh session's rows") {
+    for (seed <- Seq(1L, 2L)) {
+      val st = store(seed)
+      val s = resident(st, params = params)
+      for (q <- answered ++ kept) {
+        val (local, frames) = (s.run(q), new CypherSession(spark, st, params).run(q))
+        val ctx = s"seed $seed: $q"
+        assert(!lookedUp(frames), ctx)
+        assert(lookedUp(local) == answered.contains(q), ctx)
+        assert(shape(local) == shape(frames), ctx)
+        assert(sorted(local) == sorted(frames), ctx)
+      }
+    }
+  }
+
+  test("a read whose bindings pass the row bound falls back to the DataFrame plan") {
+    val st = store(3)
+    val s = resident(st, lookupRows = 2)
+    for ((q, small) <- Seq(
+        "MATCH (a:V {uid: 3}) RETURN a.uid AS u" -> true,
+        "MATCH (a:V {uid: 0})-[:E]-(b:V) RETURN b.uid AS b" -> false,
+        "MATCH (a:V {uid: 0})-[:E*1..2]->(b:V) RETURN b.uid AS b" -> false)) {
+      val (bounded, frames) = (s.run(q), new CypherSession(spark, st).run(q))
+      assert(lookedUp(bounded) == small, q)
+      assert(sorted(bounded) == sorted(frames), q)
+    }
+  }
+
+  /** Whether the statement's plan holds rows lookups bound and also reads a
+    * table: some MATCH clauses answered, others not.
+    */
+  def halfAnswered(df: DataFrame): Boolean = !lookedUp(df) &&
+    df.queryExecution.analyzed.collectFirst {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => l
+    }.isDefined
+
+  test("an OPTIONAL MATCH whose rows pass the bound sends the whole read to the DataFrame plan") {
+    val st = store(5)
+    val fresh = new CypherSession(spark, st)
+    def count(q: String) = fresh.run(q).collect().length.toLong
+    // each clause's rows, and every lookup, stay under the bound; the
+    // OPTIONAL's product with the first clause's rows passes it
+    val out = count("MATCH (a:V {uid: 0})-[:E]->(b) RETURN b.uid AS b")
+    val in = count("MATCH (a:V {uid: 0})<-[:E]-(c:V) RETURN c.uid AS c")
+    val bound = out.max(in)
+    val q = "MATCH (a:V {uid: 0})-[:E]->(b:V) OPTIONAL MATCH (a)<-[:E]-(c:V) " +
+      "RETURN b.uid AS b, c.uid AS c"
+    val rows = sorted(fresh.run(q))
+    assert(rows.size > bound)
+    val unbounded = resident(st).run(q)
+    assert(lookedUp(unbounded) && sorted(unbounded) == rows)
+    val bounded = resident(st, lookupRows = bound).run(q)
+    assert(!lookedUp(bounded) && !halfAnswered(bounded))
+    assert(sorted(bounded) == rows)
+  }
+
+  test("lookups return the same rows at 1, 7 and 32 partitions and with AQE and codegen off") {
+    val st = store(4)
+    // point, one-hop each way, two-hop, OPTIONAL with and without a match,
+    // a path over a fixed and over a var-length hop
+    val reads = Seq(0, 3, 4, 5, 6, 7, 8, 11, 23).map(answered)
+    val default = reads.map(q => sorted(new CypherSession(spark, st).run(q)))
+    for (conf <- Seq(
+        Map("spark.sql.shuffle.partitions" -> "1"),
+        Map("spark.sql.shuffle.partitions" -> "7"),
+        Map("spark.sql.shuffle.partitions" -> "32"),
+        Map("spark.sql.adaptive.enabled" -> "false", "spark.sql.codegen.wholeStage" -> "false",
+          "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))) {
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        val s = resident(st)
+        reads.zip(default).foreach { case (q, rows) =>
+          val df = s.run(q)
+          assert(lookedUp(df), s"$conf: $q")
+          assert(sorted(df) == rows, s"$conf: $q")
+        }
+      } finally conf.keys.foreach(spark.conf.unset)
+    }
+  }
+}

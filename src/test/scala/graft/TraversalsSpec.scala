@@ -424,27 +424,53 @@ class TraversalsSpec extends AnyFunSuite with SparkSuite {
     val sc = spark.sparkContext
     val e = (0 until 12).map(i => (Graphid.pack(1, i), Graphid.pack(1, i + 1))).toDF("src", "dst")
     // another thread persists (as a concurrent session's compaction would)
-    // for as long as the search runs
+    // for as long as each search runs
     val theirs = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[Int]]()
     @volatile var running = true
-    val started = new java.util.concurrent.CountDownLatch(1)
-    val other = new Thread(() => while (running) {
-      val r = sc.parallelize(1 to 4, 1).persist()
-      r.count()
-      theirs.add(r)
-      started.countDown()
-      Thread.sleep(10)
-    })
-    other.start()
-    started.await()
-    val res = try Traversals.shortestPath(e, Graphid.pack(1, 0), Graphid.pack(1, 12), 12).collect()
-      finally { running = false; other.join() }
-    assert(res.length == 1 && res(0).getInt(2) == 12)
-    val persisted = theirs.toArray(Array.empty[org.apache.spark.rdd.RDD[Int]]).toSeq
-    assert(persisted.size >= 2)
-    val live = sc.getPersistentRDDs.keySet
-    assert(persisted.forall(r => live.contains(r.id)),
-      s"${persisted.count(r => !live.contains(r.id))} of ${persisted.size} were freed")
-    persisted.foreach(_.unpersist())
+    val (a, b) = (Graphid.pack(1, 0), Graphid.pack(1, 12))
+    val weighted = e.withColumn("weight", org.apache.spark.sql.functions.lit(1.0))
+    // the unweighted path search, then the weighted bidirectional distance
+    val searches = Seq[(String, () => Unit)](
+      "shortestPath" -> { () =>
+        val res = Traversals.shortestPath(e, a, b, 12).collect()
+        assert(res.length == 1 && res(0).getInt(2) == 12)
+      },
+      "bidirWeightedDistance" -> { () =>
+        assert(Traversals.bidirWeightedDistance(weighted, a, b).contains(12.0))
+      })
+    for ((name, search) <- searches) {
+      theirs.clear()
+      running = true
+      val started = new java.util.concurrent.CountDownLatch(1)
+      val other = new Thread(() => while (running) {
+        val r = sc.parallelize(1 to 4, 1).persist()
+        r.count()
+        theirs.add(r)
+        started.countDown()
+        Thread.sleep(10)
+      })
+      other.start()
+      started.await()
+      try search() finally { running = false; other.join() }
+      val persisted = theirs.toArray(Array.empty[org.apache.spark.rdd.RDD[Int]]).toSeq
+      assert(persisted.size >= 2, name)
+      val live = sc.getPersistentRDDs.keySet
+      assert(persisted.forall(r => live.contains(r.id)),
+        s"$name: ${persisted.count(r => !live.contains(r.id))} of ${persisted.size} were freed")
+      persisted.foreach(_.unpersist())
+    }
+  }
+
+  test("bfsDistances keeps persisted only the checkpoints its result reads") {
+    val sc = spark.sparkContext
+    val e = (0 until 3).map(i => (Graphid.pack(1, i), Graphid.pack(1, i + 1))).toDF("src", "dst")
+    val before = sc.getPersistentRDDs.keySet
+    val res = Traversals.bfsDistances(e, Seq(Graphid.pack(1, 0)).toDF("id"), 5)
+    // held strongly: the context tracks persisted RDDs by weak reference, so
+    // a garbage collection must not hide one the call left behind
+    val left = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
+    assert(res.collect().map(_.getInt(1)).sorted.toSeq == Seq(0, 1, 2, 3))
+    assert(left.keySet == graft.util.Checkpoints.idsOf(res))
+    graft.util.Checkpoints.release(spark, left.keySet)
   }
 }
