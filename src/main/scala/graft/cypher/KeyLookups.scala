@@ -143,6 +143,9 @@ private[cypher] final class KeyLookups(spark: SparkSession, params: Map[String, 
     }
   }
 
+  /** Whether lookups answered the statement's MATCH clauses. */
+  def answered: Boolean = !held.isEmpty
+
   /** A label table the shape checks found. */
   private def table(kind: VarKind, label: String): DataFrame = read(kind, label).get
 

@@ -72,15 +72,19 @@ final class Planner(spark: SparkSession, store0: GraphStore,
         if (kind == VarKind.Node) st.vertexTables.get(l) else st.edgeTables.get(l)
       },
       fresh, lookup, lookupRows)).filter(_.prepare(q))
-    try planQuery(q)
-    catch {
-      case KeyLookups.Restart =>
-        // a clause passed the row bound after others were answered: the
-        // whole statement runs as the DataFrame plan
-        keyLookups = None
-        anon = named
-        planQuery(q)
-    }
+    val res =
+      try planQuery(q)
+      catch {
+        case KeyLookups.Restart =>
+          // a clause passed the row bound after others were answered: the
+          // whole statement runs as the DataFrame plan
+          keyLookups = None
+          anon = named
+          planQuery(q)
+      }
+    // the rows lookups bound are on the driver: so is the rest of the read
+    if (keyLookups.exists(_.answered)) res.copy(df = res.df.map(LocalTail.fold(_, lookupRows)))
+    else res
   }
 
   private def planQuery(q: Query): PlanResult =

@@ -32,6 +32,10 @@ object GraftColumnBridge {
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
       catalyst.plans.logical.LocalRelation(catalyst.types.DataTypeUtils.toAttributes(schema), rows))
 
+  /** `e` with NaN and -0.0 normalized, as Spark's aggregates key floats. */
+  def normalizeFloats(e: Expression): Expression =
+    catalyst.optimizer.NormalizeFloatingNumbers.normalize(e)
+
   import org.apache.spark.sql.{internal => in}
   import org.apache.spark.sql.types.{ArrayType, DataType}
 

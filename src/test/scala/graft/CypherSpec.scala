@@ -2236,6 +2236,48 @@ class CypherSpec extends AnyFunSuite with SparkSuite {
     assert(optJobs <= 5, s"OPTIONAL read ran $optJobs jobs")
   }
 
+  def hop2Read(age: Long): String =
+    s"MATCH (u:Person {age: $age})-[:KNOWS]->(:Person)-[:KNOWS]->(w:Person) RETURN w.age AS a, count(*) AS n"
+
+  /** Whether the statement's tail was evaluated on the driver. */
+  def folded(df: DataFrame): Boolean = df.queryExecution.optimizedPlan
+    .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+
+  test("a lookup-answered aggregate read collects with no job") {
+    val s = lookupRing()
+    // holds the two-hop and var-length reads' indexes too
+    for (_ <- 0 until 2) { rows(s.run(hop2Read(0))); rows(s.run(ringVle(0))) }
+    // the jobs of the whole read: its lookups; before the driver evaluated
+    // the tail, OPTIONAL ran 5 and two-hop 7
+    for ((q, expected, most) <- Seq(
+        (optionalRead(7), Seq(Seq(7L, 2L)), 3),
+        (hop2Read(7), Seq(Seq(9L, 1L), Seq(11L, 2L), Seq(13L, 1L)), 5),
+        (ringVle(7), Seq(Seq(8L)), 5))) {
+      val ((df, (got, collectJobs)), jobs) = jobsDuring {
+        val df = s.run(q)
+        (df, jobsDuring(rows(df)))
+      }
+      assert(lookedUp(df) && folded(df), q)
+      assert(got.sortBy(_.head.asInstanceOf[Long]) == expected, q)
+      assert(collectJobs == 0, s"collecting $q ran $collectJobs jobs")
+      assert(jobs <= most, s"$q ran $jobs jobs")
+    }
+  }
+
+  test("an aggregate read lookups do not answer keeps its DataFrame plan and job count") {
+    val agg = "MATCH (u:Person)-[:KNOWS]->(v:Person) WHERE u.age < 5 RETURN v.age % 2 AS p, count(*) AS n"
+    val s = lookupRing()
+    val df = s.run(agg)
+    assert(!lookedUp(df) && !folded(df))
+    assert(rows(df).sortBy(_.head.asInstanceOf[Long]) == Seq(Seq(0L, 4L), Seq(1L, 6L)))
+    // a single-statement session is never answered by lookups: its
+    // OPTIONAL read runs the DataFrame plan's jobs
+    val single = new CypherSession(spark, parquetRing())
+    val (opt, jobs) = jobsDuring(rows(single.run(optionalRead(7))))
+    assert(opt == Seq(Seq(7L, 2L)))
+    assert(jobs == 8, s"single-statement OPTIONAL read ran $jobs jobs")
+  }
+
   test("point and one-hop lookups run as many tasks at 32 shuffle partitions as at 4") {
     def tasks(parts: Int): (Int, Int) = {
       spark.conf.set("spark.sql.shuffle.partitions", parts.toString)

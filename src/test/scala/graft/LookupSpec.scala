@@ -21,14 +21,15 @@ class LookupSpec extends AnyFunSuite with SparkSuite {
   def vid(i: Int): Long = Graphid.pack(1, i)
   def wid(i: Int): Long = Graphid.pack(3, i)
 
-  /** V vertices 0..n (uid unique, k = uid / 2 shared by pairs, a name), two
-    * W vertices, and E edges: `m` random ones over V 0 until n, a self-loop,
-    * a parallel pair and a 2-cycle on vertex 0, and two into W. Vertex n
-    * has no edges.
+  /** V vertices 0..n (uid unique, k = uid / 2 shared by pairs, a name, a
+    * double x that is null on every third), two W vertices, and E edges:
+    * `m` random ones over V 0 until n, a self-loop, a parallel pair and a
+    * 2-cycle on vertex 0, and two into W. Vertex n has no edges.
     */
   def store(seed: Long, m: Int = 60): GraphStore = {
     val r = new scala.util.Random(seed)
-    val vs = (0 to n).map(i => (vid(i), i.toLong, (i / 2).toLong, s"v$i")).toDF("id", "uid", "k", "name")
+    val vs = (0 to n).map(i => (vid(i), i.toLong, (i / 2).toLong, s"v$i",
+      Option.when(i % 3 != 0)(i * 0.37 - 2.5))).toDF("id", "uid", "k", "name", "x")
     val ws = (0 until 2).map(i => (wid(i), 100L + i)).toDF("id", "uid")
     val pairs = Seq((vid(0), vid(0)), (vid(0), vid(1)), (vid(0), vid(1)), (vid(1), vid(0)),
       (vid(0), wid(0)), (vid(2), wid(1))) ++
@@ -97,7 +98,11 @@ class LookupSpec extends AnyFunSuite with SparkSuite {
   def sorted(df: DataFrame): Seq[String] =
     df.collect().toSeq.map(_.toSeq.map(show).mkString("|")).sorted
 
+  /** A value as text; a double to 12 significant digits, the tolerance
+    * between two orders of summing it.
+    */
   def show(x: Any): String = x match {
+    case d: Double => f"$d%.12g"
     case s: scala.collection.Seq[_] => s.map(show).mkString("[", ",", "]")
     case r: Row => r.toSeq.map(show).mkString("{", ",", "}")
     case other => String.valueOf(other)
@@ -192,5 +197,99 @@ class LookupSpec extends AnyFunSuite with SparkSuite {
         }
       } finally conf.keys.foreach(spark.conf.unset)
     }
+  }
+
+  /** Whether the statement's tail was evaluated on the driver: its plan is
+    * a bare LocalRelation.
+    */
+  def folded(df: DataFrame): Boolean = df.queryExecution.optimizedPlan
+    .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+
+  /** Rows sorted, each list value sorted too: `collect` compared as a
+    * multiset.
+    */
+  def unordered(df: DataFrame): Seq[String] = df.collect().toSeq.map(_.toSeq.map {
+    case s: scala.collection.Seq[_] => s.map(show).sorted.mkString("[", ",", "]")
+    case other => show(other)
+  }.mkString("|")).sorted
+
+  /** Lookup-answered reads whose aggregates, DISTINCT, ORDER BY, SKIP /
+    * LIMIT and UNION the driver evaluates.
+    */
+  val tails = Seq(
+    "MATCH (a:V {k: 0})-[:E]-(b:V) RETURN count(*) AS n",
+    "MATCH (a:V {k: 1}) OPTIONAL MATCH (a)-[:E]->(b:V) RETURN a.uid AS a, count(b) AS c, count(b.x) AS cx",
+    "MATCH (a:V {uid: 0})-[:E*1..2]-(b:V) RETURN count(DISTINCT b.uid) AS n",
+    "MATCH (a:V {k: 0})-[:E]-(b:V) RETURN a.uid AS a, count(DISTINCT b.uid) AS n, count(DISTINCT b.k) AS m, " +
+      "count(*) AS c",
+    "MATCH (a:V {uid: 0})-[e:E]-(b:V) RETURN a.uid AS a, sum(e.w) AS s, avg(e.w) AS m, min(b.name) AS lo, " +
+      "max(b.uid) AS hi",
+    "MATCH (a:V {uid: 0})-[:E*1..2]-(b:V) RETURN sum(b.x) AS s, avg(b.x) AS m, min(b.x) AS lo, max(b.x) AS hi, " +
+      "count(b.x) AS c",
+    "MATCH (a:V {k: 1})-[:E]-(b:V) RETURN a.uid AS a, collect(b.uid) AS bs, collect(DISTINCT b.k) AS ks",
+    "MATCH (a:V {uid: 999}) RETURN count(*) AS n, sum(a.x) AS s, collect(a.uid) AS c",
+    "MATCH (a:V {uid: 999}) RETURN a.k AS k, count(*) AS n",
+    "MATCH (a:V {uid: 0})-[:E*1..2]-(b:V) RETURN b.x AS x, count(*) AS n",
+    "MATCH (a:V {k: 0}) OPTIONAL MATCH (a)-[:E]->(w:W) RETURN w.uid AS w, count(*) AS n",
+    "MATCH (a:V {uid: 0})-[:E]-(b:V) RETURN DISTINCT b.k AS k",
+    "MATCH (a:V {uid: 0})-[:E*1..2]-(b:V) RETURN b.uid AS u, b.x AS x ORDER BY x DESC, u SKIP 2 LIMIT 7",
+    "MATCH (a:V {uid: 0})-[:E*1..2]-(b:V) RETURN DISTINCT b.x AS x ORDER BY x LIMIT 4",
+    "MATCH (a:V {k: 0})-[:E]-(b:V) WITH b.uid AS u, count(*) AS n WHERE n > 1 RETURN u, n ORDER BY n DESC, u",
+    "MATCH (a:V {uid: 0})-[:E]->(b:V) RETURN b.k AS k UNION MATCH (a:V {uid: 1})-[:E]-(b:V) RETURN b.k AS k",
+    "MATCH (a:V {uid: 0})-[:E]->(b:V) RETURN b.k AS k UNION ALL MATCH (a:V {uid: 1})-[:E]-(b:V) RETURN b.k AS k")
+
+  test("a lookup-answered read's tail on the driver returns a fresh session's rows and types") {
+    for (seed <- Seq(1L, 2L)) {
+      val st = store(seed)
+      val s = resident(st)
+      for (q <- tails) {
+        val (local, frames) = (s.run(q), new CypherSession(spark, st).run(q))
+        val ctx = s"seed $seed: $q"
+        assert(lookedUp(local) && folded(local), ctx)
+        assert(!lookedUp(frames), ctx)
+        assert(shape(local) == shape(frames), ctx)
+        assert(unordered(local) == unordered(frames), ctx)
+      }
+    }
+  }
+
+  test("the driver's tail returns the same rows at 1, 7 and 32 partitions and with AQE and codegen off") {
+    val st = store(4)
+    val default = tails.map(q => unordered(new CypherSession(spark, st).run(q)))
+    for (conf <- Seq(
+        Map("spark.sql.shuffle.partitions" -> "1"),
+        Map("spark.sql.shuffle.partitions" -> "7"),
+        Map("spark.sql.shuffle.partitions" -> "32"),
+        Map("spark.sql.adaptive.enabled" -> "false", "spark.sql.codegen.wholeStage" -> "false",
+          "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))) {
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        val s = resident(st)
+        tails.zip(default).foreach { case (q, rows) =>
+          val df = s.run(q)
+          assert(folded(df), s"$conf: $q")
+          assert(unordered(df) == rows, s"$conf: $q")
+        }
+      } finally conf.keys.foreach(spark.conf.unset)
+    }
+  }
+
+  test("an UNWIND that takes the tail past the row bound keeps the DataFrame tail") {
+    val st = store(6)
+    val fresh = new CypherSession(spark, st)
+    def count(q: String) = fresh.run(q).collect().length.toLong
+    // the bound passes every lookup (the edge lookup also finds the edge
+    // into W); the UNWIND's rows pass it
+    val hops = count("MATCH (a:V {uid: 0})-[:E]->(b:V) RETURN b.uid AS b")
+    val bound = count("MATCH (a:V {uid: 0})-[:E]->(b) RETURN b.uid AS b")
+    assert(3 * hops > bound)
+    val q = "MATCH (a:V {uid: 0})-[:E]->(b:V) UNWIND [1, 2, 3] AS i RETURN b.uid AS b, i AS i, count(*) AS n"
+    val rows = unordered(fresh.run(q))
+    assert(rows.map(_.split('|').last.toLong).sum == 3 * hops)
+    val unbounded = resident(st).run(q)
+    assert(lookedUp(unbounded) && folded(unbounded) && unordered(unbounded) == rows)
+    val bounded = resident(st, lookupRows = bound).run(q)
+    assert(lookedUp(bounded) && !folded(bounded))
+    assert(unordered(bounded) == rows)
   }
 }
