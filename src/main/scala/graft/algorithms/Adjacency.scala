@@ -27,6 +27,9 @@ final case class CsrBlock(keys: Array[Long], offsets: Array[Int], at: Array[Int]
     into.pointTo(bytes, Platform.BYTE_ARRAY_OFFSET + at(r), at(r + 1) - at(r))
     into
   }
+
+  /** The bytes of this block's arrays. */
+  def byteSize: Long = 8L * keys.length + 4L * (offsets.length + at.length) + bytes.length
 }
 
 object CsrBlock {
@@ -138,36 +141,93 @@ final class KeyedRows private[algorithms] (blocks: Array[CsrBlock]) {
     }
 }
 
+/** A keyed index built by [[Adjacency.keyed]]: one [[CsrBlock]] per hash
+  * partition, held on the driver ([[KeyedIndex.OnDriver]]) or in a
+  * persisted RDD ([[KeyedIndex.Persisted]]).
+  */
+sealed trait KeyedIndex {
+  def partitions: Int
+
+  /** The persisted RDD that holds the blocks, which its owner unpersists. */
+  def rdd: Option[RDD[CsrBlock]]
+}
+
+object KeyedIndex {
+
+  /** Blocks small enough to keep whole on the driver: a lookup reads them
+    * in place, with no Spark job.
+    */
+  final case class OnDriver(blocks: Array[CsrBlock]) extends KeyedIndex {
+    def partitions: Int = blocks.length
+    def rdd: Option[RDD[CsrBlock]] = None
+  }
+
+  /** Blocks persisted MEMORY_AND_DISK, one per partition: a lookup is one
+    * job over the partitions its keys hash to.
+    */
+  final case class Persisted(blocks: RDD[CsrBlock]) extends KeyedIndex {
+    def partitions: Int = blocks.partitions.length
+    def rdd: Option[RDD[CsrBlock]] = Some(blocks)
+  }
+}
+
 /** A hash-partitioned keyed index over one table's rows: the store-side
   * answer to a per-key probe. Keyed on an edge endpoint it is an adjacency,
   * the reference's out-/in-edge prefix scan (rocksdb_store.rs:652-681);
   * keyed on a vertex id or property it is the vertex get
-  * (rocksdb_store.rs:606-627). A lookup is one Spark job over only the
-  * partitions its keys hash to, instead of a join over the whole table;
-  * the partitions hold [[CsrBlock]]s, built once and kept persisted by
-  * whoever owns the index (see `Adjacency.keyed`).
+  * (rocksdb_store.rs:606-627). A lookup reads only the partitions its keys
+  * hash to, instead of joining the whole table: in place when the index is
+  * held on the driver, as the reference reads its store in process, and
+  * otherwise by one Spark job over those partitions' persisted blocks.
+  * Both forms give the same rows.
   */
-final class Adjacency private (blocks: RDD[Array[CsrBlock]]) {
-  private val partitioner = new HashPartitioner(blocks.partitions.length)
+final class Adjacency private (indexes: Seq[KeyedIndex]) {
+  private val partitioner = new HashPartitioner(indexes.head.partitions)
+  require(indexes.forall(_.partitions == partitioner.numPartitions),
+    "the indexes of one adjacency need the same number of partitions")
 
-  /** The rows of `keys`, fetched by one job whose tasks touch only the
-    * partitions the keys hash to (none when `keys` is empty). None when
-    * they have more than `maxRows` rows: then no task sends more than
-    * `maxRows` + 1 of them to the driver.
+  /** The persisted indexes' blocks, one array per partition, in index
+    * order; None when every index is held on the driver.
+    */
+  private val persisted: Option[RDD[Array[CsrBlock]]] =
+    indexes.flatMap(_.rdd) match {
+      case Seq() => None
+      case Seq(one) => Some(one.mapPartitions(_.map(Array(_)), preservesPartitioning = true))
+      case Seq(a, b) => Some(a.zipPartitions(b, preservesPartitioning = true) {
+        (x, y) => Iterator(Array(x.next(), y.next()))
+      })
+    }
+
+  /** The rows of `keys`, read from only the partitions the keys hash to:
+    * on the driver, or by one job when an index is persisted (none when
+    * `keys` is empty). None when they have more than `maxRows` rows: then
+    * no task sends more than `maxRows` + 1 of them per index to the
+    * driver.
     */
   def lookup(keys: Array[Long], maxRows: Long = Long.MaxValue): Option[KeyedRows] = {
     val byPart = Array.fill(partitioner.numPartitions)(mutable.ArrayBuilder.make[Long])
     keys.distinct.foreach(k => byPart(partitioner.getPartition(k)) += k)
     val wanted = byPart.map { b => val a = b.result(); Arrays.sort(a); a }
     val parts = wanted.indices.filter(p => wanted(p).nonEmpty)
-    val found =
-      if (parts.isEmpty) Array.empty[CsrBlock]
-      else blocks.sparkContext.runJob(blocks,
-        // a partition holds one element; reading to its end releases the
-        // block's read lock
-        (ctx: TaskContext, it: Iterator[Array[CsrBlock]]) =>
-          CsrBlock.slice(it.toArray.head, wanted(ctx.partitionId()), maxRows),
-        parts)
+    // per wanted partition, the persisted indexes' slices, in index order
+    val fetched: Map[Int, Array[CsrBlock]] = persisted match {
+      case Some(blocks) if parts.nonEmpty =>
+        parts.zip(blocks.sparkContext.runJob(blocks,
+          // a partition holds one element; reading to its end releases the
+          // blocks' read locks
+          (ctx: TaskContext, it: Iterator[Array[CsrBlock]]) =>
+            it.toArray.head.map(b => CsrBlock.slice(Array(b), wanted(ctx.partitionId()), maxRows)),
+          parts)).toMap
+      case _ => Map.empty
+    }
+    val found = parts.map { p =>
+      val slices = fetched.getOrElse(p, Array.empty[CsrBlock]).iterator
+      val blocks = indexes.map {
+        case KeyedIndex.OnDriver(held) => held(p)
+        case _: KeyedIndex.Persisted => slices.next()
+      }
+      CsrBlock.slice(blocks.toArray, wanted(p), maxRows)
+    }.toArray
     if (found.iterator.map(_.offsets.last.toLong).sum > maxRows) None
     else Some(new KeyedRows(found))
   }
@@ -199,14 +259,18 @@ object Adjacency {
     Seq("id", "src", "dst") ++ columns.filterNot(Set("id", "src", "dst"))
 
   /** The rows of `table` keyed on its column `key` (one of the [[keyable]]
-    * types), hash-partitioned into `partitions` blocks, persisted
-    * MEMORY_AND_DISK under `name` and materialized (one job). Rows with a
-    * null key are left out: no equality matches them. The caller owns the
-    * returned RDD and unpersists it. A table that is one persisted RDD (a
-    * session's resident copy or compacted table) is read as that RDD, with
-    * no query planning and no generated code.
+    * types), hash-partitioned into `partitions` blocks, built and sized by
+    * one job. Rows with a null key are left out: no equality matches them.
+    * When the blocks' arrays take at most
+    * `spark.sql.autoBroadcastJoinThreshold` bytes (Spark's bound for a
+    * relation held whole on the driver) they are collected to it by one
+    * more job and the RDD is unpersisted; otherwise the index is the RDD,
+    * persisted MEMORY_AND_DISK under `name`, which the caller owns and
+    * unpersists. A table that is one persisted RDD (a session's resident
+    * copy or compacted table) is read as that RDD, with no query planning
+    * and no generated code.
     */
-  def keyed(table: DataFrame, key: String, partitions: Int, name: String): RDD[CsrBlock] = {
+  def keyed(table: DataFrame, key: String, partitions: Int, name: String): KeyedIndex = {
     val schema = table.schema
     val k = schema.fieldIndex(key)
     val kt = schema(k).dataType
@@ -227,8 +291,15 @@ object Adjacency {
       .mapPartitions(it => Iterator(CsrBlock.of(it, fields)), preservesPartitioning = true)
       .setName(name)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    blocks.count()
-    blocks
+    val bytes = blocks.map(_.byteSize).fold(0L)(_ + _)
+    val bound = table.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    if (bound <= 0 || bytes > bound) KeyedIndex.Persisted(blocks)
+    else {
+      // one element per partition, collected in partition order
+      val held = blocks.collect()
+      blocks.unpersist(blocking = true)
+      KeyedIndex.OnDriver(held)
+    }
   }
 
   /** The adjacency index of `edges` (columns src, dst, id, cast to long;
@@ -236,7 +307,7 @@ object Adjacency {
     * [[edgeColumns]], keyed on `src`, or on `dst` when `reverse`. See
     * [[keyed]].
     */
-  def index(edges: DataFrame, reverse: Boolean, partitions: Int): RDD[CsrBlock] = {
+  def index(edges: DataFrame, reverse: Boolean, partitions: Int): KeyedIndex = {
     val types = edges.schema.map(f => f.name -> f.dataType).toMap
     val cols = edgeColumns(edges.columns.toSeq).map { c =>
       if (Set("id", "src", "dst")(c) && types(c) != LongType) col(c).cast(LongType).as(c) else col(c)
@@ -248,15 +319,11 @@ object Adjacency {
   /** Looks up one index; walked as an adjacency, forward over a src-keyed
     * index and backward over a dst-keyed one.
     */
-  def apply(index: RDD[CsrBlock]): Adjacency =
-    new Adjacency(index.mapPartitions(_.map(Array(_)), preservesPartitioning = true))
+  def apply(index: KeyedIndex): Adjacency = new Adjacency(Seq(index))
 
   /** Walks edges both ways: a key's rows are those of `bySrc`, then those
-    * of `byDst`, read by one task per partition. Both indexes must have the
-    * same number of partitions.
+    * of `byDst`; the persisted ones are read by one task per partition.
+    * Both indexes must have the same number of partitions.
     */
-  def both(bySrc: RDD[CsrBlock], byDst: RDD[CsrBlock]): Adjacency =
-    new Adjacency(bySrc.zipPartitions(byDst, preservesPartitioning = true) {
-      (a, b) => Iterator(Array(a.next(), b.next()))
-    })
+  def both(bySrc: KeyedIndex, byDst: KeyedIndex): Adjacency = new Adjacency(Seq(bySrc, byDst))
 }

@@ -1,7 +1,9 @@
 package graft.algorithms
 
 import org.apache.spark.graphx.{Edge, Graph, Pregel, VertexId}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** Weighted single-source shortest paths on GraphX Pregel — the
   * cluster-scale counterpart of the reference's binary-heap Dijkstra
@@ -49,7 +51,43 @@ object PregelSssp {
     * (/root/reference/src/algorithms/shortest_path.rs:98-141).
     */
   def runWithParents(spark: SparkSession, edges: DataFrame, srcId: Long,
+      maxIterations: Int = Int.MaxValue): DataFrame =
+    withParents(spark, edges, srcId, maxIterations)._3
+
+  /** [[runWithParents]] as an eager local checkpoint. The RDDs the GraphX
+    * run cached are released once the checkpoint holds its rows, so the
+    * caller owns exactly the checkpoint: `Checkpoints.idsOf` reads its ids.
+    */
+  def parentsCheckpoint(spark: SparkSession, edges: DataFrame, srcId: Long,
       maxIterations: Int = Int.MaxValue): DataFrame = {
+    val (source, result, parents) = withParents(spark, edges, srcId, maxIterations)
+    val cut = parents.localCheckpoint()
+    cachedAbove(source, Seq(result.vertices, result.edges)).foreach(_.unpersist(blocking = false))
+    cut
+  }
+
+  /** The persisted RDDs in the lineage of `roots` down to `source`, not
+    * below it: all of them derived from `source`, so made after it.
+    */
+  private def cachedAbove(source: RDD[_], roots: Seq[RDD[_]]): Seq[RDD[_]] = {
+    val seen = scala.collection.mutable.Set(source.id)
+    val todo = scala.collection.mutable.Stack[RDD[_]](roots: _*)
+    val out = Seq.newBuilder[RDD[_]]
+    while (todo.nonEmpty) {
+      val r = todo.pop()
+      if (seen.add(r.id)) {
+        if (r.getStorageLevel != StorageLevel.NONE) out += r
+        r.dependencies.foreach(d => todo.push(d.rdd))
+      }
+    }
+    out.result()
+  }
+
+  /** The edge RDD a [[runWithParents]] run reads, its Pregel result graph
+    * (cached by GraphX) and the parents relation over that graph.
+    */
+  private def withParents(spark: SparkSession, edges: DataFrame, srcId: Long,
+      maxIterations: Int): (RDD[Edge[Double]], Graph[(Double, Long, Int), Double], DataFrame) = {
     import spark.implicits._
     val hasW = edges.columns.contains("weight")
     val edgeRdd = (if (hasW) edges.select("src", "dst", "weight").as[(Long, Long, Double)].rdd
@@ -87,9 +125,9 @@ object PregelSssp {
         else Iterator.empty
       },
       better)
-    result.vertices.filter(_._2._1 != Double.PositiveInfinity)
+    (edgeRdd, result, result.vertices.filter(_._2._1 != Double.PositiveInfinity)
       .map { case (id, (d, p, h)) => (id, d, if (p < 0) None else Some(p), h) }
-      .toDF("id", "dist", "parent", "hops")
+      .toDF("id", "dist", "parent", "hops"))
   }
 
   /** Full weighted shortest path src -> dst: one row (start_id, end_id,
@@ -100,13 +138,14 @@ object PregelSssp {
     */
   def shortestPath(spark: SparkSession, edges: DataFrame, srcId: Long,
       dstId: Long, maxIterations: Int = Int.MaxValue): DataFrame = {
-    // reconstruct's result is built from a driver-side Seq, so the whole
-    // delta — the parents snapshot, GraphX Pregel's cached graph RDDs, and
-    // doublingChain's rounds — is dead on return and released (r6 audit)
-    graft.util.Checkpoints.sweepingDelta(spark) {
-      val parents = runWithParents(spark, edges, srcId, maxIterations).localCheckpoint()
-      reconstruct(parents, srcId, dstId)
-    }
+    // reconstruct's result is built from a driver-side Seq, so the parents
+    // snapshot is dead on return and released by its own ids (the GraphX
+    // run's cached RDDs went when it was made; doublingChain releases its
+    // rounds). Never a diff of the context's persisted set: that would also
+    // free what another session persists meanwhile.
+    val parents = parentsCheckpoint(spark, edges, srcId, maxIterations)
+    try reconstruct(parents, srcId, dstId)
+    finally graft.util.Checkpoints.release(spark, graft.util.Checkpoints.idsOf(parents))
   }
 
   /** Pointer-doubling reconstruction over a (id, dist, parent, hops)

@@ -2,7 +2,6 @@ package graft.cypher
 
 import scala.collection.mutable
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeRow}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -10,7 +9,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import Ast._
-import graft.algorithms.{Adjacency, CsrBlock, Direction, KeyedRows, Traversals}
+import graft.algorithms.{Adjacency, Direction, KeyedIndex, KeyedRows, Traversals}
 
 /** Binding rows held on the driver: the columns the DataFrame plan of the
   * same clauses would have, in its order, and one Catalyst value per column
@@ -68,7 +67,7 @@ private[cypher] final class KeyLookups(spark: SparkSession, params: Map[String, 
   /** The indexes the statement's MATCH clauses read, once [[prepare]] found
     * every one ready; None while the statement runs the DataFrame plan.
     */
-  private var indexes: Option[Map[Index, RDD[CsrBlock]]] = None
+  private var indexes: Option[Map[Index, KeyedIndex]] = None
 
   /** Decides, before `q` is planned, whether lookups answer its MATCH
     * clauses. Every index they read is asked for first, so a missing one
@@ -143,6 +142,34 @@ private[cypher] final class KeyLookups(spark: SparkSession, params: Map[String, 
     }
   }
 
+  /** Each of `nodes` (a pattern and the variable to bind) as a label scan
+    * from an empty scope binds it, filtered by its inline props: its
+    * distinct non-null ids, and its rows (a LocalRelation) and variable, read
+    * through the index of its label by its first inline prop. None, for the
+    * DataFrame plan, when a node has no inline prop or a shape a lookup
+    * does not bind, an index neither exists nor may be built now (then none
+    * is built), or a lookup passes `maxRows`.
+    */
+  def nodes(ns: Seq[(NodePat, String)]): Option[Seq[(Array[Long], DataFrame, VarInfo)]] = {
+    val keyed = ns.map { case (np, _) => Option.when(np.props.nonEmpty)(np).flatMap(nodeIndex(_, None)) }
+    val got = keyed.flatten.distinct.map(n => n -> lookup(table(n.kind, n.label), n.key, n.walk))
+    if (!keyed.forall(_.isDefined) || !got.forall(_._2.isDefined)) None
+    else {
+      val idx = got.map { case (n, get) => n -> get.get() }.toMap
+      val empty = Bindings(Vector.empty, Vector(Array.empty[Any]), Map.empty, Nil)
+      try Some(ns.zip(keyed.flatten).map { case ((np, v), n) =>
+        val (k, e) = np.props.head
+        val p = probe(e, table(VarKind.Node, n.label).schema(k).dataType).get
+        val b = where(bindNode(empty, v, n.label, k, Left(p), idx(n)), v, np.props)
+        val id = b.ord(Scope.colName(v, "id"))
+        val ids = b.rows.iterator.map(_(id)).filter(_ != null).map(Adjacency.keyOf).toArray.distinct
+        (ids, GraftColumnBridge.localRows(spark, StructType(b.fields), b.rows.map(r => new GenericInternalRow(r))),
+          b.vars(v))
+      })
+      catch { case Fallback => None }
+    }
+  }
+
   /** Whether lookups answered the statement's MATCH clauses. */
   def answered: Boolean = !held.isEmpty
 
@@ -193,6 +220,19 @@ private[cypher] final class KeyLookups(spark: SparkSession, params: Map[String, 
       st.fieldNames.contains(k) && Adjacency.keyable(st(k).dataType) && probe(e, st(k).dataType).isDefined
     }
 
+  /** The index a new node of one label is bound through: by column `key`,
+    * or by its first inline prop; None when its table, key or props do not
+    * allow it.
+    */
+  private def nodeIndex(np: NodePat, key: Option[String]): Option[Index] = np.labels.distinct match {
+    case Seq(l) => usable(VarKind.Node, l).flatMap { st =>
+      val k = key.getOrElse(np.props.headOption.map(_._1).getOrElse(""))
+      Option.when(st.fieldNames.contains(k) && Adjacency.keyable(st(k).dataType) &&
+        filterable(st, np.props))(Index(VarKind.Node, l, k))
+    }
+    case _ => None
+  }
+
   /** The indexes `pats` read from a scope binding `bound0`, and the
     * variables bound after them; None when a pattern has a shape the
     * lookups do not answer.
@@ -209,14 +249,10 @@ private[cypher] final class KeyLookups(spark: SparkSession, params: Map[String, 
     def rebound(np: NodePat): Option[Boolean] = np.variable.filter(bound.contains).map { v =>
       bound(v) == VarKind.Node && np.props.isEmpty
     }
-    def newNode(np: NodePat, key: Option[String]): Boolean = np.labels.distinct match {
-      case Seq(l) => usable(VarKind.Node, l).exists { st =>
-        val k = key.getOrElse(np.props.headOption.map(_._1).getOrElse(""))
-        val ok = st.fieldNames.contains(k) && Adjacency.keyable(st(k).dataType) && filterable(st, np.props)
-        if (ok) { out += Index(VarKind.Node, l, k); np.variable.foreach(bound(_) = VarKind.Node) }
-        ok
-      }
-      case _ => false
+    def newNode(np: NodePat, key: Option[String]): Boolean = nodeIndex(np, key).exists { ix =>
+      out += ix
+      np.variable.foreach(bound(_) = VarKind.Node)
+      true
     }
     def target(np: NodePat, shortcut: Boolean): Boolean = rebound(np).getOrElse {
       (shortcut && Planner.anonFree(np)) || newNode(np, Some("id"))
@@ -255,7 +291,7 @@ private[cypher] final class KeyLookups(spark: SparkSession, params: Map[String, 
     }
   }
 
-  private def walkOf(t: String, dir: Direction, idx: Map[Index, RDD[CsrBlock]]): Adjacency =
+  private def walkOf(t: String, dir: Direction, idx: Map[Index, KeyedIndex]): Adjacency =
     walkIndexes(t, dir).map(idx) match {
       case Seq(one) => Adjacency(one)
       case Seq(bySrc, byDst) => Adjacency.both(bySrc, byDst)
@@ -263,7 +299,7 @@ private[cypher] final class KeyLookups(spark: SparkSession, params: Map[String, 
 
   // ---------------- binding ----------------
 
-  private def fetch(index: RDD[CsrBlock], keys: Iterable[Any]): KeyedRows =
+  private def fetch(index: KeyedIndex, keys: Iterable[Any]): KeyedRows =
     Adjacency(index).lookup(keys.iterator.filter(_ != null).map(Adjacency.keyOf).toArray, maxRows)
       .getOrElse(throw Fallback)
 
@@ -312,7 +348,7 @@ private[cypher] final class KeyLookups(spark: SparkSession, params: Map[String, 
     * `b` (an anchor), or the column of `b` whose value each row looks up.
     */
   private def bindNode(b: Bindings, v: String, l: String, key: String, on: Either[Any, String],
-      idx: RDD[CsrBlock]): Bindings = {
+      idx: KeyedIndex): Bindings = {
     val st = table(VarKind.Node, l).schema
     val k = st.fieldIndex(key)
     val label = UTF8String.fromString(l)
@@ -341,10 +377,10 @@ private[cypher] final class KeyLookups(spark: SparkSession, params: Map[String, 
   private def relabel(b: Bindings, v: String, np: NodePat): Bindings =
     if (np.labels.distinct.forall(l => b.vars(v).label.contains(l))) b else b.copy(rows = Vector.empty)
 
-  private def patterns(b0: Bindings, pats: Seq[PathPat], idx: Map[Index, RDD[CsrBlock]]): Bindings =
+  private def patterns(b0: Bindings, pats: Seq[PathPat], idx: Map[Index, KeyedIndex]): Bindings =
     pats.foldLeft(b0)((b, pat) => path(b, pat, idx))
 
-  private def path(b0: Bindings, pat: PathPat, idx: Map[Index, RDD[CsrBlock]]): Bindings = {
+  private def path(b0: Bindings, pat: PathPat, idx: Map[Index, KeyedIndex]): Bindings = {
     val np = pat.start
     val sv = np.variable.getOrElse(fresh("n"))
     var b = if (b0.vars.contains(sv)) relabel(b0, sv, np) else {
@@ -417,7 +453,7 @@ private[cypher] final class KeyLookups(spark: SparkSession, params: Map[String, 
     * from.
     */
   private def edges(b: Bindings, ev: String, t: String, dir: Dir, prev: String,
-      idx: Map[Index, RDD[CsrBlock]]): Bindings = {
+      idx: Map[Index, KeyedIndex]): Bindings = {
     val st = table(VarKind.Edge, t).schema
     val labelled = labelReads(st, Adjacency.edgeColumns(st.fieldNames.toSeq))
     def reads(reversed: Boolean): Seq[Read] = {
@@ -449,7 +485,7 @@ private[cypher] final class KeyLookups(spark: SparkSession, params: Map[String, 
     * plan's walked pairs ([[Planner.walkColumns]]), joined on the start.
     */
   private def walk(b: Bindings, ev: String, rel: RelPat, lo: Int, hi: Int, prev: String,
-      wantPath: Boolean, idx: Map[Index, RDD[CsrBlock]]): Bindings = {
+      wantPath: Boolean, idx: Map[Index, KeyedIndex]): Bindings = {
     val t = rel.types.head
     val cols = Planner.walkColumns(ev, rel.variable, wantPath)
     val carry = cols.exists(_._2 == "epath")
@@ -495,7 +531,7 @@ private[cypher] final class KeyLookups(spark: SparkSession, params: Map[String, 
     * index otherwise.
     */
   private def bindTarget(b: Bindings, end: String, node: NodePat, nv: String,
-      idx: Map[Index, RDD[CsrBlock]]): Bindings =
+      idx: Map[Index, KeyedIndex]): Bindings =
     if (b.vars.contains(nv)) {
       val (e, i) = (b.ord(end), b.ord(Scope.colName(nv, "id")))
       relabel(b.copy(rows = b.rows.filter(r => r(e) != null && same(r(i), Adjacency.keyOf(r(e))))), nv, node)
@@ -509,7 +545,7 @@ private[cypher] final class KeyLookups(spark: SparkSession, params: Map[String, 
     * on their ids; the columns come in the order of the DataFrame plan's
     * using-join (the ids, `o`'s other columns, the new columns).
     */
-  private def optional(o: Bindings, pats: Seq[PathPat], idx: Map[Index, RDD[CsrBlock]]): Bindings = {
+  private def optional(o: Bindings, pats: Seq[PathPat], idx: Map[Index, KeyedIndex]): Bindings = {
     val shared = Planner.patternVars(pats).filter(o.vars.contains)
     val seedCols = shared.flatMap(o.cols)
     // the seed rows are made distinct by value equality, which map and

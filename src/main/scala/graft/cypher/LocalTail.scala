@@ -8,13 +8,14 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.planning.PhysicalAggregation
+import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
 import org.apache.spark.sql.catalyst.plans.logical._
 
-/** The rest of a statement whose MATCH clauses key lookups answered,
-  * evaluated on the driver where the binding rows already are (the
+/** The rest of a statement whose MATCH clauses (or shortestPath
+  * endpoints) key lookups answered, evaluated on the driver where the binding rows already are (the
   * reference's `apply_return` over its materialized rows,
   * executor/mod.rs:295-360). Spark folds only Project, Filter and Limit over
-  * a LocalRelation; an aggregate, DISTINCT, ORDER BY or UNION over one still
+  * a LocalRelation; an aggregate, DISTINCT, ORDER BY, join or UNION over one still
   * plans exchanges and runs jobs to shuffle a few dozen driver-held rows.
   *
   * [[fold]] evaluates the statement's optimized plan bottom-up with
@@ -22,7 +23,8 @@ import org.apache.spark.sql.catalyst.plans.logical._
   * projections, predicates and orderings, and each aggregate function's own
   * buffer API), so null handling, ANSI errors and result types are Spark's,
   * and hands back the rows as a LocalRelation: collecting it runs no job. It
-  * evaluates Project, Filter, Sort, Limit, Offset, Union, Aggregate (a
+  * evaluates Project, Filter, Sort, Limit, Offset, an inner or cross Join
+  * (nested loops), Union, Aggregate (a
   * DISTINCT aggregate de-duplicates its inputs per group, a FILTER applies
   * per row), Expand (the optimizer's rewrite of several DISTINCT
   * aggregates) and Generate (UNWIND); it declines, keeping the DataFrame
@@ -92,6 +94,13 @@ private[cypher] object LocalTail {
       case GlobalLimit(n, child) => apply(child).iterator.take(int(n))
       case LocalLimit(n, child) => apply(child).iterator.take(int(n))
       case Offset(n, child) => apply(child).iterator.drop(int(n))
+      case Join(left, right, Inner | Cross, cond, _) =>
+        val in = left.output ++ right.output
+        val keep = cond.map(c => InterpretedPredicate(bind(Seq(c), in).head))
+        val copy = project(in, in)
+        val rs = apply(right)
+        apply(left).iterator.flatMap(l => rs.iterator.map(new JoinedRow(l, _)))
+          .filter(r => keep.forall(_.eval(r))).map(copy)
       case u: Union => u.children.iterator.flatMap(apply)
       case Expand(projections, _, child) =>
         val each = projections.map(project(_, child.output))

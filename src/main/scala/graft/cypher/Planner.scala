@@ -1,12 +1,11 @@
 package graft.cypher
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import Ast._
-import graft.algorithms.{Adjacency, CsrBlock, Direction, PregelSssp, Traversals}
+import graft.algorithms.{Adjacency, Direction, KeyedIndex, PregelSssp, Traversals}
 import graft.store.GraphStore
 
 final case class PlanResult(df: Option[DataFrame], store: GraphStore)
@@ -66,12 +65,13 @@ final class Planner(spark: SparkSession, store0: GraphStore,
 
   def plan(q: Query): PlanResult = {
     val named = anon
-    keyLookups = if (!Planner.readOnly(q)) None else Some(new KeyLookups(spark, params,
+    nodeLookups = Option.when(Planner.readOnly(q))(new KeyLookups(spark, params,
       (kind, l) => {
         val st = readStore(kind, Seq(l))
         if (kind == VarKind.Node) st.vertexTables.get(l) else st.edgeTables.get(l)
       },
-      fresh, lookup, lookupRows)).filter(_.prepare(q))
+      fresh, lookup, lookupRows))
+    keyLookups = nodeLookups.filter(_.prepare(q))
     val res =
       try planQuery(q)
       catch {
@@ -83,7 +83,7 @@ final class Planner(spark: SparkSession, store0: GraphStore,
           planQuery(q)
       }
     // the rows lookups bound are on the driver: so is the rest of the read
-    if (keyLookups.exists(_.answered)) res.copy(df = res.df.map(LocalTail.fold(_, lookupRows)))
+    if (keyLookups.exists(_.answered) || lookedUpEndpoints) res.copy(df = res.df.map(LocalTail.fold(_, lookupRows)))
     else res
   }
 
@@ -94,6 +94,14 @@ final class Planner(spark: SparkSession, store0: GraphStore,
     * them or none: a write's own reads keep the DataFrame plan.
     */
   private var keyLookups: Option[KeyLookups] = None
+
+  /** A read-only statement's lookups, whether or not they answer its MATCH
+    * clauses: a shortestPath binds its key-anchored endpoints through them.
+    */
+  private var nodeLookups: Option[KeyLookups] = None
+
+  /** Whether a shortestPath's endpoints were bound by lookups. */
+  private var lookedUpEndpoints = false
 
   /** UNION [ALL] chain (openCypher combinator, beyond the reference's
     * grammar): every part must be read-only and RETURN the same column
@@ -964,12 +972,13 @@ final class Planner(spark: SparkSession, store0: GraphStore,
     * constrain to an already-bound variable (same-variable re-occurrence =
     * equi-filter).
     */
-  private def bindTargetVar(sc0: Scope, endCol: String, node: NodePat, nv: String): Scope = {
+  private def bindTargetVar(sc0: Scope, endCol: String, node: NodePat, nv: String,
+      scan: Option[(DataFrame, VarInfo)] = None): Scope = {
     if (sc0.vars.contains(nv)) {
       val filtered = sc0.copy(df = sc0.df.where(col(endCol) === col(Scope.colName(nv, "id"))))
       applyNodeConstraints(filtered, nv, node)
     } else {
-      val (ndf, ninfo) = nodeScan(node, nv)
+      val (ndf, ninfo) = scan.getOrElse(nodeScan(node, nv))
       val joined = Scope(
         sc0.df.join(ndf, col(endCol) === col(Scope.colName(nv, "id"))),
         sc0.vars + (nv -> ninfo), sc0.order :+ nv)
@@ -1803,9 +1812,19 @@ final class Planner(spark: SparkSession, store0: GraphStore,
       }
       df.select(col(idCol).as("id"))
     }
-    // both endpoints resolve in one job
+    val aV = pat.start.variable.getOrElse(fresh("n"))
+    val bV = endNp.variable.getOrElse(fresh("n"))
+    // endpoints bound by no earlier clause and anchored on a key are read,
+    // rows and all, from the session's lookup indexes when they exist or
+    // may be built now; otherwise both resolve in one job
+    def boundBefore(np: NodePat) = np.variable.exists(v => scope.exists(_.vars.contains(v)))
+    val looked =
+      if (boundBefore(pat.start) || boundBefore(endNp)) None
+      else nodeLookups.flatMap(_.nodes(Seq(pat.start -> aV, endNp -> bV)))
+    lookedUpEndpoints ||= looked.isDefined
     val Seq(srcId, dstId) =
-      Seq(pat.start, endNp).zip(Traversals.distinctIds(Seq(endpoint(pat.start), endpoint(endNp)), 2))
+      Seq(pat.start, endNp).zip(looked.fold(
+        Traversals.distinctIds(Seq(endpoint(pat.start), endpoint(endNp)), 2))(_.map(_._1)))
         .map { case (np, ids) =>
           require(ids.length == 1,
             s"shortestPath endpoint must resolve to exactly one vertex, got ${ids.length}: $np")
@@ -1856,10 +1875,9 @@ final class Planner(spark: SparkSession, store0: GraphStore,
       sc = sc.copy(vars = sc.vars + (pv -> VarInfo(VarKind.Value, None, Nil, path = true)),
         order = sc.order :+ pv)
     }
-    val aV = pat.start.variable.getOrElse(fresh("n"))
-    sc = bindTargetVar(sc, "__sp_s", pat.start, aV)
-    val bV = endNp.variable.getOrElse(fresh("n"))
-    sc = bindTargetVar(sc, "__sp_d", endNp, bV)
+    def scan(end: Int) = looked.map(ns => (ns(end)._2, ns(end)._3))
+    sc = bindTargetVar(sc, "__sp_s", pat.start, aV, scan(0))
+    sc = bindTargetVar(sc, "__sp_d", endNp, bV, scan(1))
     sc.copy(df = sc.df.drop(
       Seq("__sp_s", "__sp_d") ++
         (if (spc.pathVar.isEmpty) Seq("__sp_path") else Nil): _*))
@@ -2340,7 +2358,7 @@ object Planner {
     * table when one exists or may be built now (calling it builds), or
     * None for the DataFrame plan.
     */
-  type LookupHook = (DataFrame, String, Boolean) => Option[() => RDD[CsrBlock]]
+  type LookupHook = (DataFrame, String, Boolean) => Option[() => KeyedIndex]
 
   val NoLookups: LookupHook = (_, _, _) => None
 
@@ -2571,18 +2589,22 @@ final class CypherSession private[graft] (val spark: SparkSession, initial: Grap
     * compacted generation), its label, and its keyed indexes by key column.
     */
   private final case class Held(kind: VarKind, label: String,
-      built: Map[String, org.apache.spark.rdd.RDD[CsrBlock]] = Map.empty)
+      built: Map[String, KeyedIndex] = Map.empty)
 
   /** The held tables, keyed by identity, so a table a write has replaced
     * misses. An edge table is indexed by `src` and by `dst` (the adjacency
     * both ways, edge properties included), a vertex table by `id` and by
     * any column a key lookup filters on. The indexes of one table have the
-    * same partition count (the shuffle partitions at the first build), join
-    * ownedGen and go at the next compaction; one built in an open
-    * transaction is released by its rollback. An index costs its rows as
-    * UnsafeRows (8 bytes per column, plus strings, plus 8 per row for the
-    * null bits) and 4 bytes more per row and 12 per distinct key, held
-    * MEMORY_AND_DISK.
+    * same partition count (the shuffle partitions at the first build) and
+    * go at the next compaction; one built in an open transaction goes at
+    * its rollback. An index costs its rows as UnsafeRows (8 bytes per
+    * column, plus strings, plus 8 per row for the null bits) and 4 bytes
+    * more per row and 12 per distinct key. When that is at most
+    * `spark.sql.autoBroadcastJoinThreshold` bytes the index is held on the
+    * driver heap, reachable only from here, so clearing or restoring
+    * `held` frees it; a larger one is an RDD held MEMORY_AND_DISK that
+    * joins ownedGen (and txnCreated in a transaction) and is unpersisted
+    * with them.
     */
   private val held = new java.util.IdentityHashMap[DataFrame, Held]()
 
@@ -2620,7 +2642,7 @@ final class CypherSession private[graft] (val spark: SparkSession, initial: Grap
     * none.
     */
   private def indexOf(table: DataFrame, key: String, build: Boolean, walk: Boolean)
-      : Option[() => org.apache.spark.rdd.RDD[CsrBlock]] = synchronized {
+      : Option[() => KeyedIndex] = synchronized {
     val h = Option(held.get(table))
     h.flatMap(_.built.get(key)).map(index => () => index).orElse {
       val named = h.map(x => (x.kind, x.label))
@@ -2639,19 +2661,29 @@ final class CypherSession private[graft] (val spark: SparkSession, initial: Grap
     * was asked for. The indexes of one table share a partition count.
     */
   private def buildIndex(table: DataFrame, kind: VarKind, key: String)
-      : org.apache.spark.rdd.RDD[CsrBlock] = synchronized {
+      : KeyedIndex = synchronized {
     val h = Option(held.get(table))
     h.flatMap(_.built.get(key)).getOrElse {
-      val partitions = h.flatMap(_.built.values.headOption).map(_.partitions.length)
+      val partitions = h.flatMap(_.built.values.headOption).map(_.partitions)
         .getOrElse(spark.conf.get("spark.sql.shuffle.partitions").toInt)
       val index =
         if (kind == VarKind.Edge) Adjacency.index(table, reverse = key == "dst", partitions)
         else Adjacency.keyed(table, key, partitions, s"graft index by $key")
-      ownedGen = ownedGen + index.id
-      if (txnSnapshot.nonEmpty) txnCreated = txnCreated + index.id
+      // a driver-held index goes with its Held entry; only a persisted one
+      // has blocks to release
+      index.rdd.foreach { rdd =>
+        ownedGen = ownedGen + rdd.id
+        if (txnSnapshot.nonEmpty) txnCreated = txnCreated + rdd.id
+      }
       h.foreach(x => held.put(table, x.copy(built = x.built.updated(key, index))))
       index
     }
+  }
+
+  /** The keyed indexes the session holds now, either form. */
+  private[graft] def heldIndexes: Seq[KeyedIndex] = synchronized {
+    import scala.jdk.CollectionConverters._
+    held.values.asScala.toSeq.flatMap(_.built.values)
   }
 
   private def adjacencyOf(build: Boolean): Planner.AdjacencyHook = (table, dir) => {

@@ -201,7 +201,9 @@ object Clustering {
     * the full k-means job — an EXPLAIN or dry-run registration is not
     * free. The assignment checkpoint kmeansQuantized pins stays until the
     * harness sweep (Verify/Bench sweep getPersistentRDDs per query); a
-    * resident caller should wrap consumption in Checkpoints.sweepingDelta.
+    * resident caller releases it once the result is consumed:
+    * Checkpoints.release over the ids Checkpoints.idsOf reads off the
+    * result, less those of its inputs.
     */
   def semDedupDropped(df: DataFrame, idCol: String, vecCol: String,
       k: Int, iters: Int, tau: Double, q: Int = 6,

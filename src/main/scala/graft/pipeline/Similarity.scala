@@ -358,8 +358,9 @@ object Similarity {
     * bucketing job (an EXPLAIN or dry-run registration is not free), and
     * the returned plan reads a localCheckpoint that stays pinned until the
     * harness sweep (Verify/Bench sweep getPersistentRDDs per query; a
-    * resident caller should wrap consumption in Checkpoints.sweepingDelta
-    * once the result is collected/written). A guard FAILURE releases the
+    * resident caller releases it once the result is collected/written:
+    * Checkpoints.release over the ids Checkpoints.idsOf reads off the
+    * result, less those of its inputs). A guard FAILURE releases the
     * checkpoint before throwing — a rejected call leaks nothing.
     */
   def knnTopK(corpus: DataFrame, idCol: String, vecCol: String,

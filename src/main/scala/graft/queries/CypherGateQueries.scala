@@ -150,13 +150,12 @@ object CypherGateQueries {
         .unionByName(g.edges("CONTAINS")
           .select(col("src"), col("dst"), col("l_quantity").cast("double").as("weight")))
       val start = graft.model.Graphid.pack(GraphStore.Lab.Customer, 1L)
-      val far = graft.util.Checkpoints.sweepingDelta(s) {
-        val parents = graft.algorithms.PregelSssp
-          .runWithParents(s, weighted, start).localCheckpoint()
-        parents.where(col("id") =!= start)
+      val parents = graft.algorithms.PregelSssp.parentsCheckpoint(s, weighted, start)
+      val far =
+        try parents.where(col("id") =!= start)
           .orderBy(col("dist").desc, col("id")).limit(1)
           .select("id").head.getLong(0)
-      }
+        finally graft.util.Checkpoints.release(s, graft.util.Checkpoints.idsOf(parents))
       val farKey = graft.model.Graphid.unpack(far)._2
       new CypherSession(s, g, Map("pk" -> farKey)).run(
         """MATCH p = shortestPath((c:Customer {c_custkey: 1})

@@ -691,16 +691,18 @@ object GraphQueries {
           .select(col("src"), col("dst"), col("l_quantity").cast("double").as("weight")))
       val start = graft.model.Graphid.pack(GraphStore.Lab.Customer, 1L)
       // reconstruct returns a driver-Seq-backed DF, so the parents
-      // snapshot + GraphX cached RDDs + doublingChain rounds are all dead
-      // on return — released here instead of waiting for a Bench-style
-      // sweep (r6 audit)
-      graft.util.Checkpoints.sweepingDelta(s) {
-        val parents = PregelSssp.runWithParents(s, weighted, start).localCheckpoint()
-        val far = parents.where(col("id") =!= start)
-          .orderBy(col("dist").desc, col("id")).limit(1)
-          .select("id").head.getLong(0)
-        PregelSssp.reconstruct(parents, start, far)
-      }.select(col("start_id"), col("end_id"), col("dist"),
+      // snapshot is dead on return: released here by its own ids instead of
+      // waiting for a Bench-style sweep (the GraphX run's cached RDDs went
+      // when it was made, doublingChain releases its own rounds)
+      val parents = PregelSssp.parentsCheckpoint(s, weighted, start)
+      val path =
+        try {
+          val far = parents.where(col("id") =!= start)
+            .orderBy(col("dist").desc, col("id")).limit(1)
+            .select("id").head.getLong(0)
+          PregelSssp.reconstruct(parents, start, far)
+        } finally graft.util.Checkpoints.release(s, graft.util.Checkpoints.idsOf(parents))
+      path.select(col("start_id"), col("end_id"), col("dist"),
           concat_ws("-", transform(col("path"), _.cast("string"))).as("path_str"))
     }),
 

@@ -2,31 +2,20 @@ package graft.util
 
 import org.apache.spark.sql.SparkSession
 
-/** Capture-and-release for persistent RDDs created inside a scope.
+/** Release of the persistent RDDs a computation created.
   *
   * Loop operators truncate lineage with a localCheckpoint per level; when
   * the final result is a DRIVER value (a collected path, a one-row count),
   * every block those checkpoints pinned is dead the moment the value is on
   * the driver — but Spark's ContextCleaner frees blocks only via weak
   * references, so on a large heap they can survive for dozens of queries
-  * (the r5 x21 finding). Wrapping the computation releases exactly the
-  * delta it created, so hosts that run queries without a Bench-style
-  * getPersistentRDDs sweep do not leak blocks per invocation.
-  *
-  * ONLY sound when the scope's result carries no distributed lineage (a
-  * local Seq, a DataFrame built from one) — a DataFrame backed by swept
-  * blocks would recompute through truncated lineage and fail loudly.
-  * Single-driver assumption (SURVEY §8.1): a concurrent query's RDDs
-  * persisted inside the window would be swept too.
+  * (the r5 x21 finding). Such a computation releases exactly the RDDs it
+  * made, by the ids read off its own checkpoints ([[idsOf]]), so hosts
+  * that run queries without a Bench-style getPersistentRDDs sweep do not
+  * leak blocks per invocation, and never frees what a concurrent session
+  * persists meanwhile.
   */
 object Checkpoints {
-
-  def sweepingDelta[T](spark: SparkSession)(body: => T): T = {
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    try body
-    finally release(spark, sc.getPersistentRDDs.keySet -- before)
-  }
 
   /** Snapshot-diff capture of the persistent RDDs one localCheckpoint
     * registers: the checkpointed frame plus a release handle for exactly

@@ -2066,9 +2066,7 @@ class CypherSpec extends AnyFunSuite with SparkSuite {
     for (conf <- Seq(Map("spark.sql.codegen.wholeStage" -> "false"),
         Map("spark.sql.codegen.wholeStage" -> "false",
           "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))) {
-      conf.foreach { case (k, v) => spark.conf.set(k, v) }
-      try assert(run() == default, conf)
-      finally conf.keys.foreach(spark.conf.unset)
+      withConf(conf.toSeq: _*)(assert(run() == default, conf))
     }
   }
 
@@ -2117,16 +2115,19 @@ class CypherSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("a one-key adjacency lookup runs one task at 4 and at 32 partitions") {
-    val knows = parquetRing().edgeTables("KNOWS")
-    for (partitions <- Seq(4, 32)) {
-      val index = graft.algorithms.Adjacency.index(knows, reverse = false, partitions)
-      val adj = graft.algorithms.Adjacency(index)
-      val (nb, jobs, tasks) = countsDuring(adj.lookup(Array(Graphid.pack(100, 1))).get)
-      val found = Seq.newBuilder[Long]
-      nb.foreach(Graphid.pack(100, 1))((v, _) => found += v)
-      assert(found.result().sorted == Seq(Graphid.pack(100, 2), Graphid.pack(100, 4)))
-      assert((jobs, tasks) == (1, 1), s"$partitions partitions")
-      index.unpersist()
+    // pins the persisted index form, whose every lookup is a Spark job
+    withConf(persistedIndexes) {
+      val knows = parquetRing().edgeTables("KNOWS")
+      for (partitions <- Seq(4, 32)) {
+        val index = graft.algorithms.Adjacency.index(knows, reverse = false, partitions)
+        val adj = graft.algorithms.Adjacency(index)
+        val (nb, jobs, tasks) = countsDuring(adj.lookup(Array(Graphid.pack(100, 1))).get)
+        val found = Seq.newBuilder[Long]
+        nb.foreach(Graphid.pack(100, 1))((v, _) => found += v)
+        assert(found.result().sorted == Seq(Graphid.pack(100, 2), Graphid.pack(100, 4)))
+        assert((jobs, tasks) == (1, 1), s"$partitions partitions")
+        index.rdd.foreach(_.unpersist())
+      }
     }
   }
 
@@ -2140,54 +2141,63 @@ class CypherSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("a write to the walked label sends the next traversal to the DataFrame loop") {
-    val s = residentRing()
-    val sc = spark.sparkContext
-    rows(s.run("MATCH (a:Person {age: 5}), (b:Person {age: 30}) CREATE (a)-[:KNOWS {since: 1}]->(b)"))
-    // held so that no listed RDD leaves the context's weak list at a GC
-    val pinned = sc.getPersistentRDDs.values.toList
-    val (before, adjBefore) = (sc.getPersistentRDDs.keySet, adjacencyIds)
-    val df = s.run(ringVle(5))
-    assert(rows(df) == rows(new CypherSession(spark, s.store).run(ringVle(5))))
-    assert(rows(df) == Seq(Seq(14L)))
-    // the loop's level checkpoints, and no new index
-    assert((sc.getPersistentRDDs.keySet -- before).nonEmpty)
-    assert(adjacencyIds == adjBefore)
-    assert(pinned.nonEmpty)
+    // pins the persisted index form, whose every lookup is a Spark job
+    withConf(persistedIndexes) {
+      val s = residentRing()
+      val sc = spark.sparkContext
+      rows(s.run("MATCH (a:Person {age: 5}), (b:Person {age: 30}) CREATE (a)-[:KNOWS {since: 1}]->(b)"))
+      // held so that no listed RDD leaves the context's weak list at a GC
+      val pinned = sc.getPersistentRDDs.values.toList
+      val (before, adjBefore) = (sc.getPersistentRDDs.keySet, adjacencyIds)
+      val df = s.run(ringVle(5))
+      assert(rows(df) == rows(new CypherSession(spark, s.store).run(ringVle(5))))
+      assert(rows(df) == Seq(Seq(14L)))
+      // the loop's level checkpoints, and no new index
+      assert((sc.getPersistentRDDs.keySet -- before).nonEmpty)
+      assert(adjacencyIds == adjBefore)
+      assert(pinned.nonEmpty)
+    }
   }
 
   test("an adjacency built in a transaction goes with its rollback") {
-    val s = residentRing()
-    val back = "MATCH (a:Person {age: 7})<-[:KNOWS*1..2]-(b:Person) RETURN count(DISTINCT b.age) AS n"
-    // the context lists persisted RDDs weakly: holding them keeps an earlier
-    // test's unreachable index from leaving the list at a GC
-    val pinned = spark.sparkContext.getPersistentRDDs.values.toList
-    val before = adjacencyIds
-    s.begin()
-    assert(rows(s.run(back)) == Seq(Seq(5L)))
-    val built = adjacencyIds -- before
-    assert(built.size == 1)
-    s.rollback()
-    assert(adjacencyIds == before)
-    assert(pinned.nonEmpty)
-    // the next backward walk builds it again
-    assert(rows(s.run(back)) == Seq(Seq(5L)))
-    assert((adjacencyIds -- before).size == 1)
+    // pins the persisted index form, whose every lookup is a Spark job
+    withConf(persistedIndexes) {
+      val s = residentRing()
+      val back = "MATCH (a:Person {age: 7})<-[:KNOWS*1..2]-(b:Person) RETURN count(DISTINCT b.age) AS n"
+      // the context lists persisted RDDs weakly: holding them keeps an earlier
+      // test's unreachable index from leaving the list at a GC
+      val pinned = spark.sparkContext.getPersistentRDDs.values.toList
+      val before = adjacencyIds
+      s.begin()
+      assert(rows(s.run(back)) == Seq(Seq(5L)))
+      val built = adjacencyIds -- before
+      assert(built.size == 1)
+      s.rollback()
+      assert(adjacencyIds == before)
+      assert(pinned.nonEmpty)
+      // the next backward walk builds it again
+      assert(rows(s.run(back)) == Seq(Seq(5L)))
+      assert((adjacencyIds -- before).size == 1)
+    }
   }
 
   test("compaction releases the session's adjacency") {
-    val before = adjacencyIds
-    val s = residentRing()
-    val mine = adjacencyIds -- before
-    assert(mine.nonEmpty)
-    var sets = 0
-    while (mine.exists(spark.sparkContext.getPersistentRDDs.contains)) {
-      sets += 1
-      assert(sets <= 20, "no compaction released the adjacency")
-      s.run(s"MATCH (n:Person) WHERE n.age = 3 SET n.name = 'q$sets'")
+    // pins the persisted index form, whose every lookup is a Spark job
+    withConf(persistedIndexes) {
+      val before = adjacencyIds
+      val s = residentRing()
+      val mine = adjacencyIds -- before
+      assert(mine.nonEmpty)
+      var sets = 0
+      while (mine.exists(spark.sparkContext.getPersistentRDDs.contains)) {
+        sets += 1
+        assert(sets <= 20, "no compaction released the adjacency")
+        s.run(s"MATCH (n:Person) WHERE n.age = 3 SET n.name = 'q$sets'")
+      }
+      // the compacted generation is resident: the next walk indexes it
+      assert(rows(s.run(ringVle(0))) == Seq(Seq(8L)))
+      assert((adjacencyIds -- before -- mine).nonEmpty)
     }
-    // the compacted generation is resident: the next walk indexes it
-    assert(rows(s.run(ringVle(0))) == Seq(Seq(8L)))
-    assert((adjacencyIds -- before -- mine).nonEmpty)
   }
 
   def optionalRead(age: Long): String =
@@ -2214,26 +2224,29 @@ class CypherSpec extends AnyFunSuite with SparkSuite {
   }.isEmpty
 
   test("a resident point read is one job of one task, a one-hop read three jobs and no broadcast") {
-    val s = lookupRing()
-    val (point, pointJobs, pointTasks) = countsDuring(rows(s.run(pointRead(7))))
-    assert(point == Seq(Seq("p7")))
-    assert((pointJobs, pointTasks) == (1, 1))
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val targets = Seq(8, 10).map(i => new org.apache.spark.HashPartitioner(parts)
-      .getPartition(Graphid.pack(100, i + 1))).distinct.size
-    val (hop, hopJobs, hopTasks) = countsDuring {
-      val df = s.run(hopRead(7))
-      val r = rows(df)
-      assert(Plans.broadcasts(df) == 0)
-      r
+    // pins the persisted index form, whose every lookup is a Spark job
+    withConf(persistedIndexes) {
+      val s = lookupRing()
+      val (point, pointJobs, pointTasks) = countsDuring(rows(s.run(pointRead(7))))
+      assert(point == Seq(Seq("p7")))
+      assert((pointJobs, pointTasks) == (1, 1))
+      val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+      val targets = Seq(8, 10).map(i => new org.apache.spark.HashPartitioner(parts)
+        .getPartition(Graphid.pack(100, i + 1))).distinct.size
+      val (hop, hopJobs, hopTasks) = countsDuring {
+        val df = s.run(hopRead(7))
+        val r = rows(df)
+        assert(Plans.broadcasts(df) == 0)
+        r
+      }
+      assert(hop.map(_.head.toString).sorted == Seq("p10", "p8"))
+      assert(hopJobs <= 3, s"one-hop read ran $hopJobs jobs")
+      assert(hopTasks <= 2 + targets, s"one-hop read ran $hopTasks tasks")
+      // the DataFrame plan ran 8 jobs
+      val (opt, optJobs) = jobsDuring(rows(s.run(optionalRead(7))))
+      assert(opt == Seq(Seq(7L, 2L)))
+      assert(optJobs <= 5, s"OPTIONAL read ran $optJobs jobs")
     }
-    assert(hop.map(_.head.toString).sorted == Seq("p10", "p8"))
-    assert(hopJobs <= 3, s"one-hop read ran $hopJobs jobs")
-    assert(hopTasks <= 2 + targets, s"one-hop read ran $hopTasks tasks")
-    // the DataFrame plan ran 8 jobs
-    val (opt, optJobs) = jobsDuring(rows(s.run(optionalRead(7))))
-    assert(opt == Seq(Seq(7L, 2L)))
-    assert(optJobs <= 5, s"OPTIONAL read ran $optJobs jobs")
   }
 
   def hop2Read(age: Long): String =
@@ -2279,13 +2292,11 @@ class CypherSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("point and one-hop lookups run as many tasks at 32 shuffle partitions as at 4") {
-    def tasks(parts: Int): (Int, Int) = {
-      spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-      try {
+    def tasks(parts: Int): (Int, Int) =
+      withConf("spark.sql.shuffle.partitions" -> parts.toString, persistedIndexes) {
         val s = lookupRing()
         (countsDuring(rows(s.run(pointRead(3))))._3, countsDuring(rows(s.run(hopRead(3))))._3)
-      } finally spark.conf.unset("spark.sql.shuffle.partitions")
-    }
+      }
     assert(tasks(4) == tasks(32))
   }
 
@@ -2336,49 +2347,114 @@ class CypherSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("a write statement between two reads that want an index defers it") {
-    val s = new CypherSession(spark, parquetRing())
-    // wants Person by age (the opening table)
-    rows(s.run(pointRead(1)))
-    // holds Person resident and replaces KNOWS only
-    rows(s.run("MATCH (a:Person {age: 1}), (b:Person {age: 30}) CREATE (a)-[:KNOWS {since: 2}]->(b)"))
-    val before = indexIds
-    val first = s.run(pointRead(2))
-    assert(!lookedUp(first) && rows(first) == Seq(Seq("p2")))
-    assert((indexIds -- before).isEmpty)
-    // the second read in a row builds it
-    val second = s.run(pointRead(3))
-    assert(lookedUp(second) && rows(second) == Seq(Seq("p3")))
-    assert((indexIds -- before).size == 1)
+    // pins the persisted index form, whose every lookup is a Spark job
+    withConf(persistedIndexes) {
+      val s = new CypherSession(spark, parquetRing())
+      // wants Person by age (the opening table)
+      rows(s.run(pointRead(1)))
+      // holds Person resident and replaces KNOWS only
+      rows(s.run("MATCH (a:Person {age: 1}), (b:Person {age: 30}) CREATE (a)-[:KNOWS {since: 2}]->(b)"))
+      val before = indexIds
+      val first = s.run(pointRead(2))
+      assert(!lookedUp(first) && rows(first) == Seq(Seq("p2")))
+      assert((indexIds -- before).isEmpty)
+      // the second read in a row builds it
+      val second = s.run(pointRead(3))
+      assert(lookedUp(second) && rows(second) == Seq(Seq("p3")))
+      assert((indexIds -- before).size == 1)
+    }
   }
 
   test("an index built in a transaction goes with its rollback, explain builds none") {
-    val s = new CypherSession(spark, parquetRing())
-    rows(s.run(pointRead(1)))
-    val before = indexIds
-    // explain answers over the built indexes only
-    assert(s.explain(pointRead(2)).nonEmpty)
-    assert((indexIds -- before).isEmpty)
-    s.begin()
-    val df = s.run(pointRead(2))
-    assert(lookedUp(df) && rows(df) == Seq(Seq("p2")))
-    val built = indexIds -- before
-    assert(built.size == 1)
-    s.rollback()
-    assert(!built.exists(spark.sparkContext.getPersistentRDDs.contains))
-    assert(rows(s.run(pointRead(2))) == Seq(Seq("p2")))
+    // pins the persisted index form, whose every lookup is a Spark job
+    withConf(persistedIndexes) {
+      val s = new CypherSession(spark, parquetRing())
+      rows(s.run(pointRead(1)))
+      val before = indexIds
+      // explain answers over the built indexes only
+      assert(s.explain(pointRead(2)).nonEmpty)
+      assert((indexIds -- before).isEmpty)
+      s.begin()
+      val df = s.run(pointRead(2))
+      assert(lookedUp(df) && rows(df) == Seq(Seq("p2")))
+      val built = indexIds -- before
+      assert(built.size == 1)
+      s.rollback()
+      assert(!built.exists(spark.sparkContext.getPersistentRDDs.contains))
+      assert(rows(s.run(pointRead(2))) == Seq(Seq("p2")))
+    }
   }
 
   test("compaction releases every index of the session") {
+    // pins the persisted index form, whose every lookup is a Spark job
+    withConf(persistedIndexes) {
+      val before = indexIds
+      val s = lookupRing()
+      val mine = indexIds -- before
+      assert(mine.size == 4) // Person by age and by id, KNOWS by src and by dst
+      var sets = 0
+      while (mine.exists(spark.sparkContext.getPersistentRDDs.contains)) {
+        sets += 1
+        assert(sets <= 20, "no compaction released the indexes")
+        s.run(s"MATCH (n:Person) WHERE n.age = 3 SET n.name = 'q$sets'")
+      }
+      assert(rows(s.run(hopRead(3))).map(_.head.toString).sorted == Seq("p4", "p6"))
+    }
+  }
+
+  /** Whether every index the session holds is held on the driver. */
+  def onDriver(s: CypherSession): Boolean =
+    s.heldIndexes.nonEmpty && s.heldIndexes.forall(_.isInstanceOf[graft.algorithms.KeyedIndex.OnDriver])
+
+  test("key-anchored reads over driver-held indexes run no job") {
     val before = indexIds
     val s = lookupRing()
-    val mine = indexIds -- before
-    assert(mine.size == 4) // Person by age and by id, KNOWS by src and by dst
-    var sets = 0
-    while (mine.exists(spark.sparkContext.getPersistentRDDs.contains)) {
-      sets += 1
-      assert(sets <= 20, "no compaction released the indexes")
-      s.run(s"MATCH (n:Person) WHERE n.age = 3 SET n.name = 'q$sets'")
+    val reads = Seq(pointRead(7), hopRead(7), optionalRead(7), hop2Read(7), ringVle(7), ringShortest(13))
+    // holds the two-hop, var-length and shortestPath reads' indexes too
+    for (_ <- 0 until 2; q <- reads) rows(s.run(q))
+    for (q <- reads) {
+      val (got, jobs) = jobsDuring(rows(s.run(q)))
+      assert(jobs == 0, s"$q ran $jobs jobs")
+      val fresh = rows(new CypherSession(spark, s.store).run(q))
+      assert(got.map(_.mkString("|")).sorted == fresh.map(_.mkString("|")).sorted, q)
     }
-    assert(rows(s.run(hopRead(3))).map(_.head.toString).sorted == Seq("p4", "p6"))
+    assert(onDriver(s))
+    // every build unpersisted the blocks it collected
+    assert((indexIds -- before).isEmpty)
+  }
+
+  test("a key-anchored shortestPath endpoint still resolves to exactly one vertex") {
+    val s = lookupRing()
+    val many = "MATCH p = shortestPath((a:Person {age: 0})-[:KNOWS*..3]->(b:Person {name: 'none'})) RETURN p AS p"
+    for (_ <- 0 until 2) {
+      val e = intercept[IllegalArgumentException](rows(s.run(many)))
+      assert(e.getMessage.contains("exactly one vertex, got 0"), e.getMessage)
+    }
+  }
+
+  test("rollback and compaction drop the session's driver-held indexes, explain builds none") {
+    val s = new CypherSession(spark, parquetRing())
+    rows(s.run(pointRead(1)))
+    assert(s.explain(pointRead(2)).nonEmpty)
+    assert(s.heldIndexes.isEmpty)
+    s.begin()
+    val df = s.run(pointRead(2))
+    assert(lookedUp(df) && rows(df) == Seq(Seq("p2")))
+    val built = s.heldIndexes
+    assert(built.size == 1 && onDriver(s))
+    s.rollback()
+    assert(!s.heldIndexes.exists(i => built.exists(_ eq i)))
+    assert(rows(s.run(pointRead(2))) == Seq(Seq("p2")))
+
+    val ring = lookupRing()
+    val mine = ring.heldIndexes
+    assert(mine.size == 4 && onDriver(ring)) // Person by age and by id, KNOWS by src and by dst
+    var sets = 0
+    while (ring.heldIndexes.exists(i => mine.exists(_ eq i))) {
+      sets += 1
+      assert(sets <= 20, "no compaction dropped the indexes")
+      ring.run(s"MATCH (n:Person) WHERE n.age = 3 SET n.name = 'q$sets'")
+    }
+    assert(rows(ring.run(hopRead(3))).map(_.head.toString).sorted == Seq("p4", "p6"))
   }
 }

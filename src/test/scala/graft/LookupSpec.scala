@@ -183,19 +183,19 @@ class LookupSpec extends AnyFunSuite with SparkSuite {
     val default = reads.map(q => sorted(new CypherSession(spark, st).run(q)))
     for (conf <- Seq(
         Map("spark.sql.shuffle.partitions" -> "1"),
+        Map("spark.sql.autoBroadcastJoinThreshold" -> "-1"),
         Map("spark.sql.shuffle.partitions" -> "7"),
         Map("spark.sql.shuffle.partitions" -> "32"),
         Map("spark.sql.adaptive.enabled" -> "false", "spark.sql.codegen.wholeStage" -> "false",
           "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))) {
-      conf.foreach { case (k, v) => spark.conf.set(k, v) }
-      try {
+      withConf(conf.toSeq: _*) {
         val s = resident(st)
         reads.zip(default).foreach { case (q, rows) =>
           val df = s.run(q)
           assert(lookedUp(df), s"$conf: $q")
           assert(sorted(df) == rows, s"$conf: $q")
         }
-      } finally conf.keys.foreach(spark.conf.unset)
+      }
     }
   }
 
@@ -262,15 +262,14 @@ class LookupSpec extends AnyFunSuite with SparkSuite {
         Map("spark.sql.shuffle.partitions" -> "32"),
         Map("spark.sql.adaptive.enabled" -> "false", "spark.sql.codegen.wholeStage" -> "false",
           "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))) {
-      conf.foreach { case (k, v) => spark.conf.set(k, v) }
-      try {
+      withConf(conf.toSeq: _*) {
         val s = resident(st)
         tails.zip(default).foreach { case (q, rows) =>
           val df = s.run(q)
           assert(folded(df), s"$conf: $q")
           assert(unordered(df) == rows, s"$conf: $q")
         }
-      } finally conf.keys.foreach(spark.conf.unset)
+      }
     }
   }
 

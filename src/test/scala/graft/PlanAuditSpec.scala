@@ -23,10 +23,8 @@ class PlanAuditSpec extends AnyFunSuite with SparkSuite {
     df.queryExecution.executedPlan.toString
   }
 
-  test("the shared spec session carries the engine profile, whichever suite made it") {
-    // the codegen cache is a static setting: a suite that created the
-    // session with Spark's defaults would leave every later suite on a
-    // 100-entry cache, unlike the engine Bench and Verify run
+  /** The engine profile's settings, as the shared session must carry them. */
+  private def assertProfile(): Unit = {
     assert(spark.sparkContext.master == "local[4]")
     val conf = spark.conf
     assert(conf.get("spark.sql.codegen.cache.maxEntries") == "4096")
@@ -37,6 +35,29 @@ class PlanAuditSpec extends AnyFunSuite with SparkSuite {
     assert(conf.get("spark.sql.adaptive.enabled") == "true")
     assert(conf.get("spark.sql.streaming.checkpoint.fileChecksum.enabled") == "false")
     assert(spark.sparkContext.getConf.get("spark.ui.enabled") == "false")
+  }
+
+  test("the shared spec session carries the engine profile, whichever suite made it") {
+    // the codegen cache is a static setting: a suite that created the
+    // session with Spark's defaults would leave every later suite on a
+    // 100-entry cache, unlike the engine Bench and Verify run
+    assertProfile()
+  }
+
+  test("withConf gives the profile's values back, whether its body returns or throws") {
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    assert(!spark.conf.getAll.contains(threshold))
+    val changes = Seq("spark.sql.shuffle.partitions" -> "32", "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.session.timeZone" -> "America/New_York", threshold -> "-1")
+    assert(withConf(changes: _*)(spark.conf.get("spark.sql.shuffle.partitions")) == "32")
+    assertProfile()
+    assert(!spark.conf.getAll.contains(threshold))
+    intercept[IllegalStateException](withConf(changes: _*) {
+      assert(spark.conf.get(threshold) == "-1")
+      throw new IllegalStateException("body failed")
+    })
+    assertProfile()
+    assert(!spark.conf.getAll.contains(threshold))
   }
 
   test("q2: predicate pushdown and column pruning reach the part scan") {

@@ -14,6 +14,27 @@ trait SparkSuite {
 
   lazy val spark: SparkSession = Session(4)
 
+  /** The setting under which every keyed index stays a persisted RDD,
+    * however small: a lookup is then a Spark job.
+    */
+  val persistedIndexes: (String, String) = "spark.sql.autoBroadcastJoinThreshold" -> "-1"
+
+  /** `body`'s result, run with the session conf `settings` set. Each key
+    * then gets back the value it had, and a key that had none is unset:
+    * `unset` alone resets a key to Spark's default, not to the profile's
+    * value, and would leave every later spec in the JVM on it.
+    */
+  def withConf[A](settings: (String, String)*)(body: => A): A = {
+    val conf = spark.conf
+    val before = settings.map { case (k, _) => k -> conf.getAll.get(k) }.toMap
+    settings.foreach { case (k, v) => conf.set(k, v) }
+    try body
+    finally before.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
+  }
+
   /** `body`'s result and the number of Spark jobs it started. The listener
     * bus is drained before the listener attaches, so no earlier job
     * counts, and again before it detaches, so every job of `body` does.

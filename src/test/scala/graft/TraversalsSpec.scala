@@ -461,6 +461,42 @@ class TraversalsSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
+  test("a weighted shortestPath frees only what it persisted, and leaks nothing") {
+    val sc = spark.sparkContext
+    val e = (0 until 12).map(i => (Graphid.pack(1, i), Graphid.pack(1, i + 1), 1.0 + i % 3))
+      .toDF("src", "dst", "weight")
+    val (a, b) = (Graphid.pack(1, 0), Graphid.pack(1, 12))
+    // another thread persists (as a concurrent session's compaction would)
+    // for as long as the search runs
+    val theirs = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[Int]]()
+    @volatile var running = true
+    val started = new java.util.concurrent.CountDownLatch(1)
+    val other = new Thread(() => while (running) {
+      val r = sc.parallelize(1 to 4, 1).persist()
+      r.count()
+      theirs.add(r)
+      started.countDown()
+      Thread.sleep(10)
+    })
+    val before = sc.getPersistentRDDs.keySet
+    other.start()
+    started.await()
+    val res =
+      try PregelSssp.shortestPath(spark, e, a, b, 12).collect()
+      finally { running = false; other.join() }
+    assert(res.length == 1 && res(0).getDouble(2) == 24.0)
+    assert(res(0).getSeq[Long](3) == (0 to 12).map(Graphid.pack(1, _)))
+    val persisted = theirs.toArray(Array.empty[org.apache.spark.rdd.RDD[Int]]).toSeq
+    assert(persisted.size >= 2)
+    // held strongly: the context tracks persisted RDDs by weak reference
+    val live = sc.getPersistentRDDs.toMap
+    assert(persisted.forall(r => live.contains(r.id)),
+      s"${persisted.count(r => !live.contains(r.id))} of ${persisted.size} were freed")
+    val left = live.keySet -- before -- persisted.map(_.id)
+    assert(left.isEmpty, s"the search left ${left.toSeq.sorted.map(live(_).toString)} persisted")
+    persisted.foreach(_.unpersist())
+  }
+
   test("bfsDistances keeps persisted only the checkpoints its result reads") {
     val sc = spark.sparkContext
     val e = (0 until 3).map(i => (Graphid.pack(1, i), Graphid.pack(1, i + 1))).toDF("src", "dst")
