@@ -3,6 +3,8 @@ package graft.algorithms
 import org.apache.spark.graphx.{Edge, Graph}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.util.Checkpoints
+
 /** Whole-graph analytics on GraphX (beyond the reference's algorithm set —
   * its rayon helpers never wire into anything, SURVEY.md §2.6 G7; Spark
   * gives us the full Pregel family).
@@ -80,20 +82,20 @@ object GraphAlgorithms {
     */
   def pageRankStable(edges: DataFrame, iters: Int = 10,
       broadcastCeiling: Long = BroadcastVertexRows,
-      chainDepth: Int = 1): DataFrame = {
+      chainDepth: Int = 1): DataFrame =
+    Checkpoints.owned(edges.sparkSession) { cuts =>
     import org.apache.spark.sql.functions._
     require(chainDepth >= 1, "chainDepth must be >= 1")
-    val e = edges.select("src", "dst").localCheckpoint(false)
+    val e = cuts(edges.select("src", "dst"))
     // vertex state carries the (static) out-degree so an iteration touches
     // exactly one |V|-sized relation: broadcast pr, join edges, shuffle the
     // mass groupBy, rebuild pr — ONE broadcast + ONE shuffle per iteration.
     // (id, deg) in ONE partial-aggregated shuffle over 2|E| tagged rows:
     // src rows count toward out-degree, dst rows only assert existence —
     // replaces the groupBy + distinct + join (three shuffles) build.
-    val verts = e.select(col("src").as("id"), lit(1L).as("c"))
+    val verts = cuts(e.select(col("src").as("id"), lit(1L).as("c"))
       .unionByName(e.select(col("dst").as("id"), lit(0L).as("c")))
-      .groupBy(col("id")).agg(sum(col("c")).as("deg"))
-      .localCheckpoint(false)
+      .groupBy(col("id")).agg(sum(col("c")).as("deg")))
     // when |V| fits the broadcast ceiling the edge set is never shuffled
     // or sorted; a billion-vertex graph falls back to a shuffle-HASH join
     // (hinted: rank relations arrive hash-partitioned from the previous
@@ -121,11 +123,14 @@ object GraphAlgorithms {
         // 0.15*10^12 + (0.85 * mass) in integer fixed-point
         .agg(max(col("deg")).as("deg"),
           expr("150000000000 + (85 * sum(m)) div 100").as("prf"))
-      // lazy checkpoint every chainDepth iterations: the next iteration's
+      // lazy cut every chainDepth iterations: the next iteration's
       // broadcast collect (or the caller's action) materializes it —
       // exactly one materialization of exactly chainDepth shuffles
-      if (i % chainDepth == 0 || i == iters) pr = pr.localCheckpoint(false)
+      if (i % chainDepth == 0 || i == iters) pr = cuts(pr)
     }
+    // the last cut is lazy and reads the chain behind it: every cut goes
+    // to the caller
+    cuts.keepAll()
     pr.select(col("id"), (col("prf").cast("double") / lit(1e12)).as("pr"))
   }
 
@@ -145,18 +150,18 @@ object GraphAlgorithms {
     */
   def pageRankWeighted(edges: DataFrame, iters: Int = 10,
       broadcastCeiling: Long = BroadcastVertexRows,
-      chainDepth: Int = 1): DataFrame = {
+      chainDepth: Int = 1): DataFrame =
+    Checkpoints.owned(edges.sparkSession) { cuts =>
     import org.apache.spark.sql.functions._
     require(chainDepth >= 1, "chainDepth must be >= 1")
-    val e = edges.select(col("src"), col("dst"),
-      col("w").cast("long").as("w")).localCheckpoint(false)
+    val e = cuts(edges.select(col("src"), col("dst"),
+      col("w").cast("long").as("w")))
     // (id, total out-weight) in ONE partial-aggregated shuffle over the
     // tagged 2|E| rows — the pageRankStable degree build with w as the
     // src-side tag
-    val verts = e.select(col("src").as("id"), col("w").as("c"))
+    val verts = cuts(e.select(col("src").as("id"), col("w").as("c"))
       .unionByName(e.select(col("dst").as("id"), lit(0L).as("c")))
-      .groupBy(col("id")).agg(sum(col("c")).as("wsum"))
-      .localCheckpoint(false)
+      .groupBy(col("id")).agg(sum(col("c")).as("wsum")))
     val nVerts = verts.count()
     def small(df: DataFrame): DataFrame =
       if (nVerts <= broadcastCeiling) broadcast(df) else df.hint("shuffle_hash")
@@ -175,8 +180,9 @@ object GraphAlgorithms {
         .groupBy(col("id"))
         .agg(max(col("wsum")).as("wsum"),
           expr("150000000000 + (85 * sum(m)) div 100").as("prf"))
-      if (i % chainDepth == 0 || i == iters) pr = pr.localCheckpoint(false)
+      if (i % chainDepth == 0 || i == iters) pr = cuts(pr)
     }
+    cuts.keepAll() // the lazy last cut reads the chain, as in pageRankStable
     pr.select(col("id"), (col("prf").cast("double") / lit(1e12)).as("wpr"))
   }
 
@@ -193,15 +199,15 @@ object GraphAlgorithms {
     */
   def personalizedPageRank(edges: DataFrame, sources: Seq[Long],
       iters: Int = 10, broadcastCeiling: Long = BroadcastVertexRows,
-      chainDepth: Int = 1): DataFrame = {
+      chainDepth: Int = 1): DataFrame =
+    Checkpoints.owned(edges.sparkSession) { cuts =>
     import org.apache.spark.sql.functions._
     require(sources.nonEmpty, "personalizedPageRank needs at least one source")
     require(chainDepth >= 1, "chainDepth must be >= 1")
-    val e = edges.select("src", "dst").localCheckpoint(false)
-    val verts = e.select(col("src").as("id"), lit(1L).as("c"))
+    val e = cuts(edges.select("src", "dst"))
+    val verts = cuts(e.select(col("src").as("id"), lit(1L).as("c"))
       .unionByName(e.select(col("dst").as("id"), lit(0L).as("c")))
-      .groupBy(col("id")).agg(sum(col("c")).as("deg"))
-      .localCheckpoint(false)
+      .groupBy(col("id")).agg(sum(col("c")).as("deg")))
     val nVerts = verts.count()
     def small(df: DataFrame): DataFrame =
       if (nVerts <= broadcastCeiling) broadcast(df) else df.hint("shuffle_hash")
@@ -221,8 +227,9 @@ object GraphAlgorithms {
         .agg(max(col("deg")).as("deg"),
           (when(isSrc, lit(150000000000L)).otherwise(lit(0L)) +
             expr("(85 * sum(m)) div 100")).as("prf"))
-      if (i % chainDepth == 0 || i == iters) pr = pr.localCheckpoint(false)
+      if (i % chainDepth == 0 || i == iters) pr = cuts(pr)
     }
+    cuts.keepAll() // the lazy last cut reads the chain, as in pageRankStable
     pr.select(col("id"), (col("prf").cast("double") / lit(1e12)).as("ppr"))
   }
 
@@ -239,19 +246,20 @@ object GraphAlgorithms {
     *
     * Per level: ONE gated-broadcast (or shuffle-hash) join of the
     * |V|-bounded path-count relation against the immutable edge
-    * checkpoint plus ONE partial-aggregated shuffle keyed on the head
+    * cut plus ONE partial-aggregated shuffle keyed on the head
     * vertex — the pageRankStable cost shape, terminating early when the
     * level empties (DAGs) rather than burning the full budget.
     */
   def katzIndex(edges: DataFrame, maxLen: Int = 6, beta: Long = 4L,
-      broadcastCeiling: Long = BroadcastVertexRows): DataFrame = {
+      broadcastCeiling: Long = BroadcastVertexRows): DataFrame =
+    Checkpoints.owned(edges.sparkSession) { cuts =>
     import org.apache.spark.sql.functions._
     require(maxLen >= 1, "katzIndex needs at least one level")
     require(beta >= 2, "beta must be >= 2 (alpha = 1/beta < 1)")
-    val e = edges.select("src", "dst").localCheckpoint(false)
-    val verts = e.select(col("src").as("id"))
+    val e = cuts(edges.select("src", "dst"))
+    val verts = cuts(e.select(col("src").as("id"))
       .unionByName(e.select(col("dst").as("id")))
-      .distinct().localCheckpoint(false)
+      .distinct())
     val nVerts = verts.count()
     def small(df: DataFrame): DataFrame =
       if (nVerts <= broadcastCeiling) broadcast(df) else df.hint("shuffle_hash")
@@ -261,13 +269,11 @@ object GraphAlgorithms {
     var live = nVerts
     while (level < maxLen && live > 0) {
       level += 1
-      paths = e.join(small(paths), col("id") === e("src"))
-        .groupBy(e("dst").as("id")).agg(sum(col("c")).as("c"))
-        .localCheckpoint(false)
+      paths = cuts(e.join(small(paths), col("id") === e("src"))
+        .groupBy(e("dst").as("id")).agg(sum(col("c")).as("c")))
       live = paths.count() // materializes the level + terminates on empty
       if (live > 0) levels += ((level, paths))
     }
-    e.unpersist()
     // ONE weighted union-aggregate over the checkpointed levels (instead
     // of a per-level |V| accumulator shuffle): level l enters at its final
     // beta^(maxLen-l) weight — levels past an early frontier death are
@@ -280,8 +286,10 @@ object GraphAlgorithms {
           (col("c") * lit(Seq.fill(maxLen - l)(beta).product)).as("k"))
       }.reduce(_.unionByName(_))
         .groupBy(col("id")).agg(sum(col("k")).as("k"))
-    verts.join(scores, Seq("id"), "left_outer")
-      .select(col("id"), coalesce(col("k"), lit(0L)).as("katz"))
+    // the levels are materialized: the scope frees the edge cut and an
+    // empty last level, and hands verts and the levels to the caller
+    cuts.keep(verts.join(scores, Seq("id"), "left_outer")
+      .select(col("id"), coalesce(col("k"), lit(0L)).as("katz")))
   }
 
   /** Synchronous label propagation (community detection), deterministic:
@@ -303,18 +311,17 @@ object GraphAlgorithms {
     * measured once; billion-vertex graphs fall back to shuffle-hash).
     */
   def labelPropagation(edges: DataFrame, iters: Int = 4,
-      broadcastCeiling: Long = BroadcastVertexRows): DataFrame = {
+      broadcastCeiling: Long = BroadcastVertexRows): DataFrame =
+    Checkpoints.owned(edges.sparkSession) { cuts =>
     import org.apache.spark.sql.functions._
     require(iters >= 1, "labelPropagation needs at least one iteration")
     val e0 = edges.select("src", "dst").where(col("src") =!= col("dst"))
-    val und = e0
+    val und = cuts(e0
       .unionByName(e0.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .localCheckpoint(false)
-    val verts = edges.select(col("src").as("id"))
+      .distinct())
+    val verts = cuts(edges.select(col("src").as("id"))
       .unionByName(edges.select(col("dst").as("id")))
-      .distinct()
-      .localCheckpoint(false)
+      .distinct())
     val nVerts = verts.count()
     def small(df: DataFrame): DataFrame =
       if (nVerts <= broadcastCeiling) broadcast(df)
@@ -331,13 +338,13 @@ object GraphAlgorithms {
         .groupBy(und("dst").as("vid"), col("lbl"))
         .agg(count(lit(1)).as("c"))
         .unionByName(lbl.select(col("id").as("vid"), col("lbl"), lit(0L).as("c")))
-      lbl = freq.groupBy(col("vid"))
+      // lineage cut per round, lazily materialized by the next round's
+      // broadcast collect (or the caller's action) — pageRankStable's shape
+      lbl = cuts(freq.groupBy(col("vid"))
         .agg(max(struct(col("c"), (-col("lbl")).as("nl"))).as("b"))
-        .select(col("vid").as("id"), (-col("b.nl")).as("lbl"))
-        // lineage cut per round, lazily materialized by the next round's
-        // broadcast collect (or the caller's action) — pageRankStable's shape
-        .localCheckpoint(false)
+        .select(col("vid").as("id"), (-col("b.nl")).as("lbl")))
     }
+    cuts.keepAll() // the lazy last cut reads the chain, as in pageRankStable
     lbl
   }
 
@@ -365,13 +372,13 @@ object GraphAlgorithms {
   /** connectedComponentsDF plus (propagation rounds, jump rounds) —
     * ScaleProbe's chain axis pins the sub-O(D) round growth with these.
     */
-  def connectedComponentsRounds(edges: DataFrame): (DataFrame, Int, Int) = {
+  def connectedComponentsRounds(edges: DataFrame): (DataFrame, Int, Int) =
+    Checkpoints.owned(edges.sparkSession) { cuts =>
     import org.apache.spark.sql.functions._
-    val (und, releaseUnd) = trackedCheckpoint(edges.select(col("src"), col("dst"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst"))),
-      eager = false)
-    var (comp, releaseComp) = trackedCheckpoint(und.select(col("src").as("id"))
-      .distinct().withColumn("component", col("id")), eager = false)
+    val und = cuts(edges.select(col("src"), col("dst"))
+      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst"))))
+    var comp = cuts(und.select(col("src").as("id"))
+      .distinct().withColumn("component", col("id")))
     // same gated propagation join as pageRankStable: broadcast the |V|
     // label relation while it fits, shuffle-HASH past the ceiling (labels
     // arrive hash-partitioned from the round aggregate; never re-sort the
@@ -407,26 +414,23 @@ object GraphAlgorithms {
       // self rows are tagged so the round aggregate carries the previous
       // label alongside the new minimum — the convergence test is a filter
       // over this one relation, not a second join against the old comp
-      val (p, releaseP) = trackedCheckpoint(
+      val p = cuts(
         und.join(small(comp), und("src") === comp("id"))
           .select(und("dst").as("id"), col("component"), lit(false).as("own"))
           .unionByName(comp.withColumn("own", lit(true)))
           .groupBy(col("id"))
           .agg(min(col("component")).as("component"),
-            min(when(col("own"), col("component"))).as("prev")),
-        eager = false)
+            min(when(col("own"), col("component"))).as("prev")))
       changed = p.where(col("component") < col("prev")).count()
       propRounds += 1
-      releaseComp() // superseded round's |V| blocks freed once p is live
-      if (changed == 0) {
-        comp = p.select(col("id"), col("component"))
-        releaseComp = releaseP
-      } else {
-        // the flattened relation stays LAZY over the checkpointed p: the
-        // next round's propagation computes it inline (a chain of |V|
+      cuts.drop(comp) // superseded round's |V| blocks freed once p is live
+      if (changed == 0) comp = p.select(col("id"), col("component"))
+      else {
+        // the flattened relation stays LAZY over the cut p: the next
+        // round's propagation computes it inline (a chain of |V|
         // broadcast-hash joins, the identical broadcast subtree reused
-        // across the plan) — no per-round flat checkpoint or extra count
-        // job. p stays pinned until the next round's p materializes.
+        // across the plan) — no per-round flat cut or extra count job.
+        // p stays pinned until the next round's p materializes.
         val parent = p.select(col("id").as("pid"), col("component").as("pc"))
         var cur = p.select(col("id"), col("component"))
         for (_ <- 1 to jumps) {
@@ -435,13 +439,11 @@ object GraphAlgorithms {
           jumpRounds += 1
         }
         comp = cur
-        releaseComp = releaseP
       }
     }
-    // the 2|E| relation is done; the final comp checkpoint stays pinned —
-    // the returned frame reads it (callers sweep after consumption)
-    releaseUnd()
-    (comp, propRounds, jumpRounds)
+    // the scope frees the 2|E| relation; the final comp cut goes to the
+    // caller — the returned frame reads it
+    (cuts.keep(comp), propRounds, jumpRounds)
   }
 
   /** Borůvka minimum spanning forest over a weighted undirected edge
@@ -473,10 +475,10 @@ object GraphAlgorithms {
     * count against the budget (r18 review). The maxRounds guard is loud,
     * not a silent cap.
     */
-  def boruvkaMst(edges: DataFrame, maxRounds: Int = 40): DataFrame = {
+  def boruvkaMst(edges: DataFrame, maxRounds: Int = 40): DataFrame =
+    Checkpoints.owned(edges.sparkSession) { cuts =>
     import org.apache.spark.sql.functions._
     val spark = edges.sparkSession
-    val sc = spark.sparkContext
     // Spark 4 carries the origin plan's ESTIMATED sizeInBytes into a
     // checkpoint's LogicalRDD (SPARK-39748, LogicalRDD.fromDataset).
     // Borůvka's round plan multiplies join estimates (~|joins in round +
@@ -487,34 +489,28 @@ object GraphAlgorithms {
     // Rebuilding the frame from the checkpointed RDD resets each round's
     // leaves to constant-estimate LogicalRDDs — the Row round-trip costs
     // one conversion pass over |C|-bounded relations, the estimates stop
-    // compounding, and the checkpointed blocks still back the data.
-    // returns (rebuilt frame, release thunk, ids of the BACKING persisted
-    // checkpoint): the rebuilt frame's own LogicalRDD wraps the converted
-    // RDD, so idsOf(rebuilt) would NOT protect the persisted blocks — the
-    // caller's delta-release must exclude these ids explicitly.
-    def statsFreeCheckpoint(df: DataFrame)
-        : (DataFrame, () => Unit, Set[Int]) = {
-      val (ck, rel) = trackedCheckpoint(df, eager = true)
-      (spark.createDataFrame(ck.rdd, ck.schema), rel,
-        graft.util.Checkpoints.idsOf(ck))
+    // compounding, and the cut blocks still back the data (the scope's
+    // drop and keep follow the rebuilt frame down to its cut).
+    def statsFreeCut(df: DataFrame): DataFrame = {
+      val ck = cuts(df, eager = true)
+      spark.createDataFrame(ck.rdd, ck.schema)
     }
-    val (e, releaseE) = trackedCheckpoint(
+    val e = cuts(
       edges.select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"), col("w").cast("long").as("w"))
-        .where(col("src") =!= col("dst")), eager = false)
-    var (comp, releaseComp) = trackedCheckpoint(
+        .where(col("src") =!= col("dst")))
+    var comp = cuts(
       e.select(col("src").as("id"))
         .unionByName(e.select(col("dst").as("id")))
-        .distinct().withColumn("component", col("id")), eager = false)
+        .distinct().withColumn("component", col("id")))
     val nVerts = comp.count()
     def small(df: DataFrame): DataFrame =
       if (nVerts <= BroadcastVertexRows) broadcast(df)
       else df.hint("shuffle_hash")
-    // per-round picked-edge checkpoints accumulate under the forest (≤
-    // log V of them, each ≤ |C| rows); the final relation reads them, so
-    // they stay pinned for the caller's sweep — the CC convention
+    // per-round picked-edge cuts accumulate under the forest (≤ log V of
+    // them, each ≤ |C| rows); the final relation reads them, so they go
+    // to the caller — the CC convention
     var forestParts = List.empty[DataFrame]
-    var forestReleases = List.empty[() => Unit]
     var rounds = 0
     var more = true
     while (more) {
@@ -534,58 +530,46 @@ object GraphAlgorithms {
       val sel = incid.groupBy(col("comp")).agg(min(col("e")).as("m"))
         .select(col("comp"), col("m.w").as("w"), col("m.src").as("src"),
           col("m.dst").as("dst"), col("m.other").as("other"))
-      // ONE job: the eager checkpoint materializes the round; its count
-      // decides termination (no cross edges left = every component done)
-      val (selCk, releaseSel, _) = statsFreeCheckpoint(sel)
-      if (selCk.count() == 0) { releaseSel(); more = false }
+      // ONE job: the eager cut materializes the round; its count decides
+      // termination (no cross edges left = every component done)
+      val selCk = statsFreeCut(sel)
+      if (selCk.count() == 0) { cuts.drop(selCk); more = false }
       else {
         rounds += 1
-        if (rounds > maxRounds) {
-          // a rejected call leaks NOTHING (the knnTopK rule, r18 review):
-          // the round's sel, every prior round's picked-edge checkpoint,
-          // the live label relation, and the edge relation all release
-          // before the throw — the failure path pins no blocks
-          releaseSel()
-          forestReleases.foreach(_.apply())
-          releaseComp()
-          releaseE()
-          require(rounds <= maxRounds,
-            s"boruvkaMst: $maxRounds picking rounds without convergence " +
-              "— components must at least halve per picking round, so " +
-              s"this input exceeds 2^$maxRounds vertices or the relation " +
-              "mutated mid-run; raise maxRounds deliberately")
-        }
+        // a rejected call leaks NOTHING (the knnTopK rule, r18 review):
+        // the scope frees every cut as the require throws
+        require(rounds <= maxRounds,
+          s"boruvkaMst: $maxRounds picking rounds without convergence " +
+            "— components must at least halve per picking round, so " +
+            s"this input exceeds 2^$maxRounds vertices or the relation " +
+            "mutated mid-run; raise maxRounds deliberately")
         forestParts ::= selCk.select(col("src"), col("dst"), col("w"))
-        forestReleases ::= releaseSel
         // contract: min-id labels over the picked component graph (≤ |C|
         // rows — the CC cost is in CURRENT components, not edges), then
-        // one label-composition join. The CC machinery's own checkpoints
-        // are dead once the new label relation materializes — released
-        // here instead of waiting for the harness sweep.
-        val before = sc.getPersistentRDDs.keySet
+        // one label-composition join. The CC machinery's own cuts are
+        // dead once the new label relation materializes — dropped here
+        // instead of waiting for the harness sweep.
         val merged = connectedComponentsDF(
           selCk.select(col("comp").as("src"), col("other").as("dst")))
-        val (nc, releaseNc, ncIds) = statsFreeCheckpoint(
+        val nc = statsFreeCut(
           comp.join(small(merged.select(col("id").as("oc"),
               col("component").as("nc"))),
               col("component") === col("oc"), "left")
             .select(col("id"),
               coalesce(col("nc"), col("component")).as("component")))
-        graft.util.Checkpoints.release(spark,
-          sc.getPersistentRDDs.keySet -- before -- ncIds)
-        releaseComp()
+        cuts.drop(merged)
+        cuts.drop(comp)
         comp = nc
-        releaseComp = releaseNc
       }
     }
-    releaseE() // the forest reads only the per-round checkpoints
+    // the scope frees the edge cut: the forest reads only the per-round cuts
     val forest = forestParts
       .reduceOption(_.unionByName(_))
       .getOrElse(spark.range(0).select(col("id").as("src"),
         col("id").as("dst"), col("id").as("w")))
       .distinct() // a pair of components can pick the same edge tuple
-    forest.join(small(comp), forest("src") === comp("id"))
-      .select(col("component"), forest("src"), forest("dst"), forest("w"))
+    cuts.keep(forest.join(small(comp), forest("src") === comp("id"))
+      .select(col("component"), forest("src"), forest("dst"), forest("w")))
   }
 
   /** Triangle count per vertex (GraphX canonical orientation). */
@@ -617,22 +601,23 @@ object GraphAlgorithms {
     * whole-stage codegen; no GraphX/RDD round-trip (the GraphX wrapper
     * above stays as a cross-check surface for specs).
     */
-  def triangleCountDF(edges: DataFrame): DataFrame = {
+  def triangleCountDF(edges: DataFrame): DataFrame =
+    Checkpoints.owned(edges.sparkSession) { cuts =>
     import org.apache.spark.sql.functions._
     // und feeds deg + ranked (3 scans) and oriented feeds both wedge sides
     // + the closer (3 scans): without pinning, each consumer re-derives the
-    // whole upstream lineage — checkpoint each once, release und as soon as
-    // oriented is materialized. oriented/deg stay pinned for the returned
-    // frame; the callers' per-query sweep (getPersistentRDDs.unpersist)
-    // reclaims them after consumption — the kCore convention.
-    val (und, releaseUnd) = trackedCheckpoint(
+    // whole upstream lineage — cut each once; the scope frees und, which
+    // the returned frame does not read. oriented/deg go to the caller,
+    // whose per-query sweep reclaims them after consumption — the kCore
+    // convention.
+    val und = cuts(
       edges.select(col("src"), col("dst"))
         .where(col("src") =!= col("dst"))
         .select(least(col("src"), col("dst")).as("a"),
           greatest(col("src"), col("dst")).as("b"))
         .distinct(),
       eager = true)
-    val (deg, _) = trackedCheckpoint(
+    val deg = cuts(
       und.select(col("a").as("id")).unionByName(und.select(col("b").as("id")))
         .groupBy(col("id")).agg(count(lit(1)).as("deg")),
       eager = true)
@@ -644,13 +629,12 @@ object GraphAlgorithms {
     val rankA = struct(col("da").as("d"), col("a").as("i"))
     val rankB = struct(col("db").as("d"), col("b").as("i"))
     val flip = rankB < rankA
-    val (oriented, _) = trackedCheckpoint(
+    val oriented = cuts(
       ranked.select(
         when(flip, col("b")).otherwise(col("a")).as("u"),
         when(flip, rankA).otherwise(rankB).as("rv"))
         .select(col("u"), col("rv"), col("rv").getField("i").as("v")),
       eager = true)
-    releaseUnd()
     // wedges out of each lower-rank pivot u: (v, w) with rank(v) < rank(w);
     // a wedge closes iff the oriented edge v->w exists (v has lower rank)
     val o1 = oriented.select(col("u"), col("v").as("wv"), col("rv").as("r1"))
@@ -664,8 +648,8 @@ object GraphAlgorithms {
       .unionByName(tris.select(col("wv").as("id")))
       .unionByName(tris.select(col("ww").as("id")))
       .groupBy(col("id")).agg(count(lit(1)).as("triangles"))
-    deg.join(cnt, Seq("id"), "left")
-      .select(col("id"), col("deg"), coalesce(col("triangles"), lit(0L)).as("triangles"))
+    cuts.keep(deg.join(cnt, Seq("id"), "left")
+      .select(col("id"), col("deg"), coalesce(col("triangles"), lit(0L)).as("triangles")))
   }
 
   /** DOULION sampled triangle counting (Tsourakakis, Kang, Miller &
@@ -766,15 +750,18 @@ object GraphAlgorithms {
     * instead of recounting). Each round is one compact-forward triangle
     * pass + one edge filter; the cascade converges in a handful of
     * rounds on real graphs (the oracle unrolls a superset and the
-    * removed-count fixpoint test ends the loop exactly). Returns the
+    * removed-count fixpoint test ends the loop exactly); `maxRounds`
+    * turns a longer cascade into a loud error, never a partial,
+    * unconverged edge set (the kCore rule). Returns the
     * canonical (a < b) truss edge set; k >= 3 (the 2-truss is the whole
     * simple graph, and zero-support edges drop via the inner support
     * join, sound only when k-2 >= 1).
     */
-  def kTruss(edges: DataFrame, k: Int, maxRounds: Int = 64): DataFrame = {
+  def kTruss(edges: DataFrame, k: Int, maxRounds: Int = 64): DataFrame =
+    Checkpoints.owned(edges.sparkSession) { cuts =>
     import org.apache.spark.sql.functions._
     require(k >= 3, "k-truss needs k >= 3")
-    var (und, release) = trackedCheckpoint(
+    var und = cuts(
       edges.select(col("src"), col("dst")).where(col("src") =!= col("dst"))
         .select(least(col("src"), col("dst")).as("a"),
           greatest(col("src"), col("dst")).as("b"))
@@ -783,19 +770,19 @@ object GraphAlgorithms {
     var n = und.count()
     var rounds = 0
     var converged = n == 0
-    while (!converged && rounds < maxRounds) {
+    while (!converged) {
       rounds += 1
-      val (kept, releaseKept) = trackedCheckpoint(
+      require(rounds <= maxRounds, s"k-truss did not converge in $maxRounds rounds")
+      val kept = cuts(
         und.join(edgeSupport(und), Seq("a", "b"))
           .where(col("sup") >= k - 2)
-          .select(col("a"), col("b")),
-        eager = false)
+          .select(col("a"), col("b")))
       val nk = kept.count() // one job: materializes + tests the fixpoint
       converged = nk == n || nk == 0
-      release(); und = kept; release = releaseKept
+      cuts.drop(und); und = kept
       n = nk
     }
-    und
+    cuts.keep(und)
   }
 
   /** Stress centrality (Shimbel 1953) from a bounded source set — the
@@ -925,12 +912,13 @@ object GraphAlgorithms {
   private def brandesCore(edges: DataFrame, sources: DataFrame, maxDepth: Int,
       broadcastRows: Long, integerStress: Boolean,
       levelProbe: DataFrame => Unit = _ => (),
-      perEdge: Boolean = false): DataFrame = {
+      perEdge: Boolean = false): DataFrame =
+    Checkpoints.owned(edges.sparkSession) { cuts =>
     import org.apache.spark.sql.functions._
     // e stays pinned to the end — the returned frame derives its vertex
     // relation from it; the caller's per-query sweep reclaims (kCore
     // convention)
-    val (e, _) = trackedCheckpoint(
+    val e = cuts(
       edges.select(col("src"), col("dst")).where(col("src") =!= col("dst"))
         .distinct(), eager = true)
     def gate(df: DataFrame, rows: Long): DataFrame =
@@ -938,12 +926,11 @@ object GraphAlgorithms {
     // forward: levels(L) = (s, id, sigma) for vertices first reached at L
     var levels = Vector.empty[(DataFrame, Long)] // frame + row count
     // ONE job, not an eager materialization plus a count (r20, the
-    // Traversals/louvain fusion): the count materializes the lazy
-    // checkpoint and yields the level size in the same action
-    var visited = sources.select(col("id").cast("long").as("s"))
+    // Traversals/louvain fusion): the count materializes the lazy cut and
+    // yields the level size in the same action
+    var visited = cuts(sources.select(col("id").cast("long").as("s"))
       .distinct()
-      .select(col("s"), col("s").as("id"), lit(1L).as("sigma"))
-      .localCheckpoint(false)
+      .select(col("s"), col("s").as("id"), lit(1L).as("sigma")))
     levels :+= ((visited, visited.count()))
     var frontier = visited
     var frontierRows = levels.head._2
@@ -952,7 +939,7 @@ object GraphAlgorithms {
     while (hop < maxDepth && frontierRows > 0) {
       hop += 1
       // the visited side of the anti-join is a stats-less union of
-      // checkpoint scans — gate it on its tracked row sum or late levels
+      // cut scans — gate it on its tracked row sum or late levels
       // fall back to sorting the aggregated frontier
       val level = e.join(gate(frontier, frontierRows), frontier("id") === e("src"))
         .groupBy(frontier("s"), e("dst").as("id"))
@@ -960,17 +947,17 @@ object GraphAlgorithms {
         .join(gate(visited.select("s", "id"), visitedRows),
           Seq("s", "id"), "left_anti")
       levelProbe(level)
-      // ONE job per level: the count materializes the lazy checkpoint and
-      // yields the loop condition (r20 — formerly an eager checkpoint job
-      // PLUS a count job, the exact two-action shape the r19/r20 fusions
-      // removed from Traversals and louvainLevels)
-      val next = level.localCheckpoint(false)
+      // ONE job per level: the count materializes the lazy cut and
+      // yields the loop condition (r20 — formerly an eager cut job PLUS a
+      // count job, the exact two-action shape the r19/r20 fusions removed
+      // from Traversals and louvainLevels)
+      val next = cuts(level)
       frontierRows = next.count()
       if (frontierRows > 0) {
         levels :+= ((next, frontierRows))
         visitedRows += frontierRows
-        // visited is a union of already-checkpointed level frames — a
-        // shallow plan; re-checkpointing it would burn one job per level
+        // visited is a union of already-cut level frames — a shallow
+        // plan; cutting it again would burn one job per level
         visited = visited.unionByName(next)
         frontier = next
       }
@@ -1024,13 +1011,12 @@ object GraphAlgorithms {
         else (col("sigma").cast("double") / col("wsigma").cast("double")) *
           (one + coalesce(col("wacc"), zero))
       // per-edge mode consumes `joined` twice (the acc aggregate AND the
-      // per-DAG-edge emission), so checkpoint it once — lazily (r20): its
-      // blocks compute and cache inside the first consumer's job instead
-      // of a standalone materialization job; the vertex path is untouched
-      // (no plan change for g25/g50)
-      val jsrc = if (perEdge) joined.select(col("s"), col("vid"),
-          col("sigma"), col("wid"), col("wsigma"), col("wacc"))
-        .localCheckpoint(false) else joined
+      // per-DAG-edge emission), so cut it once — lazily (r20): its blocks
+      // compute and cache inside the first consumer's job instead of a
+      // standalone materialization job; the vertex path is untouched (no
+      // plan change for g25/g50)
+      val jsrc = if (perEdge) cuts(joined.select(col("s"), col("vid"),
+          col("sigma"), col("wid"), col("wsigma"), col("wacc"))) else joined
       if (perEdge) {
         // σ_v · (1 + τ_w) counts the shortest s→t paths traversing DAG
         // edge (v, w) — the edge-keyed member of the same identity the
@@ -1054,12 +1040,15 @@ object GraphAlgorithms {
         // lazy (r20): acc's final stage runs inside its first consumer —
         // the next level's stage materialization, or the closing
         // contribution aggregate — instead of a standalone job per level
-        val acc = accPlan.localCheckpoint(false)
+        val acc = cuts(accPlan)
         val c = if (integerStress) col("sigma") * col("acc") else col("acc")
         contribs += acc.select(col("id"), c.as("c"))
         accNext = Some((acc.select(col("s"), col("id"), col("acc")), vRows))
       }
     }
+    // the lazy acc cuts read each other level by level: every cut goes to
+    // the caller
+    cuts.keepAll()
     if (perEdge) {
       // only traversed DAG edges appear (an edge on zero counted paths
       // carries no signal); exact integer sums in stress mode
@@ -1101,17 +1090,6 @@ object GraphAlgorithms {
   def kCore(edges: DataFrame, k: Int, maxRounds: Int = 64): DataFrame =
     kCoreRounds(edges, k, maxRounds)._1
 
-  /** Dataset.unpersist does NOT release localCheckpoint blocks — it only
-    * uncaches CacheManager entries, while checkpoint RDD blocks live in
-    * sparkContext.getPersistentRDDs. This captures the delta of persistent
-    * RDD ids around a checkpoint call (registration happens at call time
-    * for both eager and lazy) and returns a release thunk that actually
-    * frees the blocks. Single-threaded callers only: a concurrent job
-    * registering its own RDDs in the window would be swept into the delta.
-    */
-  private def trackedCheckpoint(df: DataFrame, eager: Boolean): (DataFrame, () => Unit) =
-    graft.util.Checkpoints.tracked(df, eager)
-
   /** kCore plus the number of peel rounds taken — specs pin the round
     * budget so the unrolled-CTE oracle provably covers convergence.
     * `roundProbe` sees each round's degree-update relation pre-checkpoint
@@ -1135,7 +1113,8 @@ object GraphAlgorithms {
     */
   def kCoreRounds(edges: DataFrame, k: Int, maxRounds: Int = 64,
       roundProbe: DataFrame => Unit = _ => (),
-      layersPerRound: Int = 2): (DataFrame, Int) = {
+      layersPerRound: Int = 2): (DataFrame, Int) =
+    Checkpoints.owned(edges.sparkSession) { cuts =>
     import org.apache.spark.sql.functions._
     require(k >= 1, "k-core needs k >= 1")
     val noLoops = edges.select(col("src"), col("dst"))
@@ -1143,13 +1122,12 @@ object GraphAlgorithms {
     // symmetric closure via canonical (min,max) pairs: distinct shuffles
     // |E| rows instead of 2|E| (distinct-then-mirror ≡ mirror-then-distinct
     // for a symmetric relation; the mirror union is a narrow map). und's
-    // 2|E| rows land in the checkpoint either way — only shuffle work halves.
+    // 2|E| rows land in the cut either way — only shuffle work halves.
     val canon = noLoops.select(
       least(col("src"), col("dst")).as("src"),
       greatest(col("src"), col("dst")).as("dst")).distinct()
-    val (und, releaseUnd) = trackedCheckpoint(canon
-      .unionByName(canon.select(col("dst").as("src"), col("src").as("dst"))),
-      eager = false)
+    val und = cuts(canon
+      .unionByName(canon.select(col("dst").as("src"), col("src").as("dst"))))
     // The (n, peelable) stats each round needs are folded into the job
     // that materializes the deg relation itself via observe() — zero extra
     // scans or jobs for the fixpoint test. The stats thunk only runs after
@@ -1189,19 +1167,19 @@ object GraphAlgorithms {
         count(when(col("deg") < k, lit(1))).as("r")).head
       (s.getLong(0), s.getLong(1))
     }
-    // eager checkpoints everywhere a relation is consumed twice (broadcast
-    // exchanges racing to materialize a lazy checkpoint duplicate its job)
+    // eager cuts everywhere a relation is consumed twice (broadcast
+    // exchanges racing to materialize a lazy cut duplicate its job)
     val (deg0obs, deg0stats) = statsObs(
       und.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg")))
-    var (deg, releaseDeg) = trackedCheckpoint(deg0obs, eager = true)
+    var deg = cuts(deg0obs, eager = true)
     var pendingStats: () => Option[(Long, Long)] = deg0stats
     var rounds = 0
     var survivors: DataFrame = null
-    // finally: release the 2|E| edge blocks even when maxRounds fires — a
-    // caller that catches the error must not inherit them. The final deg
-    // checkpoint stays pinned: the returned survivors frame reads it (the
-    // caller's getPersistentRDDs sweep reclaims it after consumption).
-    try while (survivors == null) {
+    // when maxRounds fires the scope frees every cut — a caller that
+    // catches the error inherits none. On success it frees the 2|E| edge
+    // cut; the final deg cut goes to the caller: the returned survivors
+    // frame reads it (the caller's sweep reclaims it after consumption).
+    while (survivors == null) {
       rounds += 1
       require(rounds <= maxRounds, s"k-core did not converge in $maxRounds rounds")
       val (n, nRemoved) = pendingStats().getOrElse(statsFallback(deg))
@@ -1243,14 +1221,14 @@ object GraphAlgorithms {
           next = peel(next, broadcast)
           layer += 1
         }
-        roundProbe(next) // pre-checkpoint: the round's real join plan
+        roundProbe(next) // pre-cut: the round's real join plan
         val (observed, nextStats) = statsObs(next)
-        val (ckpt, release) = trackedCheckpoint(observed, eager = true)
-        releaseDeg() // superseded round's |V| blocks freed immediately
-        deg = ckpt; releaseDeg = release; pendingStats = nextStats
+        val ckpt = cuts(observed, eager = true)
+        cuts.drop(deg) // superseded round's |V| blocks freed immediately
+        deg = ckpt; pendingStats = nextStats
       }
-    } finally releaseUnd()
-    (survivors, rounds)
+    }
+    (cuts.keep(survivors), rounds)
   }
 
   /** Node similarity (the Neo4j-GDS-style operator): Jaccard of
@@ -1265,20 +1243,21 @@ object GraphAlgorithms {
     * integer-to-double division — bit-identical across engines.
     */
   def nodeSimilarity(edges: DataFrame, topK: Int,
-      maxNeighborInDegree: Long = 1L << 16): DataFrame = {
+      maxNeighborInDegree: Long = 1L << 16): DataFrame =
+    Checkpoints.owned(edges.sparkSession) { cuts =>
     import org.apache.spark.sql.functions._
     val adj = edges.select(col("src"), col("dst")).distinct()
     val nonHub = adj.groupBy(col("dst")).agg(count(lit(1)).as("nd"))
       .where(col("nd") <= maxNeighborInDegree).select(col("dst"))
     // eager: consumed by three scans (degree agg + both self-join sides) —
-    // lazy checkpoints materialize per racing consumer, duplicating the job
-    val kept = adj.join(nonHub, Seq("dst"), "left_semi").localCheckpoint(true)
+    // lazy cuts materialize per racing consumer, duplicating the job
+    val kept = cuts(adj.join(nonHub, Seq("dst"), "left_semi"), eager = true)
     val deg = kept.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
     val common = kept.as("x").join(kept.as("y"),
         col("x.dst") === col("y.dst") && col("x.src") < col("y.src"))
       .groupBy(col("x.src").as("a"), col("y.src").as("b"))
       .agg(count(lit(1)).as("common"))
-    common
+    cuts.keep(common
       .join(deg.select(col("id"), col("deg").as("deg_a")), col("a") === col("id"))
       .drop("id")
       .join(deg.select(col("id"), col("deg").as("deg_b")), col("b") === col("id"))
@@ -1287,7 +1266,7 @@ object GraphAlgorithms {
         (col("common").cast("double") /
           (col("deg_a") + col("deg_b") - col("common")).cast("double")).as("jaccard"))
       .orderBy(col("jaccard").desc, col("a"), col("b"))
-      .limit(topK)
+      .limit(topK))
   }
 
   /** Strongly connected components on the directed edge relation, natively
@@ -1317,8 +1296,7 @@ object GraphAlgorithms {
     * Every relation is |V|- or |E|-bounded ((id, long) colors, one
     * (id, root) row per reached vertex — never pair or path state), every
     * join is count-gated broadcast with a shuffle-hash fallback, and every
-    * round's lineage is cut by tracked checkpoints released when
-    * superseded. scc_id = min member id, so the output is deterministic
+    * round's lineage is cut, each cut dropped when superseded. scc_id = min member id, so the output is deterministic
     * bit-for-bit. At least the minimum live id roots a color each round,
     * so ≥ 1 SCC is assigned per round; `maxRounds` bounds adversarial
     * SCC-chain depth and the convergence failure is loud.
@@ -1330,7 +1308,8 @@ object GraphAlgorithms {
   def stronglyConnectedComponents(edges: DataFrame, maxRounds: Int = 64,
       broadcastCeiling: Long = BroadcastVertexRows,
       layersPerRound: Int = 2,
-      phaseProbe: String => Unit = _ => ()): DataFrame = {
+      phaseProbe: String => Unit = _ => ()): DataFrame =
+    Checkpoints.owned(edges.sparkSession) { cuts =>
     require(layersPerRound >= 1, "layersPerRound must be >= 1")
     import org.apache.spark.sql.functions._
     // live edges drop self-loops (they never bind two vertices together);
@@ -1338,16 +1317,15 @@ object GraphAlgorithms {
     // them their singleton SCC like any other acyclic-fringe vertex
     val e0 = edges.select(col("src"), col("dst"))
       .where(col("src") =!= col("dst")).distinct()
-    var (live, releaseLive) = trackedCheckpoint(e0, eager = false)
-    var (verts, releaseVerts) = trackedCheckpoint(
+    var live = cuts(e0)
+    var verts = cuts(
       edges.select(col("src").as("id"))
-        .unionByName(edges.select(col("dst").as("id"))).distinct(),
-      eager = false)
+        .unionByName(edges.select(col("dst").as("id"))).distinct())
     var nLive = verts.count()
     def small(df: DataFrame): DataFrame =
       if (nLive <= broadcastCeiling) broadcast(df) else df.hint("shuffle_hash")
-    var acc = verts.where(lit(false)).select(col("id"), col("id").as("scc_id"))
-    var releaseAcc: () => Unit = () => ()
+    val acc = new Accumulated(cuts,
+      verts.where(lit(false)).select(col("id"), col("id").as("scc_id")))
     var rounds = 0
     while (nLive > 0 && rounds < maxRounds) {
       rounds += 1
@@ -1356,28 +1334,23 @@ object GraphAlgorithms {
       while (trimming && nLive > 0) {
         val hasOut = live.select(col("src").as("id")).distinct()
         val hasIn = live.select(col("dst").as("id")).distinct()
-        val (keep, releaseKeep) = trackedCheckpoint(
+        val keep = cuts(
           verts.join(small(hasOut), Seq("id"), "left_semi")
-            .join(small(hasIn), Seq("id"), "left_semi"),
-          eager = false)
+            .join(small(hasIn), Seq("id"), "left_semi"))
         val nKeep = keep.count()
         phaseProbe(s"round=$rounds trim nLive=$nLive nKeep=$nKeep")
-        if (nKeep == nLive) { trimming = false; releaseKeep() }
+        if (nKeep == nLive) { trimming = false; cuts.drop(keep) }
         else {
-          val (acc2, releaseAcc2) = trackedCheckpoint(
-            acc.unionByName(verts.join(small(keep), Seq("id"), "left_anti")
-              .select(col("id"), col("id").as("scc_id"))),
-            eager = true)
-          releaseAcc(); acc = acc2; releaseAcc = releaseAcc2
-          val (live2, releaseLive2) = trackedCheckpoint(
+          acc.add(verts.join(small(keep), Seq("id"), "left_anti")
+            .select(col("id"), col("id").as("scc_id")))
+          val live2 = cuts(
             live.join(small(keep.select(col("id").as("kid"))),
                 live("src") === col("kid"), "left_semi")
               .join(small(keep.select(col("id").as("kid2"))),
-                live("dst") === col("kid2"), "left_semi"),
-            eager = false)
+                live("dst") === col("kid2"), "left_semi"))
           live2.count() // materialize before freeing the inputs it reads
-          releaseLive(); live = live2; releaseLive = releaseLive2
-          releaseVerts(); verts = keep; releaseVerts = releaseKeep
+          cuts.drop(live); live = live2
+          cuts.drop(verts); verts = keep
           nLive = nKeep
         }
       }
@@ -1391,8 +1364,7 @@ object GraphAlgorithms {
         // ceiling too (shuffle-hash all the way down). `prev` carries the
         // round's STARTING color through every layer (own rows only), so
         // changed = 0 still certifies a true fixpoint of one step.
-        var (color, releaseColor) = trackedCheckpoint(
-          verts.withColumn("color", col("id")), eager = false)
+        var color = cuts(verts.withColumn("color", col("id")))
         var changed = 1L
         while (changed > 0) {
           var cur = color.withColumn("prev", col("color"))
@@ -1405,33 +1377,28 @@ object GraphAlgorithms {
               .groupBy(col("id"))
               .agg(min(col("color")).as("color"), min(col("prev")).as("prev"))
           }
-          val (next, releaseNext) = trackedCheckpoint(cur, eager = false)
+          val next = cuts(cur)
           changed = next.where(col("color") < col("prev")).count()
           phaseProbe(s"round=$rounds color changed=$changed")
-          releaseColor()
+          cuts.drop(color)
           color = next.select(col("id"), col("color"))
-          releaseColor = releaseNext
         }
         // ---- 3. backward BFS from all color roots over intra-color edges
-        val (ce, releaseCe) = trackedCheckpoint(
+        val ce = cuts(
           live.join(small(color.select(col("id").as("sid"), col("color").as("sc"))),
               live("src") === col("sid"))
             .join(small(color.select(col("id").as("did"), col("color").as("dc"))),
               live("dst") === col("did"))
             .where(col("sc") === col("dc"))
             .select(live("src").as("src"), live("dst").as("dst"),
-              col("sc").as("color")),
-          eager = false)
-        // `reached` is a SHALLOW union of checkpointed level frontiers
-        // (bfsDistances' visited pattern — no per-round re-checkpoint of
-        // the union, so each backward round costs exactly ONE job: the
-        // count that materializes the new level)
-        val backReleases = scala.collection.mutable.ListBuffer[() => Unit]()
-        val (roots, releaseRoots) = trackedCheckpoint(
+              col("sc").as("color")))
+        // `reached` is a SHALLOW union of cut level frontiers
+        // (bfsDistances' visited pattern — no per-round re-cut of the
+        // union, so each backward round costs exactly ONE job: the count
+        // that materializes the new level)
+        val roots = cuts(
           color.where(col("color") === col("id"))
-            .select(col("id"), col("color").as("root")),
-          eager = false)
-        backReleases += releaseRoots
+            .select(col("id"), col("color").as("root")))
         var reached = roots
         var frontier = roots
         var growing = true
@@ -1448,42 +1415,35 @@ object GraphAlgorithms {
               .select(col("src").as("id"), col("color").as("root")).distinct()
             hops = hops.unionByName(cand)
           }
-          val (nf, releaseNf) = trackedCheckpoint(
-            hops.distinct().join(reached.select("id"), Seq("id"), "left_anti"),
-            eager = false)
-          backReleases += releaseNf
+          val nf = cuts(
+            hops.distinct().join(reached.select("id"), Seq("id"), "left_anti"))
           val nNf = nf.count()
           phaseProbe(s"round=$rounds backward new=$nNf")
-          if (nNf == 0) growing = false
+          if (nNf == 0) { growing = false; cuts.drop(nf) }
           else { reached = reached.unionByName(nf); frontier = nf }
         }
-        releaseCe(); releaseColor()
+        cuts.drop(ce); cuts.drop(color)
         // ---- assign the swept SCCs and shrink the live subgraph
-        val (acc2, releaseAcc2) = trackedCheckpoint(
-          acc.unionByName(reached.select(col("id"), col("root").as("scc_id"))),
-          eager = true)
-        releaseAcc(); acc = acc2; releaseAcc = releaseAcc2
-        val (verts2, releaseVerts2) = trackedCheckpoint(
-          verts.join(small(reached.select(col("id"))), Seq("id"), "left_anti"),
-          eager = false)
-        val (live2, releaseLive2) = trackedCheckpoint(
+        acc.add(reached.select(col("id"), col("root").as("scc_id")))
+        val verts2 = cuts(
+          verts.join(small(reached.select(col("id"))), Seq("id"), "left_anti"))
+        val live2 = cuts(
           live.join(small(reached.select(col("id").as("rid"))),
               live("src") === col("rid"), "left_anti")
             .join(small(reached.select(col("id").as("rid2"))),
-              live("dst") === col("rid2"), "left_anti"),
-          eager = false)
+              live("dst") === col("rid2"), "left_anti"))
         nLive = verts2.count()
         live2.count()
-        backReleases.foreach(_()); releaseVerts(); releaseLive()
-        verts = verts2; releaseVerts = releaseVerts2
-        live = live2; releaseLive = releaseLive2
+        cuts.drop(reached); cuts.drop(verts); cuts.drop(live)
+        verts = verts2
+        live = live2
       }
     }
+    // a rejected call pins nothing: the scope frees every cut as it throws
     require(nLive == 0,
       s"SCC did not converge within $maxRounds rounds ($nLive vertices live)")
-    releaseVerts(); releaseLive()
-    // acc's final checkpoint stays pinned — the returned frame reads it
-    acc
+    // the scope frees the live subgraph; acc's final cut goes to the caller
+    cuts.keep(acc.rows)
   }
 
   /** Deterministic maximal independent set — Luby's classic parallel MIS
@@ -1508,24 +1468,22 @@ object GraphAlgorithms {
     * oracle provably covers convergence.
     */
   def misRounds(edges: DataFrame, maxRounds: Int = 64,
-      broadcastCeiling: Long = BroadcastVertexRows): (DataFrame, Int) = {
+      broadcastCeiling: Long = BroadcastVertexRows): (DataFrame, Int) =
+    Checkpoints.owned(edges.sparkSession) { cuts =>
     import org.apache.spark.sql.functions._
     import graft.pipeline.TextHash
     val e0 = edges.select(col("src"), col("dst"))
       .where(col("src") =!= col("dst"))
-    var (verts, releaseVerts) = trackedCheckpoint(
+    var verts = cuts(
       edges.select(col("src").as("id"))
-        .unionByName(edges.select(col("dst").as("id"))).distinct(),
-      eager = false)
-    var (live, releaseLive) = trackedCheckpoint(
+        .unionByName(edges.select(col("dst").as("id"))).distinct())
+    var live = cuts(
       e0.unionByName(e0.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct(),
-      eager = false)
+        .distinct())
     var nLive = verts.count()
     def small(df: DataFrame): DataFrame =
       if (nLive <= broadcastCeiling) broadcast(df) else df.hint("shuffle_hash")
-    var acc = verts.where(lit(false))
-    var releaseAcc: () => Unit = () => ()
+    val acc = new Accumulated(cuts, verts.where(lit(false)))
     var round = 0
     while (nLive > 0 && round < maxRounds) {
       round += 1
@@ -1536,39 +1494,49 @@ object GraphAlgorithms {
       val nbrMin = live.join(small(pr), live("src") === pr("id"))
         .groupBy(live("dst").as("id"))
         .agg(min(struct(col("p"), pr("id").as("nid"))).as("m"))
-      val (winners, releaseWinners) = trackedCheckpoint(
+      val winners = cuts(
         pr.join(nbrMin.select(col("id"), col("m")), Seq("id"), "left_outer")
           .where(col("m").isNull ||
             struct(col("p"), col("id").as("nid")) < col("m"))
-          .select(col("id")),
-        eager = false)
+          .select(col("id")))
       winners.count()
-      val (acc2, releaseAcc2) = trackedCheckpoint(
-        acc.unionByName(winners), eager = true)
-      releaseAcc(); acc = acc2; releaseAcc = releaseAcc2
+      acc.add(winners)
       // winners and their whole neighborhoods leave the live set
       val removed = winners.unionByName(
         live.join(small(winners.select(col("id").as("wid"))),
             live("src") === col("wid"), "left_semi")
           .select(col("dst").as("id"))).distinct()
-      val (verts2, releaseVerts2) = trackedCheckpoint(
-        verts.join(small(removed), Seq("id"), "left_anti"), eager = false)
-      val (live2, releaseLive2) = trackedCheckpoint(
+      val verts2 = cuts(verts.join(small(removed), Seq("id"), "left_anti"))
+      val live2 = cuts(
         live.join(small(removed.select(col("id").as("rid"))),
             live("src") === col("rid"), "left_anti")
           .join(small(removed.select(col("id").as("rid2"))),
-            live("dst") === col("rid2"), "left_anti"),
-        eager = false)
+            live("dst") === col("rid2"), "left_anti"))
       nLive = verts2.count()
       live2.count()
-      releaseWinners(); releaseVerts(); releaseLive()
-      verts = verts2; releaseVerts = releaseVerts2
-      live = live2; releaseLive = releaseLive2
+      cuts.drop(winners); cuts.drop(verts); cuts.drop(live)
+      verts = verts2
+      live = live2
     }
+    // a rejected call pins nothing: the scope frees every cut as it throws
     require(nLive == 0,
       s"MIS did not converge within $maxRounds rounds ($nLive vertices live)")
-    releaseVerts(); releaseLive()
-    (acc, round)
+    // the scope frees the live subgraph; acc's final cut goes to the caller
+    (cuts.keep(acc.rows), round)
+  }
+
+  /** A union grown round by round as eager cuts: each [[add]] cuts
+    * rows ∪ more and drops the superseded cut. The seed, an empty frame
+    * over a live relation, is never dropped.
+    */
+  private final class Accumulated(cuts: Checkpoints.Cuts, seed: DataFrame) {
+    private var cut: Option[DataFrame] = None
+    def rows: DataFrame = cut.getOrElse(seed)
+    def add(more: DataFrame): Unit = {
+      val next = cuts(rows.unionByName(more), eager = true)
+      cut.foreach(cuts.drop)
+      cut = Some(next)
+    }
   }
 
   /** Link prediction scores (the GDS alpha family, exact-integer members):
@@ -1699,17 +1667,19 @@ object GraphAlgorithms {
     */
   private def wedgePairs(edges: DataFrame, maxDegree: Long)
       : (DataFrame, DataFrame,
-         Seq[org.apache.spark.sql.Column] => DataFrame) = {
+         Seq[org.apache.spark.sql.Column] => DataFrame) =
+    Checkpoints.owned(edges.sparkSession) { cuts =>
     import org.apache.spark.sql.functions._
     val e0 = edges.select(col("src"), col("dst"))
       .where(col("src") =!= col("dst"))
-    // canonical undirected adjacency, symmetrized: (id, nbr) both ways
-    val und = e0.unionByName(e0.select(col("dst").as("src"), col("src").as("dst")))
+    // canonical undirected adjacency, symmetrized: (id, nbr) both ways;
+    // both cuts go to the caller, whose scores read them
+    val und = cuts.keep(cuts(e0
+      .unionByName(e0.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
-      .select(col("src").as("id"), col("dst").as("nbr"))
-      .localCheckpoint(true)
-    val deg = und.groupBy(col("id")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true)
+      .select(col("src").as("id"), col("dst").as("nbr")), eager = true))
+    val deg = cuts.keep(cuts(und.groupBy(col("id")).agg(count(lit(1)).as("deg")),
+      eager = true))
     // one pass over the |V| degree relation yields the broadcast gate AND
     // the hub-exclusion audit
     val Array(nVerts, nHubs) = deg
@@ -1769,68 +1739,66 @@ object GraphAlgorithms {
     val spark = edges.sparkSession
     import spark.implicits._
     require(rounds >= 0, "neighborhoodFunction needs rounds >= 0")
-    val (e, releaseE) = trackedCheckpoint(
-      edges.select(col("src"), col("dst")).where(col("src") =!= col("dst")),
-      eager = false)
-    val verts = e.select(col("src").as("id"))
-      .unionByName(e.select(col("dst").as("id"))).distinct()
-    // DENSE register layout — one row per vertex, 16 long columns (0 =
-    // register absent). A sparse (id, j, lb) relation is the oracle's
-    // natural shape but ships 16 candidate rows per edge per round; the
-    // dense row ships ONE, the merge is 16 codegen'd MAXes under a single
-    // |V|-key groupBy (map-side combinable), and the digest collapses to
-    // one aggregation with no per-vertex regrouping — measured ~2× on the
-    // sf0.1 graph.
-    val regCols = (0 until 16).map(k => s"r$k")
-    val seed = verts
-      .withColumn("x",
-        graft.pipeline.TextHash.h32(concat(lit("anf|"), col("id").cast("string"))))
-      .withColumn("j", expr("x % 16"))
-      .withColumn("y", expr("(x div 16) + 1"))
-      .withColumn("lb", expr("y & -y"))
-      .select(col("id") +: (0 until 16).map(k =>
-        when(col("j") === k, col("lb")).otherwise(lit(0L)).as(s"r$k")): _*)
-    def digest(state: DataFrame, h: Int): (Long, Long, Long, Long) = {
-      val present = regCols.map(c => s"(case when $c > 0 then 1 else 0 end)")
-        .mkString(" + ")
-      val harm = regCols.map(c =>
-        s"(case when $c = 0 then 4294967296 else 4294967296 div $c end)")
-        .mkString(" + ")
-      val r = state
-        .agg(sum(expr(present)).as("n_regs"),
-          sum(expr(regCols.mkString(" + "))).as("sum_lb"),
-          sum(expr(s"(172288 * 4294967296) div (1000 * ($harm))")).as("nf_est"))
-        .head()
-      def g(i: Int): Long = if (r.isNullAt(i)) 0L else r.getLong(i)
-      (h.toLong, g(0), g(1), g(2))
+    // the digests are driver values: every cut is dead once they are read
+    Checkpoints.owned(spark) { cuts =>
+      val e = cuts(
+        edges.select(col("src"), col("dst")).where(col("src") =!= col("dst")))
+      val verts = e.select(col("src").as("id"))
+        .unionByName(e.select(col("dst").as("id"))).distinct()
+      // DENSE register layout — one row per vertex, 16 long columns (0 =
+      // register absent). A sparse (id, j, lb) relation is the oracle's
+      // natural shape but ships 16 candidate rows per edge per round; the
+      // dense row ships ONE, the merge is 16 codegen'd MAXes under a single
+      // |V|-key groupBy (map-side combinable), and the digest collapses to
+      // one aggregation with no per-vertex regrouping — measured ~2× on the
+      // sf0.1 graph.
+      val regCols = (0 until 16).map(k => s"r$k")
+      val seed = verts
+        .withColumn("x",
+          graft.pipeline.TextHash.h32(concat(lit("anf|"), col("id").cast("string"))))
+        .withColumn("j", expr("x % 16"))
+        .withColumn("y", expr("(x div 16) + 1"))
+        .withColumn("lb", expr("y & -y"))
+        .select(col("id") +: (0 until 16).map(k =>
+          when(col("j") === k, col("lb")).otherwise(lit(0L)).as(s"r$k")): _*)
+      def digest(state: DataFrame, h: Int): (Long, Long, Long, Long) = {
+        val present = regCols.map(c => s"(case when $c > 0 then 1 else 0 end)")
+          .mkString(" + ")
+        val harm = regCols.map(c =>
+          s"(case when $c = 0 then 4294967296 else 4294967296 div $c end)")
+          .mkString(" + ")
+        val r = state
+          .agg(sum(expr(present)).as("n_regs"),
+            sum(expr(regCols.mkString(" + "))).as("sum_lb"),
+            sum(expr(s"(172288 * 4294967296) div (1000 * ($harm))")).as("nf_est"))
+          .head()
+        def g(i: Int): Long = if (r.isNullAt(i)) 0L else r.getLong(i)
+        (h.toLong, g(0), g(1), g(2))
+      }
+      var state = cuts(seed, eager = true)
+      // |V| never changes across rounds, so one count gates every round's
+      // broadcast. The dense row is ~17 longs, so the ceiling sits 8× under
+      // the (id, long) one — ~70 MB of broadcast at the cap.
+      val nVerts = state.count()
+      val bcast = nVerts <= BroadcastVertexRows / 8
+      val digests = collection.mutable.ArrayBuffer(digest(state, 0))
+      for (h <- 1 to rounds) {
+        val st = if (bcast) broadcast(state) else state
+        val cand = e.join(st, st("id") === e("dst"))
+          .select(e("src").as("id") +: regCols.map(c => st(c)): _*)
+        // lazy cut: the round's digest aggregation is the job that
+        // materializes it — one job per round instead of cut + digest
+        // (the AQE job floor, not shuffle volume, prices this loop)
+        val next = cuts(
+          state.unionByName(cand).groupBy(col("id"))
+            .agg(max(col(regCols.head)).as(regCols.head),
+              regCols.tail.map(c => max(col(c)).as(c)): _*))
+        digests += digest(next, h)
+        cuts.drop(state)
+        state = next
+      }
+      digests.toSeq.toDF("h", "n_regs", "sum_lb", "nf_est")
     }
-    var (state, release) = trackedCheckpoint(seed, eager = true)
-    // |V| never changes across rounds, so one count gates every round's
-    // broadcast. The dense row is ~17 longs, so the ceiling sits 8× under
-    // the (id, long) one — ~70 MB of broadcast at the cap.
-    val nVerts = state.count()
-    val bcast = nVerts <= BroadcastVertexRows / 8
-    val digests = collection.mutable.ArrayBuffer(digest(state, 0))
-    for (h <- 1 to rounds) {
-      val st = if (bcast) broadcast(state) else state
-      val cand = e.join(st, st("id") === e("dst"))
-        .select(e("src").as("id") +: regCols.map(c => st(c)): _*)
-      // lazy checkpoint: the round's digest aggregation is the job that
-      // materializes it — one job per round instead of checkpoint + digest
-      // (the AQE job floor, not shuffle volume, prices this loop)
-      val (next, releaseNext) = trackedCheckpoint(
-        state.unionByName(cand).groupBy(col("id"))
-          .agg(max(col(regCols.head)).as(regCols.head),
-            regCols.tail.map(c => max(col(c)).as(c)): _*),
-        eager = false)
-      digests += digest(next, h)
-      release()
-      state = next
-      release = releaseNext
-    }
-    release()
-    releaseE()
-    digests.toSeq.toDF("h", "n_regs", "sum_lb", "nf_est")
   }
 
   /** Degree-assortativity moment sums (Newman, PRL 89 2002 "Assortative
@@ -1897,18 +1865,18 @@ object GraphAlgorithms {
     * rust-graph-db has no mixing-statistics surface (SURVEY §2
     * beyond-reference set).
     */
-  def reciprocityInvariants(edges: DataFrame): DataFrame = {
+  def reciprocityInvariants(edges: DataFrame): DataFrame =
+    Checkpoints.owned(edges.sparkSession) { cuts =>
     import org.apache.spark.sql.functions._
-    val d = edges.select(col("src"), col("dst"))
-      .where(col("src") =!= col("dst")).distinct()
-      .localCheckpoint(true)
+    val d = cuts(edges.select(col("src"), col("dst"))
+      .where(col("src") =!= col("dst")).distinct(), eager = true)
     val rev = d.select(col("dst").as("src"), col("src").as("dst"),
       lit(1).as("has_rev"))
-    d.join(rev, Seq("src", "dst"), "left")
+    cuts.keep(d.join(rev, Seq("src", "dst"), "left")
       .agg(count(lit(1)).cast("long").as("n_edges"),
         count(col("has_rev")).cast("long").as("n_recip"))
       .select(col("n_edges"), col("n_recip"),
-        expr("(1000000 * n_recip) div n_edges").as("ratio_ppm"))
+        expr("(1000000 * n_recip) div n_edges").as("ratio_ppm")))
   }
 
   /** Newman modularity invariants of the [[labelPropagation]] communities
@@ -1931,21 +1899,15 @@ object GraphAlgorithms {
     * surface (SURVEY §2 beyond-reference set).
     */
   def modularityInvariants(edges: DataFrame, iters: Int = 4,
-      broadcastCeiling: Long = BroadcastVertexRows): DataFrame = {
-    // everything inside — the LPA partition (ALL its round checkpoints,
-    // which register in getPersistentRDDs at creation, before the digest
-    // call's own snapshot) AND the digest's closure — is dead the moment
-    // the one-row digest is on the driver (r13 VERDICT hygiene ask):
-    // sweep the full delta this call created, so zero blocks survive
-    val spark = edges.sparkSession
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val theirs = graft.util.Checkpoints.idsOf(edges)
-    try modularityDigestOf(edges,
-      labelPropagation(edges, iters, broadcastCeiling), broadcastCeiling)
-    finally graft.util.Checkpoints.release(spark,
-      sc.getPersistentRDDs.keySet -- before -- theirs)
-  }
+      broadcastCeiling: Long = BroadcastVertexRows): DataFrame =
+    // everything inside — the LPA partition (ALL its round cuts, which
+    // its scope hands to this one) AND the digest's closure — is dead the
+    // moment the one-row digest is on the driver (r13 VERDICT hygiene
+    // ask): the scope frees every cut, so zero blocks survive
+    Checkpoints.owned(edges.sparkSession) { _ =>
+      modularityDigestOf(edges,
+        labelPropagation(edges, iters, broadcastCeiling), broadcastCeiling)
+    }
 
   /** The [[modularityInvariants]] digest for an ARBITRARY partition
     * `labels` (id, lbl) — shared by the LPA gate and the Louvain
@@ -1953,35 +1915,17 @@ object GraphAlgorithms {
     * closure identically. `labels` MUST cover the closure's vertex set
     * (checked loudly — a missing vertex would silently undercount m2 and
     * intra2, r13 ADVICE). The one-row digest is materialized internally
-    * and the closure checkpoint released before returning (the internal
-    * blocks never outlive the call); callers holding lazy label
-    * checkpoints keep them — only the delta this call creates is swept.
-    * The sweep's snapshot diff exempts only checkpoint (LogicalRDD)
-    * leaves: a caller-held `.cache()`/`persist()` on an input whose
-    * column buffers first MATERIALIZE inside this call's window is swept
-    * with the delta (silent recompute cost, never wrong answers) —
-    * callers keeping plain cached inputs must force them (e.g.
-    * `.count()`) before calling, or use localCheckpoint, which is
-    * exempt. Applies equally to [[louvainRefineOnce]] and
-    * [[louvainLevels]].
+    * and the closure cut freed before returning (the internal blocks
+    * never outlive the call); the caller's own label and edge blocks,
+    * cut or cached, are never touched.
     */
   def modularityDigestOf(edges: DataFrame, labels: DataFrame,
       broadcastCeiling: Long = BroadcastVertexRows): DataFrame = {
     val spark = edges.sparkSession
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    // the caller's label/edge blocks pin during our jobs; exclude anything
-    // those plans themselves read from the sweep so the caller can keep
-    // using its relations afterwards
-    val theirs =
-      graft.util.Checkpoints.idsOf(labels) ++ graft.util.Checkpoints.idsOf(edges)
-    try {
+    Checkpoints.owned(spark) { _ =>
       val digest = modularityDigestPlanOf(edges, labels, broadcastCeiling)
-      val schema = digest.schema
-      val rows = java.util.Arrays.asList(digest.head())
-      spark.createDataFrame(rows, schema)
-    } finally graft.util.Checkpoints.release(spark,
-      sc.getPersistentRDDs.keySet -- before -- theirs)
+      spark.createDataFrame(java.util.Arrays.asList(digest.head()), digest.schema)
+    }
   }
 
   /** The lazy digest plan behind [[modularityDigestOf]] — split out so
@@ -1993,7 +1937,7 @@ object GraphAlgorithms {
       labels: DataFrame, broadcastCeiling: Long): DataFrame = {
     import org.apache.spark.sql.functions._
     val und = undirectedClosure(edges)
-    val nVerts = labels.count() // materializes a lazy label checkpoint too
+    val nVerts = labels.count() // materializes a lazy label cut too
     // coverage precondition (r13 ADVICE): a labels relation missing any
     // closure vertex silently undercounts m2 (left-join degree sum) and
     // intra2 (inner joins drop unlabeled endpoints) — fail loudly instead
@@ -2023,17 +1967,17 @@ object GraphAlgorithms {
   }
 
   /** The undirected distinct non-loop closure every community statistic
-    * here votes/prices on — checkpointed: each caller reads it at least
-    * twice. Lazy (pins only once materialized); every public caller
-    * tracks and releases it before returning.
+    * here votes/prices on — cut: each caller reads it at least twice.
+    * Lazy (pins only once materialized); the cut goes to the enclosing
+    * scope, which every public caller opens.
     */
-  private def undirectedClosure(edges: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val e0 = edges.select("src", "dst").where(col("src") =!= col("dst"))
-    e0.unionByName(e0.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .localCheckpoint(false)
-  }
+  private def undirectedClosure(edges: DataFrame): DataFrame =
+    Checkpoints.owned(edges.sparkSession) { cuts =>
+      import org.apache.spark.sql.functions._
+      val e0 = edges.select("src", "dst").where(col("src") =!= col("dst"))
+      cuts.keep(cuts(e0.unionByName(e0.select(col("dst").as("src"), col("src").as("dst")))
+        .distinct()))
+    }
 
   /** Weighted sibling of [[undirectedClosure]] for [[louvainLevels]]'s
     * weighted entry: self-loops dropped, both directions emitted, and
@@ -2045,7 +1989,8 @@ object GraphAlgorithms {
     * contributes nothing but corrupts degree sums; negative breaks the
     * modularity gain's sign logic).
     */
-  private def weightedClosure(edges: DataFrame, weightCol: String): DataFrame = {
+  private def weightedClosure(edges: DataFrame, weightCol: String): DataFrame =
+    Checkpoints.owned(edges.sparkSession) { cuts =>
     import org.apache.spark.sql.functions._
     val raw = edges
       .select(col("src"), col("dst"), col(weightCol).as("w0"))
@@ -2071,10 +2016,9 @@ object GraphAlgorithms {
         s"or non-integral weight '$weightCol' — weighted modularity needs " +
         "positive LONGs")
     val e0 = raw.select(col("src"), col("dst"), col("w0").cast("long").as("w"))
-    e0.unionByName(e0.select(col("dst").as("src"), col("src").as("dst"),
+    cuts.keep(cuts(e0.unionByName(e0.select(col("dst").as("src"), col("src").as("dst"),
         col("w")))
-      .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
-      .localCheckpoint(false)
+      .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))))
   }
 
   /** One synchronous Louvain refinement sweep (Blondel et al. 2008 local
@@ -2095,45 +2039,30 @@ object GraphAlgorithms {
     * an equi-join on id or lbl with the |V|-sized label relation
     * broadcast-gated. m2 is the one driver-side scalar (the sanctioned
     * one-row collect class). Reference behavior: rust-graph-db has no
-    * community surface (SURVEY §2 beyond-reference set). Caller-cached
-    * (non-localCheckpoint) inputs must be materialized before the call —
-    * see the sweep caveat on [[modularityDigestOf]].
+    * community surface (SURVEY §2 beyond-reference set).
     */
   def louvainRefineOnce(edges: DataFrame, labels: DataFrame,
-      broadcastCeiling: Long = BroadcastVertexRows): DataFrame = {
-    val spark = edges.sparkSession
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val theirs =
-      graft.util.Checkpoints.idsOf(labels) ++ graft.util.Checkpoints.idsOf(edges)
-    var result: DataFrame = null
+      broadcastCeiling: Long = BroadcastVertexRows): DataFrame =
     // every internal block (closure, label pin, per-community edge counts)
-    // is dead once the refined partition is materialized; release them on
-    // success AND on every failure path (r13 VERDICT hygiene ask) — only
-    // the result's own checkpoint and the caller's label blocks survive
-    try {
-      result = louvainSweepPlan(edges, labels, broadcastCeiling)
-        .localCheckpoint(true) // eager: materialized before the sweep below
-      result
-    } finally {
-      val keep =
-        if (result == null) Set.empty[Int]
-        else graft.util.Checkpoints.idsOf(result)
-      graft.util.Checkpoints.release(spark,
-        sc.getPersistentRDDs.keySet -- before -- theirs -- keep)
+    // is dead once the refined partition is materialized; the scope frees
+    // them on success AND on every failure path (r13 VERDICT hygiene ask)
+    // — only the result's own cut and the caller's label blocks survive
+    Checkpoints.owned(edges.sparkSession) { cuts =>
+      cuts.keep(cuts(louvainSweepPlan(edges, labels, broadcastCeiling), eager = true))
     }
-  }
 
   /** The lazy one-sweep plan behind [[louvainRefineOnce]] — split out so
     * PlanAuditSpec can pin the distributed shape (equi-joins, per-vertex
     * window argmax) even though the public method hands back a
-    * materialized checkpoint with the internal blocks released.
+    * materialized cut with the internal blocks released. Its cuts go to
+    * the enclosing scope.
     */
   private[graft] def louvainSweepPlan(edges: DataFrame, labels: DataFrame,
-      broadcastCeiling: Long): DataFrame = {
+      broadcastCeiling: Long): DataFrame =
+    Checkpoints.owned(edges.sparkSession) { cuts =>
     import org.apache.spark.sql.functions._
     val und = undirectedClosure(edges)
-    val lbl = labels.select(col("id"), col("lbl")).localCheckpoint(false)
+    val lbl = cuts(labels.select(col("id"), col("lbl")))
     val nVerts = lbl.count()
     def small(df: DataFrame): DataFrame =
       if (nVerts <= broadcastCeiling) broadcast(df) else df.hint("shuffle_hash")
@@ -2148,10 +2077,9 @@ object GraphAlgorithms {
       "louvainRefineOnce: the undirected closure is empty — nothing to refine")
     val m2 = m2row.getLong(0)
     // edges from each vertex into each neighbor community
-    val kvc = und
+    val kvc = cuts(und // read twice: own-community row + candidates
       .join(small(lbl.select(col("id").as("dst"), col("lbl").as("c"))), "dst")
-      .groupBy(col("src").as("id"), col("c")).agg(count(lit(1)).as("k"))
-      .localCheckpoint(false) // read twice: own-community row + candidates
+      .groupBy(col("src").as("id"), col("c")).agg(count(lit(1)).as("k")))
     val base = lbl.select(col("id"), col("lbl").as("a"))
       .join(deg, Seq("id"), "left")
       .select(col("id"), col("a"), coalesce(col("kv"), lit(0L)).as("kv"))
@@ -2181,8 +2109,8 @@ object GraphAlgorithms {
       .select(col("id"), bitwise_not(col("m.nc")).as("moved"))
     // best is |movers|-bounded and ends the plan chain: broadcast-gating
     // it streams the |V|-sized lbl side unshuffled (r20, guide §2.4)
-    lbl.join(small(best), Seq("id"), "left")
-      .select(col("id"), coalesce(col("moved"), col("lbl")).as("lbl"))
+    cuts.keep(lbl.join(small(best), Seq("id"), "left")
+      .select(col("id"), coalesce(col("moved"), col("lbl")).as("lbl")))
   }
 
   /** Multi-level Louvain (Blondel et al. 2008, BOTH phases): each LEVEL
@@ -2218,7 +2146,7 @@ object GraphAlgorithms {
     * smaller (that collapse is the point of phase 2 — the 100 TB
     * argument). Per sweep: one map-side-combined (vertex, neighbor
     * community) aggregate, broadcast-gated |V_level|-sized label joins,
-    * one per-vertex window. All internal checkpoints are released on
+    * one per-vertex window. All internal cuts are freed on
     * success and failure; the returned partition is the one surviving
     * (eagerly materialized) block.
     *
@@ -2226,9 +2154,7 @@ object GraphAlgorithms {
     * vertices stay singletons, the g44 digest domain —, count of levels
     * that net-moved at least one vertex). Reference behavior:
     * rust-graph-db has no community surface (SURVEY §2
-    * beyond-reference set). Caller-cached (non-localCheckpoint) inputs
-    * must be materialized before the call — see the sweep caveat on
-    * [[modularityDigestOf]].
+    * beyond-reference set).
     *
     * `weightCol`: names a positive-LONG edge-weight column and switches
     * level 1 to the weighted closure (parallel edges sum; NULL/≤0 weights
@@ -2247,24 +2173,22 @@ object GraphAlgorithms {
     require(maxLevels >= 1 && sweepsPerLevel >= 1,
       "louvainLevels needs at least one level and one sweep per level")
     val spark = edges.sparkSession
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val theirs = graft.util.Checkpoints.idsOf(edges)
-    var result: DataFrame = null
-    var nLevels = 0
-    // lazy-checkpoint, then REBUILD the frame from the checkpointed RDD:
-    // LogicalRDD copies the origin plan's size ESTIMATE, and each sweep
-    // references its predecessor ~5 times, so estimates compound
-    // exponentially across sweeps — by sweep 6+ the PLANNER itself grinds
-    // in BigInteger multiplication (measured: bits triple per checkpoint
-    // generation, eager or lazy). Rebuilding resets the leaf estimate
-    // every generation; the broadcasts here are explicitly gated, so the
-    // lost estimate changes no join strategy.
-    def statsBarrier(df: DataFrame): DataFrame = {
-      val cp = df.localCheckpoint(false)
-      spark.createDataFrame(cp.rdd, cp.schema)
-    }
-    try {
+    // every internal cut is freed on success and failure; the result's
+    // eager cut is the one that goes to the caller
+    Checkpoints.owned(spark) { cuts =>
+      var nLevels = 0
+      // lazy cut, then REBUILD the frame from the cut RDD: LogicalRDD
+      // copies the origin plan's size ESTIMATE, and each sweep references
+      // its predecessor ~5 times, so estimates compound exponentially
+      // across sweeps — by sweep 6+ the PLANNER itself grinds in
+      // BigInteger multiplication (measured: bits triple per cut
+      // generation, eager or lazy). Rebuilding resets the leaf estimate
+      // every generation; the broadcasts here are explicitly gated, so
+      // the lost estimate changes no join strategy.
+      def statsBarrier(df: DataFrame): DataFrame = {
+        val cp = cuts(df)
+        spark.createDataFrame(cp.rdd, cp.schema)
+      }
       var sym = weightCol match {
         case None => undirectedClosure(edges)
           .select(col("src"), col("dst"), lit(1L).as("w"))
@@ -2288,8 +2212,8 @@ object GraphAlgorithms {
       var nextNVerts = -1L
       while (continue && level < maxLevels) {
         level += 1
-        val deg = sym.groupBy(col("src").as("id"))
-          .agg(sum(col("w")).as("kv")).localCheckpoint(false)
+        val deg = cuts(sym.groupBy(col("src").as("id"))
+          .agg(sum(col("w")).as("kv")))
         val nVerts =
           if (level == 1) {
             val r = deg.agg(count(lit(1)), sum(col("kv"))).head()
@@ -2334,9 +2258,8 @@ object GraphAlgorithms {
             val dc = lbl.join(deg, Seq("id"))
               .groupBy(col("lbl"))
               .agg(sum(col("kv")).as("dcs"), count(lit(1)).as("sz"))
-            val kvc = phaseKvcPlan(sym, phase,
-              small(lbl.select(col("id").as("dst"), col("lbl").as("c"))))
-              .localCheckpoint(false) // read twice: own-community + candidates
+            val kvc = cuts(phaseKvcPlan(sym, phase, // read twice: own-community + candidates
+              small(lbl.select(col("id").as("dst"), col("lbl").as("c")))))
             val base = lbl.select(col("id"), col("lbl").as("a"))
               .where(phaseOf === phase)
               .join(deg, Seq("id"))
@@ -2373,12 +2296,11 @@ object GraphAlgorithms {
             // count == best.count(). best is |movers|-bounded and sits at
             // the END of the phase chain, so its broadcast adds no stage
             // depth while the |V|-sized lbl side streams unshuffled. The
-            // checkpoint-rebuild keeps the statsBarrier estimate reset.
-            val appliedCp = lbl.join(small(best), Seq("id"), "left")
+            // cut-rebuild keeps the statsBarrier estimate reset.
+            val appliedCp = cuts(lbl.join(small(best), Seq("id"), "left")
               .select(col("id"),
                 coalesce(col("moved"), col("lbl")).as("lbl"),
-                col("moved").isNotNull.as("mv"))
-              .localCheckpoint(false)
+                col("moved").isNotNull.as("mv")))
             sweepMoved += appliedCp.where(col("mv")).count()
             lbl = spark.createDataFrame(appliedCp.rdd, appliedCp.schema)
               .select(col("id"), col("lbl"))
@@ -2411,14 +2333,7 @@ object GraphAlgorithms {
             .agg(sum(col("w")).as("w")))
         }
       }
-      result = flat.localCheckpoint(true) // eager: materialized pre-sweep
-      (result, nLevels)
-    } finally {
-      val keep =
-        if (result == null) Set.empty[Int]
-        else graft.util.Checkpoints.idsOf(result)
-      graft.util.Checkpoints.release(spark,
-        sc.getPersistentRDDs.keySet -- before -- theirs -- keep)
+      (cuts.keep(cuts(flat, eager = true)), nLevels)
     }
   }
 

@@ -5,6 +5,8 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
+import graft.util.Checkpoints
+
 /** Weighted single-source shortest paths on GraphX Pregel — the
   * cluster-scale counterpart of the reference's binary-heap Dijkstra
   * (/root/reference/src/algorithms/shortest_path.rs:77-141). Each superstep
@@ -54,14 +56,15 @@ object PregelSssp {
       maxIterations: Int = Int.MaxValue): DataFrame =
     withParents(spark, edges, srcId, maxIterations)._3
 
-  /** [[runWithParents]] as an eager local checkpoint. The RDDs the GraphX
-    * run cached are released once the checkpoint holds its rows, so the
-    * caller owns exactly the checkpoint: `Checkpoints.idsOf` reads its ids.
+  /** [[runWithParents]] as an eager cut. The RDDs the GraphX run cached
+    * are released once the cut holds its rows, so the caller owns exactly
+    * the cut: `Checkpoints.idsOf` reads its ids.
     */
   def parentsCheckpoint(spark: SparkSession, edges: DataFrame, srcId: Long,
-      maxIterations: Int = Int.MaxValue): DataFrame = {
+      maxIterations: Int = Int.MaxValue): DataFrame =
+    Checkpoints.owned(spark) { cuts =>
     val (source, result, parents) = withParents(spark, edges, srcId, maxIterations)
-    val cut = parents.localCheckpoint()
+    val cut = cuts.keep(cuts(parents, eager = true))
     cachedAbove(source, Seq(result.vertices, result.edges)).foreach(_.unpersist(blocking = false))
     cut
   }
@@ -139,13 +142,11 @@ object PregelSssp {
   def shortestPath(spark: SparkSession, edges: DataFrame, srcId: Long,
       dstId: Long, maxIterations: Int = Int.MaxValue): DataFrame = {
     // reconstruct's result is built from a driver-side Seq, so the parents
-    // snapshot is dead on return and released by its own ids (the GraphX
-    // run's cached RDDs went when it was made; doublingChain releases its
-    // rounds). Never a diff of the context's persisted set: that would also
-    // free what another session persists meanwhile.
-    val parents = parentsCheckpoint(spark, edges, srcId, maxIterations)
-    try reconstruct(parents, srcId, dstId)
-    finally graft.util.Checkpoints.release(spark, graft.util.Checkpoints.idsOf(parents))
+    // snapshot is dead on return and this scope frees it (the GraphX run's
+    // cached RDDs went when it was made; doublingChain frees its rounds)
+    Checkpoints.owned(spark) { _ =>
+      reconstruct(parentsCheckpoint(spark, edges, srcId, maxIterations), srcId, dstId)
+    }
   }
 
   /** Pointer-doubling reconstruction over a (id, dist, parent, hops)

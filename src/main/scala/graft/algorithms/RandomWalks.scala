@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.TextHash
+import graft.util.Checkpoints
 
 /** Deterministic hash-guided random walks — the DeepWalk / node2vec
   * sampling primitive (walk corpora feeding skip-gram style embedding
@@ -17,7 +18,7 @@ import graft.pipeline.TextHash
   *
   * Scale shape: walk state is one (start_id, walk, id) row per live walk —
   * O(|starts| * walksPerStart), never per-path arrays. Each step is ONE
-  * join of the immutable edge checkpoint against the walk frontier
+  * join of the immutable edge cut against the walk frontier
   * (count-gated broadcast with a shuffle fallback — a node2vec-scale
   * frontier of |V|*r walks exceeds the gate and shuffles on the vertex
   * key) plus ONE partial-aggregated argmin shuffle keyed (start_id, walk).
@@ -38,43 +39,44 @@ object RandomWalks {
     require(steps >= 0, "steps must be >= 0")
     require(walksPerStart >= 1, "walksPerStart must be >= 1")
     val spark = edges.sparkSession
-    val e = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst")).localCheckpoint(false)
-    val walkIds = spark.range(1, walksPerStart + 1L)
-      .select(col("id").cast("int").as("walk"))
-    var frontier = starts.select(col("id").cast("long").as("start_id"))
-      .distinct()
-      .crossJoin(broadcast(walkIds)) // |walksPerStart| rows — a constant
-      .select(col("start_id"), col("walk"), col("start_id").as("id"))
-      .localCheckpoint(false)
-    var out = frontier.withColumn("step", lit(0))
-    var live = frontier.count()
-    var step = 0
-    while (step < steps && live > 0) {
-      step += 1
-      val f = if (live <= maxBroadcastRows) broadcast(frontier) else frontier
-      // the per-(walk, step) draw: h32 over "start|walk|step|candidate" —
-      // identical text rendering in DuckDB (BIGINT/INT || coerce to the
-      // same decimal digits), so the oracle replays the exact choice
-      val cand = e.join(f, f("id") === e("src"))
-        .select(f("start_id"), f("walk"), e("dst"))
-        .withColumn("h", TextHash.h32(concat_ws("|",
-          col("start_id"), col("walk"), lit(step), col("dst"))))
-      // argmin via min(struct): ties (hash collisions between two
-      // neighbors of one walk) break to the smaller vertex id — total
-      // order, mirrored by the oracle's ORDER BY h, dst
-      val next = cand.groupBy(col("start_id"), col("walk"))
-        .agg(min(struct(col("h"), col("dst"))).as("m"))
-        .select(col("start_id"), col("walk"), col("m.dst").as("id"))
-        .localCheckpoint(false)
-      // ONE job per step: the count materializes the lazy checkpoint and
-      // decides both termination and the next broadcast gate
-      live = next.count()
-      out = out.unionByName(next.withColumn("step", lit(step)))
-      frontier = next
+    Checkpoints.owned(spark) { cuts =>
+      val e = cuts(edges.select(col("src").cast("long").as("src"),
+        col("dst").cast("long").as("dst")))
+      val walkIds = spark.range(1, walksPerStart + 1L)
+        .select(col("id").cast("int").as("walk"))
+      var frontier = cuts(starts.select(col("id").cast("long").as("start_id"))
+        .distinct()
+        .crossJoin(broadcast(walkIds)) // |walksPerStart| rows — a constant
+        .select(col("start_id"), col("walk"), col("start_id").as("id")))
+      var out = frontier.withColumn("step", lit(0))
+      var live = frontier.count()
+      var step = 0
+      while (step < steps && live > 0) {
+        step += 1
+        val f = if (live <= maxBroadcastRows) broadcast(frontier) else frontier
+        // the per-(walk, step) draw: h32 over "start|walk|step|candidate" —
+        // identical text rendering in DuckDB (BIGINT/INT || coerce to the
+        // same decimal digits), so the oracle replays the exact choice
+        val cand = e.join(f, f("id") === e("src"))
+          .select(f("start_id"), f("walk"), e("dst"))
+          .withColumn("h", TextHash.h32(concat_ws("|",
+            col("start_id"), col("walk"), lit(step), col("dst"))))
+        // argmin via min(struct): ties (hash collisions between two
+        // neighbors of one walk) break to the smaller vertex id — total
+        // order, mirrored by the oracle's ORDER BY h, dst
+        val next = cuts(cand.groupBy(col("start_id"), col("walk"))
+          .agg(min(struct(col("h"), col("dst"))).as("m"))
+          .select(col("start_id"), col("walk"), col("m.dst").as("id")))
+        // ONE job per step: the count materializes the lazy cut and
+        // decides both termination and the next broadcast gate
+        live = next.count()
+        out = out.unionByName(next.withColumn("step", lit(step)))
+        frontier = next
+      }
+      // the steps are materialized and read nothing of the edge cut, which
+      // the scope frees; the steps go to the caller
+      cuts.keep(out.select(col("start_id"), col("walk"), col("step"), col("id")))
     }
-    e.unpersist()
-    out.select(col("start_id"), col("walk"), col("step"), col("id"))
   }
 
   /** node2vec-biased hash walks (Grover & Leskovec, KDD 2016) — the
@@ -112,72 +114,72 @@ object RandomWalks {
     require(p >= 1 && q >= 1 && p.toLong * q <= 64L,
       s"node2vecWalks: p, q must be >= 1 with p*q <= 64, got ($p, $q)")
     val spark = edges.sparkSession
-    val e = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst")).localCheckpoint(false)
-    // the distance-1 membership side: distinct so a multi-edge cannot
-    // double a candidate's replica set
-    val adj = e.distinct().select(col("src").as("p_src"),
-      col("dst").as("p_dst")).localCheckpoint(false)
-    val walkIds = spark.range(1, walksPerStart + 1L)
-      .select(col("id").cast("int").as("walk"))
-    var frontier = starts.select(col("id").cast("long").as("start_id"))
-      .distinct()
-      .crossJoin(broadcast(walkIds))
-      .select(col("start_id"), col("walk"),
-        lit(null).cast("long").as("prev"), col("start_id").as("id"))
-      .localCheckpoint(false)
-    var out = frontier.select(col("start_id"), col("walk"),
-      lit(0).as("step"), col("id"))
-    var live = frontier.count()
-    var step = 0
-    while (step < steps && live > 0) {
-      step += 1
-      val f = if (live <= maxBroadcastRows) broadcast(frontier) else frontier
-      // distance-1 test, prev-confined (r18 bench finding: joining the
-      // candidates against the FULL distinct edge set shuffled |E| rows
-      // per step — 8.5 s vs g27's ~2 s at sf0.1). Only edges whose source
-      // is a live prev can mark a candidate, so semi-filter the edge set
-      // by the ≤|frontier| prev values first (broadcast-gated like the
-      // frontier join): the |E| relation is only SCANNED map-side, and
-      // the marker join runs against the slim slice (AQE sizes it).
-      val prevs = frontier.select(col("prev").as("p_src"))
-        .where(col("p_src").isNotNull).distinct()
-      val adjSlim = adj.join(
-        if (live <= maxBroadcastRows) broadcast(prevs) else prevs,
-        Seq("p_src"), "left_semi")
-      val cand = e.join(f, f("id") === e("src"))
-        .select(f("start_id"), f("walk"), f("prev"), f("id").as("cur"),
-          e("dst"))
-        // distance-1 marker: is (prev, dst) itself an edge?
-        .join(adjSlim,
-          col("prev") === col("p_src") && col("dst") === col("p_dst"),
-          "left")
-      // the scaled integer node2vec weights; step 1 (prev NULL) is the
-      // uniform draw. Order matters: dst == prev is distance 0 even when
-      // (prev, dst) is also an edge (a 2-cycle).
-      val weighted = cand.withColumn("wt",
-          when(col("prev").isNull, lit(1))
-            .when(col("dst") === col("prev"), lit(q))
-            .when(col("p_src").isNotNull, lit(p * q))
-            .otherwise(lit(p)))
-        .select(col("start_id"), col("walk"), col("cur"), col("dst"),
-          explode(sequence(lit(1), col("wt"))).as("r"))
-        .withColumn("h", TextHash.h32(concat_ws("|",
-          col("start_id"), col("walk"), lit(step), col("dst"), col("r"))))
-      val next = weighted.groupBy(col("start_id"), col("walk"))
-        .agg(min(struct(col("h"), col("dst"))).as("m"),
-          min(col("cur")).as("prev")) // cur is constant per (start, walk)
-        .select(col("start_id"), col("walk"), col("prev"),
-          col("m.dst").as("id"))
-        .localCheckpoint(false)
-      live = next.count()
-      out = out.unionByName(
-        next.select(col("start_id"), col("walk"), lit(step).as("step"),
-          col("id")))
-      frontier = next
+    Checkpoints.owned(spark) { cuts =>
+      val e = cuts(edges.select(col("src").cast("long").as("src"),
+        col("dst").cast("long").as("dst")))
+      // the distance-1 membership side: distinct so a multi-edge cannot
+      // double a candidate's replica set
+      val adj = cuts(e.distinct().select(col("src").as("p_src"),
+        col("dst").as("p_dst")))
+      val walkIds = spark.range(1, walksPerStart + 1L)
+        .select(col("id").cast("int").as("walk"))
+      var frontier = cuts(starts.select(col("id").cast("long").as("start_id"))
+        .distinct()
+        .crossJoin(broadcast(walkIds))
+        .select(col("start_id"), col("walk"),
+          lit(null).cast("long").as("prev"), col("start_id").as("id")))
+      var out = frontier.select(col("start_id"), col("walk"),
+        lit(0).as("step"), col("id"))
+      var live = frontier.count()
+      var step = 0
+      while (step < steps && live > 0) {
+        step += 1
+        val f = if (live <= maxBroadcastRows) broadcast(frontier) else frontier
+        // distance-1 test, prev-confined (r18 bench finding: joining the
+        // candidates against the FULL distinct edge set shuffled |E| rows
+        // per step — 8.5 s vs g27's ~2 s at sf0.1). Only edges whose source
+        // is a live prev can mark a candidate, so semi-filter the edge set
+        // by the ≤|frontier| prev values first (broadcast-gated like the
+        // frontier join): the |E| relation is only SCANNED map-side, and
+        // the marker join runs against the slim slice (AQE sizes it).
+        val prevs = frontier.select(col("prev").as("p_src"))
+          .where(col("p_src").isNotNull).distinct()
+        val adjSlim = adj.join(
+          if (live <= maxBroadcastRows) broadcast(prevs) else prevs,
+          Seq("p_src"), "left_semi")
+        val cand = e.join(f, f("id") === e("src"))
+          .select(f("start_id"), f("walk"), f("prev"), f("id").as("cur"),
+            e("dst"))
+          // distance-1 marker: is (prev, dst) itself an edge?
+          .join(adjSlim,
+            col("prev") === col("p_src") && col("dst") === col("p_dst"),
+            "left")
+        // the scaled integer node2vec weights; step 1 (prev NULL) is the
+        // uniform draw. Order matters: dst == prev is distance 0 even when
+        // (prev, dst) is also an edge (a 2-cycle).
+        val weighted = cand.withColumn("wt",
+            when(col("prev").isNull, lit(1))
+              .when(col("dst") === col("prev"), lit(q))
+              .when(col("p_src").isNotNull, lit(p * q))
+              .otherwise(lit(p)))
+          .select(col("start_id"), col("walk"), col("cur"), col("dst"),
+            explode(sequence(lit(1), col("wt"))).as("r"))
+          .withColumn("h", TextHash.h32(concat_ws("|",
+            col("start_id"), col("walk"), lit(step), col("dst"), col("r"))))
+        val next = cuts(weighted.groupBy(col("start_id"), col("walk"))
+          .agg(min(struct(col("h"), col("dst"))).as("m"),
+            min(col("cur")).as("prev")) // cur is constant per (start, walk)
+          .select(col("start_id"), col("walk"), col("prev"),
+            col("m.dst").as("id")))
+        live = next.count()
+        out = out.unionByName(
+          next.select(col("start_id"), col("walk"), lit(step).as("step"),
+            col("id")))
+        frontier = next
+      }
+      // the edge and membership cuts back nothing in the materialized steps
+      // and the scope frees them; the steps go to the caller
+      cuts.keep(out.select(col("start_id"), col("walk"), col("step"), col("id")))
     }
-    e.unpersist()
-    adj.unpersist()
-    out.select(col("start_id"), col("walk"), col("step"), col("id"))
   }
 }

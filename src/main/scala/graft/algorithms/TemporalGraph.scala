@@ -3,6 +3,8 @@ package graft.algorithms
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.util.Checkpoints
+
 /** Time-respecting graph analytics (beyond the reference — the temporal
   * dimension its event-log tables imply but its engine never exploits):
   * a path is time-respecting when each hop departs no earlier than the
@@ -92,54 +94,44 @@ object TemporalGraph {
     * equals running all k. Exact LONG arithmetic end to end.
     */
   def kReachableCounts(edges: DataFrame, sources: DataFrame, k: Int,
-      maxBroadcastRows: Long = Traversals.BroadcastFrontierRows): DataFrame = {
-    def tracked(df: DataFrame): (DataFrame, () => Unit) =
-      graft.util.Checkpoints.tracked(df, eager = false)
-    val (e, releaseE) = tracked(
-      edges.select(col("src"), col("dst"), col("t").cast("long").as("t"))
+      maxBroadcastRows: Long = Traversals.BroadcastFrontierRows): DataFrame =
+    Checkpoints.owned(edges.sparkSession) { cuts =>
+      val e = cuts(edges.select(col("src"), col("dst"), col("t").cast("long").as("t"))
         .where(col("src") =!= col("dst")))
-    val (srcs, releaseS) = tracked(sources.select(col("sid"),
-      col("t0").cast("long").as("t0"),
-      col("deadline").cast("long").as("deadline")))
-    var (visited, release) = tracked(
-      srcs.select(col("sid"), col("sid").as("id"), col("t0").as("arrival"))
-        .groupBy(col("sid"), col("id")).agg(min(col("arrival")).as("arrival")))
-    var frontier = visited
-    var changed = frontier.count()
-    var round = 0
-    // a Spark failure mid-loop must not strand the round's checkpoints
-    // (r12 ADVICE): release the outstanding thunks before rethrowing
-    try {
+      val srcs = cuts(sources.select(col("sid"),
+        col("t0").cast("long").as("t0"),
+        col("deadline").cast("long").as("deadline")))
+      var visited = cuts(
+        srcs.select(col("sid"), col("sid").as("id"), col("t0").as("arrival"))
+          .groupBy(col("sid"), col("id")).agg(min(col("arrival")).as("arrival")))
+      var frontier = visited
+      var changed = frontier.count()
+      var round = 0
       while (changed > 0 && round < k) {
         round += 1
         val f = if (changed <= maxBroadcastRows) broadcast(frontier) else frontier
         val cand = e.join(f, f("id") === e("src") && e("t") >= f("arrival"))
           .select(f("sid"), e("dst").as("id"), e("t").as("arrival"),
             lit(false).as("own"))
-        val (next, releaseNext) = tracked(
+        val next = cuts(
           cand.unionByName(visited.withColumn("own", lit(true)))
             .groupBy(col("sid"), col("id"))
             .agg(min(col("arrival")).as("arrival"),
               min(when(col("own"), col("arrival"))).as("prev")))
         val improved = next.where(col("prev").isNull || col("arrival") < col("prev"))
-        try changed = improved.count()
-        catch { case t: Throwable => releaseNext(); throw t }
-        release()
+        changed = improved.count()
+        cuts.drop(visited) // superseded round's blocks, now dead
         visited = next.select(col("sid"), col("id"), col("arrival"))
         frontier = improved.select(col("sid"), col("id"), col("arrival"))
-        release = releaseNext
       }
-    } catch { case t: Throwable =>
-      release(); releaseE(); releaseS(); throw t
+      val counts = visited.join(srcs.select(col("sid"), col("deadline")), "sid")
+        .where(col("arrival") <= col("deadline"))
+        .groupBy(col("sid")).agg(count(lit(1)).cast("long").as("n_reachable"))
+      // sources that reach nothing by their deadline still get a row (0);
+      // the edge cut is freed, the sources and final round go to the caller
+      cuts.keep(srcs.select(col("sid")).join(counts, Seq("sid"), "left")
+        .select(col("sid"), coalesce(col("n_reachable"), lit(0L)).as("n_reachable")))
     }
-    releaseE()
-    val counts = visited.join(srcs.select(col("sid"), col("deadline")), "sid")
-      .where(col("arrival") <= col("deadline"))
-      .groupBy(col("sid")).agg(count(lit(1)).cast("long").as("n_reachable"))
-    // sources that reach nothing by their deadline still get a row (0)
-    srcs.select(col("sid")).join(counts, Seq("sid"), "left")
-      .select(col("sid"), coalesce(col("n_reachable"), lit(0L)).as("n_reachable"))
-  }
 
   /** Fewest-hops temporal distance — the fourth classic temporal measure
     * (the "shortest path" of Wu et al.'s taxonomy, completing earliest
@@ -159,49 +151,39 @@ object TemporalGraph {
     * Output: (sid, id, hops) — sources themselves at hops 0.
     */
   def fewestHops(edges: DataFrame, sources: DataFrame, k: Int,
-      maxBroadcastRows: Long = Traversals.BroadcastFrontierRows): DataFrame = {
-    def tracked(df: DataFrame): (DataFrame, () => Unit) =
-      graft.util.Checkpoints.tracked(df, eager = false)
-    val (e, releaseE) = tracked(
-      edges.select(col("src"), col("dst"), col("t").cast("long").as("t"))
+      maxBroadcastRows: Long = Traversals.BroadcastFrontierRows): DataFrame =
+    Checkpoints.owned(edges.sparkSession) { cuts =>
+      val e = cuts(edges.select(col("src"), col("dst"), col("t").cast("long").as("t"))
         .where(col("src") =!= col("dst")))
-    val srcs = sources.select(col("sid"), col("t0").cast("long").as("t0"))
-    var (visited, release) = tracked(
-      srcs.select(col("sid"), col("sid").as("id"), col("t0").as("arrival"),
-          lit(0L).as("hops"))
-        .groupBy(col("sid"), col("id"))
-        .agg(min(col("arrival")).as("arrival"), min(col("hops")).as("hops")))
-    var frontier = visited
-    var changed = frontier.count()
-    var round = 0
-    // failure-path checkpoint release, same discipline as kReachableCounts
-    try {
+      val srcs = sources.select(col("sid"), col("t0").cast("long").as("t0"))
+      var visited = cuts(
+        srcs.select(col("sid"), col("sid").as("id"), col("t0").as("arrival"),
+            lit(0L).as("hops"))
+          .groupBy(col("sid"), col("id"))
+          .agg(min(col("arrival")).as("arrival"), min(col("hops")).as("hops")))
+      var frontier = visited
+      var changed = frontier.count()
+      var round = 0
       while (changed > 0 && round < k) {
         round += 1
         val f = if (changed <= maxBroadcastRows) broadcast(frontier) else frontier
         val cand = e.join(f, f("id") === e("src") && e("t") >= f("arrival"))
           .select(f("sid"), e("dst").as("id"), e("t").as("arrival"),
             lit(round.toLong).as("hops"), lit(false).as("own"))
-        val (next, releaseNext) = tracked(
+        val next = cuts(
           cand.unionByName(visited.withColumn("own", lit(true)))
             .groupBy(col("sid"), col("id"))
             .agg(min(col("arrival")).as("arrival"), min(col("hops")).as("hops"),
               min(when(col("own"), col("arrival"))).as("prev")))
         val improved = next.where(col("prev").isNull || col("arrival") < col("prev"))
-        try changed = improved.count()
-        catch { case t: Throwable => releaseNext(); throw t }
-        release()
+        changed = improved.count()
+        cuts.drop(visited)
         visited = next.select(col("sid"), col("id"), col("arrival"), col("hops"))
         frontier = improved.select(col("sid"), col("id"), col("arrival"),
           col("hops"))
-        release = releaseNext
       }
-    } catch { case t: Throwable =>
-      release(); releaseE(); throw t
+      cuts.keep(visited.select(col("sid"), col("id"), col("hops")))
     }
-    releaseE()
-    visited.select(col("sid"), col("id"), col("hops"))
-  }
 
   /** Fastest-path (minimum journey duration) sweep — the third classic
     * temporal distance beside [[earliestArrival]] and [[latestDeparture]]
@@ -255,19 +237,13 @@ object TemporalGraph {
       maxHops: Int = 64,
       maxBroadcastRows: Long = Traversals.BroadcastFrontierRows): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    def tracked(df: DataFrame): (DataFrame, () => Unit) =
-      graft.util.Checkpoints.tracked(df, eager = false)
-    val (e, releaseE) = tracked(
-      edges.select(col("src"), col("dst"), col("t").cast("long").as("t"),
+    // the up-front guards, the no-fixpoint require, and any Spark job
+    // failure free the edge and state cuts as the scope throws (r12/r13
+    // ADVICE — the guard row reads the edge cut)
+    Checkpoints.owned(edges.sparkSession) { cuts =>
+      val e = cuts(edges.select(col("src"), col("dst"), col("t").cast("long").as("t"),
           col("w").cast("long").as("w"))
         .where(col("src") =!= col("dst")))
-    var visited: DataFrame = null
-    var release: () => Unit = () => ()
-    // the up-front guards, the no-fixpoint require, and any Spark job
-    // failure must release the outstanding edge/state checkpoints before
-    // rethrowing (r12/r13 ADVICE — the guard row reads the checkpointed
-    // edge relation, so even IT sits inside the released scope)
-    try {
       // one bounded aggregate guards both input hazards loudly: negative
       // travel times (durations ill-defined) and NULL t/w (NULL arrivals
       // pass min()-based checks, then register as 'improved' every round
@@ -284,13 +260,11 @@ object TemporalGraph {
         s"fastestDurationsWeighted: negative travel time ${guard.getLong(1)} " +
           "— durations would be ill-defined")
       val srcs = sources.select(col("sid"))
-      val (seed, releaseSeed) = tracked(
+      var visited = cuts(
         e.join(srcs, e("src") === srcs("sid"))
           .select(col("sid"), col("t").as("dep")).distinct()
           .select(col("sid"), col("dep"), col("sid").as("id"),
             col("dep").as("arrival")))
-      visited = seed
-      release = releaseSeed
       var frontier = visited
       var changed = frontier.count()
       var round = 0
@@ -307,7 +281,7 @@ object TemporalGraph {
         val cand = e.join(f, f("id") === e("src") && e("t") >= f("arrival"))
           .select(f("sid"), f("dep"), e("dst").as("id"),
             (e("t") + e("w")).as("arrival"), lit(false).as("own"))
-        val (next, releaseNext) = tracked(
+        val next = cuts(
           cand.unionByName(visited.withColumn("own", lit(true)))
             .groupBy(col("sid"), col("dep"), col("id"))
             .agg(min(col("arrival")).as("arrival"),
@@ -318,20 +292,15 @@ object TemporalGraph {
               col("prev")))
         val improved =
           next.where(col("prev").isNull || col("arrival") < col("prev"))
-        try changed = improved.count()
-        catch { case t: Throwable => releaseNext(); throw t }
-        release()
+        changed = improved.count()
+        cuts.drop(visited)
         visited = next.select(col("sid"), col("dep"), col("id"), col("arrival"))
         frontier = improved.select(col("sid"), col("dep"), col("id"),
           col("arrival"))
-        release = releaseNext
       }
-    } catch { case t: Throwable =>
-      release(); releaseE(); throw t
+      cuts.keep(visited.groupBy(col("sid"), col("id"))
+        .agg(min(col("arrival") - col("dep")).as("duration")))
     }
-    releaseE()
-    visited.groupBy(col("sid"), col("id"))
-      .agg(min(col("arrival") - col("dep")).as("duration"))
   }
 
   /** Temporal closeness digest — the centrality read-off of
@@ -383,20 +352,16 @@ object TemporalGraph {
   private[graft] def earliestArrivalRounds(edges: DataFrame,
       sources: DataFrame, maxHops: Int = 64,
       maxBroadcastRows: Long = Traversals.BroadcastFrontierRows)
-      : (DataFrame, Int) = {
-    def tracked(df: DataFrame): (DataFrame, () => Unit) =
-      graft.util.Checkpoints.tracked(df, eager = false)
-    val (e, releaseE) = tracked(
-      edges.select(col("src"), col("dst"), col("t").cast("long").as("t"))
+      : (DataFrame, Int) =
+    Checkpoints.owned(edges.sparkSession) { cuts =>
+      val e = cuts(edges.select(col("src"), col("dst"), col("t").cast("long").as("t"))
         .where(col("src") =!= col("dst")))
-    var (visited, release) = tracked(sources
-      .select(col("id"), col("t0").cast("long").as("arrival"))
-      .groupBy(col("id")).agg(min(col("arrival")).as("arrival")))
-    var frontier = visited
-    var changed = frontier.count()
-    var rounds = 0
-    // failure-path checkpoint release (r12 ADVICE, same as fastestDurations)
-    try {
+      var visited = cuts(sources
+        .select(col("id"), col("t0").cast("long").as("arrival"))
+        .groupBy(col("id")).agg(min(col("arrival")).as("arrival")))
+      var frontier = visited
+      var changed = frontier.count()
+      var rounds = 0
       while (changed > 0) {
         rounds += 1
         require(rounds <= maxHops,
@@ -407,25 +372,19 @@ object TemporalGraph {
         // the new relation and the convergence filter
         val cand = e.join(f, f("id") === e("src") && e("t") >= f("arrival"))
           .select(e("dst").as("id"), e("t").as("arrival"), lit(false).as("own"))
-        val (next, releaseNext) = tracked(
+        val next = cuts(
           cand.unionByName(visited.withColumn("own", lit(true)))
             .groupBy(col("id"))
             .agg(min(col("arrival")).as("arrival"),
               min(when(col("own"), col("arrival"))).as("prev")))
         val improved = next.where(col("prev").isNull || col("arrival") < col("prev"))
-        try changed = improved.count() // materializes `next`
-        catch { case t: Throwable => releaseNext(); throw t }
-        release()                      // superseded round's blocks, now dead
+        changed = improved.count() // materializes `next`
+        cuts.drop(visited)         // superseded round's blocks, now dead
         visited = next.select(col("id"), col("arrival"))
         frontier = improved.select(col("id"), col("arrival"))
-        release = releaseNext
       }
-    } catch { case t: Throwable =>
-      release(); releaseE(); throw t
+      (cuts.keep(visited), rounds)
     }
-    releaseE()
-    (visited, rounds)
-  }
 
   /** Temporal stress centrality — the exact-integer member of the
     * temporal centrality family (the g25 stressCentrality argument
@@ -555,29 +514,26 @@ object TemporalGraph {
       sum(when(col("sid").isNull || col("t0").isNull, 1L).otherwise(0L))).head()
     if (!sGuard.isNullAt(0)) require(sGuard.getLong(0) == 0L,
       s"$name: ${sGuard.getLong(0)} source row(s) with NULL sid/t0")
-    def tracked(df: DataFrame): (DataFrame, () => Unit) =
-      graft.util.Checkpoints.tracked(df, eager = true)
+    // every internal cut (edge relation, levels, taus) is dead once the
+    // result is materialized below: the scope frees them on success and
+    // on any failure path; only the result's own block survives.
     // r20 (the Traversals/louvain/brandes fusion): per-level relations are
-    // checkpointed LAZILY and materialized by the count that immediately
-    // follows — one job where an eager checkpoint plus a count ran two
-    def trackedLazy(df: DataFrame): (DataFrame, () => Unit) =
-      graft.util.Checkpoints.tracked(df, eager = false)
-    val (e, releaseE) = tracked(
-      edges.select(col("src"), col("dst"), col("t").cast("long").as("t"))
-        .where(col("src") =!= col("dst")).distinct())
-    var releases: List[() => Unit] = List(releaseE)
-    try {
+    // cut LAZILY and materialized by the count that immediately follows —
+    // one job where an eager cut plus a count ran two
+    Checkpoints.owned(edges.sparkSession) { cuts =>
+      val e = cuts(
+        edges.select(col("src"), col("dst"), col("t").cast("long").as("t"))
+          .where(col("src") =!= col("dst")).distinct(), eager = true)
       def gate(df: DataFrame, rows: Long): DataFrame =
         if (rows <= maxBroadcastRows) broadcast(df) else df.hint("shuffle_hash")
       // forward: levels(h) = (sid, id, a, sigma), reached = (sid, id, d)
       // lazy: the dup-guard aggregate below is l0's first action and
       // materializes its blocks; l0.count() then reads the cache
-      val (l0, rel0) = trackedLazy(sources
+      val l0 = cuts(sources
         .select(col("sid").cast("long").as("sid"), col("t0").cast("long").as("t0"))
         .distinct()
         .select(col("sid"), col("sid").as("id"), col("t0").as("a"),
           lit(1L).as("sigma")))
-      releases ::= rel0
       // a sid seeded at two different t0 values would POOL its journey
       // counts (the forward groupBy merges the seeds' states and sums
       // sigma across start times) — neither per-seed run nor their sum;
@@ -596,19 +552,17 @@ object TemporalGraph {
         val (prev, prevRows) = levels.last
         val f = gate(prev, prevRows)
         // each hop is TWO jobs, not four: the counts materialize the lazy
-        // checkpoints (level states, then the newly-reached delta)
-        val (lh, relh) = trackedLazy(
+        // cuts (level states, then the newly-reached delta)
+        val lh = cuts(
           e.join(f, f("id") === e("src") && e("t") >= f("a"))
             .groupBy(f("sid"), e("dst").as("id"), e("t").as("a"))
             .agg(sum(f("sigma")).as("sigma")))
-        releases ::= relh
         levels :+= ((lh, lh.count()))
-        val (newly, reln) = trackedLazy(
+        val newly = cuts(
           lh.select(col("sid"), col("id")).distinct()
             .join(gate(reached.select(col("sid"), col("id")), reachedRows),
               Seq("sid", "id"), "left_anti")
             .withColumn("d", lit(h)))
-        releases ::= reln
         reachedRows += newly.count()
         reached = reached.unionByName(newly)
       }
@@ -624,12 +578,11 @@ object TemporalGraph {
             levels(hh)._1.select(col("sid"), col("id"), col("sigma"))
               .withColumn("h", lit(hh))
           }.reduce(_ unionByName _)
-          val (st, relSt) = trackedLazy(states
+          val st = cuts(states
             .join(gate(reached, reachedRows), Seq("sid", "id"))
             .where(col("h") === col("d"))
             .groupBy(col("sid"), col("id").as("wid"))
             .agg(sum(col("sigma")).cast("double").as("sigtot")))
-          releases ::= relSt
           Some((st, st.count()))
         }
       // backward: tau(h) keyed (sid, id, a); the deepest level's states
@@ -675,13 +628,12 @@ object TemporalGraph {
           else
             when(col("dw") === l + 1, lit(1.0) / col("sigtot"))
               .otherwise(0.0) + coalesce(col("wtau"), lit(0.0))
-        // ONE job per level: the count materializes the lazy checkpoint
-        // and yields the next gate's row count
-        val (tau, relt) = trackedLazy(withTau
+        // ONE job per level: the count materializes the lazy cut and
+        // yields the next gate's row count
+        val tau = cuts(withTau
           .select(col("sid"), col("vid"), col("a"), col("sigma"), m.as("m"))
           .groupBy(col("sid"), col("vid"), col("a"))
           .agg(sum(col("m")).as("tau"), max(col("sigma")).as("sigma")))
-        releases ::= relt
         val tRows = tau.count()
         contribs += tau.where(col("vid") =!= col("sid"))
           .select(col("vid").as("id"), (col("sigma") * col("tau")).as("c"))
@@ -695,16 +647,11 @@ object TemporalGraph {
         case Vector() => verts.limit(0).withColumn("c", zero)
         case cs => cs.reduce(_ unionByName _)
       }
-      val (result, _) = tracked(
+      cuts.keep(cuts(
         verts.join(agg.groupBy(col("id")).agg(sum(col("c")).as(outName)),
             Seq("id"), "left")
-          .select(col("id"), coalesce(col(outName), zero).as(outName)))
-      result
-    } finally {
-      // every internal checkpoint (edge relation, levels, taus) is dead
-      // once the result is materialized above — release on success and
-      // on any failure path; only the result's own block survives
-      releases.foreach(r => r())
+          .select(col("id"), coalesce(col(outName), zero).as(outName)),
+        eager = true))
     }
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructField, StructType}
 
 import graft.functions.ParamLiteral
+import graft.util.Checkpoints
 
 /** Edge direction for expansion, mirroring the reference's
   * Out/In/Both dispatch (/root/reference/src/executor/match_executor.rs:149-177).
@@ -37,7 +38,7 @@ object Direction {
   * BFS variable-length expansion (/root/reference/src/algorithms/vle.rs:85-153).
   *
   * Scale posture: each hop is one equi-join of the frontier against the
-  * (bucketable) edge table; frontiers are localCheckpoint'ed to cut lineage;
+  * (bucketable) edge table; frontiers are cut ([[Checkpoints]]) per hop;
   * no driver-side materialization of vertex sets. Loop termination reuses the
   * frontier count that also gates the join strategy: checkpointed relations
   * report no usable size stats, so we count the (already materialized)
@@ -65,12 +66,13 @@ object Traversals {
     */
   def bfsDistances(edges: DataFrame, sources: DataFrame, maxHops: Int,
       dir: Direction = Direction.Out,
-      maxBroadcastRows: Long = BroadcastFrontierRows): DataFrame = {
+      maxBroadcastRows: Long = BroadcastFrontierRows): DataFrame =
+    Checkpoints.owned(edges.sparkSession) { cuts =>
     // one materialization of the oriented edge set for all hops (lazy
-    // checkpoint: the first level's count writes its blocks)
-    val e = Direction.orient(edges, dir).select("src", "dst").localCheckpoint(false)
-    var visited = sources.select(col("id").cast("long").as("id"), lit(0).as("dist"))
-      .distinct().localCheckpoint(false)
+    // cut: the first level's count writes its blocks)
+    val e = cuts(Direction.orient(edges, dir).select("src", "dst"))
+    var visited = cuts(sources.select(col("id").cast("long").as("id"), lit(0).as("dist"))
+      .distinct())
     var frontier = visited
     var frontierRows = frontier.count()
     var hop = 0
@@ -80,11 +82,10 @@ object Traversals {
       // no edge shuffle. Large frontier → regular shuffle join; never force
       // a broadcast of an unbounded relation.
       val f = if (frontierRows <= maxBroadcastRows) broadcast(frontier) else frontier
-      val next = e.join(f, f("id") === e("src"))
+      val next = cuts(e.join(f, f("id") === e("src"))
         .select(e("dst").as("id")).distinct()
         .join(visited.select("id"), Seq("id"), "left_anti")
-        .withColumn("dist", lit(hop))
-        .localCheckpoint(false)
+        .withColumn("dist", lit(hop)))
       // ONE job per level: the count materializes the lazy checkpoint and
       // yields the loop condition
       frontierRows = next.count()
@@ -93,12 +94,9 @@ object Traversals {
       visited = visited.unionByName(next)
       frontier = next
     }
-    // the oriented edge checkpoint backs nothing in the result (levels are
-    // materialized) — release its blocks instead of pinning them for the
-    // session lifetime (Dataset.unpersist would only clear the cache
-    // manager, which never held them)
-    graft.util.Checkpoints.release(edges.sparkSession, graft.util.Checkpoints.idsOf(e))
-    visited
+    // the oriented edge cut backs nothing in the result (levels are
+    // materialized), so the scope frees it; the levels go to the caller
+    cuts.keep(visited)
   }
 
   /** Per-source BFS distances: like `bfsDistances`, but each source keeps
@@ -116,30 +114,28 @@ object Traversals {
     */
   def bfsDistancesPerSource(edges: DataFrame, sources: DataFrame, maxHops: Int,
       dir: Direction = Direction.Out,
-      maxBroadcastRows: Long = BroadcastFrontierRows): DataFrame = {
-    val e = Direction.orient(edges, dir).select("src", "dst").localCheckpoint(false)
-    var visited = sources.select(col("id").cast("long").as("start_id")).distinct()
-      .select(col("start_id"), col("start_id").as("id"), lit(0).as("dist"))
-      .localCheckpoint(false)
+      maxBroadcastRows: Long = BroadcastFrontierRows): DataFrame =
+    Checkpoints.owned(edges.sparkSession) { cuts =>
+    val e = cuts(Direction.orient(edges, dir).select("src", "dst"))
+    var visited = cuts(sources.select(col("id").cast("long").as("start_id")).distinct()
+      .select(col("start_id"), col("start_id").as("id"), lit(0).as("dist")))
     var frontier = visited
     var frontierRows = frontier.count()
     var hop = 0
     while (hop < maxHops && frontierRows > 0) {
       hop += 1
       val f = if (frontierRows <= maxBroadcastRows) broadcast(frontier) else frontier
-      val next = e.join(f, f("id") === e("src"))
+      val next = cuts(e.join(f, f("id") === e("src"))
         .select(f("start_id"), e("dst").as("id")).distinct()
         .join(visited.select("start_id", "id"), Seq("start_id", "id"), "left_anti")
-        .withColumn("dist", lit(hop))
-        .localCheckpoint(false)
+        .withColumn("dist", lit(hop)))
       // ONE job per level: materializes the lazy checkpoint and yields the
       // loop condition
       frontierRows = next.count()
       visited = visited.unionByName(next)
       frontier = next
     }
-    graft.util.Checkpoints.release(edges.sparkSession, graft.util.Checkpoints.idsOf(e))
-    visited
+    cuts.keep(visited)
   }
 
   /** BFS with deterministic predecessor tracking: returns
@@ -151,11 +147,12 @@ object Traversals {
     * memory at scale — parents are O(|V|)).
     */
   def bfsParents(edges: DataFrame, sources: DataFrame, maxHops: Int,
-      dir: Direction = Direction.Out, until: Option[Long] = None): DataFrame = {
-    val e = Direction.orient(edges, dir).select("src", "dst").localCheckpoint(false)
-    var visited = sources.select(col("id").cast("long").as("id"), lit(0).as("dist"),
+      dir: Direction = Direction.Out, until: Option[Long] = None): DataFrame =
+    Checkpoints.owned(edges.sparkSession) { cuts =>
+    val e = cuts(Direction.orient(edges, dir).select("src", "dst"))
+    var visited = cuts(sources.select(col("id").cast("long").as("id"), lit(0).as("dist"),
       lit(null).cast("long").as("parent"))
-      .distinct().localCheckpoint(false)
+      .distinct())
     var frontier = visited.select("id")
     var frontierRows = frontier.count()
     var found = false
@@ -163,13 +160,12 @@ object Traversals {
     while (hop < maxHops && frontierRows > 0 && !found) {
       hop += 1
       val f = if (frontierRows <= BroadcastFrontierRows) broadcast(frontier) else frontier
-      val next = e.join(f, f("id") === e("src"))
+      val next = cuts(e.join(f, f("id") === e("src"))
         // min-parent is a map-side-combinable aggregation — deterministic
         // and shuffle-light (one row per newly reached vertex)
         .groupBy(e("dst").as("id")).agg(min(e("src")).as("parent"))
         .join(visited.select("id"), Seq("id"), "left_anti")
-        .select(col("id"), lit(hop).as("dist"), col("parent"))
-        .localCheckpoint(false)
+        .select(col("id"), lit(hop).as("dist"), col("parent")))
       // ONE job per level: materializes the lazy checkpoint and yields both
       // the loop condition and the early-exit signal (the target id is a
       // code parameter, so another endpoint reuses the compiled level)
@@ -181,10 +177,9 @@ object Traversals {
       visited = visited.unionByName(next)
       frontier = next.select("id")
     }
-    // the levels are materialized: the oriented edge checkpoint backs
-    // nothing in the result (Dataset.unpersist would not free it)
-    graft.util.Checkpoints.release(edges.sparkSession, graft.util.Checkpoints.idsOf(e))
-    visited
+    // the levels are materialized: the oriented edge cut backs nothing
+    // in the result
+    cuts.keep(visited)
   }
 
   /** Full shortest path between two vertices: returns one row
@@ -201,15 +196,12 @@ object Traversals {
       dir: Direction = Direction.Out): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    // the result is a driver-side Seq, so every checkpoint made along the
-    // way is dead once it exists: bfsParents' levels and the parents
-    // snapshot are released here by the ids read off those frames
-    // (doublingChain releases its own rounds). Never a diff of the
-    // context's persisted set: that would also free what another session
-    // persists meanwhile.
-    val levels = bfsParents(edges, Seq(srcId).toDF("id"), maxHops, dir, Some(dstId))
-    val parents = levels.localCheckpoint()
-    val out = try {
+    // the result is a driver-side Seq, so every cut made along the way —
+    // bfsParents' levels, the parents snapshot, doublingChain's rounds —
+    // is dead once it exists, and the scope frees them all
+    val out = Checkpoints.owned(spark) { cuts =>
+      val levels = bfsParents(edges, Seq(srcId).toDF("id"), maxHops, dir, Some(dstId))
+      val parents = cuts(levels, eager = true)
       val endRow = parents.where(col("id") === ParamLiteral(dstId))
         .select("dist", "parent").collect()
       if (endRow.isEmpty) Seq.empty[(Long, Long, Int, Seq[Long])]
@@ -217,8 +209,7 @@ object Traversals {
         val dist = endRow(0).getInt(0)
         Seq((srcId, dstId, dist, doublingChain(parents, dstId, dist)))
       }
-    } finally graft.util.Checkpoints.release(spark,
-      graft.util.Checkpoints.idsOf(levels) ++ graft.util.Checkpoints.idsOf(parents))
+    }
     out.toDF("start_id", "end_id", "dist", "path")
   }
 
@@ -268,20 +259,6 @@ object Traversals {
     }
   }
 
-  /** Runs `body` with `cut`, a lazy localCheckpoint, and releases every
-    * checkpoint `cut` made when `body` returns: for searches whose answer is
-    * a driver value, so that all of them are dead by then. The ids are read
-    * off each checkpoint as it is made, never diffed from the context's
-    * persisted set, which would also free what another session persists
-    * meanwhile.
-    */
-  private def releasingCuts[T](spark: org.apache.spark.sql.SparkSession)(
-      body: (DataFrame => DataFrame) => T): T = {
-    val own = scala.collection.mutable.Set.empty[Int]
-    try body { df => val c = df.localCheckpoint(false); own ++= graft.util.Checkpoints.idsOf(c); c }
-    finally graft.util.Checkpoints.release(spark, own)
-  }
-
   /** Point-to-point shortest-path DISTANCE via bidirectional BFS — the
     * 100 TB point-query optimization the unidirectional sweep can't match:
     * two frontiers of depth ~d/2 (≈ b^(d/2) vertices each on a
@@ -316,7 +293,8 @@ object Traversals {
     val spark = edges.sparkSession
     import spark.implicits._
     var expanded = 0L
-    releasingCuts(spark) { cut =>
+    // the answer is a driver value: every cut is dead once it is known
+    Checkpoints.owned(spark) { cut =>
       val e = cut(Direction.orient(edges, dir).select("src", "dst"))
       var vF = cut(Seq(srcId).toDF("id").withColumn("dist", lit(0)))
       var vB = cut(Seq(dstId).toDF("id").withColumn("dist", lit(0)))
@@ -410,7 +388,8 @@ object Traversals {
     var expanded = 0L
     val spark = edges.sparkSession
     import spark.implicits._
-    releasingCuts(spark) { cut =>
+    // the answer is a driver value: every cut is dead once it is known
+    Checkpoints.owned(spark) { cut =>
       // Direction.orient drops non-id columns, so the weight rides an
       // inline orient (the Planner's weighted-shortestPath convention)
       val w0 = edges.select(col("src"), col("dst"),
@@ -508,11 +487,9 @@ object Traversals {
     if (pathLen <= 0) return Seq(dstId)
     val endDist = parents.where(col("id") === ParamLiteral(dstId))
       .select(col("dist")).head.get(0)
-    // every round's checkpoint is dead once the chain is collected
-    val rounds = Seq.newBuilder[DataFrame]
-    def round(df: DataFrame): DataFrame = { val c = df.localCheckpoint(false); rounds += c; c }
-    try {
-      // lazy checkpoints: flat plan, materialized by the final action
+    // every round's cut is dead once the chain is collected
+    Checkpoints.owned(spark) { round =>
+      // lazy cuts: flat plan, materialized by the final action
       var jump = round(parents
         .where(col("parent").isNotNull && col("dist") <= ParamLiteral(endDist))
         .select(col("id"), col("parent").as("anc")))
@@ -535,8 +512,7 @@ object Traversals {
       }
       // ONE final action collects the (pathLen+1)-row chain, src-first
       chain.orderBy(col("pos").desc).select(col("id")).as[Long].collect().toSeq
-    } finally graft.util.Checkpoints.release(spark,
-      rounds.result().flatMap(graft.util.Checkpoints.idsOf).toSet)
+    }
   }
 
   /** All simple paths between two vertices with length in [minLen, maxLen]
@@ -548,20 +524,18 @@ object Traversals {
       minLen: Int, maxLen: Int, dir: Direction = Direction.Out): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val sc = spark.sparkContext
-    // vle's per-level checkpoints back only the lazy result; once the
-    // eager snapshot below materializes they are lineage-dead and released
-    // here (r6 audit). The snapshot itself is caller-owned.
-    val before = sc.getPersistentRDDs.keySet
-    val lazyRes = vle(edges, Seq(srcId).toDF("id"), minLen, maxLen, dir)
-      .where(col("end_id") === dstId)
-    val vleInternals = sc.getPersistentRDDs.keySet -- before
-    val res = lazyRes.localCheckpoint()
-    graft.util.Checkpoints.release(spark, vleInternals)
-    if (res.isEmpty)
-      throw new NoSuchElementException(
-        s"no path of length [$minLen,$maxLen] from $srcId to $dstId")
-    res
+    // vle's per-level cuts back only the lazy result; once the eager
+    // snapshot below materializes they are lineage-dead and the scope
+    // frees them (r6 audit). The snapshot itself is caller-owned, unless
+    // the call throws.
+    Checkpoints.owned(spark) { cuts =>
+      val res = cuts(vle(edges, Seq(srcId).toDF("id"), minLen, maxLen, dir)
+        .where(col("end_id") === dstId), eager = true)
+      if (res.isEmpty)
+        throw new NoSuchElementException(
+          s"no path of length [$minLen,$maxLen] from $srcId to $dstId")
+      cuts.keep(res)
+    }
   }
 
   /** Shortest-path distance between two vertices; empty result if
@@ -594,48 +568,46 @@ object Traversals {
       dir: Direction = Direction.Out, maxPaths: Option[Int] = None): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    def done(res: DataFrame): DataFrame = {
-      val internals = sc.getPersistentRDDs.keySet -- before
-      val out = res.localCheckpoint()
-      graft.util.Checkpoints.release(spark, internals)
-      out
-    }
     if (srcId == dstId)
       return Seq((srcId, dstId, Seq(srcId))).toDF("start_id", "end_id", "path")
-    val e = Direction.orient(edges, dir).select("src", "dst").localCheckpoint(false)
-    val dists = bfsDistances(e, Seq(srcId).toDF("id"), maxHops, Direction.Out)
-      .localCheckpoint(false)
-    val lRow = dists.where(col("id") === dstId).select(col("dist")).take(1)
-    if (lRow.isEmpty)
-      return done(Seq.empty[(Long, Long, Seq[Long])].toDF("start_id", "end_id", "path"))
-    val L = lRow(0).getInt(0)
-    // the DAG keeps only optimal edges: |dag| <= |E|, usually far smaller
-    val du = dists.where(col("dist") < L)
-      .select(col("id").as("src"), col("dist").as("du"))
-    val dv = dists.where(col("dist") <= L && col("dist") > 0)
-      .select(col("id").as("dst"), col("dist").as("dv"))
-    // distinct: parallel edges (same src/dst, different edge identity) must
-    // not multiply VERTEX-sequence paths
-    val dag = e.join(du, "src").join(dv, "dst")
-      .where(col("dv") === col("du") + 1)
-      .select(col("src"), col("dst"), col("du")).distinct().localCheckpoint(false)
-    var paths = Seq((dstId, Seq(dstId))).toDF("head", "path")
-    var lvl = L
-    while (lvl > 0) {
-      val dagL = dag.where(col("du") === lvl - 1)
-      paths = dagL.join(paths, dagL("dst") === paths("head"))
-        .select(dagL("src").as("head"),
-          concat(array(dagL("src")), col("path")).as("path"))
-      // cap INSIDE the loop: a blowup is stopped at the level it happens,
-      // not after materializing the full cross product
-      maxPaths.foreach { k => paths = paths.orderBy(col("path")).limit(k) }
-      paths = paths.localCheckpoint(false)
-      lvl -= 1
+    // every cut below, bfsDistances' levels too, is dead once the eager
+    // snapshot of the paths exists; only the snapshot goes to the caller
+    Checkpoints.owned(spark) { cuts =>
+      val e = cuts(Direction.orient(edges, dir).select("src", "dst"))
+      val dists = cuts(bfsDistances(e, Seq(srcId).toDF("id"), maxHops, Direction.Out))
+      val lRow = dists.where(col("id") === dstId).select(col("dist")).take(1)
+      val res =
+        if (lRow.isEmpty) Seq.empty[(Long, Long, Seq[Long])].toDF("start_id", "end_id", "path")
+        else {
+          val L = lRow(0).getInt(0)
+          // the DAG keeps only optimal edges: |dag| <= |E|, usually far smaller
+          val du = dists.where(col("dist") < L)
+            .select(col("id").as("src"), col("dist").as("du"))
+          val dv = dists.where(col("dist") <= L && col("dist") > 0)
+            .select(col("id").as("dst"), col("dist").as("dv"))
+          // distinct: parallel edges (same src/dst, different edge identity) must
+          // not multiply VERTEX-sequence paths
+          val dag = cuts(e.join(du, "src").join(dv, "dst")
+            .where(col("dv") === col("du") + 1)
+            .select(col("src"), col("dst"), col("du")).distinct())
+          var paths = Seq((dstId, Seq(dstId))).toDF("head", "path")
+          var lvl = L
+          while (lvl > 0) {
+            val dagL = dag.where(col("du") === lvl - 1)
+            paths = dagL.join(paths, dagL("dst") === paths("head"))
+              .select(dagL("src").as("head"),
+                concat(array(dagL("src")), col("path")).as("path"))
+            // cap INSIDE the loop: a blowup is stopped at the level it happens,
+            // not after materializing the full cross product
+            maxPaths.foreach { k => paths = paths.orderBy(col("path")).limit(k) }
+            paths = cuts(paths)
+            lvl -= 1
+          }
+          paths.select(lit(srcId).as("start_id"), lit(dstId).as("end_id"),
+            col("path"))
+        }
+      cuts.keep(cuts(res, eager = true))
     }
-    done(paths.select(lit(srcId).as("start_id"), lit(dstId).as("end_id"),
-      col("path")))
   }
 
   /** Variable-length expansion: enumerate all simple paths (cycle-free, as
@@ -653,57 +625,61 @@ object Traversals {
     require(minLength >= 1 && maxLength >= minLength, "need 1 <= min <= max")
     require(!carryEdges || edges.columns.contains("id"),
       "carryEdges needs an `id` column on the edge relation")
-    val eCols = if (carryEdges) Seq("src", "dst", "id") else Seq("src", "dst")
-    val e = Direction.orient(edges, dir)
-      .select(eCols.head, eCols.tail: _*).localCheckpoint(false)
-    var frontier = starts.select(col("id").cast("long").as("start_id"))
-      .distinct()
-      .withColumn("end_id", col("start_id"))
-      .withColumn("path", array(col("start_id")))
-    if (carryEdges)
-      frontier = frontier.withColumn("epath", array().cast("array<long>"))
-    frontier = frontier.localCheckpoint(false)
-    var frontierRows = frontier.count()
-    var results: Option[DataFrame] = None
-    var resultRows = 0L
-    var len = 0
-    while (len < maxLength && frontierRows > 0 &&
-        maxPaths.forall(k => resultRows < k)) {
-      len += 1
-      // path rows are wider than (id,dist) — lower broadcast ceiling; a
-      // large path frontier falls back to a shuffle join
-      val f = if (frontierRows <= BroadcastPathRows) broadcast(frontier) else frontier
-      val stepCols =
-        Seq(col("start_id"), e("dst").as("end_id"),
-          concat(col("path"), array(e("dst"))).as("path")) ++
-          (if (carryEdges) Seq(concat(col("epath"), array(e("id"))).as("epath")) else Nil)
-      frontier = e.join(f, f("end_id") === e("src"))
-        .where(!array_contains(col("path"), e("dst")))
-        .select(stepCols: _*)
-        .localCheckpoint(false)
-      // ONE job per level: materializes the lazy checkpoint, yields the
-      // loop/broadcast/maxPaths bookkeeping
-      frontierRows = frontier.count()
-      if (len >= minLength) {
-        // shallow union of checkpointed levels — not re-checkpointed
-        val withLen = frontier.withColumn("len", lit(len))
-        results = Some(results.map(_.unionByName(withLen)).getOrElse(withLen))
-        // maxPaths orders by (len, path): levels arrive in len order, so
-        // once k paths exist no longer level can displace them — stop
-        // enumerating instead of exhausting the (worst-case exponential)
-        // search space like the reference's max_paths option (vle.rs:124-127)
-        resultRows += frontierRows
+    Checkpoints.owned(edges.sparkSession) { cuts =>
+      val eCols = if (carryEdges) Seq("src", "dst", "id") else Seq("src", "dst")
+      val e = cuts(Direction.orient(edges, dir)
+        .select(eCols.head, eCols.tail: _*))
+      var frontier = starts.select(col("id").cast("long").as("start_id"))
+        .distinct()
+        .withColumn("end_id", col("start_id"))
+        .withColumn("path", array(col("start_id")))
+      if (carryEdges)
+        frontier = frontier.withColumn("epath", array().cast("array<long>"))
+      frontier = cuts(frontier)
+      var frontierRows = frontier.count()
+      var results: Option[DataFrame] = None
+      var resultRows = 0L
+      var len = 0
+      while (len < maxLength && frontierRows > 0 &&
+          maxPaths.forall(k => resultRows < k)) {
+        len += 1
+        // path rows are wider than (id,dist) — lower broadcast ceiling; a
+        // large path frontier falls back to a shuffle join
+        val f = if (frontierRows <= BroadcastPathRows) broadcast(frontier) else frontier
+        val stepCols =
+          Seq(col("start_id"), e("dst").as("end_id"),
+            concat(col("path"), array(e("dst"))).as("path")) ++
+            (if (carryEdges) Seq(concat(col("epath"), array(e("id"))).as("epath")) else Nil)
+        frontier = cuts(e.join(f, f("end_id") === e("src"))
+          .where(!array_contains(col("path"), e("dst")))
+          .select(stepCols: _*))
+        // ONE job per level: materializes the lazy checkpoint, yields the
+        // loop/broadcast/maxPaths bookkeeping
+        frontierRows = frontier.count()
+        if (len >= minLength) {
+          // shallow union of checkpointed levels — not re-checkpointed
+          val withLen = frontier.withColumn("len", lit(len))
+          results = Some(results.map(_.unionByName(withLen)).getOrElse(withLen))
+          // maxPaths orders by (len, path): levels arrive in len order, so
+          // once k paths exist no longer level can displace them — stop
+          // enumerating instead of exhausting the (worst-case exponential)
+          // search space like the reference's max_paths option (vle.rs:124-127)
+          resultRows += frontierRows
+        }
       }
-    }
-    graft.util.Checkpoints.release(edges.sparkSession, graft.util.Checkpoints.idsOf(e))
-    val outCols = Seq(col("start_id"), col("end_id"), col("len"), col("path")) ++
-      (if (carryEdges) Seq(col("epath")) else Nil)
-    val all = results.getOrElse(
-      frontier.withColumn("len", lit(0)).limit(0))
-      .select(outCols: _*)
-    maxPaths match {
-      case Some(k) => all.orderBy(col("len"), col("path")).limit(k)
-      case None    => all
+      // the levels are materialized: the edge cut backs nothing in the
+      // result; every level goes to the caller
+      cuts.drop(e)
+      cuts.keepAll()
+      val outCols = Seq(col("start_id"), col("end_id"), col("len"), col("path")) ++
+        (if (carryEdges) Seq(col("epath")) else Nil)
+      val all = results.getOrElse(
+        frontier.withColumn("len", lit(0)).limit(0))
+        .select(outCols: _*)
+      maxPaths match {
+        case Some(k) => all.orderBy(col("len"), col("path")).limit(k)
+        case None    => all
+      }
     }
   }
 

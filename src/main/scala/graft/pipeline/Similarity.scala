@@ -8,6 +8,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions
+import graft.util.Checkpoints
 
 /** Embedding similarity search over an Array[Float] column.
   *
@@ -97,30 +98,30 @@ object Similarity {
       .select(col("cid").as("pid"), col("cvec").as("pvec"),
         col("cnorm").as("pnorm"))
     val w = Window.partitionBy(col("pid")).orderBy(col("sim").desc, col("cid"))
-    val pool = base.join(broadcast(probes), col("cid") =!= col("pid"))
-      .withColumn("sim",
-        dot(col("pvec"), col("cvec")) / (col("pnorm") * col("cnorm")))
-      .withColumn("prank", row_number().over(w))
-      .filter(col("prank") <= poolSize)
-      .select(col("pid"), col("cid"), col("sim"), col("cvec"), col("cnorm"))
-      .localCheckpoint(true)
-    val a = pool.select(col("pid"), col("cid").as("a"),
-      col("cvec").as("avec"), col("cnorm").as("anorm"))
-    val b = pool.select(col("pid").as("pid2"), col("cid").as("b"),
-      col("cvec").as("bvec"), col("cnorm").as("bnorm"))
-    val cc = a.join(b, a("pid") === b("pid2") && col("a") =!= col("b"))
-      .withColumn("s",
-        dot(col("avec"), col("bvec")) / (col("anorm") * col("bnorm")))
-      .select(col("pid"), col("a"), col("b"), col("s"))
-    val simq = pool.select(col("pid"), col("cid"), col("sim")).collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val pair = cc.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)) -> r.getDouble(3))
-      .toMap
-    // Dataset.unpersist would only clear CacheManager entries, not the
-    // localCheckpoint's persisted RDD (r12 ADVICE) — release the actual
-    // checkpoint blocks; everything below is driver-local
-    graft.util.Checkpoints.release(spark, graft.util.Checkpoints.idsOf(pool))
+    // the pool cut is dead once both collects are on the driver, and the
+    // scope frees it there (r12 ADVICE); everything below is driver-local
+    val (simq, pair) = Checkpoints.owned(spark) { cuts =>
+      val pool = cuts(base.join(broadcast(probes), col("cid") =!= col("pid"))
+        .withColumn("sim",
+          dot(col("pvec"), col("cvec")) / (col("pnorm") * col("cnorm")))
+        .withColumn("prank", row_number().over(w))
+        .filter(col("prank") <= poolSize)
+        .select(col("pid"), col("cid"), col("sim"), col("cvec"), col("cnorm")),
+        eager = true)
+      val a = pool.select(col("pid"), col("cid").as("a"),
+        col("cvec").as("avec"), col("cnorm").as("anorm"))
+      val b = pool.select(col("pid").as("pid2"), col("cid").as("b"),
+        col("cvec").as("bvec"), col("cnorm").as("bnorm"))
+      val cc = a.join(b, a("pid") === b("pid2") && col("a") =!= col("b"))
+        .withColumn("s",
+          dot(col("avec"), col("bvec")) / (col("anorm") * col("bnorm")))
+        .select(col("pid"), col("a"), col("b"), col("s"))
+      (pool.select(col("pid"), col("cid"), col("sim")).collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap,
+        cc.collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)) -> r.getDouble(3))
+          .toMap)
+    }
     val picks = for {
       p <- probeIds.sorted
       cands = simq.keys.collect { case (`p`, c) => c }.toSeq
@@ -356,12 +357,12 @@ object Similarity {
     * EAGER-EXECUTION NOTE (r17 ADVICE): because the guard digest must run
     * before the hazard it guards, CONSTRUCTING this DataFrame executes the
     * bucketing job (an EXPLAIN or dry-run registration is not free), and
-    * the returned plan reads a localCheckpoint that stays pinned until the
-    * harness sweep (Verify/Bench sweep getPersistentRDDs per query; a
-    * resident caller releases it once the result is collected/written:
+    * the returned plan reads a cut that stays pinned until the harness
+    * sweep (Verify/Bench sweep getPersistentRDDs per query; a resident
+    * caller releases it once the result is collected/written:
     * Checkpoints.release over the ids Checkpoints.idsOf reads off the
-    * result, less those of its inputs). A guard FAILURE releases the
-    * checkpoint before throwing — a rejected call leaks nothing.
+    * result, less those of its inputs). A guard FAILURE frees the cut as
+    * the scope throws — a rejected call leaks nothing.
     */
   def knnTopK(corpus: DataFrame, idCol: String, vecCol: String,
       k: Int, nPlanes: Int = 8, maxBucketSize: Long = 8192L): DataFrame = {
@@ -370,31 +371,30 @@ object Similarity {
     // pattern — r17 review): the guard digest plus both sides of the
     // self-join would otherwise recompute toDoubleArray + norm + the
     // plane dot products over the full corpus three times
-    val (bucketed, releaseBucketed) = graft.util.Checkpoints.tracked(
-      prepared(corpus, idCol, vecCol, "cid", "cvec", "cnorm")
-        .withColumn("bucket", lshBucket(col("cvec"), nPlanes)),
-      eager = true)
-    val maxN = try {
+    Checkpoints.owned(corpus.sparkSession) { cuts =>
+      val bucketed = cuts(
+        prepared(corpus, idCol, vecCol, "cid", "cvec", "cnorm")
+          .withColumn("bucket", lshBucket(col("cvec"), nPlanes)),
+        eager = true)
       val maxRow = bucketed.groupBy(col("bucket"))
         .agg(count(lit(1)).as("n")).agg(max(col("n"))).head()
-      if (maxRow.isNullAt(0)) 0L else maxRow.getLong(0)
-    } catch { case t: Throwable => releaseBucketed(); throw t }
-    if (maxN > maxBucketSize) releaseBucketed() // reject without leaking
-    require(maxN <= maxBucketSize,
-      s"knnTopK: largest LSH bucket holds $maxN vectors (> maxBucketSize " +
-        s"= $maxBucketSize) — the within-bucket join is |bucket|^2. Raise " +
-        "nPlanes (expected bucket size ~ n / 2^nPlanes) or raise " +
-        "maxBucketSize deliberately")
-    val probes = bucketed.select(col("cid").as("pid"),
-      col("cvec").as("pvec"), col("cnorm").as("pnorm"), col("bucket"))
-    val scored = bucketed.join(probes, Seq("bucket"))
-      .filter(col("cid") =!= col("pid"))
-      .withColumn("sim",
-        dot(col("pvec"), col("cvec")) / (col("pnorm") * col("cnorm")))
-    val w = Window.partitionBy(col("pid")).orderBy(col("sim").desc, col("cid"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("pid"), col("rank"), col("cid"), col("sim"))
+      val maxN = if (maxRow.isNullAt(0)) 0L else maxRow.getLong(0)
+      require(maxN <= maxBucketSize,
+        s"knnTopK: largest LSH bucket holds $maxN vectors (> maxBucketSize " +
+          s"= $maxBucketSize) — the within-bucket join is |bucket|^2. Raise " +
+          "nPlanes (expected bucket size ~ n / 2^nPlanes) or raise " +
+          "maxBucketSize deliberately")
+      val probes = bucketed.select(col("cid").as("pid"),
+        col("cvec").as("pvec"), col("cnorm").as("pnorm"), col("bucket"))
+      val scored = bucketed.join(probes, Seq("bucket"))
+        .filter(col("cid") =!= col("pid"))
+        .withColumn("sim",
+          dot(col("pvec"), col("cvec")) / (col("pnorm") * col("cnorm")))
+      val w = Window.partitionBy(col("pid")).orderBy(col("sim").desc, col("cid"))
+      cuts.keep(scored.withColumn("rank", row_number().over(w))
+        .filter(col("rank") <= k)
+        .select(col("pid"), col("rank"), col("cid"), col("sim")))
+    }
   }
 
   /** kNN-GRAPH construction — the standard bridge from an embedding

@@ -7,6 +7,7 @@ import graft.algorithms.Traversals
 import graft.functions.Aggregators
 import graft.model.Graphid
 import graft.store.{GraphStore, Tables}
+import graft.util.Checkpoints
 
 /** Coverage extensions: CUBE grouping sets, custom UDAFs, connected
   * components and fixed-point PageRank (all oracle-checked), plus the
@@ -801,32 +802,28 @@ object ExtraQueries {
     "x21_pagerank_crosscheck" -> ((s, dir) => {
       val g = GraphStore.tpch(s, dir)
       // eager: both PageRank variants consume the edge relation. The
-      // checkpoint's persistent-RDD delta is captured so the 2|E| blocks
-      // can be released HERE, after the one-row agreement count has been
-      // materialized — hosts that run queries without a Bench-style
-      // getPersistentRDDs sweep must not leak blocks per invocation. The
-      // count runs inside the builder (Bench times builder + count, so
-      // nothing escapes the timer); the returned literal row is the result.
-      val sc = s.sparkContext
-      val before = sc.getPersistentRDDs.keySet
-      val edges = g.allEdges.select(col("src"), col("dst")).localCheckpoint(true)
-      val mine = sc.getPersistentRDDs.keySet -- before
-      // the two variants are independent reads of the pinned edge
-      // checkpoint and each underfills the executor at this partition
-      // count, so they run CONCURRENTLY from two driver threads (Spark's
-      // documented multi-threaded job submission) — wall time is
-      // max(half, half), not the sum. Each half's top-20 is a bounded
-      // driver collect with a (rank desc, id) total order, so the
-      // intersection count is deterministic. The RDD-delta capture
-      // stays single-threaded: it closed over `mine` before the threads
-      // start, and the halves' own checkpoints are swept by the caller.
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(2,
-        (r: Runnable) => { val t = new Thread(r, "x21-half"); t.setDaemon(true); t })
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration._
-      val nAgree =
+      // scope frees its 2|E| blocks HERE, after the one-row agreement
+      // count has been materialized — hosts that run queries without a
+      // Bench-style getPersistentRDDs sweep must not leak blocks per
+      // invocation. The count runs inside the builder (Bench times
+      // builder + count, so nothing escapes the timer); the returned
+      // literal row is the result.
+      val nAgree = Checkpoints.owned(s) { cuts =>
+        val edges = cuts(g.allEdges.select(col("src"), col("dst")), eager = true)
+        // the two variants are independent reads of the pinned edge cut and
+        // each underfills the executor at this partition count, so they run
+        // CONCURRENTLY from two driver threads (Spark's documented
+        // multi-threaded job submission) — wall time is max(half, half), not
+        // the sum. Each half's top-20 is a bounded driver collect with a
+        // (rank desc, id) total order, so the intersection count is
+        // deterministic. The scope belongs to this thread only: the halves'
+        // own cuts are swept by the caller.
+        val pool = java.util.concurrent.Executors.newFixedThreadPool(2,
+          (r: Runnable) => { val t = new Thread(r, "x21-half"); t.setDaemon(true); t })
+        implicit val ec: scala.concurrent.ExecutionContext =
+          scala.concurrent.ExecutionContext.fromExecutorService(pool)
+        import scala.concurrent.{Await, Future}
+        import scala.concurrent.duration._
         try {
           val fStable = Future {
             graft.algorithms.GraphAlgorithms
@@ -842,11 +839,8 @@ object ExtraQueries {
           val (stableTop, gxTop) =
             (Await.result(fStable, 10.minutes), Await.result(fGx, 10.minutes))
           (stableTop intersect gxTop).size.toLong
-        } finally {
-          pool.shutdown()
-          mine.foreach(id =>
-            sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-        }
+        } finally pool.shutdown()
+      }
       s.range(1).select(lit(nAgree).as("n_agree"))
     }),
 

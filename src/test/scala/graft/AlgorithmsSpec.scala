@@ -335,11 +335,8 @@ class AlgorithmsSpec extends AnyFunSuite with SparkSuite {
     // the rejected call leaks NOTHING (r18 ADVICE): the round's sel,
     // the prior rounds' picked-edge checkpoints, the label relation,
     // and the edge relation are all released before the throw
-    val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet
-    val exR = intercept[IllegalArgumentException](run2(path, 1))
+    val exR = rejectsUnpinned[IllegalArgumentException](run2(path, 1))
     assert(exR.getMessage.contains("picking rounds"), exR.getMessage)
-    assert(spark.sparkContext.getPersistentRDDs.keySet == pinnedBefore,
-      "maxRounds rejection leaked persisted blocks")
   }
 
   private def run2(df: org.apache.spark.sql.DataFrame, maxRounds: Int) =
@@ -843,13 +840,10 @@ class AlgorithmsSpec extends AnyFunSuite with SparkSuite {
     // the no-fixpoint failure path must release every checkpoint it
     // created — the edge relation and the in-flight round state (r12
     // ADVICE): persistent-RDD count returns to its pre-call baseline
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val ex = intercept[IllegalArgumentException] {
+    val ex = rejectsUnpinned[IllegalArgumentException] {
       TemporalGraph.fastestDurations(e, Seq(1L).toDF("sid"), maxHops = 1)
     }
     assert(ex.getMessage.contains("no fixpoint"))
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(leaked.isEmpty, s"fastestDurations leaked checkpoints: $leaked")
   }
 
   test("temporal weighted durations: travel time trades off against waiting") {
@@ -1464,5 +1458,105 @@ class AlgorithmsSpec extends AnyFunSuite with SparkSuite {
     assert(GraphAlgorithms.effectiveDiameter(digests) == 2L)
     // a half-mass read-off: ceil(185/2) = 93 -> h = 1
     assert(GraphAlgorithms.effectiveDiameter(digests, (1L, 2L)) == 1L)
+  }
+
+  test("randomWalks and katzIndex leave pinned only what their results read") {
+    import graft.algorithms.RandomWalks
+    val g = Seq((1L, 2L), (1L, 3L), (2L, 4L), (3L, 4L), (4L, 1L), (4L, 5L))
+      .toDF("src", "dst")
+    // the edge (and node2vec's membership) cuts are freed, not left
+    // behind a no-op Dataset.unpersist
+    val calls = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "hashWalks" -> (() => RandomWalks.hashWalks(g, Seq(1L, 4L).toDF("id"), 4, 2)),
+      "node2vecWalks" -> (() =>
+        RandomWalks.node2vecWalks(g, Seq(1L, 4L).toDF("id"), 4, 2, p = 2, q = 3)),
+      // the chain's frontier dies at level 3 of 5: the empty last level
+      // is freed with the edge cut
+      "katzIndex" -> (() => GraphAlgorithms.katzIndex(
+        Seq((1L, 2L), (2L, 3L), (1L, 3L)).toDF("src", "dst"), 5, beta = 4L)))
+    calls.foreach { case (name, call) =>
+      val (out, leaked) = persistedBy { val o = call(); o.count(); o }
+      assert(leaked == graft.util.Checkpoints.idsOf(out),
+        s"$name left more than its result: $leaked")
+      graft.util.Checkpoints.release(spark, leaked)
+    }
+  }
+
+  test("rejected loop calls pin no blocks: SCC, MIS, kCore, kTruss, earliestArrival") {
+    import graft.algorithms.TemporalGraph
+    // two 2-cycles joined 2 -> 3: round 1 colors 3 and 4 with root 1, so
+    // only {1, 2} is swept and a second round is needed
+    val twoCycles = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 4L), (4L, 3L))
+      .toDF("src", "dst")
+    val exScc = rejectsUnpinned[IllegalArgumentException](
+      GraphAlgorithms.stronglyConnectedComponents(twoCycles, maxRounds = 1))
+    assert(exScc.getMessage.contains("SCC did not converge"), exScc.getMessage)
+    // MIS on a path: one round short of the Luby rounds it needs
+    val path = (1L until 16L).map(i => (i, i + 1)).toDF("src", "dst")
+    val (_, misNeeds) = GraphAlgorithms.misRounds(path)
+    assert(misNeeds >= 2, s"the path converges in $misNeeds round")
+    val exMis = rejectsUnpinned[IllegalArgumentException](
+      GraphAlgorithms.misRounds(path, maxRounds = misNeeds - 1))
+    assert(exMis.getMessage.contains("MIS did not converge"), exMis.getMessage)
+    // the path's 2-core is empty, peeled from both ends over several rounds
+    val exCore = rejectsUnpinned[IllegalArgumentException](
+      GraphAlgorithms.kCore(path, 2, maxRounds = 1))
+    assert(exCore.getMessage.contains("k-core did not converge"), exCore.getMessage)
+    // a triangle with a pendant edge: round 1 drops the pendant, round 2
+    // certifies the fixpoint — past maxRounds = 1, never a partial set
+    val pendant = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L)).toDF("src", "dst")
+    assert(GraphAlgorithms.kTruss(pendant, 3).count() == 3L)
+    val exTruss = rejectsUnpinned[IllegalArgumentException](
+      GraphAlgorithms.kTruss(pendant, 3, maxRounds = 1))
+    assert(exTruss.getMessage.contains("k-truss did not converge"), exTruss.getMessage)
+    // an ascending-time chain improves one vertex per round
+    val chain = Seq((1L, 2L, 1L), (2L, 3L, 2L), (3L, 4L, 3L)).toDF("src", "dst", "t")
+    val exArr = rejectsUnpinned[IllegalArgumentException](
+      TemporalGraph.earliestArrival(chain, Seq((1L, 0L)).toDF("id", "t0"), maxHops = 1))
+    assert(exArr.getMessage.contains("no fixpoint"), exArr.getMessage)
+  }
+
+  test("louvainLevels and kReachableCounts leave another party's persisted RDD alone") {
+    import graft.algorithms.TemporalGraph
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    // a second session on the same SparkContext, standing in as a
+    // listener that persists its own RDD when the call's first job starts
+    def whileAnotherPersists[A](body: => A): (A, org.apache.spark.rdd.RDD[Int], Boolean) = {
+      val other = sc.parallelize(1 to 4)
+      val callDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val duringCall = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val listener = new SparkListener {
+        private val first = new java.util.concurrent.atomic.AtomicBoolean(true)
+        override def onJobStart(js: SparkListenerJobStart): Unit =
+          if (first.getAndSet(false)) { other.persist(); duringCall.set(!callDone.get) }
+      }
+      org.apache.spark.GraftTestBus.drain(sc)
+      sc.addSparkListener(listener)
+      try {
+        val out = body
+        callDone.set(true)
+        org.apache.spark.GraftTestBus.drain(sc)
+        (out, other, duringCall.get)
+      } finally sc.removeSparkListener(listener)
+    }
+    val e = Seq((1L, 2L), (2L, 3L), (3L, 1L), (4L, 5L), (5L, 6L), (6L, 4L), (3L, 4L))
+      .toDF("src", "dst")
+    val te = Seq((1L, 2L, 10L), (2L, 3L, 20L), (1L, 3L, 50L), (3L, 4L, 60L))
+      .toDF("src", "dst", "t")
+    val calls = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "louvainLevels" -> (() => GraphAlgorithms.louvainLevels(e)._1),
+      "kReachableCounts" -> (() => TemporalGraph.kReachableCounts(te,
+        Seq((1L, 0L, 100L)).toDF("sid", "t0", "deadline"), 2)))
+    calls.foreach { case (name, call) =>
+      val ((out, other, duringCall), leaked) = persistedBy(whileAnotherPersists(call()))
+      assert(duringCall, s"$name: the other party persisted after the call")
+      assert(sc.getPersistentRDDs.contains(other.id),
+        s"$name released another party's persisted RDD")
+      assert(leaked - other.id == graft.util.Checkpoints.idsOf(out),
+        s"$name left more than its result: ${leaked - other.id}")
+      other.unpersist()
+      graft.util.Checkpoints.release(spark, leaked - other.id)
+    }
   }
 }

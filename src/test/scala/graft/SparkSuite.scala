@@ -2,15 +2,19 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.GraftTestBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskStart}
 import org.apache.spark.sql.SparkSession
+import org.scalactic.source.Position
+import org.scalatest.Assertions
 
 /** The spec session: the engine's one profile ([[Session]]) at a fixed
   * `local[4]`. All specs share it in one JVM, so whichever suite runs
   * first creates the same engine.
   */
-trait SparkSuite {
+trait SparkSuite { this: Assertions =>
 
   lazy val spark: SparkSession = Session(4)
 
@@ -64,5 +68,29 @@ trait SparkSuite {
         sc.removeSparkListener(listener)
       }
     (result, jobs.get, tasks.get)
+  }
+
+  /** `body`'s result and the ids of the RDDs persisted while it ran and
+    * still persisted after: what a call leaves pinned for its caller.
+    */
+  def persistedBy[A](body: => A): (A, Set[Int]) = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val result = body
+    (result, (sc.getPersistentRDDs.keySet -- before).toSet)
+  }
+
+  /** The `T` that `body` throws, once the context's persisted RDDs are
+    * checked to be exactly those it found: a rejected call pins nothing.
+    */
+  def rejectsUnpinned[T <: AnyRef](body: => Any)(
+      implicit ct: ClassTag[T], pos: Position): T = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val ex = intercept[T](body)
+    val after = sc.getPersistentRDDs.keySet
+    assert(after == before,
+      s"rejected call changed the persisted RDDs: +${after -- before} -${before -- after}")
+    ex
   }
 }

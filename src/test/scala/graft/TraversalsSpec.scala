@@ -112,7 +112,8 @@ class TraversalsSpec extends AnyFunSuite with SparkSuite {
     assert(ps == Set(
       Seq(idOf("A"), idOf("B"), idOf("E")),
       Seq(idOf("A"), idOf("C"), idOf("E"))))
-    intercept[NoSuchElementException] {
+    // the rejected call frees its own snapshot too
+    rejectsUnpinned[NoSuchElementException] {
       Traversals.pathsBetween(dag.edges("LINK"), idOf("D"), idOf("E"), 1, 3)
     }
   }
