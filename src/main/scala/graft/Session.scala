@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.sql.SparkSession
 
 /** The one engine session profile. Bench, Verify, the tools and every spec
@@ -71,7 +73,16 @@ object Session {
     .config("spark.sql.codegen.cache.maxEntries", "4096")
     .config("spark.ui.enabled", "false")
 
-  def apply(threads: Int = cpus): SparkSession = builder(threads).getOrCreate()
+  def apply(threads: Int = cpus): SparkSession = {
+    val spark = builder(threads).getOrCreate()
+    // Releasing a lineage cut (Checkpoints.release) unpersists a locally
+    // checkpointed MapPartitionsRDD, and RDD.unpersist warns about every
+    // such RDD under the subclass's logger: hundreds of expected lines per
+    // Verify run, printed on stderr among real errors. Only that logger is
+    // raised, after the context configured logging.
+    Configurator.setLevel("org.apache.spark.rdd.MapPartitionsRDD", Level.ERROR)
+    spark
+  }
 
   /** Per-gate cleanup between independent queries, outside any timer.
     * Unpersists every persisted RDD, blocking, so the next gate starts

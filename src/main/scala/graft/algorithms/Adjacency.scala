@@ -18,9 +18,11 @@ import org.apache.spark.unsafe.types.UTF8String
 /** One hash partition of a keyed index: `keys` are sorted and distinct, and
   * the rows of keys(i) are rows offsets(i) until offsets(i + 1). Row r is an
   * UnsafeRow of `fields` fields, packed at bytes(at(r) until at(r + 1)).
+  * `nulls` rows of the indexed table had a null key: counted here, in no
+  * key's rows.
   */
 final case class CsrBlock(keys: Array[Long], offsets: Array[Int], at: Array[Int],
-    bytes: Array[Byte], fields: Int) {
+    bytes: Array[Byte], fields: Int, nulls: Long = 0L) {
 
   /** Row `r`, read through `into` (which is returned). */
   def row(r: Int, into: UnsafeRow): UnsafeRow = {
@@ -35,12 +37,14 @@ final case class CsrBlock(keys: Array[Long], offsets: Array[Int], at: Array[Int]
 object CsrBlock {
 
   /** Counting sort of (key, UnsafeRow bytes) pairs into one block; a key's
-    * rows keep their input order.
+    * rows keep their input order. A pair without bytes is a row with a null
+    * key, only counted.
     */
   def of(rows: Iterator[(Long, Array[Byte])], fields: Int): CsrBlock = {
     val ks = mutable.ArrayBuilder.make[Long]
     val rs = mutable.ArrayBuffer[Array[Byte]]()
-    rows.foreach { case (k, r) => ks += k; rs += r }
+    var nulls = 0L
+    rows.foreach { case (k, r) => if (r == null) nulls += 1 else { ks += k; rs += r } }
     val key = ks.result()
     val sorted = key.clone()
     Arrays.sort(sorted)
@@ -60,7 +64,7 @@ object CsrBlock {
     val order = new Array[Int](key.length)
     var i = 0
     while (i < key.length) { order(next(slot(i))) = i; next(slot(i)) += 1; i += 1 }
-    pack(keys, offsets, order.iterator.map(rs), fields)
+    pack(keys, offsets, order.iterator.map(rs), fields).copy(nulls = nulls)
   }
 
   /** A block of `keys` whose rows, in order, are `rows`. */
@@ -260,7 +264,8 @@ object Adjacency {
 
   /** The rows of `table` keyed on its column `key` (one of the [[keyable]]
     * types), hash-partitioned into `partitions` blocks, built and sized by
-    * one job. Rows with a null key are left out: no equality matches them.
+    * one job. Rows with a null key are left out, since no equality matches
+    * them, and only counted ([[CsrBlock.nulls]]).
     * When the blocks' arrays take at most
     * `spark.sql.autoBroadcastJoinThreshold` bytes (Spark's bound for a
     * relation held whole on the driver) they are collected to it by one
@@ -282,9 +287,12 @@ object Adjacency {
     }
     val rows = source.mapPartitions { it =>
       lazy val unsafe = UnsafeProjection.create(schema)
-      it.filterNot(_.isNullAt(k)).map { r =>
-        val u = r match { case u: UnsafeRow => u; case other => unsafe(other) }
-        (keyOf(r.get(k, kt)), u.copy().getBytes)
+      it.map { r =>
+        if (r.isNullAt(k)) (0L, null: Array[Byte])
+        else {
+          val u = r match { case u: UnsafeRow => u; case other => unsafe(other) }
+          (keyOf(r.get(k, kt)), u.copy().getBytes)
+        }
       }
     }
     val blocks = rows.partitionBy(new HashPartitioner(partitions))

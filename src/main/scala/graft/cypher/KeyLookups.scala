@@ -51,6 +51,11 @@ private[cypher] final case class Bindings(fields: Vector[StructField],
   * DataFrame plan: `answer` returns None when no clause was answered yet,
   * and throws [[KeyLookups.Restart]] otherwise.
   *
+  * A statement the lookups answer only once its WHERE-equality anchors
+  * are moved into inline props ([[hoist]]) is planned in that form; a
+  * fallback then throws [[KeyLookups.Restart]] for the statement as
+  * written, so its DataFrame plan is the one it always had.
+  *
   * `read` gives a label table as the statement reads it (None for an
   * unknown label); `fresh` is the planner's variable namer, called in the
   * DataFrame plan's order.
@@ -69,19 +74,101 @@ private[cypher] final class KeyLookups(spark: SparkSession, params: Map[String, 
     */
   private var indexes: Option[Map[Index, KeyedIndex]] = None
 
+  /** Whether the statement is planned with its anchors hoisted. */
+  private var hoisted = false
+
   /** Decides, before `q` is planned, whether lookups answer its MATCH
-    * clauses. Every index they read is asked for first, so a missing one
-    * does not hide the others' use; the missing ones are built only when
-    * every one is present or due, so a statement that falls back builds
-    * none.
+    * clauses: the statement to plan, `q` with its WHERE-equality anchors
+    * hoisted when that form is answered, or None for the DataFrame plan of
+    * `q`.
     */
-  def prepare(q: Query): Boolean = {
+  def prepare(q: Query): Option[Query] = {
+    val h = hoist(q)
+    hoisted = (h ne q) && ready(h)
+    if (hoisted) Some(h) else Option.when(ready(q))(q)
+  }
+
+  /** Whether lookups answer the MATCH clauses of `q`. Every index they
+    * read is asked for first, so a missing one does not hide the others'
+    * use; the missing ones are built only when every one is present or
+    * due, so a statement that falls back builds none.
+    */
+  private def ready(q: Query): Boolean = {
     val needs = mutable.LinkedHashSet[Index]()
     if (bodies(q).forall(answerable(_, needs)) && needs.nonEmpty) {
       val got = needs.toSeq.map(n => n -> lookup(table(n.kind, n.label), n.key, n.walk))
       if (got.forall(_._2.isDefined)) indexes = Some(got.map { case (n, get) => n -> get.get() }.toMap)
     }
     indexes.isDefined
+  }
+
+  /** `q` with each WHERE-equality anchor moved into its node's inline
+    * props: in a non-OPTIONAL MATCH of a leading run of MATCH clauses (the
+    * only ones lookups answer), a top-level AND conjunct `v.p = lit` or
+    * `lit = v.p`, where `lit` is an integer or string literal or a non-null
+    * parameter, `v` is a node first bound in that MATCH, named once there,
+    * with one label and no inline props, and column `p` of its table is
+    * [[filterable]] by `lit`. A WHERE left with no conjunct goes. `q`
+    * itself when nothing moves.
+    */
+  private def hoist(q: Query): Query = {
+    var bound = Set.empty[String]
+    val lead = q.clauses.takeWhile(_.isInstanceOf[MatchClause]).collect { case m: MatchClause =>
+      val out = if (m.optional) m else m.where.fold(m)(w => anchor(m, conjuncts(w), bound))
+      bound ++= Planner.patternVars(m.patterns)
+      out
+    }
+    val rest = q.clauses.drop(lead.size).map {
+      case c: CallSubqueryClause => CallSubqueryClause(hoist(c.inner))
+      case c => c
+    }
+    val h = Query(lead ++ rest, q.union.map { case (all, next) => (all, hoist(next)) })
+    if (h == q) q else h
+  }
+
+  /** The top-level AND conjuncts of `e`, in order. */
+  private def conjuncts(e: Expr): Seq[Expr] = e match {
+    case Bin("AND", l, r) => conjuncts(l) ++ conjuncts(r)
+    case other => Seq(other)
+  }
+
+  /** `m` with those of its WHERE's conjuncts `cs` that anchor a node
+    * bound first in `m` (not in `before`) moved into its props.
+    */
+  private def anchor(m: MatchClause, cs: Seq[Expr], before: Set[String]): MatchClause = {
+    def nodes(pats: Seq[PathPat]): Seq[NodePat] = pats.flatMap(p => p.start +: p.hops.map(_._2))
+    var pats = m.patterns
+    val kept = cs.filterNot { c =>
+      val eq = c match {
+        case Bin("=", Prop(Variable(v), p), lit) => Some((v, p, lit))
+        case Bin("=", lit, Prop(Variable(v), p)) => Some((v, p, lit))
+        case _ => None
+      }
+      eq.exists { case (v, p, lit) =>
+        val ok = !before(v) && (nodes(pats).filter(_.variable.contains(v)) match {
+          case Seq(np) => np.props.isEmpty && np.labels.distinct.size == 1 && constant(lit) &&
+            read(VarKind.Node, np.labels.head).exists(t => filterable(t.schema, Seq(p -> lit)))
+          case _ => false
+        })
+        if (ok) pats = pats.map(place(_, v, p -> lit))
+        ok
+      }
+    }
+    if (kept.size == cs.size) m
+    else m.copy(patterns = pats, where = kept.reduceOption(Bin("AND", _, _)))
+  }
+
+  /** Whether `e` is an integer or string literal or a non-null parameter. */
+  private def constant(e: Expr): Boolean = e match {
+    case IntLit(_) | StrLit(_) => true
+    case Param(p) => params.get(p).exists(_ != null)
+    case _ => false
+  }
+
+  /** `pat` with inline prop `prop` on its node named `v`. */
+  private def place(pat: PathPat, v: String, prop: (String, Expr)): PathPat = {
+    def on(np: NodePat) = if (np.variable.contains(v)) np.copy(props = Seq(prop)) else np
+    pat.copy(start = on(pat.start), hops = pat.hops.map { case (r, n) => (r, on(n)) })
   }
 
   /** The clause lists of `q` planned each from an empty scope: its own,
@@ -137,7 +224,7 @@ private[cypher] final class KeyLookups(spark: SparkSession, params: Map[String, 
     } catch {
       case Fallback =>
         indexes = None
-        if (!held.isEmpty) throw Restart
+        if (!held.isEmpty || hoisted) throw Restart
         None
     }
   }
@@ -167,6 +254,51 @@ private[cypher] final class KeyLookups(spark: SparkSession, params: Map[String, 
           b.vars(v))
       })
       catch { case Fallback => None }
+    }
+  }
+
+  /** `CALL graft.degrees()` over the edge tables of `labels`, read off their
+    * `src` and `dst` indexes held on the driver: a key's rows in a `src`
+    * index are its out-edges and in a `dst` index its in-edges, so the
+    * blocks' offsets give the degrees without reading a row (the
+    * reference's count over `o:`/`i:` prefixes). The rows and schema of
+    * [[graft.algorithms.GraphAlgorithms.degrees]], per id summed over the
+    * labels, with its null-id rows for edges with a null source or a null
+    * target. None, for the DataFrame plan, when a table has a shape a
+    * lookup does not read, an index is persisted or neither exists nor may
+    * be built now (then none is built), or the rows pass `maxRows`.
+    */
+  def degrees(labels: Seq[String]): Option[DataFrame] = {
+    val tables = labels.map(l => usable(VarKind.Edge, l).map(_ => table(VarKind.Edge, l)))
+    val got = tables.flatten.flatMap(t => Seq("src", "dst").map(k => k -> lookup(t, k, false)))
+    if (labels.isEmpty || !tables.forall(_.isDefined) || !got.forall(_._2.isDefined)) None
+    else {
+      // in-degrees at 0 (the dst indexes), out-degrees at 1
+      val held = got.map { case (k, get) => (if (k == "dst") 0 else 1) -> get.get() }.collect {
+        case (side, KeyedIndex.OnDriver(blocks)) => side -> blocks
+      }
+      if (held.size < got.size) None
+      else {
+        val deg = mutable.LongMap.empty[Array[Long]]
+        val nulls = new Array[Long](2)
+        held.foreach { case (side, blocks) =>
+          blocks.foreach { b =>
+            var i = 0
+            while (i < b.keys.length) {
+              deg.getOrElseUpdate(b.keys(i), new Array[Long](2))(side) += b.offsets(i + 1) - b.offsets(i)
+              i += 1
+            }
+            nulls(side) += b.nulls
+          }
+        }
+        // the DataFrame plan's groups of null ids, which its join never pairs
+        val unkeyed = (if (nulls(1) > 0) Seq(Array[Any](null, 0L, nulls(1))) else Nil) ++
+          (if (nulls(0) > 0) Seq(Array[Any](null, nulls(0), 0L)) else Nil)
+        Option.when(deg.size + unkeyed.size <= maxRows) {
+          val rows = deg.iterator.map { case (id, d) => Array[Any](id, d(0), d(1)) } ++ unkeyed
+          GraftColumnBridge.localRows(spark, DegreesSchema, rows.map(new GenericInternalRow(_)).toVector)
+        }
+      }
     }
   }
 
@@ -588,6 +720,12 @@ private[cypher] final class KeyLookups(spark: SparkSession, params: Map[String, 
 private[cypher] object KeyLookups {
 
   private object Fallback extends scala.util.control.ControlThrowable
+
+  /** The schema of [[graft.algorithms.GraphAlgorithms.degrees]] over long
+    * ids: its full outer join makes the id nullable.
+    */
+  private val DegreesSchema = StructType(Seq(StructField("id", LongType),
+    StructField("in_degree", LongType, nullable = false), StructField("out_degree", LongType, nullable = false)))
 
   /** Thrown when a clause passes the row bound after another clause of the
     * statement was answered: the planner plans the statement again without

@@ -71,19 +71,21 @@ final class Planner(spark: SparkSession, store0: GraphStore,
         if (kind == VarKind.Node) st.vertexTables.get(l) else st.edgeTables.get(l)
       },
       fresh, lookup, lookupRows))
-    keyLookups = nodeLookups.filter(_.prepare(q))
+    val answerable = nodeLookups.flatMap(_.prepare(q))
+    keyLookups = nodeLookups.filter(_ => answerable.isDefined)
     val res =
-      try planQuery(q)
+      try planQuery(answerable.getOrElse(q))
       catch {
         case KeyLookups.Restart =>
-          // a clause passed the row bound after others were answered: the
-          // whole statement runs as the DataFrame plan
+          // a clause passed the row bound after others were answered, or
+          // the statement's hoisted form fell back: the statement as
+          // written runs as the DataFrame plan
           keyLookups = None
           anon = named
           planQuery(q)
       }
     // the rows lookups bound are on the driver: so is the rest of the read
-    if (keyLookups.exists(_.answered) || lookedUpEndpoints) res.copy(df = res.df.map(LocalTail.fold(_, lookupRows)))
+    if (keyLookups.exists(_.answered) || boundOnDriver) res.copy(df = res.df.map(LocalTail.fold(_, lookupRows)))
     else res
   }
 
@@ -100,8 +102,10 @@ final class Planner(spark: SparkSession, store0: GraphStore,
     */
   private var nodeLookups: Option[KeyLookups] = None
 
-  /** Whether a shortestPath's endpoints were bound by lookups. */
-  private var lookedUpEndpoints = false
+  /** Whether rows outside the MATCH clauses were bound on the driver from
+    * the session's indexes: a shortestPath's endpoints or a degrees CALL.
+    */
+  private var boundOnDriver = false
 
   /** UNION [ALL] chain (openCypher combinator, beyond the reference's
     * grammar): every part must be read-only and RETURN the same column
@@ -217,7 +221,7 @@ final class Planner(spark: SparkSession, store0: GraphStore,
           "an event time")
       te
     }
-    val edges = allEdges.select(col("src"), col("dst"))
+    lazy val edges = allEdges.select(col("src"), col("dst"))
     val out: DataFrame = c.proc.toLowerCase match {
       case "graft.pagerank" => nargs(1)
         GraphAlgorithms.pageRankStable(edges, intArg(0, Some(10)))
@@ -237,7 +241,12 @@ final class Planner(spark: SparkSession, store0: GraphStore,
       case "graft.triangles" => nargs(0)
         GraphAlgorithms.triangleCountDF(edges)
       case "graft.degrees" => nargs(0)
-        GraphAlgorithms.degrees(edges)
+        // a read's degrees come off the session's edge indexes when they
+        // are held on the driver
+        nodeLookups.flatMap(_.degrees(store.edgeLabels)) match {
+          case Some(local) => boundOnDriver = true; local
+          case None => GraphAlgorithms.degrees(edges)
+        }
       case "graft.anf" => nargs(1)
         // approximate neighborhood function digest per radius (the g40
         // integer-pure HyperANF sketch), default radius budget 4
@@ -1821,7 +1830,7 @@ final class Planner(spark: SparkSession, store0: GraphStore,
     val looked =
       if (boundBefore(pat.start) || boundBefore(endNp)) None
       else nodeLookups.flatMap(_.nodes(Seq(pat.start -> aV, endNp -> bV)))
-    lookedUpEndpoints ||= looked.isDefined
+    boundOnDriver ||= looked.isDefined
     val Seq(srcId, dstId) =
       Seq(pat.start, endNp).zip(looked.fold(
         Traversals.distinctIds(Seq(endpoint(pat.start), endpoint(endNp)), 2))(_.map(_._1)))

@@ -175,12 +175,19 @@ class LookupSpec extends AnyFunSuite with SparkSuite {
     assert(sorted(bounded) == rows)
   }
 
+  /** A read anchored by a WHERE equality, and a degrees CALL. */
+  val whereAnchored = "MATCH (a:V)-[:E]->(b:V) WHERE a.k = 1 RETURN b.uid AS b, count(*) AS n"
+  val degreesCall = "CALL graft.degrees() YIELD id, in_degree, out_degree " +
+    "WITH id, in_degree, out_degree WHERE out_degree >= 2 RETURN count(*) AS n, sum(in_degree) AS s"
+
   test("lookups return the same rows at 1, 7 and 32 partitions and with AQE and codegen off") {
     val st = store(4)
     // point, one-hop each way, two-hop, OPTIONAL with and without a match,
     // a path over a fixed and over a var-length hop
     val reads = Seq(0, 3, 4, 5, 6, 7, 8, 11, 23).map(answered)
     val default = reads.map(q => sorted(new CypherSession(spark, st).run(q)))
+    val warmReads = Seq(whereAnchored, degreesCall)
+    val warmDefault = warmReads.map(q => sorted(new CypherSession(spark, st).run(q)))
     for (conf <- Seq(
         Map("spark.sql.shuffle.partitions" -> "1"),
         Map("spark.sql.autoBroadcastJoinThreshold" -> "-1"),
@@ -195,7 +202,112 @@ class LookupSpec extends AnyFunSuite with SparkSuite {
           assert(lookedUp(df), s"$conf: $q")
           assert(sorted(df) == rows, s"$conf: $q")
         }
+        // persisted indexes: the WHERE-anchored read is looked up by jobs,
+        // degrees keep the DataFrame plan; held ones answer both with none
+        val persisted = conf.get("spark.sql.autoBroadcastJoinThreshold").contains("-1")
+        warmReads.zip(warmDefault).foreach { case (q, rows) =>
+          val (got, jobs) = jobsDuring(sorted(s.run(q)))
+          val df = s.run(q)
+          assert(got == rows, s"$conf: $q")
+          assert(folded(df) != (persisted && q == degreesCall), s"$conf: $q")
+          if (!persisted) assert(jobs == 0, s"$conf: $q")
+        }
       }
+    }
+  }
+
+  /** Whether the statement's plan keeps a WHERE as a Filter. */
+  def filtered(df: DataFrame): Boolean = df.queryExecution.analyzed.collectFirst {
+    case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f
+  }.isDefined
+
+  test("a WHERE equality anchors a lookup only on a new single-label node, by a literal of its column's type") {
+    val st = store(7)
+    val ps = Map[String, Any]("u" -> 3L, "nul" -> null, "s" -> "v4")
+    val s = resident(st, params = ps)
+    // (statement, answered by lookups, keeps a Filter)
+    for ((q, looked, filter) <- Seq(
+        ("MATCH (a:V)-[:E]->(b:V) WHERE 1 = a.k RETURN b.uid AS b", true, false),
+        ("MATCH (a:V)-[e:E]-(b:V) WHERE a.name = $s AND e.w > 1 RETURN b.uid AS b, e.w AS w", true, true),
+        ("MATCH (a:V {uid: 0})-[:E]->(b:V) WHERE b.uid = $u RETURN b.name AS b", true, false),
+        ("MATCH (a:V)-[:E]->(b:V) WHERE a.k = 1 OR a.k = 2 RETURN b.uid AS b", false, true),
+        ("MATCH (a:V {uid: 1}) MATCH (a)-[:E]->(b:V) WHERE a.k = 0 RETURN b.uid AS b", true, true),
+        ("MATCH (a:V {uid: 0})-[:E]->(b:V) WHERE a.k = 0 RETURN b.uid AS b", true, true),
+        ("MATCH (a:V)-[:E]->(b:V) WHERE a.uid = 2.0 RETURN b.uid AS b", false, true),
+        ("MATCH (a:V)-[:E]->(b:V) WHERE a.uid = $nul RETURN b.uid AS b", false, true),
+        ("MATCH (a:V {uid: 1}) OPTIONAL MATCH (a)-[:E]->(b:V) WHERE b.k = 3 RETURN a.uid AS a, b.uid AS b",
+          false, true),
+        ("MATCH (a:V:W)-[:E]->(b:V) WHERE a.uid = 0 RETURN b.uid AS b", false, true))) {
+      val (local, frames) = (s.run(q), new CypherSession(spark, st, ps).run(q))
+      assert(lookedUp(local) == looked, q)
+      assert(filtered(local) == filter, q)
+      assert(shape(local) == shape(frames), q)
+      assert(sorted(local) == sorted(frames), q)
+    }
+  }
+
+  /** V 0..3 and W 0, with E edges 0->1, 0->1, 1->1 (a self-loop), 2->0 and
+    * 1->W0, and F edges 0->2 and 3->0: W0 has only in-edges, 3 only
+    * out-edges. With `nulls`, one E edge each with a null source, a null
+    * target and both.
+    */
+  def twoLabels(nulls: Boolean): GraphStore = {
+    val vs = (0 to 3).map(i => (vid(i), i.toLong)).toDF("id", "uid")
+    val ws = Seq((wid(0), 100L)).toDF("id", "uid")
+    val e = Seq[(Option[Long], Option[Long])]((Some(vid(0)), Some(vid(1))), (Some(vid(0)), Some(vid(1))),
+      (Some(vid(1)), Some(vid(1))), (Some(vid(2)), Some(vid(0))), (Some(vid(1)), Some(wid(0)))) ++
+      (if (nulls) Seq((None, Some(vid(2))), (Some(vid(3)), None), (None, None)) else Nil)
+    val f = Seq((vid(0), vid(2)), (vid(3), vid(0)))
+    val es = e.zipWithIndex.map { case ((a, b), i) => (Graphid.pack(2, i), a, b) }.toDF("id", "src", "dst")
+    val fs = f.zipWithIndex.map { case ((a, b), i) => (Graphid.pack(4, i), a, b) }.toDF("id", "src", "dst")
+    val dir = java.nio.file.Files.createTempDirectory("graft_degrees").toString
+    new GraphStore(Map("V" -> vs, "W" -> ws), Map("E" -> es, "F" -> fs)).save(dir)
+    GraphStore.load(spark, dir)
+  }
+
+  val allDegrees = "CALL graft.degrees() YIELD id, in_degree, out_degree RETURN id, in_degree, out_degree"
+
+  /** A session whose reads have built the src and dst indexes of E and F. */
+  def degreesSession(st: GraphStore, lookupRows: Long = graft.algorithms.Traversals.BroadcastPathRows)
+      : CypherSession = {
+    val s = new CypherSession(spark, st, Map.empty, lookupRows)
+    for (_ <- 0 until 3) s.run(allDegrees).collect()
+    s
+  }
+
+  test("degrees from driver-held indexes sum the labels per id, with the DataFrame plan's rows and schema") {
+    for (nulls <- Seq(false, true)) {
+      val st = twoLabels(nulls)
+      val (local, jobs) = jobsDuring {
+        val df = degreesSession(st).run(allDegrees)
+        (df, unordered(df))
+      }
+      val frames = new CypherSession(spark, st).run(allDegrees)
+      val ctx = s"nulls $nulls"
+      assert(folded(local._1), ctx)
+      assert(local._2 == unordered(frames), ctx)
+      assert(local._1.schema == frames.schema, ctx)
+      assert(local._1.schema == graft.algorithms.GraphAlgorithms.degrees(
+        st.allEdges.select("src", "dst")).schema, ctx)
+      assert(jobs > 0, ctx) // the warm-up builds the indexes
+      val counts = local._2.map(_.split('|').toSeq)
+      // vertex 1: in 0->1 twice and its self-loop; out the self-loop and 1->W0
+      assert(counts.contains(Seq(vid(1).toString, "3", "2")), ctx)
+      // vertex 0: in 2->0 (E) and 3->0 (F); out 0->1 twice (E) and 0->2 (F)
+      assert(counts.contains(Seq(vid(0).toString, "2", "3")), ctx)
+      assert(counts.contains(Seq(wid(0).toString, "1", "0")), ctx)
+      assert(counts.count(_.head == "null") == (if (nulls) 2 else 0), ctx)
+    }
+  }
+
+  test("degrees past the row bound or over persisted indexes keep the DataFrame plan") {
+    val st = twoLabels(nulls = false)
+    val rows = unordered(new CypherSession(spark, st).run(allDegrees))
+    val bounded = degreesSession(st, lookupRows = 3).run(allDegrees)
+    assert(!folded(bounded) && unordered(bounded) == rows)
+    withConf(persistedIndexes) {
+      val persisted = degreesSession(st).run(allDegrees)
+      assert(!folded(persisted) && unordered(persisted) == rows)
     }
   }
 
