@@ -37,14 +37,14 @@ final case class CsrBlock(keys: Array[Long], offsets: Array[Int], at: Array[Int]
 object CsrBlock {
 
   /** Counting sort of (key, UnsafeRow bytes) pairs into one block; a key's
-    * rows keep their input order. A pair without bytes is a row with a null
-    * key, only counted.
+    * rows keep their input order. A pair without bytes is not a row: its
+    * key is a count of rows with a null key, which are only counted.
     */
   def of(rows: Iterator[(Long, Array[Byte])], fields: Int): CsrBlock = {
     val ks = mutable.ArrayBuilder.make[Long]
     val rs = mutable.ArrayBuffer[Array[Byte]]()
     var nulls = 0L
-    rows.foreach { case (k, r) => if (r == null) nulls += 1 else { ks += k; rs += r } }
+    rows.foreach { case (k, r) => if (r == null) nulls += k else { ks += k; rs += r } }
     val key = ks.result()
     val sorted = key.clone()
     Arrays.sort(sorted)
@@ -265,7 +265,8 @@ object Adjacency {
   /** The rows of `table` keyed on its column `key` (one of the [[keyable]]
     * types), hash-partitioned into `partitions` blocks, built and sized by
     * one job. Rows with a null key are left out, since no equality matches
-    * them, and only counted ([[CsrBlock.nulls]]).
+    * them, and only counted ([[CsrBlock.nulls]]): each source partition
+    * sends its count, not its null rows, through the shuffle.
     * When the blocks' arrays take at most
     * `spark.sql.autoBroadcastJoinThreshold` bytes (Spark's bound for a
     * relation held whole on the driver) they are collected to it by one
@@ -287,13 +288,11 @@ object Adjacency {
     }
     val rows = source.mapPartitions { it =>
       lazy val unsafe = UnsafeProjection.create(schema)
-      it.map { r =>
-        if (r.isNullAt(k)) (0L, null: Array[Byte])
-        else {
-          val u = r match { case u: UnsafeRow => u; case other => unsafe(other) }
-          (keyOf(r.get(k, kt)), u.copy().getBytes)
-        }
-      }
+      var nulls = 0L
+      it.filter(r => !r.isNullAt(k) || { nulls += 1; false }).map { r =>
+        val u = r match { case u: UnsafeRow => u; case other => unsafe(other) }
+        (keyOf(r.get(k, kt)), u.copy().getBytes)
+      } ++ Iterator(nulls).filter(_ > 0).map(n => (n, null: Array[Byte]))
     }
     val blocks = rows.partitionBy(new HashPartitioner(partitions))
       .mapPartitions(it => Iterator(CsrBlock.of(it, fields)), preservesPartitioning = true)

@@ -9,7 +9,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import Ast._
-import graft.algorithms.{Adjacency, Direction, KeyedIndex, KeyedRows, Traversals}
+import graft.algorithms.{Adjacency, CsrBlock, Direction, KeyedIndex, KeyedRows, Traversals}
 
 /** Binding rows held on the driver: the columns the DataFrame plan of the
   * same clauses would have, in its order, and one Catalyst value per column
@@ -265,19 +265,28 @@ private[cypher] final class KeyLookups(spark: SparkSession, params: Map[String, 
     * [[graft.algorithms.GraphAlgorithms.degrees]], per id summed over the
     * labels, with its null-id rows for edges with a null source or a null
     * target. None, for the DataFrame plan, when a table has a shape a
-    * lookup does not read, an index is persisted or neither exists nor may
-    * be built now (then none is built), or the rows pass `maxRows`.
+    * lookup does not read, an index neither exists nor may be built now
+    * (then none is built), an index is persisted, or the rows pass
+    * `maxRows`. An index degrees cannot use is not built for them: under a
+    * non-positive `spark.sql.autoBroadcastJoinThreshold` none is held on
+    * the driver, so none is asked for, and the indexes are got in turn
+    * until the first persisted one, so at most that one is built.
     */
   def degrees(labels: Seq[String]): Option[DataFrame] = {
     val tables = labels.map(l => usable(VarKind.Edge, l).map(_ => table(VarKind.Edge, l)))
-    val got = tables.flatten.flatMap(t => Seq("src", "dst").map(k => k -> lookup(t, k, false)))
-    if (labels.isEmpty || !tables.forall(_.isDefined) || !got.forall(_._2.isDefined)) None
+    lazy val got = tables.flatten.flatMap(t => Seq("src", "dst").map(k => k -> lookup(t, k, false)))
+    if (labels.isEmpty || !tables.forall(_.isDefined) ||
+        spark.sessionState.conf.autoBroadcastJoinThreshold <= 0 || !got.forall(_._2.isDefined)) None
     else {
       // in-degrees at 0 (the dst indexes), out-degrees at 1
-      val held = got.map { case (k, get) => (if (k == "dst") 0 else 1) -> get.get() }.collect {
-        case (side, KeyedIndex.OnDriver(blocks)) => side -> blocks
+      val held = mutable.ArrayBuffer[(Int, Array[CsrBlock])]()
+      val onDriver = got.forall { case (k, get) =>
+        get.get() match {
+          case KeyedIndex.OnDriver(blocks) => held += (if (k == "dst") 0 else 1) -> blocks; true
+          case _ => false
+        }
       }
-      if (held.size < got.size) None
+      if (!onDriver) None
       else {
         val deg = mutable.LongMap.empty[Array[Long]]
         val nulls = new Array[Long](2)

@@ -305,9 +305,25 @@ class LookupSpec extends AnyFunSuite with SparkSuite {
     val rows = unordered(new CypherSession(spark, st).run(allDegrees))
     val bounded = degreesSession(st, lookupRows = 3).run(allDegrees)
     assert(!folded(bounded) && unordered(bounded) == rows)
+    // the persisted index blocks among `ids`
+    def indexBlocks(ids: Set[Int]) = ids.filter { id =>
+      Option(spark.sparkContext.getPersistentRDDs(id).name).exists(_.startsWith("graft "))
+    }
     withConf(persistedIndexes) {
-      val persisted = degreesSession(st).run(allDegrees)
+      // no index is held on the driver under -1: degrees build none
+      val (s, pinned) = persistedBy(degreesSession(st))
+      val persisted = s.run(allDegrees)
       assert(!folded(persisted) && unordered(persisted) == rows)
+      assert(s.heldIndexes.isEmpty && indexBlocks(pinned).isEmpty)
+    }
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "1") {
+      // every index is persisted: the first one built stops the rest
+      val (s, pinned) = persistedBy(degreesSession(st))
+      val persisted = s.run(allDegrees)
+      assert(!folded(persisted) && unordered(persisted) == rows)
+      val built = s.heldIndexes.flatMap(_.rdd).map(_.id).toSet
+      assert(built.size == 1 && indexBlocks(pinned) == built)
+      s.heldIndexes.flatMap(_.rdd).foreach(_.unpersist())
     }
   }
 
